@@ -138,6 +138,14 @@ def _test_threshold(count: int, expr: str) -> bool:
     }[op]
 
 
+def _write_model(spark: SparkSession, df: DataFrame, identifier: str, exists: bool, **layout) -> int:
+    """Overwrite a model's relation — atomic swap when it ``exists`` —
+    and return the rows written, observed on the write itself."""
+    if exists:
+        return replace_relation_atomic(spark, df, identifier, **layout)()
+    return write_table(df, identifier, mode="overwrite", **layout)()
+
+
 class FalSpark:
     def __init__(
         self,
@@ -856,12 +864,26 @@ class FalSpark:
         payload = {
             "elapsed_time": elapsed,
             "results": [
-                {"unique_id": uid, "status": status} for uid, status in sorted(statuses.items())
+                {
+                    "unique_id": uid,
+                    "status": status,
+                    "adapter_response": self._adapter_response_json(uid, status),
+                }
+                for uid, status in sorted(statuses.items())
             ],
             "errors": context.get("errors", []),
         }
         with open(self.target_dir / "run_results.json", "w") as f:
             json.dump(payload, f, indent=2, default=str)
+
+    def _adapter_response_json(self, uid: str, status: str) -> dict:
+        """dbt's per-node ``adapter_response``: what the node's write
+        reported this run; empty when the node did not succeed."""
+        model = self.manifest.models.get(uid)
+        resp = self._adapter_responses.get(model.name) if model is not None else None
+        if status != "success" or resp is None:
+            return {}
+        return {"_message": resp.message, "code": resp.code, "rows_affected": resp.rows_affected}
 
     def generate_docs(self) -> Path:
         """dbt ``docs generate``-style catalog artifact: per-materialized-
@@ -982,112 +1004,115 @@ class FalSpark:
         (reference behavior: dbt test; SURVEY §2.G generic tests row).
         ``select`` scopes to tests whose owning model matches the
         selection (dbt semantics: selecting a model selects its tests);
-        source-owned and singular tests run only unselected."""
-        from pyspark.sql import functions as F
+        source-owned and singular tests run only unselected. Tests run on
+        ``threads`` workers, as dbt runs them on the run's thread pool;
+        results come back in manifest order."""
+        from concurrent.futures import ThreadPoolExecutor
 
         selected_ids: set[str] | None = None
         if select:
             selected_ids = select_nodes(self.graph, select, state=self._load_state())
-        results = []
-        for t in self.manifest.tests.values():
-            if selected_ids is not None and t.model_id not in selected_ids:
-                continue
-            try:
-                if t.test_type == "singular":
-                    rendered, _ = render_model_sql(
-                        t.raw_sql,
-                        resolve_ref=self._resolve_ref,
-                        resolve_source=self._resolve_source,
-                        vars=self.manifest.vars,
-                        macros=self.manifest.macros,
-                    )
-                    fail_df = self.spark.sql(rendered)
-                    if t.where:
-                        # dbt `where` config on a singular test: the
-                        # violation set is the filtered subset — same
-                        # relation algebra as the generic-test branch
-                        # below (previously silently dropped, ADVICE r12)
-                        fail_df = fail_df.filter(t.where)
-                else:
-                    owner = t.model_id or ""
-                    if owner.startswith("source."):
-                        _, _, sname, tname = owner.split(".", 3)
-                        df = self.source(sname, tname)
-                    else:
-                        df = self.ref(owner.split(".")[-1])
-                    if t.where:
-                        # dbt `where` config: the tested relation is the
-                        # filtered subset (compiled as a subquery there;
-                        # a DataFrame filter is the same relation algebra)
-                        df = df.filter(t.where)
-                    col = F.col(t.column)
-                    if t.test_type == "not_null":
-                        fail_df = df.filter(col.isNull())
-                    elif t.test_type == "unique":
-                        fail_df = df.groupBy(col).count().filter(F.col("count") > 1)
-                    elif t.test_type == "accepted_values":
-                        # dbt semantics: the compiled test is
-                        # `WHERE value_field NOT IN (...)` — a NULL row
-                        # evaluates to NULL there and is NOT a violation
-                        # (NULL-checking is not_null's job). VERDICT r11
-                        # finding 1: the old `| col.isNull()` disjunct
-                        # failed models with legal NULLs that pass under
-                        # dbt.
-                        allowed = t.params.get("values", [])
-                        fail_df = df.filter(~col.isin(allowed))
-                    elif t.test_type == "relationships":
-                        to_model = t.params["to"]
-                        to_field = t.params["field"]
-                        # dbt ref syntax: "ref('model')"
-                        to_name = to_model.split("'")[1] if "'" in to_model else to_model
-                        parent = self.ref(to_name).select(F.col(to_field).alias("__k")).distinct()
-                        fail_df = df.filter(col.isNotNull()).join(
-                            parent, col == F.col("__k"), "left_anti"
-                        )
-                    else:
-                        raise ValueError(f"unknown test type {t.test_type}")
-                if t.limit is not None:
-                    # dbt `limit` config caps the failure SELECT — both
-                    # the reported count and the stored rows see the cap
-                    fail_df = fail_df.limit(t.limit)
-                if t.store_failures:
-                    # dbt convention: failing rows land in the audit
-                    # schema <schema>_dbt_test__audit.<test_name>,
-                    # overwritten per run. Write FIRST and count the
-                    # written table: counting fail_df separately would
-                    # run the whole pipeline twice, and under limit() the
-                    # two jobs could even select different rows (r12
-                    # review finding).
-                    audit = f"{self.schema}_dbt_test__audit"
-                    self.spark.sql(f"CREATE DATABASE IF NOT EXISTS `{audit}`")
-                    write_table(fail_df, f"{audit}.{t.name}", mode="overwrite")
-                    violations = self.spark.table(f"{audit}.{t.name}").count()
-                else:
-                    violations = fail_df.count()
-                # dbt status resolution: severity=error checks error_if
-                # first (warn_if as the fallback tier); severity=warn
-                # only ever warns. Threshold expressions ("!=0", ">10")
-                # evaluate against the failure count.
-                if t.severity == "warn":
-                    t.status = "warn" if _test_threshold(violations, t.warn_if) else "tested"
-                elif _test_threshold(violations, t.error_if):
-                    t.status = "error"
-                elif _test_threshold(violations, t.warn_if):
-                    t.status = "warn"
-                else:
-                    t.status = "tested"
-                results.append(
-                    {
-                        "test": t.name,
-                        "status": t.status,
-                        "violations": violations,
-                        "severity": t.severity,
-                    }
+        tests = [
+            t for t in self.manifest.tests.values()
+            if selected_ids is None or t.model_id in selected_ids
+        ]
+        if any(t.store_failures for t in tests):
+            self.spark.sql(f"CREATE DATABASE IF NOT EXISTS `{self.schema}_dbt_test__audit`")
+        with ThreadPoolExecutor(max_workers=max(1, self.threads)) as pool:
+            return list(pool.map(self._run_test, tests))
+
+    def _run_test(self, t: DbtTest) -> dict:
+        """One test's status and violation count (sets ``t.status``)."""
+        from pyspark.sql import functions as F
+
+        try:
+            if t.test_type == "singular":
+                rendered, _ = render_model_sql(
+                    t.raw_sql,
+                    resolve_ref=self._resolve_ref,
+                    resolve_source=self._resolve_source,
+                    vars=self.manifest.vars,
+                    macros=self.manifest.macros,
                 )
-            except Exception as e:
+                fail_df = self.spark.sql(rendered)
+                if t.where:
+                    # dbt `where` config on a singular test: the
+                    # violation set is the filtered subset — same
+                    # relation algebra as the generic-test branch below
+                    fail_df = fail_df.filter(t.where)
+            else:
+                owner = t.model_id or ""
+                if owner.startswith("source."):
+                    _, _, sname, tname = owner.split(".", 3)
+                    df = self.source(sname, tname)
+                else:
+                    df = self.ref(owner.split(".")[-1])
+                if t.where:
+                    # dbt `where` config: the tested relation is the
+                    # filtered subset (compiled as a subquery there;
+                    # a DataFrame filter is the same relation algebra)
+                    df = df.filter(t.where)
+                col = F.col(t.column)
+                if t.test_type == "not_null":
+                    fail_df = df.filter(col.isNull())
+                elif t.test_type == "unique":
+                    fail_df = df.groupBy(col).count().filter(F.col("count") > 1)
+                elif t.test_type == "accepted_values":
+                    # dbt semantics: the compiled test is
+                    # `WHERE value_field NOT IN (...)` — a NULL row
+                    # evaluates to NULL there and is NOT a violation
+                    # (NULL-checking is not_null's job), so models with
+                    # legal NULLs pass here as they pass under dbt.
+                    allowed = t.params.get("values", [])
+                    fail_df = df.filter(~col.isin(allowed))
+                elif t.test_type == "relationships":
+                    to_model = t.params["to"]
+                    to_field = t.params["field"]
+                    # dbt ref syntax: "ref('model')"
+                    to_name = to_model.split("'")[1] if "'" in to_model else to_model
+                    parent = self.ref(to_name).select(F.col(to_field).alias("__k")).distinct()
+                    fail_df = df.filter(col.isNotNull()).join(
+                        parent, col == F.col("__k"), "left_anti"
+                    )
+                else:
+                    raise ValueError(f"unknown test type {t.test_type}")
+            if t.limit is not None:
+                # dbt `limit` config caps the failure SELECT — both
+                # the reported count and the stored rows see the cap
+                fail_df = fail_df.limit(t.limit)
+            if t.store_failures:
+                # dbt convention: failing rows land in the audit
+                # schema <schema>_dbt_test__audit.<test_name> (created
+                # by test()), overwritten per run. Count the rows the
+                # write itself wrote: a separate count would run the
+                # whole pipeline twice, and under limit() the two jobs
+                # could even select different rows.
+                violations = write_table(
+                    fail_df, f"{self.schema}_dbt_test__audit.{t.name}", mode="overwrite"
+                )()
+            else:
+                violations = fail_df.count()
+            # dbt status resolution: severity=error checks error_if
+            # first (warn_if as the fallback tier); severity=warn
+            # only ever warns. Threshold expressions ("!=0", ">10")
+            # evaluate against the failure count.
+            if t.severity == "warn":
+                t.status = "warn" if _test_threshold(violations, t.warn_if) else "tested"
+            elif _test_threshold(violations, t.error_if):
                 t.status = "error"
-                results.append({"test": t.name, "status": "error", "error": str(e)})
-        return results
+            elif _test_threshold(violations, t.warn_if):
+                t.status = "warn"
+            else:
+                t.status = "tested"
+            return {
+                "test": t.name,
+                "status": t.status,
+                "violations": violations,
+                "severity": t.severity,
+            }
+        except Exception as e:
+            t.status = "error"
+            return {"test": t.name, "status": "error", "error": str(e)}
 
     def _load_sources_artifact(self) -> dict[str, dict]:
         """Parse a dbt ``target/sources.json`` freshness artifact
@@ -1434,7 +1459,10 @@ class _ModelTask:
         log.debug("executing model %s (%s)", model.name, model.materialization)
         if model.materialization == "seed":
             df = spark.read.csv(str(model.path), header=True, inferSchema=True)
-            write_table(df, f"{fal.schema}.{model.target_name}", mode="overwrite")
+            n = write_table(df, f"{fal.schema}.{model.target_name}", mode="overwrite")()
+            fal._adapter_responses[model.name] = CurrentAdapterResponse(
+                message=f"CREATE TABLE {n}", code="CREATE TABLE", rows_affected=n
+            )
             return SUCCESS
         if model.python_model is not None:
             return self._run_python_model(model)
@@ -1459,62 +1487,39 @@ class _ModelTask:
                 message="CREATE VIEW", code="CREATE VIEW", rows_affected=None
             )
             return SUCCESS
-        if mat == "incremental" and full_refresh:
-            # rebuild: atomic swap (the table may feed the model's own SQL)
+        code = "CREATE TABLE"
+        if mat == "incremental" and not full_refresh:
             if exists:
-                replace_relation_atomic(
-                    spark, df, identifier, partition_by=model.partition_by
-                )
-            else:
-                write_table(df, identifier, mode="overwrite", partition_by=model.partition_by)
-        elif mat == "incremental":
-            if exists:
-                # batch size BEFORE the merge: the batch plan reads `this`
-                # (max-watermark subquery), whose files the atomic swap
-                # replaces — counting afterwards hits FAILED_READ_FILE.
-                # Persist so the batch is computed ONCE: without it the
-                # count and the merge each execute the full model SQL,
-                # and a non-deterministic model could report a row count
-                # different from the rows actually merged. First run
-                # (no table) skips both — batch_rows is unused there.
+                # reference semantics: rows affected by THIS batch, not the
+                # post-merge table total (fal_script.py:87-91). Persist:
+                # the merge reads the batch twice (its keys and its rows),
+                # and a non-deterministic model must merge the rows it
+                # reports.
+                code = "INSERT"
                 df = df.persist()
-                batch_rows = df.count()
-            incremental_merge(
-                spark,
-                df,
-                identifier,
-                model.unique_key,
-                strategy=model.incremental_strategy,
-                partition_by=model.partition_by,
-                on_schema_change=model.on_schema_change,
-                bucket_by=model.bucket_by,
-                sort_by=model.sort_by,
-            )
-            if exists:
-                df.unpersist()
-        else:  # table
-            if exists:
-                replace_relation_atomic(
-                    spark, df, identifier,
-                    bucket_by=model.bucket_by, sort_by=model.sort_by,
-                    partition_by=model.partition_by,
-                )
-            else:
-                write_table(
+            try:
+                n = incremental_merge(
+                    spark,
                     df,
                     identifier,
-                    mode="overwrite",
+                    model.unique_key,
+                    strategy=model.incremental_strategy,
                     partition_by=model.partition_by,
+                    on_schema_change=model.on_schema_change,
                     bucket_by=model.bucket_by,
                     sort_by=model.sort_by,
                 )
-        if mat == "incremental" and not full_refresh and exists:
-            # reference semantics: rows affected by THIS batch, not the
-            # post-merge table total (fal_script.py:87-91)
-            code, n = "INSERT", batch_rows
-        else:
-            # parquet footer count — metadata-only, no data scan
-            code, n = "CREATE TABLE", spark.table(identifier).count()
+            finally:
+                df.unpersist()
+        elif mat == "incremental":
+            # full refresh: atomic swap (the table may feed the model's own SQL)
+            n = _write_model(spark, df, identifier, exists, partition_by=model.partition_by)
+        else:  # table
+            n = _write_model(
+                spark, df, identifier, exists,
+                bucket_by=model.bucket_by, sort_by=model.sort_by,
+                partition_by=model.partition_by,
+            )
         fal._adapter_responses[model.name] = CurrentAdapterResponse(
             message=f"{code} {n}", code=code, rows_affected=n
         )
@@ -1607,17 +1612,17 @@ class _ModelTask:
                     "and its body never called write_to_model(...) — one of "
                     "the two contracts is required"
                 )
+            # the body may have written more than once: count what it left
+            n = fal.spark.table(identifier).count()
         else:
             dbt_obj = _DbtObj(fal, model, pandas_meta=pandas_mode)
             df = fn(dbt_obj, fal.spark)
             if df is None:
                 raise ValueError(f"python model {model.name} returned no DataFrame")
-            df = fal._to_spark(df)
-            if fal.spark.catalog.tableExists(identifier):
-                replace_relation_atomic(fal.spark, df, identifier)
-            else:
-                write_table(df, identifier, mode="overwrite")
-        n = fal.spark.table(identifier).count()
+            n = _write_model(
+                fal.spark, fal._to_spark(df), identifier,
+                fal.spark.catalog.tableExists(identifier),
+            )
         fal._adapter_responses[model.name] = CurrentAdapterResponse(
             message=f"CREATE TABLE {n}", code="CREATE TABLE", rows_affected=n
         )
@@ -1684,15 +1689,11 @@ class _ModelTask:
                     "target": fal.target_name,
                 },
             )
-            df = fal.spark.read.parquet(out)
             identifier = f"{fal.schema}.{model.target_name}"
-            if fal.spark.catalog.tableExists(identifier):
-                replace_relation_atomic(fal.spark, df, identifier)
-            else:
-                write_table(df, identifier, mode="overwrite")
-            # count INSIDE the tempdir scope: write_table/replace copy the
-            # data into the warehouse, but the lazy df still points at td
-            n = fal.spark.table(identifier).count()
+            n = _write_model(
+                fal.spark, fal.spark.read.parquet(out), identifier,
+                fal.spark.catalog.tableExists(identifier),
+            )
         fal._adapter_responses[model.name] = CurrentAdapterResponse(
             message=f"CREATE TABLE {n}", code="CREATE TABLE", rows_affected=n
         )

@@ -15,18 +15,88 @@ here the engine owns them:
 Scale notes: tables are parquet in the session warehouse; the temp-swap
 (write ``<name>__f__<uuid8>``, drop, rename) is exactly the reference's
 atomic-overwrite dance — on Delta this would be a transactional REPLACE.
+
+File sizing: a write with no declared layout is coalesced to
+``ceil(estimate / split)`` files, where the estimate is the larger of the
+plan's leaf scan total and its optimized size, and ``split`` is the size
+Spark itself splits a scan of that many bytes into (see ``_sized``): KB-
+sized models write one file, larger ones keep one task per core.
+Coalescing never adds a shuffle, and an unknown estimate leaves the plan
+alone. Exempt, and written exactly as the plan
+or layout says: declared ``sort_by``, ``bucket_by`` and ``partition_by``;
+plans holding an explicit repartition or coalesce (a ``REPARTITION`` /
+``DISTRIBUTE BY`` hint, ``DataFrame.repartition`` in a Python model,
+``compact(target_partitions=...)``). Incremental appends still add one
+file set per batch; ``FalSpark.compact`` heals those.
+
+Row counts: ``write_table`` and ``replace_relation_atomic`` attach a
+metrics-only Observation above any exchange they add and return a reader
+of the rows written, so a write reports its rows without a second job
+re-reading them.
 """
 
 from __future__ import annotations
 
+import re
 import uuid
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from .sources.readers import conf_bytes, scan_bytes
 
 
 def _q(ident: str) -> str:
     return ".".join(f"`{p}`" for p in ident.split("."))
+
+
+def count_rows(df: DataFrame) -> tuple[DataFrame, Callable[[], int]]:
+    """``df`` plus a reader of the rows its next action produced. The
+    count rides on that action as observed metrics; call the reader only
+    after the action succeeded (it waits for the action otherwise)."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), lambda: obs.get["rows"]
+
+
+# Spark's size estimate for a plan it cannot size (Long.MaxValue)
+_UNKNOWN_SIZE = (1 << 63) - 1
+# a plan node that fixes the partition count on purpose; matched at the
+# start of a treeString line, so a column of the same name never matches
+_EXPLICIT_PARTITIONING = re.compile(
+    r"^[\s:|+\-]*(Repartition|RepartitionByExpression|RebalancePartitions)\b", re.M
+)
+
+
+def _sized(df: DataFrame) -> DataFrame:
+    """Coalesce a layout-free write to ``ceil(est / split)`` partitions,
+    one file each. ``est`` is the larger of the leaf scan total
+    (``scan_bytes``, which a narrow projection of wide text cannot
+    shrink) and the optimized plan's own size (which a join fan-out can
+    grow past its inputs). ``split`` is Spark's own scan split rule,
+    ``min(maxPartitionBytes, max(openCostInBytes, est / parallelism))``,
+    so a mid-size model keeps the one task per core its scan had while a
+    KB-sized one writes a single file. An explicit repartition or
+    coalesce in the plan, or an unknown estimate, leaves ``df`` as it is."""
+    spark = df.sparkSession
+    try:
+        qe = df._jdf.queryExecution()
+        if _EXPLICIT_PARTITIONING.search(qe.analyzed().treeString()):
+            return df
+        est = max(scan_bytes(df) or 0, int(qe.optimizedPlan().stats().sizeInBytes()))
+        cores = int(
+            spark.conf.get("spark.sql.leafNodeDefaultParallelism", None)
+            or spark.sparkContext.defaultParallelism
+        )
+    except Exception:  # internal API unavailable (connect/foreign session)
+        return df
+    if est >= _UNKNOWN_SIZE:
+        return df
+    split = min(
+        conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 << 20),
+        max(conf_bytes(spark, "spark.sql.files.openCostInBytes", 4 << 20), est // max(1, cores)),
+    )
+    return df.coalesce(min(max(1, -(-est // max(1, split))), (1 << 31) - 1))
 
 
 def _clean_orphan_location(spark: SparkSession, identifier: str) -> None:
@@ -79,6 +149,17 @@ def _range_cluster(df: DataFrame, sort_by) -> DataFrame:
     return df.repartitionByRange(*cols).sortWithinPartitions(*cols)
 
 
+def _shape(df: DataFrame, partition_by, bucket_by, sort_by) -> DataFrame:
+    """The frame a table write hands the writer: range-clustered for
+    ``sort_by`` (bucketBy sorts on its own), sized when no layout is
+    declared, unchanged otherwise."""
+    if sort_by and not bucket_by:
+        return _range_cluster(df, sort_by)
+    if partition_by or bucket_by or sort_by:
+        return df
+    return _sized(df)
+
+
 def write_table(
     df: DataFrame,
     identifier: str,
@@ -86,7 +167,7 @@ def write_table(
     partition_by: str | None = None,
     bucket_by: dict | None = None,
     sort_by: str | None = None,
-) -> None:
+) -> Callable[[], int]:
     """Eager write — the write boundary forces materialization, matching
     the reference's eager write_to_* semantics (SURVEY §7 risk note).
     ``partition_by`` lays the table out hive-partitioned (the 100 TB
@@ -96,9 +177,12 @@ def write_table(
     bucketed the same way reads co-partitioned data and plans with ZERO
     shuffle exchanges (asserted by tests/test_bucketing.py).
     ``sort_by`` range-clusters files for min/max data skipping
-    (see _range_cluster)."""
-    if sort_by and not bucket_by:
-        df = _range_cluster(df, sort_by)
+    (see _range_cluster); with no layout the output is sized (_sized).
+    Returns a reader of the rows written (see count_rows)."""
+    # observed above any exchange _shape adds: a range exchange runs its
+    # input twice (sampling, then the shuffle), which would double a
+    # count taken below it
+    df, rows = count_rows(_shape(df, partition_by, bucket_by, sort_by))
     _clean_orphan_location(df.sparkSession, identifier)
     writer = df.write.mode(mode).format("parquet")
     if partition_by:
@@ -107,6 +191,7 @@ def write_table(
         cols = layout_cols(bucket_by["cols"])
         writer = writer.bucketBy(int(bucket_by.get("n", 32)), *cols).sortBy(*cols)
     writer.saveAsTable(identifier)
+    return rows
 
 
 _VERSION_RE = r"__v[0-9a-f]{8}$"
@@ -187,28 +272,42 @@ def _re_sub_version(loc: str) -> str:
     return _re.sub(_VERSION_RE, "", loc.rstrip("/"))
 
 
-def _table_location(spark: SparkSession, identifier: str) -> str | None:
-    """Filesystem path of a table's current location (None if absent)."""
+def _describe(spark: SparkSession, identifier: str) -> dict[str, str]:
+    """``DESCRIBE TABLE EXTENDED`` as {col_name: data_type}. The detailed
+    table rows come after the column rows, so they win a name clash."""
+    return {r["col_name"]: r["data_type"] for r in spark.sql(
+        f"DESCRIBE TABLE EXTENDED {_q(identifier)}").collect()}
+
+
+def _table_location(
+    spark: SparkSession, identifier: str, desc: dict[str, str] | None = None
+) -> str | None:
+    """Filesystem path of a table's current location (None if absent),
+    from ``desc`` (a ``_describe`` of the table) when given."""
     from urllib.parse import urlparse
 
-    if not spark.catalog.tableExists(identifier):
+    if desc is None:
+        if not spark.catalog.tableExists(identifier):
+            return None
+        desc = _describe(spark, identifier)
+    loc = desc.get("Location")
+    if loc is None:
         return None
-    for r in spark.sql(f"DESCRIBE TABLE EXTENDED {_q(identifier)}").collect():
-        if r["col_name"] == "Location":
-            u = urlparse(r["data_type"])
-            return u.path if u.scheme in ("", "file") else r["data_type"]
-    return None
+    u = urlparse(loc)
+    return u.path if u.scheme in ("", "file") else loc
 
 
-def _table_bucket_spec(spark: SparkSession, identifier: str) -> tuple[int, tuple[str, ...]] | None:
-    """(num_buckets, bucket_cols) from the catalog, None if unbucketed."""
-    rows = {r["col_name"]: r["data_type"] for r in spark.sql(
-        f"DESCRIBE TABLE EXTENDED {_q(identifier)}").collect()}
-    n = rows.get("Num Buckets")
+def _table_bucket_spec(
+    spark: SparkSession, identifier: str, desc: dict[str, str] | None = None
+) -> tuple[int, tuple[str, ...]] | None:
+    """(num_buckets, bucket_cols) from the catalog, None if unbucketed;
+    from ``desc`` (a ``_describe`` of the table) when given."""
+    desc = _describe(spark, identifier) if desc is None else desc
+    n = desc.get("Num Buckets")
     if not n:
         return None
     cols = tuple(
-        c.strip(" `") for c in rows.get("Bucket Columns", "").strip("[]").split(",")
+        c.strip(" `") for c in desc.get("Bucket Columns", "").strip("[]").split(",")
     )
     return int(n), cols
 
@@ -391,7 +490,7 @@ def replace_relation_atomic(
     sort_by: str | None = None,
     partition_by: str | None = None,
     expected_token: tuple | None = None,
-) -> None:
+) -> Callable[[], int]:
     """Atomic table replacement, safe when ``df`` reads from
     ``identifier`` itself (reference: lib.py:286-329 overwrite_target /
     _replace_relation) AND against concurrent readers:
@@ -428,14 +527,16 @@ def replace_relation_atomic(
     in-process check-then-flip is atomic), and a moved token raises
     ConcurrentRebuildError after cleaning up the never-made-live
     version directory. Rebuilds themselves pass None: the model's own
-    output is the newest truth regardless of what it read."""
+    output is the newest truth regardless of what it read.
+
+    Returns a reader of the rows written (see count_rows)."""
     import os
     import re as _re
     import shutil
 
     tmp = f"{identifier}__f__{uuid.uuid4().hex[:8]}"
-    if sort_by and not bucket_by:
-        df = _range_cluster(df, sort_by)
+    # observed above any exchange _shape adds (see write_table)
+    df, rows = count_rows(_shape(df, partition_by, bucket_by, sort_by))
 
     def _check_expected():
         if expected_token is not None:
@@ -449,6 +550,8 @@ def replace_relation_atomic(
                 )
 
     exists = spark.catalog.tableExists(identifier)
+    # one DESCRIBE before the write: the bucket check and the version base
+    desc = _describe(spark, identifier) if exists else {}
     # nullability differs freely between plans — including NESTED
     # nullability (ArrayType.containsNull after transform()/collect_list,
     # struct field nullables), which simpleString() strips and dataType
@@ -476,7 +579,7 @@ def replace_relation_atomic(
         if bucket_by
         else None
     )
-    bucket_mismatch = exists and _table_bucket_spec(spark, identifier) != want_buckets
+    bucket_mismatch = exists and _table_bucket_spec(spark, identifier, desc) != want_buckets
 
     commit_lock = _FLIP_LOCKS[identifier.lower()]
 
@@ -509,16 +612,19 @@ def replace_relation_atomic(
         except Exception:
             spark.sql(f"DROP TABLE IF EXISTS {_q(tmp)}")
             raise
-        return
+        return rows
 
-    # copy-on-write pointer flip
-    old_loc = _table_location(spark, identifier)
+    # copy-on-write pointer flip; the base (the location minus its
+    # version suffix) is the same for every version, so a flip racing
+    # this write cannot move it
+    pre_loc = _table_location(spark, identifier, desc)
     base = (
-        _re.sub(_VERSION_RE, "", old_loc.rstrip("/"))
-        if old_loc
+        _re.sub(_VERSION_RE, "", pre_loc.rstrip("/"))
+        if pre_loc
         else _default_location(spark, identifier)
     )
     new_loc = f"{base}__v{uuid.uuid4().hex[:8]}"
+    old_loc = None
     flipped = False
     with _INFLIGHT_LOCK:
         _INFLIGHT_DIRS.add(new_loc)
@@ -531,6 +637,11 @@ def replace_relation_atomic(
             ).saveAsTable(tmp)
             with commit_lock:
                 _check_expected()
+                # the version this flip replaces, read under the lock: a
+                # rebuild of the same table may have flipped during the
+                # write, and the rollback and the vacuum's keep set need
+                # the version live right before ours
+                old_loc = _table_location(spark, identifier)
                 spark.sql(f"ALTER TABLE {_q(identifier)} SET LOCATION '{new_loc}'")
                 flipped = True
                 spark.sql(f"REFRESH TABLE {_q(identifier)}")
@@ -589,6 +700,7 @@ def replace_relation_atomic(
         keep=keep,
         keep_newer_than=(_time.time() - retain) if retain > 0 else None,
     )
+    return rows
 
 
 def _evolve_schema(
@@ -643,7 +755,7 @@ def incremental_merge(
     on_schema_change: str = "ignore",
     bucket_by: dict | None = None,
     sort_by: str | None = None,
-) -> None:
+) -> int:
     """Incremental strategies (reference: C5 — the adapter declares
     append / delete+insert / merge / insert_overwrite, fal/python/impl.py:
     256-291; dbt resolves ``get_incremental_{strategy}_sql``):
@@ -667,18 +779,24 @@ def incremental_merge(
     (the append path needs nothing: insertInto on a bucketed table
     honors the catalog's bucket spec, verified by bucket-suffixed
     output files in tests/test_round10_fixes.py).
+
+    Returns the batch's row count, observed on the write itself (on the
+    batch branch of the merge union for merge and delete+insert; a merge
+    that range-clusters for ``sort_by`` counts the batch before the swap).
     """
     if not spark.catalog.tableExists(identifier):
-        write_table(
+        return write_table(
             new_rows, identifier, mode="overwrite",
             partition_by=partition_by, bucket_by=bucket_by, sort_by=sort_by,
-        )
-        return
+        )()
     strategy = strategy or ("merge" if unique_key else "append")
     new_rows = _evolve_schema(spark, new_rows, identifier, on_schema_change)
     if strategy == "append":
-        new_rows.write.mode("append").format("parquet").insertInto(identifier)
-        return
+        batch, rows = count_rows(new_rows)
+        if not (partition_by or bucket_by or sort_by):
+            batch = _sized(batch)
+        batch.write.mode("append").format("parquet").insertInto(identifier)
+        return rows()
     if strategy == "insert_overwrite":
         if not partition_by:
             raise ValueError(f"{identifier}: insert_overwrite requires partition_by")
@@ -686,10 +804,11 @@ def incremental_merge(
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
             cols = spark.table(identifier).columns  # insertInto is positional
-            new_rows.select(*cols).write.mode("overwrite").insertInto(identifier)
+            batch, rows = count_rows(new_rows.select(*cols))
+            batch.write.mode("overwrite").insertInto(identifier)
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        return
+        return rows()
     if strategy not in ("merge", "delete+insert"):
         raise ValueError(f"{identifier}: unknown incremental strategy {strategy!r}")
     if unique_key is None:
@@ -701,13 +820,24 @@ def incremental_merge(
     # and swap atomically. The config name a dbt user writes must work.
     old = spark.table(identifier)
     keys = layout_cols(unique_key)  # dbt unique_key: str OR list
+    batch = new_rows.select(*old.columns)
+    if sort_by and not bucket_by:
+        # the swap range-clusters the union, and a range exchange runs its
+        # input twice (sampling, then the shuffle): an observation on the
+        # batch branch would count it twice. Count the batch (the model
+        # task caches it) before the swap replaces files its plan may read.
+        n = batch.count()
+        rows = lambda: n  # noqa: E731
+    else:
+        batch, rows = count_rows(batch)
     merged = old.join(new_rows.select(*keys).distinct(), on=keys, how="left_anti").unionByName(
-        new_rows.select(*old.columns)
+        batch
     )
     replace_relation_atomic(
         spark, merged, identifier,
         partition_by=partition_by, bucket_by=bucket_by, sort_by=sort_by,
     )
+    return rows()
 
 
 def apply_dtype_casts(df: DataFrame, dtype: dict[str, str] | None) -> DataFrame:
