@@ -23,15 +23,18 @@ import re
 import time
 from dataclasses import dataclass, field
 from pathlib import Path
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from dbt_fal_spark.materialize import (
     apply_dtype_casts,
+    compact_table,
     incremental_merge,
+    live_version_dir,
     replace_relation_atomic,
     snapshot_scd2,
+    vacuum_table,
     write_table,
 )
 from dbt_fal_spark.plans.executor import parallel_executor
@@ -90,11 +93,11 @@ def _model_bound_write(fal: "FalSpark", model: "DbtModel"):
     ``functools.partial(write_to_model, target_1=model.name)``
     (fal_script.py): a positional target re-binds target_1 and raises
     TypeError there — mirror that loudly instead of silently ignoring
-    it (ADVICE r11). ``target_2=`` is deliberately REJECTED here: the
+    it. ``target_2=`` is deliberately REJECTED here: the
     reference's partial happens to let it slip through and silently
     redirect the write to a different model — an accidental hole, not a
     contract — so this binding raises TypeError on it too (documented
-    deviation, r12 review)."""
+    deviation)."""
 
     def _write(df, *_a, **kw):
         if _a:
@@ -107,7 +110,7 @@ def _model_bound_write(fal: "FalSpark", model: "DbtModel"):
             # the reference's partial happens to let target_2= slip
             # through to a DIFFERENT model — an accidental hole, not a
             # contract; a bound write redirecting silently is the exact
-            # bug the positional guard exists to stop (r12 review)
+            # bug the positional guard exists to stop
             raise TypeError(
                 f"write_to_model bound to model {model.name!r} takes no "
                 "target_1/target_2 — it writes to its own model"
@@ -138,12 +141,15 @@ def _test_threshold(count: int, expr: str) -> bool:
     }[op]
 
 
-def _write_model(spark: SparkSession, df: DataFrame, identifier: str, exists: bool, **layout) -> int:
-    """Overwrite a model's relation — atomic swap when it ``exists`` —
-    and return the rows written, observed on the write itself."""
-    if exists:
-        return replace_relation_atomic(spark, df, identifier, **layout)()
-    return write_table(df, identifier, mode="overwrite", **layout)()
+def _write_model(
+    spark: SparkSession, df: DataFrame, identifier: str, exists: bool | None = None, **layout
+) -> Callable[[], int]:
+    """Overwrite a model's relation — atomic swap when it exists (looked
+    up unless ``exists`` is given) — and return a reader of the rows
+    written, observed on the write itself."""
+    if spark.catalog.tableExists(identifier) if exists is None else exists:
+        return replace_relation_atomic(spark, df, identifier, **layout)
+    return write_table(df, identifier, mode="overwrite", **layout)
 
 
 class FalSpark:
@@ -261,95 +267,48 @@ class FalSpark:
         the session ends, but the data stays under spark-warehouse/<schema>.db/.
         The reference relies on the warehouse being durable between CLI
         invocations (`fal run` reads the previous `dbt run`'s tables —
-        reference: fal_runner.py:34-76); mirror that by attaching any
-        model directory present on disk as an external parquet table.
+        reference: fal_runner.py:34-76); mirror that by attaching each
+        model's live version dir on disk (``live_version_dir``) as an
+        external parquet table.
         View/ephemeral models are re-created lazily on first reference
         (see ``_identifier``) — dbt semantics, where a view is just stored
         SQL."""
-        if self._warehouse_dir is not None:
-            wh_path = self._warehouse_dir
-        else:
-            wh = self.spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-            wh_path = Path(wh.removeprefix("file:"))
-        db_dir = wh_path / f"{self.schema}.db"
+        db_dir = self._warehouse_path() / f"{self.schema}.db"
         for model in self.manifest.models.values():
             if model.materialization in ("view", "ephemeral"):
                 continue
             identifier = f"{self.schema}.{model.target_name}"
             if self.spark.catalog.tableExists(identifier):
                 continue
-            # the atomic swap leaves copy-on-write version dirs
-            # (<name>__v<uuid8>, see materialize.replace_relation_atomic).
-            # The live one is read from the sidecar pointer file each
-            # successful flip writes; absent a pointer (pre-pointer
-            # tables), fall back to newest-mtime-with-data — which can
-            # misidentify a version that committed its parquet but
-            # crashed before SET LOCATION, the gap the pointer closes.
-            # Dirs holding only _SUCCESS markers or _temporary staging
-            # files (interrupted writes) have no committed data and are
-            # skipped; committed parquet never lives under a '_'/'.'
-            # prefixed path (hive partition dirs are 'col=value').
-            def _has_committed_parquet(root):
-                return any(
-                    not any(
-                        part.startswith(("_", "."))
-                        for part in f.relative_to(root).parts
-                    )
-                    for f in root.rglob("*.parquet")
-                )
-
-            import re as _re
-
-            from .materialize import _VERSION_RE, _read_live_pointer
-
-            candidates = [db_dir / model.target_name] + [
-                p
-                for p in db_dir.glob(f"{model.target_name}__v*")
-                if p.is_dir()
-                and _re.fullmatch(_re.escape(model.target_name) + _VERSION_RE[:-1], p.name)
-            ]
-            live = [
-                c for c in candidates if c.is_dir() and _has_committed_parquet(c)
-            ]
-            ptr = _read_live_pointer(str(db_dir / model.target_name))
-            loc = None
-            if ptr is not None:
-                p = Path(ptr)
-                if p.is_dir() and _has_committed_parquet(p):
-                    loc = p
-            if loc is None and live:
-                loc = max(live, key=lambda p: p.stat().st_mtime)
+            loc = live_version_dir(db_dir, model.target_name)
             if loc is not None:
-                self.spark.sql(
-                    f"CREATE TABLE {identifier} USING parquet LOCATION '{loc.resolve()}'"
-                )
+                self.spark.sql(f"CREATE TABLE {identifier} USING parquet LOCATION '{loc}'")
+
+    def _warehouse_path(self) -> Path:
+        """The warehouse this FalSpark writes into: the profile target's
+        ``warehouse_dir``, else the session's ``spark.sql.warehouse.dir``."""
+        if self._warehouse_dir is not None:
+            return self._warehouse_dir
+        return Path(
+            self.spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse").removeprefix("file:")
+        )
 
     # ------------------------------------------------------------------
     # relation resolution
     # ------------------------------------------------------------------
 
     def _identifier(self, model_name: str) -> str:
+        view = f"{self.schema}__{model_name}"
         if model_name in self._view_models:
-            return f"{self.schema}__{model_name}"
-        try:
-            model = self.manifest.model_by_name(model_name)
-        except KeyError:
-            model = None
+            return view
+        model = self._model(model_name)
         if model is not None and model.materialization in ("view", "ephemeral"):
             # a view is stored SQL — re-derive it on first reference in
             # this process (dbt semantics; upstream views chain lazily
             # through the ref-resolution this render performs)
             self._view_models.add(model_name)
-            rendered, _ = render_model_sql(
-                model.raw_sql,
-                resolve_ref=self._resolve_ref,
-                resolve_source=self._resolve_source,
-                this_name=f"{self.schema}__{model_name}",
-                vars=self.manifest.vars,
-                macros=self.manifest.macros,
-            )
-            self.spark.sql(rendered).createOrReplaceTempView(f"{self.schema}__{model_name}")
-            return f"{self.schema}__{model_name}"
+            self.spark.sql(self._render(model.raw_sql, this_name=view)).createOrReplaceTempView(view)
+            return view
         physical = model.target_name if model is not None else model_name
         ident = f"{self.schema}.{physical}"
         if self.defer and not self._selected_this_run(model_name) and not self.spark.catalog.tableExists(ident):
@@ -372,7 +331,10 @@ class FalSpark:
         the manifest at --state; here state_meta.json records the schema +
         warehouse the artifacts were built into). Takes the PHYSICAL
         (alias-resolved) name: an aliased upstream was materialized in the
-        state warehouse under its alias, not its model name (ADVICE r11)."""
+        state warehouse under its alias, not its model name. The table is
+        attached at its LIVE version dir: every rebuild there flips it to
+        a fresh ``<name>__v<uuid8>`` dir, so the canonical dir holds a
+        stale version or nothing."""
         meta = self._load_state_meta()
         schema, wh = meta.get("schema"), meta.get("warehouse_dir")
         if not schema or not wh:
@@ -380,17 +342,62 @@ class FalSpark:
         ident = f"{schema}.{physical_name}"
         if self.spark.catalog.tableExists(ident):
             return ident
-        loc = Path(wh) / f"{schema}.db" / physical_name
-        if loc.is_dir() and any(loc.iterdir()):
+        loc = live_version_dir(Path(wh) / f"{schema}.db", physical_name)
+        if loc is not None:
             self.spark.sql(f"CREATE DATABASE IF NOT EXISTS `{schema}`")
-            self.spark.sql(
-                f"CREATE TABLE IF NOT EXISTS {ident} USING parquet LOCATION '{loc.resolve()}'"
-            )
+            self.spark.sql(f"CREATE TABLE IF NOT EXISTS {ident} USING parquet LOCATION '{loc}'")
             return ident
         return None
 
-    def _resolve_ref(self, name: str) -> str:
-        return self._identifier(name)
+    def _model(self, name: str) -> DbtModel | None:
+        """The model called ``name``, None when the project has none."""
+        try:
+            return self.manifest.model_by_name(name)
+        except KeyError:
+            return None
+
+    def _render(self, sql: str, **kw) -> str:
+        """Render Jinja SQL against this project: refs, sources, vars and
+        macros (``kw``: this_name, is_incremental)."""
+        rendered, _ = render_model_sql(
+            sql,
+            resolve_ref=self._identifier,
+            resolve_source=self._resolve_source,
+            vars=self.manifest.vars,
+            macros=self.manifest.macros,
+            **kw,
+        )
+        return rendered
+
+    def _record(self, model: DbtModel, code: str, n: int | None) -> None:
+        """Keep what the model's write reported (dbt's adapter_response)."""
+        self._adapter_responses[model.name] = CurrentAdapterResponse(
+            message=code if n is None else f"{code} {n}", code=code, rows_affected=n
+        )
+
+    def _environment(self, model: DbtModel, name: str):
+        """The fal_project.yml environment ``name`` that ``model`` (or
+        its hook) runs in; a name the project does not define fails."""
+        try:
+            return self.environments[name]
+        except KeyError:
+            raise ValueError(
+                f"model {model.name!r} wants environment {name!r} "
+                "but fal_project.yml does not define it "
+                f"(defined: {', '.join(sorted(self.environments)) or 'none'})"
+            ) from None
+
+    def _current_model(self, model: DbtModel, **extra) -> dict:
+        """The ``current_model`` fields every script, hook and Python
+        model context carries, plus ``extra``."""
+        return dict(
+            name=model.name,
+            alias=model.target_name,
+            status=model.status,
+            meta=model.meta,
+            is_incremental=model.is_incremental,
+            **extra,
+        )
 
     # URL schemes teleport/source paths accept verbatim (reference:
     # A/src/dbt/fal/adapters/teleport/info.py:32-73 builds local and
@@ -540,14 +547,7 @@ class FalSpark:
         )
 
     def execute_sql(self, sql: str) -> DataFrame:
-        rendered, _ = render_model_sql(
-            sql,
-            resolve_ref=self._resolve_ref,
-            resolve_source=self._resolve_source,
-            vars=self.manifest.vars,
-            macros=self.manifest.macros,
-        )
-        return self._with_pandas_alias(self.spark.sql(rendered))
+        return self._with_pandas_alias(self.spark.sql(self._render(sql)))
 
     def write_to_model(
         self,
@@ -559,18 +559,19 @@ class FalSpark:
         mode: str = "overwrite",
     ) -> None:
         """Eager write (reference: project.py:803-853; default overwrite).
+        ``mode`` is ``"overwrite"`` or ``"append"``; anything else raises.
         Writes carry the target model's DECLARED layout (partition_by /
         bucket_by / sort_by) — a script overwrite must not flatten a
         bucketed/partitioned table — and appends are column-name-aligned
-        before the positional insertInto (a reordered-column df
-        previously appended values into the wrong columns). ``df`` may
+        before the positional insertInto (a reordered-column df would
+        append values into the wrong columns). ``df`` may
         be a pandas DataFrame (the reference's currency) — converted at
         this boundary."""
+        if mode not in ("overwrite", "append"):
+            raise ValueError(f"write_to_model mode must be 'overwrite' or 'append', got {mode!r}")
         name = target_2 or target_1
         df = apply_dtype_casts(self._to_spark(df), dtype)
-        model = next(
-            (m for m in self.manifest.models.values() if m.name == name), None
-        )
+        model = self._model(name)
         # dbt alias: write to the PHYSICAL relation (run.feature 'model aliases')
         identifier = f"{self.schema}.{model.target_name if model is not None else name}"
         layout = {
@@ -579,20 +580,11 @@ class FalSpark:
             "sort_by": getattr(model, "sort_by", None),
         }
         if mode == "overwrite":
-            if self.spark.catalog.tableExists(identifier):
-                replace_relation_atomic(self.spark, df, identifier, **layout)
-            else:
-                write_table(df, identifier, mode="overwrite", **layout)
-        else:
-            if self.spark.catalog.tableExists(identifier):
-                cols = self.spark.table(identifier).columns  # insertInto is positional
-                df.select(*cols).write.mode("append").format("parquet").insertInto(identifier)
-            else:
-                write_table(df, identifier, mode="overwrite", **layout)
-        try:
-            self.manifest.model_by_name(name).status = "success"
-        except KeyError:
-            pass
+            _write_model(self.spark, df, identifier, **layout)
+        else:  # aligns columns by name; the first append creates the table
+            incremental_merge(self.spark, df, identifier, unique_key=None, strategy="append", **layout)
+        if model is not None:
+            model.status = "success"
 
     def write_to_source(
         self,
@@ -718,14 +710,11 @@ class FalSpark:
             if kind == NodeKind.FAL_SCRIPT:
                 continue  # scripts attach to their model below
             model: DbtModel = self.graph.node_attr(node, "model")
-            pre = [
-                _ScriptTask(self, model, script)
-                for script in model.get_scripts(before=True)
-            ] + [_HookTask(self, model, h.path, h.arguments, h.environment) for h in model.get_hooks(pre=True)]
-            post = [
-                _ScriptTask(self, model, script)
-                for script in model.get_scripts(before=False)
-            ] + [_HookTask(self, model, h.path, h.arguments, h.environment) for h in model.get_hooks(pre=False)]
+            pre, post = (
+                [_ScriptTask(self, model, script) for script in model.get_scripts(before=side)]
+                + [_ScriptTask.hook(self, model, h) for h in model.get_hooks(pre=side)]
+                for side in (True, False)
+            )
             groups[node] = TaskGroup(
                 group_id=node,
                 task=_ModelTask(self, node),
@@ -754,7 +743,6 @@ class FalSpark:
             # record the RAW run outcome, not the derived property — a
             # skipped model with previously-run tests would otherwise
             # report 'tested' into run_results.json, masking the skip
-            # (r12 review)
             statuses[node] = raw
         self._write_run_results(statuses, time.time() - t0, context)
         self._write_state()
@@ -774,14 +762,7 @@ class FalSpark:
             if wanted is not None and snap.name not in wanted:
                 continue
             try:
-                rendered, _ = render_model_sql(
-                    snap.raw_sql,
-                    resolve_ref=self._resolve_ref,
-                    resolve_source=self._resolve_source,
-                    vars=self.manifest.vars,
-                    macros=self.manifest.macros,
-                )
-                staged = self.spark.sql(rendered)
+                staged = self.spark.sql(self._render(snap.raw_sql))
                 snapshot_scd2(
                     self.spark,
                     staged,
@@ -850,10 +831,7 @@ class FalSpark:
         (self.target_dir / "manifest_checksums.json").write_text(
             json.dumps(model_checksums(self.manifest), indent=1, sort_keys=True)
         )
-        if self._warehouse_dir is not None:
-            wh = str(self._warehouse_dir.resolve())
-        else:
-            wh = self.spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse").removeprefix("file:")
+        wh = str(self._warehouse_path().resolve())
         (self.target_dir / "state_meta.json").write_text(
             json.dumps({"schema": self.schema, "warehouse_dir": wh}, indent=1)
         )
@@ -991,7 +969,7 @@ class FalSpark:
                 for h in model.get_hooks(pre=pre):
                     if only_scripts and h.path not in only_scripts:
                         continue
-                    _HookTask(self, model, h.path, h.arguments, h.environment).execute(context)
+                    _ScriptTask.hook(self, model, h).execute(context)
                     ran.append(f"hook.{model.name}.{'PRE' if pre else 'POST'}.{h.path}")
         if run_globals and False in sides:
             for script in _global_scripts("after"):
@@ -1027,14 +1005,7 @@ class FalSpark:
 
         try:
             if t.test_type == "singular":
-                rendered, _ = render_model_sql(
-                    t.raw_sql,
-                    resolve_ref=self._resolve_ref,
-                    resolve_source=self._resolve_source,
-                    vars=self.manifest.vars,
-                    macros=self.manifest.macros,
-                )
-                fail_df = self.spark.sql(rendered)
+                fail_df = self.spark.sql(self._render(t.raw_sql))
                 if t.where:
                     # dbt `where` config on a singular test: the
                     # violation set is the filtered subset — same
@@ -1131,7 +1102,7 @@ class FalSpark:
             # attached result (reference scripts do
             # `node.freshness.status`), and source_freshness() already
             # refuses to reuse status-less rows — filter them here so
-            # load-time attach and command-time reuse agree (ADVICE r12)
+            # load-time attach and command-time reuse agree
             return {
                 r["unique_id"]: r
                 for r in doc.get("results", [])
@@ -1159,7 +1130,7 @@ class FalSpark:
             if not src.loaded_at_field:
                 if recompute:
                     # an unevaluable source must not keep re-persisting a
-                    # load-attached artifact row forever (r12 review)
+                    # load-attached artifact row forever
                     src.freshness_result = None
                 continue
             art = artifact.get(src.unique_id)
@@ -1187,7 +1158,7 @@ class FalSpark:
             if row["max_loaded_at"] is None:
                 # empty table / all-NULL loaded_at: dbt reports the
                 # source as 'runtime error' instead of crashing the
-                # whole freshness run (r13 review)
+                # whole freshness run
                 src.freshness_result = {
                     "unique_id": src.unique_id,
                     "max_loaded_at": None,
@@ -1270,84 +1241,22 @@ class FalSpark:
         old files, same guarantee as any model rebuild. Returns the
         partition count written.
 
-        Concurrent REBUILDS are handled optimistically (r14): the live
-        location is captured before the read, and the swap commits only
+        Concurrent REBUILDS are handled optimistically: the live
+        version is captured before the read, and the swap commits only
         if it is unchanged — otherwise ConcurrentRebuildError aborts the
         compaction (the rebuild's fresh data wins; re-run compact). The
         check-then-flip is atomic under the per-table commit lock shared
-        with every rebuild's swap."""
-        from .materialize import table_swap_token
-
+        with every rebuild's swap (see materialize.compact_table)."""
         self._require_table_model(model_name, "compact")
-        identifier = self._identifier(model_name)
-        expected = table_swap_token(self.spark, identifier)
-        df = self.spark.table(identifier)
-        model = next(
-            (m for m in self.manifest.models.values() if m.name == model_name), None
+        model = self._model(model_name)
+        return compact_table(
+            self.spark,
+            self._identifier(model_name),
+            target_partitions,
+            partition_by=model.partition_by,
+            bucket_by=model.bucket_by,
+            sort_by=model.sort_by,
         )
-        # every declared layout must survive compaction — a rewrite that
-        # flattened a bucketed/partitioned/clustered table would heal the
-        # small files while silently voiding the zero-shuffle-join /
-        # partition-pruning / data-skipping contract the config declared
-        sort_by = getattr(model, "sort_by", None)
-        bucket_by = getattr(model, "bucket_by", None)
-        partition_by = getattr(model, "partition_by", None)
-        if bucket_by:
-            # shuffle into exactly n_buckets tasks on the bucket cols so
-            # the rewrite emits one file per bucket (the minimal healed
-            # layout) instead of files × tasks
-            from .materialize import layout_cols
-
-            cols = layout_cols(bucket_by["cols"])
-            n = int(bucket_by.get("n", 32))
-            out = df.repartition(n, *cols)
-            replace_relation_atomic(
-                self.spark, out, identifier,
-                bucket_by=bucket_by, partition_by=partition_by,
-                expected_token=expected,
-            )
-            return n
-        if sort_by:
-            from .materialize import layout_cols
-
-            cols = layout_cols(sort_by)
-            n = target_partitions or self.spark.sparkContext.defaultParallelism
-            out = df.repartitionByRange(n, *cols).sortWithinPartitions(*cols)
-            replace_relation_atomic(
-                self.spark, out, identifier, partition_by=partition_by,
-                expected_token=expected,
-            )
-            return n
-        n = target_partitions or self.spark.sparkContext.defaultParallelism
-        if partition_by:
-            # co-locate each hive partition's rows so the rewrite emits
-            # few files per partition directory, not files × tasks
-            from .materialize import layout_cols
-
-            pcols = layout_cols(partition_by)
-            out = df.repartition(n, *pcols)
-            replace_relation_atomic(
-                self.spark, out, identifier, partition_by=partition_by,
-                expected_token=expected,
-            )
-            return n
-        # Exact partition count needed (coalesce-vs-grow decision AND the
-        # return value), so the stats-based probe readers.scan_bytes uses
-        # on query paths cannot apply — bytes don't give a split count
-        # for an arbitrary post-transform plan. The JVM-side RDD probe
-        # returns the same number as df.rdd.getNumPartitions() without
-        # constructing the Python-conversion RDD (the bulk of that
-        # probe's ~100 ms driver cost, r16 measurement); either way this
-        # runs once per compact() call, directly before a full table
-        # rewrite that dwarfs it.
-        try:
-            cur = df._jdf.queryExecution().toRdd().getNumPartitions()
-        except Exception:  # foreign session without the internal API
-            cur = df.rdd.getNumPartitions()
-        # coalesce when shrinking (no shuffle); repartition only to grow
-        out = df.coalesce(n) if n <= cur else df.repartition(n)
-        replace_relation_atomic(self.spark, out, identifier, expected_token=expected)
-        return min(n, cur) if n <= cur else n
 
     def vacuum(self, model_name: str) -> int:
         """Delete a model's non-live copy-on-write version directories
@@ -1357,59 +1266,11 @@ class FalSpark:
         between pipeline runs; readers with long scans are additionally
         protected by ``spark.falspark.vacuum.retainSeconds`` (version
         dirs modified within the window survive, Delta's retention
-        check). A CONCURRENT rebuild is guarded two ways: version dirs
-        newer than the last committed flip (the live pointer file's
-        mtime) are skipped, so a half-written swap target is never
-        deleted mid-flip; and because a flip can commit BETWEEN our
-        catalog read and the pointer-mtime read (making the new live
-        dir look both non-live and old), the pointer's CONTENT and the
-        catalog location are re-read AFTER capturing the mtime and
-        unioned into the keep set — the post-flip live dir can never
-        be deleted. Returns the number of dirs removed."""
-        import os
-        import re as _re
-        import time as _time
-
-        from .materialize import (
-            RETAIN_CONF,
-            _VERSION_RE,
-            _live_pointer_path,
-            _read_live_pointer,
-            _table_location,
-            _vacuum_versions,
-        )
-
+        check). Version dirs a concurrent rebuild is writing or has just
+        made live are never deleted (see materialize.vacuum_table).
+        Returns the number of dirs removed."""
         self._require_table_model(model_name, "vacuum")
-        identifier = self._identifier(model_name)
-        live = _table_location(self.spark, identifier)
-        if live is None:
-            return 0
-        base = _re.sub(_VERSION_RE, "", live.rstrip("/"))
-        try:
-            ref_mtime = os.path.getmtime(_live_pointer_path(base))
-        except OSError:  # pre-pointer table: fall back to the live dir
-            ref_mtime = os.path.getmtime(live) if os.path.isdir(live) else None
-        retain = float(self.spark.conf.get(RETAIN_CONF, "0") or "0")
-        if retain > 0 and ref_mtime is not None:
-            ref_mtime = min(ref_mtime, _time.time() - retain)
-        # TOCTOU guard: a flip committing between the _table_location
-        # read above and the getmtime above leaves the NEW live dir
-        # outside keep with an mtime older than the fresh pointer. Re-
-        # read both sources now — after ref_mtime is pinned — so that
-        # dir is protected whichever side of our reads the flip landed.
-        keep = {live}
-        ptr = _read_live_pointer(base)
-        if ptr:
-            keep.add(ptr)
-        relive = _table_location(self.spark, identifier)
-        if relive:
-            keep.add(relive)
-        # a version dir an in-process writer is still producing is never
-        # deleted: writers register their dirs (r14), and since r15 the
-        # registry is re-checked per directory immediately before each
-        # rmtree inside _vacuum_versions (ADVICE r14 — a snapshot taken
-        # here could miss a writer that registers after this line)
-        return _vacuum_versions(base, keep=keep, keep_newer_than=ref_mtime)
+        return vacuum_table(self.spark, self._identifier(model_name))
 
     def analyze(self, model_name: str, columns: bool = True) -> None:
         """ANALYZE TABLE — compute row-count/size (and per-column NDV,
@@ -1427,10 +1288,8 @@ class FalSpark:
     def is_table_model(self, model_name: str) -> bool:
         """True when the model materializes as files (table/incremental/
         seed) — the only shapes compact/analyze apply to."""
-        for m in self.manifest.models.values():
-            if m.name == model_name:
-                return m.materialization not in ("view", "ephemeral")
-        return False
+        model = self._model(model_name)
+        return model is not None and model.materialization not in ("view", "ephemeral")
 
     def _require_table_model(self, model_name: str, verb: str) -> None:
         if not self.is_table_model(model_name):
@@ -1460,32 +1319,23 @@ class _ModelTask:
         if model.materialization == "seed":
             df = spark.read.csv(str(model.path), header=True, inferSchema=True)
             n = write_table(df, f"{fal.schema}.{model.target_name}", mode="overwrite")()
-            fal._adapter_responses[model.name] = CurrentAdapterResponse(
-                message=f"CREATE TABLE {n}", code="CREATE TABLE", rows_affected=n
-            )
+            fal._record(model, "CREATE TABLE", n)
             return SUCCESS
         if model.python_model is not None:
             return self._run_python_model(model)
         identifier = f"{fal.schema}.{model.target_name}"
         exists = spark.catalog.tableExists(identifier)
         full_refresh = getattr(fal, "_full_refresh", False)
-        rendered, _ = render_model_sql(
+        df = spark.sql(fal._render(
             model.raw_sql,
-            resolve_ref=fal._resolve_ref,
-            resolve_source=fal._resolve_source,
             this_name=identifier,
-            vars=fal.manifest.vars,
-            macros=fal.manifest.macros,
             is_incremental=model.is_incremental and exists and not full_refresh,
-        )
-        df = spark.sql(rendered)
+        ))
         mat = model.materialization
         if mat in ("view", "ephemeral"):
             fal._view_models.add(model.name)
             df.createOrReplaceTempView(fal._identifier(model.name))
-            fal._adapter_responses[model.name] = CurrentAdapterResponse(
-                message="CREATE VIEW", code="CREATE VIEW", rows_affected=None
-            )
+            fal._record(model, "CREATE VIEW", None)
             return SUCCESS
         code = "CREATE TABLE"
         if mat == "incremental" and not full_refresh:
@@ -1513,16 +1363,14 @@ class _ModelTask:
                 df.unpersist()
         elif mat == "incremental":
             # full refresh: atomic swap (the table may feed the model's own SQL)
-            n = _write_model(spark, df, identifier, exists, partition_by=model.partition_by)
+            n = _write_model(spark, df, identifier, exists, partition_by=model.partition_by)()
         else:  # table
             n = _write_model(
                 spark, df, identifier, exists,
                 bucket_by=model.bucket_by, sort_by=model.sort_by,
                 partition_by=model.partition_by,
-            )
-        fal._adapter_responses[model.name] = CurrentAdapterResponse(
-            message=f"{code} {n}", code=code, rows_affected=n
-        )
+            )()
+        fal._record(model, code, n)
         return SUCCESS
 
     def _run_python_model(self, model: DbtModel) -> int:
@@ -1567,8 +1415,8 @@ class _ModelTask:
             # model-scoped write_to_model: the target is THIS model
             # (reference fal models omit the name — orders_forecast.py:57).
             # Flag only AFTER the write succeeds: flipping it before
-            # validation let a caught TypeError path count as "wrote" and
-            # report stale-table success (r12 review)
+            # validation would let a caught TypeError path count as
+            # "wrote" and report stale-table success
             _bound_write(df, *a, **kw)
             wrote["called"] = True
 
@@ -1585,13 +1433,7 @@ class _ModelTask:
             "session": fal.spark,
             "context": Context(
                 current_model=CurrentModel(
-                    name=model.name,
-                    alias=model.target_name,
-                    status=model.status,
-                    columns=model.columns,
-                    tests=[],
-                    meta=model.meta,
-                    is_incremental=model.is_incremental,
+                    **fal._current_model(model, columns=model.columns, tests=[])
                 ),
                 target=fal.target_name,
             ),
@@ -1601,7 +1443,7 @@ class _ModelTask:
         # alias-aware: materialize and read back under target_name, the
         # same identifier ref() resolution / bootstrap / docs use — a
         # config.alias'd python model otherwise writes schema.name while
-        # downstream refs read schema.alias (ADVICE r11, medium)
+        # downstream refs read schema.alias
         identifier = f"{fal.schema}.{model.target_name}"
         if fn is None:
             # fal-style script model: the body must have materialized
@@ -1619,13 +1461,8 @@ class _ModelTask:
             df = fn(dbt_obj, fal.spark)
             if df is None:
                 raise ValueError(f"python model {model.name} returned no DataFrame")
-            n = _write_model(
-                fal.spark, fal._to_spark(df), identifier,
-                fal.spark.catalog.tableExists(identifier),
-            )
-        fal._adapter_responses[model.name] = CurrentAdapterResponse(
-            message=f"CREATE TABLE {n}", code="CREATE TABLE", rows_affected=n
-        )
+            n = _write_model(fal.spark, fal._to_spark(df), identifier)()
+        fal._record(model, "CREATE TABLE", n)
         return SUCCESS
 
     def _run_python_model_isolated(self, model: DbtModel) -> int:
@@ -1641,14 +1478,7 @@ class _ModelTask:
         A ``.ipynb`` model is not supported isolated (the env has no
         notebook strip step) — convert it to .py or drop the env."""
         fal = self.fal
-        try:
-            env = fal.environments[model.environment]
-        except KeyError:
-            raise ValueError(
-                f"model {model.name!r} wants environment {model.environment!r} "
-                "but fal_project.yml does not define it "
-                f"(defined: {', '.join(sorted(fal.environments)) or 'none'})"
-            ) from None
+        env = fal._environment(model, model.environment)
         if model.python_model.suffix == ".ipynb":
             raise ValueError(
                 f"isolated execution of notebook model {model.name} is not "
@@ -1679,24 +1509,14 @@ class _ModelTask:
                     "sources": sources,
                     "out": out,
                     "this": f"{fal.schema}.{model.target_name}",
-                    "current_model": {
-                        "name": model.name,
-                        "alias": model.target_name,
-                        "status": model.status,
-                        "meta": model.meta,
-                        "is_incremental": model.is_incremental,
-                    },
+                    "current_model": fal._current_model(model),
                     "target": fal.target_name,
                 },
             )
-            identifier = f"{fal.schema}.{model.target_name}"
             n = _write_model(
-                fal.spark, fal.spark.read.parquet(out), identifier,
-                fal.spark.catalog.tableExists(identifier),
-            )
-        fal._adapter_responses[model.name] = CurrentAdapterResponse(
-            message=f"CREATE TABLE {n}", code="CREATE TABLE", rows_affected=n
-        )
+                fal.spark, fal.spark.read.parquet(out), f"{fal.schema}.{model.target_name}"
+            )()
+        fal._record(model, "CREATE TABLE", n)
         return SUCCESS
 
 
@@ -1753,6 +1573,17 @@ class _ScriptTask:
         self.env_override: str | None = None
         self.is_hook = False
 
+    @classmethod
+    def hook(cls, fal: FalSpark, model: DbtModel, h) -> "_ScriptTask":
+        """meta.fal pre-/post-hook ``h`` with its `with:` arguments and
+        optional per-hook `environment:` override (reference:
+        fal_script.py:43-83 create_hook — LocalHook vs IsolatedHook
+        selection)."""
+        task = cls(fal, model, h.path, h.arguments)
+        task.env_override = h.environment
+        task.is_hook = True
+        return task
+
     def execute(self, context: dict) -> int:
         fal = self.fal
         model = self.model
@@ -1772,29 +1603,13 @@ class _ScriptTask:
             # isolated execution (reference: IsolatedHook → environments):
             # the script runs in the named venv's interpreter with the
             # context shim; no SparkSession crosses the boundary.
-            try:
-                env = fal.environments[env_name]
-            except KeyError:
-                raise ValueError(
-                    f"model {model.name!r} wants environment {env_name!r} "
-                    "but fal_project.yml does not define it "
-                    f"(defined: {', '.join(sorted(fal.environments)) or 'none'})"
-                ) from None
-            env.run_script(
+            resp = fal._adapter_responses.get(model.name)
+            fal._environment(model, env_name).run_script(
                 path,
                 {
-                    "current_model": {
-                        "name": model.name,
-                        "alias": model.target_name,
-                        "status": model.status,
-                        "meta": model.meta,
-                        "is_incremental": model.is_incremental,
-                        "adapter_response": (
-                            dataclasses.asdict(fal._adapter_responses[model.name])
-                            if model.name in fal._adapter_responses
-                            else None
-                        ),
-                    },
+                    "current_model": fal._current_model(
+                        model, adapter_response=resp and dataclasses.asdict(resp)
+                    ),
                     "arguments": self.arguments,
                     "target": fal.target_name,
                 },
@@ -1804,16 +1619,12 @@ class _ScriptTask:
         if path.suffix == ".ipynb":
             code = _process_ipynb(code)
         script_context = Context(
-            current_model=CurrentModel(
-                name=model.name,
-                alias=model.target_name,
-                status=model.status,
+            current_model=CurrentModel(**fal._current_model(
+                model,
                 columns=model.columns,
                 tests=[t for t in fal.manifest.tests.values() if t.model_id == model.unique_id],
-                meta=model.meta,
-                is_incremental=model.is_incremental,
                 adapter_response=fal._adapter_responses.get(model.name),
-            )
+            ))
             if model is not None
             else None,
             arguments=self.arguments,
@@ -1861,24 +1672,6 @@ class _ScriptTask:
             namespace["write_to_source"] = _not_allowed("write_to_source")
         exec(compile(code, str(path), "exec"), namespace)
         return SUCCESS
-
-
-class _HookTask(_ScriptTask):
-    """meta.fal pre-/post-hook with `with:` arguments and optional
-    per-hook `environment:` override (reference: fal_script.py:43-83
-    create_hook — LocalHook vs IsolatedHook selection)."""
-
-    def __init__(
-        self,
-        fal: FalSpark,
-        model: DbtModel,
-        path: str,
-        arguments: dict,
-        environment: str | None = None,
-    ) -> None:
-        super().__init__(fal, model, path, arguments)
-        self.env_override = environment
-        self.is_hook = True
 
 
 # moved to project/loader.py (model discovery needs it too); re-bound

@@ -12,6 +12,13 @@ here the engine owns them:
 - incremental first run full table; then append, or merge-by-key via
               anti-join + union with the reference's temp-swap protocol
 
+This module is the only one that knows the on-disk table format. It owns
+the writes (``write_table``, ``incremental_merge``, ``snapshot_scd2``),
+the atomic swap (``replace_relation_atomic``), the copy-on-write version
+dirs and their live pointer file, compaction (``compact_table``), vacuum
+(``vacuum_table``) and finding the live version to re-attach a table the
+catalog forgot (``live_version_dir``). ``api.FalSpark`` calls these verbs.
+
 Scale notes: tables are parquet in the session warehouse; the temp-swap
 (write ``<name>__f__<uuid8>``, drop, rename) is exactly the reference's
 atomic-overwrite dance — on Delta this would be a transactional REPLACE.
@@ -26,8 +33,8 @@ alone. Exempt, and written exactly as the plan
 or layout says: declared ``sort_by``, ``bucket_by`` and ``partition_by``;
 plans holding an explicit repartition or coalesce (a ``REPARTITION`` /
 ``DISTRIBUTE BY`` hint, ``DataFrame.repartition`` in a Python model,
-``compact(target_partitions=...)``). Incremental appends still add one
-file set per batch; ``FalSpark.compact`` heals those.
+``compact_table(target_partitions=...)``). Incremental appends still add
+one file set per batch; ``compact_table`` heals those.
 
 Row counts: ``write_table`` and ``replace_relation_atomic`` attach a
 metrics-only Observation above any exchange they add and return a reader
@@ -37,9 +44,17 @@ re-reading them.
 
 from __future__ import annotations
 
+import collections
+import os
 import re
+import shutil
+import tempfile
+import threading
+import time
 import uuid
+from pathlib import Path
 from typing import Callable
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -99,24 +114,24 @@ def _sized(df: DataFrame) -> DataFrame:
     return df.coalesce(min(max(1, -(-est // max(1, split))), (1 << 31) - 1))
 
 
+def _default_location(spark: SparkSession, identifier: str) -> str:
+    """Canonical warehouse path for a table name (version-suffix base)."""
+    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse"))
+    *db, table = identifier.lower().split(".")
+    db_dir = f"{db[-1]}.db" if db and db[-1] != "default" else ""
+    return os.path.join(os.path.abspath(wh.path), db_dir, table)
+
+
 def _clean_orphan_location(spark: SparkSession, identifier: str) -> None:
     """A table directory left by a previous session (the in-memory catalog
     forgets tables across sessions; their warehouse dirs persist) blocks
     saveAsTable with LOCATION_ALREADY_EXISTS — remove it when the catalog
     has no such table."""
-    import os
-    import shutil
-    from urllib.parse import urlparse
-
     if spark.catalog.tableExists(identifier):
         return
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", ""))
-    if wh.scheme not in ("", "file"):
+    if urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).scheme not in ("", "file"):
         return
-    parts = identifier.split(".")
-    table = parts[-1].lower()
-    db = parts[-2].lower() if len(parts) > 1 else "default"
-    loc = os.path.join(wh.path, f"{db}.db" if db != "default" else "", table)
+    loc = _default_location(spark, identifier)
     if os.path.isdir(loc):
         shutil.rmtree(loc, ignore_errors=True)
 
@@ -126,9 +141,8 @@ def layout_cols(spec) -> list[str]:
     comma-string form (``"k1, k2"``) and the YAML/Jinja list form
     (``["k1", "k2"]``) for partition_by / sort_by / bucket_by-cols /
     unique_key (reference: dbt-core node config); normalizing here means
-    every writer and maintenance path handles both — a list previously
-    reached ``str(x).split(',')`` and produced bracketed garbage column
-    names (r10 adversarial review finding)."""
+    every writer and maintenance path handles both — a list reaching
+    ``str(x).split(',')`` would produce bracketed garbage column names."""
     if spec is None:
         return []
     if isinstance(spec, (list, tuple)):
@@ -160,6 +174,25 @@ def _shape(df: DataFrame, partition_by, bucket_by, sort_by) -> DataFrame:
     return _sized(df)
 
 
+def _bucket_spec(bucket_by: dict | None) -> tuple[int, tuple[str, ...]] | None:
+    """(num_buckets, bucket_cols) a ``bucket_by`` config declares."""
+    if not bucket_by:
+        return None
+    return int(bucket_by.get("n", 32)), tuple(layout_cols(bucket_by["cols"]))
+
+
+def _parquet_writer(df: DataFrame, mode: str, partition_by, bucket_by):
+    """A parquet writer for ``df`` carrying the declared partition and
+    bucket layout."""
+    writer = df.write.mode(mode).format("parquet")
+    if partition_by:
+        writer = writer.partitionBy(*layout_cols(partition_by))
+    if bucket_by:
+        n, cols = _bucket_spec(bucket_by)
+        writer = writer.bucketBy(n, *cols).sortBy(*cols)
+    return writer
+
+
 def write_table(
     df: DataFrame,
     identifier: str,
@@ -184,40 +217,32 @@ def write_table(
     # count taken below it
     df, rows = count_rows(_shape(df, partition_by, bucket_by, sort_by))
     _clean_orphan_location(df.sparkSession, identifier)
-    writer = df.write.mode(mode).format("parquet")
-    if partition_by:
-        writer = writer.partitionBy(*layout_cols(partition_by))
-    if bucket_by:
-        cols = layout_cols(bucket_by["cols"])
-        writer = writer.bucketBy(int(bucket_by.get("n", 32)), *cols).sortBy(*cols)
-    writer.saveAsTable(identifier)
+    _parquet_writer(df, mode, partition_by, bucket_by).saveAsTable(identifier)
     return rows
 
 
-_VERSION_RE = r"__v[0-9a-f]{8}$"
+# the suffix of a copy-on-write version dir, ``<table>__v<uuid8>``
+_VERSION_RE = re.compile(r"__v[0-9a-f]{8}$")
 
 # Per-table-base commit locks for the pointer flip: a maintenance verb
 # (compact) and a model rebuild racing on the SAME table must serialize
 # their check-then-flip sections, or last-writer-wins silently replaces
-# the rebuild's fresh data with recompacted stale data (r14 review).
+# the rebuild's fresh data with recompacted stale data.
 # In-process only — one driver owns a parquet warehouse by design; a
 # multi-writer deployment needs a transactional table format (Delta/
 # Iceberg), not file locks. defaultdict single-key access is GIL-atomic
 # (the environments.py _ENSURE_LOCKS precedent).
-import collections as _collections
-import threading as _threading
-
-_FLIP_LOCKS: dict[str, _threading.Lock] = _collections.defaultdict(_threading.Lock)
+_FLIP_LOCKS: dict[str, threading.Lock] = collections.defaultdict(threading.Lock)
 
 # Version directories some in-process writer is CURRENTLY producing
 # (registered before the expensive saveAsTable, cleared after commit or
 # cleanup). Every vacuum path keeps them: a concurrent writer's
 # half-written dir matches the version pattern and is in nobody's
 # keep set, so without this registry a racing flip's trailing vacuum
-# could rmtree it mid-write (r14 review). In-process only, same
+# could rmtree it mid-write. In-process only, same
 # single-driver scope as _FLIP_LOCKS.
 _INFLIGHT_DIRS: set[str] = set()
-_INFLIGHT_LOCK = _threading.Lock()
+_INFLIGHT_LOCK = threading.Lock()
 
 
 def inflight_version_dirs() -> set[str]:
@@ -240,17 +265,14 @@ def table_swap_token(spark: SparkSession, identifier: str):
     dir) but NOT drop-first swaps — RENAME TO lands a rebuilt
     hive-partitioned table on the same canonical path every time. For
     those, the per-commit NONCE carries the version: every committed
-    swap rewrites the live pointer file with a fresh uuid (ADVICE r14 —
-    the previous mtime-only fallback compared equal when a rebuild
-    landed in the same coarse-filesystem tick as the token capture,
-    letting compact commit stale data undetected). The directory mtime
+    swap rewrites the live pointer file with a fresh uuid (an mtime-only
+    token compares equal when a rebuild lands in the same coarse-
+    filesystem tick as the token capture, letting compact commit stale
+    data undetected). The directory mtime
     rides along as a third component for in-place writes that bypass
     the swap path (incremental appends touch the dir but not the
     pointer). Pre-pointer tables and non-local locations degrade
     gracefully (nonce/mtime None)."""
-    import os
-    from urllib.parse import urlparse
-
     loc = _table_location(spark, identifier)
     if loc is None:
         return None
@@ -267,9 +289,7 @@ def table_swap_token(spark: SparkSession, identifier: str):
 
 def _re_sub_version(loc: str) -> str:
     """Strip the ``__v<uuid8>`` suffix off a version-dir path."""
-    import re as _re
-
-    return _re.sub(_VERSION_RE, "", loc.rstrip("/"))
+    return _VERSION_RE.sub("", loc.rstrip("/"))
 
 
 def _describe(spark: SparkSession, identifier: str) -> dict[str, str]:
@@ -284,8 +304,6 @@ def _table_location(
 ) -> str | None:
     """Filesystem path of a table's current location (None if absent),
     from ``desc`` (a ``_describe`` of the table) when given."""
-    from urllib.parse import urlparse
-
     if desc is None:
         if not spark.catalog.tableExists(identifier):
             return None
@@ -326,8 +344,6 @@ def _live_pointer_path(base: str) -> str:
     successful pointer flip). '_'-prefixed so a parquet reader listing
     the parent never sees it as data; a plain file so _vacuum_versions
     (dirs only) never removes it."""
-    import os
-
     return os.path.join(os.path.dirname(base), f"_{os.path.basename(base)}.__live__")
 
 
@@ -335,23 +351,19 @@ def _write_live_pointer(base: str, loc: str) -> None:
     """Atomically persist the live location (tmp file + rename). Line 1
     is the location; line 2 is a fresh per-commit NONCE — the version
     component table_swap_token uses for drop-first swaps, whose
-    committed location never changes (ADVICE r14: dir mtime alone has
-    coarse-filesystem ticks).
+    committed location never changes (dir mtime alone has coarse-
+    filesystem ticks).
 
     A writer killed between mkstemp and the rename (the in-process
     cleanup below can't run on SIGKILL) leaves a ``.__live_tmp_*`` file
     behind; they are invisible to readers ('.'-prefixed, and
     _vacuum_versions removes only dirs) but accumulate in the db dir
     across crashes, so each successful write opportunistically reaps
-    stale ones (r16 adversarial review). The 1-hour age floor keeps a
+    stale ones. The 1-hour age floor keeps a
     CONCURRENT writer's milliseconds-old tmp file safe."""
-    import os
-    import tempfile
-    import time as _time
-
     parent = os.path.dirname(base)
     try:
-        cutoff = _time.time() - 3600
+        cutoff = time.time() - 3600
         for f in os.listdir(parent):
             if f.startswith(".__live_tmp_"):
                 p = os.path.join(parent, f)
@@ -382,7 +394,7 @@ def _write_live_pointer(base: str, loc: str) -> None:
 
 def _read_live_pointer(base: str) -> str | None:
     """Line 1 of the pointer file: the live location (single-line files
-    written before r15 parse identically — no nonce line, that's all)."""
+    from before the nonce parse identically — no nonce line, that's all)."""
     try:
         with open(_live_pointer_path(base)) as f:
             loc = f.readline().strip()
@@ -393,7 +405,7 @@ def _read_live_pointer(base: str) -> str | None:
 
 def _read_live_nonce(base: str) -> str | None:
     """Line 2 of the pointer file: the per-commit nonce (None for
-    pre-r15 pointer files and pointerless tables)."""
+    single-line pointer files and pointerless tables)."""
     try:
         with open(_live_pointer_path(base)) as f:
             f.readline()
@@ -403,18 +415,62 @@ def _read_live_nonce(base: str) -> str | None:
         return None
 
 
+def _version_dirs(base: str) -> list[str]:
+    """``base`` (the un-suffixed table path) and its ``<name>__v<uuid8>``
+    copy-on-write siblings, those that exist as directories."""
+    name, parent = os.path.basename(base), os.path.dirname(base)
+    try:
+        entries = os.listdir(parent)
+    except OSError:
+        return []
+    return [
+        os.path.join(parent, d)
+        for d in entries
+        if (d == name or _re_sub_version(d) == name) and os.path.isdir(os.path.join(parent, d))
+    ]
+
+
+def _has_committed_parquet(root: Path) -> bool:
+    """Committed parquet never lives under a '_'/'.'-prefixed path (hive
+    partition dirs are 'col=value'): a dir holding only _SUCCESS markers
+    or _temporary staging files is an interrupted write."""
+    return any(
+        not any(part.startswith(("_", ".")) for part in f.relative_to(root).parts)
+        for f in root.rglob("*.parquet")
+    )
+
+
+def live_version_dir(db_dir: str | Path, name: str) -> str | None:
+    """Resolved path of the version dir holding table ``name``'s live
+    data under ``db_dir`` (a ``<schema>.db`` directory), for attaching a
+    table the catalog does not know: after a process restart (the
+    in-memory catalog forgets tables, their dirs persist) or for a
+    deferred ref into another warehouse. The live pointer each committed
+    swap writes names it. Without a usable pointer (tables written before
+    pointers existed) the newest version dir holding committed parquet
+    wins — which can pick a version that committed its files but crashed
+    before its flip, the gap the pointer closes. None when no dir has
+    data."""
+    base = os.path.join(db_dir, name)
+    ptr = _read_live_pointer(base)
+    if ptr is not None and os.path.isdir(ptr) and _has_committed_parquet(Path(ptr)):
+        return str(Path(ptr).resolve())
+    live = [Path(d) for d in _version_dirs(base) if _has_committed_parquet(Path(d))]
+    return str(max(live, key=lambda p: p.stat().st_mtime).resolve()) if live else None
+
+
 def _vacuum_versions(base: str, keep: set[str], keep_newer_than: float | None = None) -> int:
     """Delete copy-on-write version dirs of ``base`` (the un-suffixed
     table path) except those whose abspath is in ``keep`` or whose mtime
     is strictly newer than ``keep_newer_than`` (epoch seconds). The
     mtime guard serves two callers: the swap's grace-window tail passes
     ``now - retainSeconds`` (time-based reader protection), and
-    FalSpark.vacuum passes the live pointer's mtime so a version dir a
+    vacuum_table passes the live pointer's mtime so a version dir a
     CONCURRENT rebuild is still writing — newer than the last committed
     flip — is never deleted mid-flip. Returns dirs removed.
 
     The in-flight writer registry (_INFLIGHT_DIRS) is consulted PER
-    DIRECTORY, immediately before each rmtree (ADVICE r14): a caller-
+    DIRECTORY, immediately before each rmtree: a caller-
     supplied snapshot taken before the listdir leaves a window where a
     writer registers + creates its dir between the snapshot and the
     delete loop reaching it. The per-dir re-check closes that window
@@ -425,7 +481,7 @@ def _vacuum_versions(base: str, keep: set[str], keep_newer_than: float | None = 
     suffixes and never reused.
 
     The LIVE POINTER is also re-read per directory, AFTER the in-flight
-    check (ADVICE r15): a concurrent rebuild that commits its flip and
+    check: a concurrent rebuild that commits its flip and
     deregisters between the caller's ``keep`` snapshot and this loop
     reaching its dir would otherwise have its now-live version dir
     deleted. Order matters — writers deregister only after the pointer
@@ -433,53 +489,48 @@ def _vacuum_versions(base: str, keep: set[str], keep_newer_than: float | None = 
     dir that re-checks as unregistered either was never a rebuild
     target or already has the pointer naming it live. Checking the
     pointer first would leave a TOCTOU gap the other way around."""
-    import os
-    import re as _re
-    import shutil
-
-    name = os.path.basename(base)
-    parent = os.path.dirname(base)
     keep_abs = {os.path.abspath(k) for k in keep}
     removed = 0
-    for d in os.listdir(parent) if os.path.isdir(parent) else []:
-        p = os.path.join(parent, d)
-        if (
-            (d == name or _re.fullmatch(_re.escape(name) + _VERSION_RE[:-1], d))
-            and os.path.abspath(p) not in keep_abs
-            and os.path.isdir(p)
-        ):
-            if keep_newer_than is not None:
-                try:
-                    if os.path.getmtime(p) > keep_newer_than:
-                        continue
-                except OSError:
-                    continue  # vanished under us (another vacuum) — skip
-            with _INFLIGHT_LOCK:  # short: set lookup only, no IO held
-                inflight_now = os.path.abspath(p) in {
-                    os.path.abspath(k) for k in _INFLIGHT_DIRS
-                }
-            if inflight_now:
-                continue
-            live_now = _read_live_pointer(base)
-            if live_now and os.path.abspath(live_now) == os.path.abspath(p):
-                continue  # became live since the caller's keep snapshot
-            shutil.rmtree(p, ignore_errors=True)
-            removed += 1
+    for p in _version_dirs(base):
+        if os.path.abspath(p) in keep_abs:
+            continue
+        if keep_newer_than is not None:
+            try:
+                if os.path.getmtime(p) > keep_newer_than:
+                    continue
+            except OSError:
+                continue  # vanished under us (another vacuum) — skip
+        with _INFLIGHT_LOCK:  # short: set lookup only, no IO held
+            inflight_now = os.path.abspath(p) in {
+                os.path.abspath(k) for k in _INFLIGHT_DIRS
+            }
+        if inflight_now:
+            continue
+        live_now = _read_live_pointer(base)
+        if live_now and os.path.abspath(live_now) == os.path.abspath(p):
+            continue  # became live since the caller's keep snapshot
+        shutil.rmtree(p, ignore_errors=True)
+        removed += 1
     return removed
 
 
-def _default_location(spark: SparkSession, identifier: str) -> str:
-    """Canonical warehouse path for a table name (version-suffix base)."""
-    import os
-    from urllib.parse import urlparse
-
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse"))
-    parts = identifier.split(".")
-    table = parts[-1].lower()
-    db = parts[-2].lower() if len(parts) > 1 else "default"
-    return os.path.join(
-        os.path.abspath(wh.path), f"{db}.db" if db != "default" else "", table
-    )
+def _vacuum_keeping_live(
+    spark: SparkSession, identifier: str, base: str, keep: set, keep_newer_than: float | None
+) -> int:
+    """Vacuum ``base``'s version dirs, keeping ``keep`` and the version
+    live NOW. The catalog location and the live pointer are re-read here,
+    after every read the caller made: a concurrent rebuild of the same
+    table may have committed (and deregistered its dir) since, making
+    ITS dir the live one. That snapshot is itself racy, which is why
+    _vacuum_versions also re-reads the pointer before each rmtree. With
+    RETAIN_CONF set, dirs modified within the retention window are kept
+    too (slow-reader cover)."""
+    retain = float(spark.conf.get(RETAIN_CONF, "0") or "0")
+    if retain > 0:
+        cutoff = time.time() - retain
+        keep_newer_than = cutoff if keep_newer_than is None else min(keep_newer_than, cutoff)
+    keep = set(keep) | {_table_location(spark, identifier), _read_live_pointer(base)}
+    return _vacuum_versions(base, {k for k in keep if k}, keep_newer_than=keep_newer_than)
 
 
 def replace_relation_atomic(
@@ -516,8 +567,8 @@ def replace_relation_atomic(
     or bucketed table would void the partition-pruning /
     zero-shuffle-join contract the model config declared.
 
-    ``expected_token`` (r14, maintenance verbs): optimistic
-    concurrency for read-then-replace callers. compact() rewrites the
+    ``expected_token`` (maintenance verbs): optimistic
+    concurrency for read-then-replace callers. compact_table rewrites the
     data it READ — if another writer commits between that read and this
     swap, flipping anyway would silently replace the newer rebuild with
     recompacted stale data (lost update). Passing the
@@ -530,10 +581,6 @@ def replace_relation_atomic(
     output is the newest truth regardless of what it read.
 
     Returns a reader of the rows written (see count_rows)."""
-    import os
-    import re as _re
-    import shutil
-
     tmp = f"{identifier}__f__{uuid.uuid4().hex[:8]}"
     # observed above any exchange _shape adds (see write_table)
     df, rows = count_rows(_shape(df, partition_by, bucket_by, sort_by))
@@ -559,35 +606,18 @@ def replace_relation_atomic(
     # stale for the pointer flip
     _sig = lambda s: [(f.name, f.dataType.simpleString()) for f in s.fields]  # noqa: E731
     schema_changed = exists and _sig(spark.table(identifier).schema) != _sig(df.schema)
-
-    def _layout(writer):
-        if partition_by:
-            writer = writer.partitionBy(*layout_cols(partition_by))
-        if bucket_by:
-            cols = layout_cols(bucket_by["cols"])
-            writer = writer.bucketBy(int(bucket_by.get("n", 32)), *cols).sortBy(*cols)
-        return writer
-
     # the pointer flip reuses the live table's metadata, so the declared
     # bucket layout must already match it (e.g. a table re-attached after
     # a restart has no bucket spec) — otherwise rebuild the metadata too
-    want_buckets = (
-        (
-            int(bucket_by.get("n", 32)),
-            tuple(layout_cols(bucket_by["cols"])),
-        )
-        if bucket_by
-        else None
-    )
-    bucket_mismatch = exists and _table_bucket_spec(spark, identifier, desc) != want_buckets
+    bucket_mismatch = exists and _table_bucket_spec(spark, identifier, desc) != _bucket_spec(bucket_by)
 
     commit_lock = _FLIP_LOCKS[identifier.lower()]
 
     if partition_by or schema_changed or bucket_mismatch or not exists:
-        # drop-first temp-swap (the pre-r7 flow); the expensive write
+        # drop-first temp-swap; the expensive write
         # happens before the lock — only the catalog swap serializes
         try:
-            _layout(df.write.mode("overwrite").format("parquet")).saveAsTable(tmp)
+            _parquet_writer(df, "overwrite", partition_by, bucket_by).saveAsTable(tmp)
             with commit_lock:
                 _check_expected()
                 spark.sql(f"DROP TABLE IF EXISTS {_q(identifier)}")
@@ -597,8 +627,8 @@ def replace_relation_atomic(
                     # RENAME keeps per-partition catalog locations pointing at
                     # the temp path — SYNC re-registers the moved directories
                     spark.sql(f"MSCK REPAIR TABLE {_q(identifier)} SYNC PARTITIONS")
-                # The nonce rewrite must be atomic with the catalog swap
-                # (ADVICE r15): with the pointer written outside the lock, a
+                # The nonce rewrite must be atomic with the catalog swap:
+                # with the pointer written outside the lock, a
                 # maintenance verb running _check_expected under the lock
                 # between the RENAME and the pointer rewrite reads the STALE
                 # nonce — and if the dir mtime lands in the same coarse
@@ -606,9 +636,7 @@ def replace_relation_atomic(
                 # commits recompacted stale data over the fresh rebuild.
                 committed = _table_location(spark, identifier)
                 if committed:
-                    _write_live_pointer(
-                        _re.sub(_VERSION_RE, "", committed.rstrip("/")), committed
-                    )
+                    _write_live_pointer(_re_sub_version(committed), committed)
         except Exception:
             spark.sql(f"DROP TABLE IF EXISTS {_q(tmp)}")
             raise
@@ -618,11 +646,7 @@ def replace_relation_atomic(
     # version suffix) is the same for every version, so a flip racing
     # this write cannot move it
     pre_loc = _table_location(spark, identifier, desc)
-    base = (
-        _re.sub(_VERSION_RE, "", pre_loc.rstrip("/"))
-        if pre_loc
-        else _default_location(spark, identifier)
-    )
+    base = _re_sub_version(pre_loc) if pre_loc else _default_location(spark, identifier)
     new_loc = f"{base}__v{uuid.uuid4().hex[:8]}"
     old_loc = None
     flipped = False
@@ -632,8 +656,8 @@ def replace_relation_atomic(
         try:
             # option("path") makes tmp EXTERNAL: dropping it later removes
             # only metadata, never the files the live table now points at
-            _layout(
-                df.write.mode("overwrite").format("parquet").option("path", new_loc)
+            _parquet_writer(df, "overwrite", partition_by, bucket_by).option(
+                "path", new_loc
             ).saveAsTable(tmp)
             with commit_lock:
                 _check_expected()
@@ -672,35 +696,87 @@ def replace_relation_atomic(
     spark.sql(f"DROP TABLE IF EXISTS {_q(tmp)}")
     # vacuum versions beyond the grace window: always keep the live dir,
     # the immediately previous one, and any version dir an in-process
-    # writer is currently producing (r14 review; since r15 the in-flight
-    # registry is re-checked per directory INSIDE _vacuum_versions —
-    # ADVICE r14 — so a writer registering after this call starts is
-    # still safe); with RETAIN_CONF set, also keep anything modified
-    # within the retention window (slow-reader cover). The catalog
-    # location and live pointer are RE-READ here (not reused from the
-    # flip above): a concurrent rebuild of the same table may have
-    # committed — and deregistered its dir — between our flip and this
-    # vacuum, making ITS dir the live one; the stale {new_loc, old_loc}
-    # pair alone would let us delete it. That snapshot is itself racy
-    # (ADVICE r15: a rebuild committing between this read and the delete
-    # loop reaching its dir), which is why _vacuum_versions ALSO re-reads
-    # the live pointer per directory before each rmtree.
-    import time as _time
-
-    retain = float(spark.conf.get(RETAIN_CONF, "0") or "0")
-    keep = {new_loc, old_loc or ""}
-    cur_live = _table_location(spark, identifier)
-    if cur_live:
-        keep.add(cur_live)
-    cur_ptr = _read_live_pointer(base)
-    if cur_ptr:
-        keep.add(cur_ptr)
-    _vacuum_versions(
-        base,
-        keep=keep,
-        keep_newer_than=(_time.time() - retain) if retain > 0 else None,
-    )
+    # writer is currently producing (_vacuum_versions re-checks the
+    # in-flight registry per directory, so a writer registering after
+    # this call starts is still safe)
+    _vacuum_keeping_live(spark, identifier, base, {new_loc, old_loc}, None)
     return rows
+
+
+def compact_table(
+    spark: SparkSession,
+    identifier: str,
+    target_partitions: int | None = None,
+    partition_by: str | None = None,
+    bucket_by: dict | None = None,
+    sort_by: str | None = None,
+) -> int:
+    """Rewrite a table's files into ``target_partitions`` partitions
+    (default: executor parallelism; ``bucket_by`` tables get one per
+    bucket) and swap them in atomically. Returns the partition count
+    written.
+
+    Every declared layout survives compaction — a rewrite that flattened
+    a bucketed/partitioned/clustered table would heal the small files
+    while silently voiding the zero-shuffle-join / partition-pruning /
+    data-skipping contract the config declared.
+
+    Concurrent rebuilds are handled optimistically: the version token is
+    captured before the read, and the swap commits only if it is
+    unchanged — otherwise ConcurrentRebuildError aborts the compaction
+    (the rebuild's fresh data wins; re-run compact)."""
+    expected = table_swap_token(spark, identifier)
+    df = spark.table(identifier)
+    n = target_partitions or spark.sparkContext.defaultParallelism
+    layout = {"partition_by": partition_by}
+    if bucket_by:
+        # shuffle into exactly n_buckets tasks on the bucket cols so the
+        # rewrite emits one file per bucket (the minimal healed layout)
+        # instead of files × tasks
+        n, cols = _bucket_spec(bucket_by)
+        out = df.repartition(n, *cols)
+        layout["bucket_by"] = bucket_by
+    elif sort_by:
+        cols = layout_cols(sort_by)
+        out = df.repartitionByRange(n, *cols).sortWithinPartitions(*cols)
+    elif partition_by:
+        # co-locate each hive partition's rows so the rewrite emits few
+        # files per partition directory, not files × tasks
+        out = df.repartition(n, *layout_cols(partition_by))
+    else:
+        # the current partition count decides coalesce (shrinking, no
+        # shuffle) vs repartition (growing); the JVM-side RDD probe
+        # skips building the Python-conversion RDD df.rdd would
+        try:
+            cur = df._jdf.queryExecution().toRdd().getNumPartitions()
+        except Exception:  # foreign session without the internal API
+            cur = df.rdd.getNumPartitions()
+        out = df.coalesce(n) if n <= cur else df.repartition(n)
+    replace_relation_atomic(spark, out, identifier, expected_token=expected, **layout)
+    return n
+
+
+def vacuum_table(spark: SparkSession, identifier: str) -> int:
+    """Delete a table's non-live copy-on-write version directories (the
+    swap keeps ONE previous version as a grace window for in-flight
+    readers; Delta's VACUUM analogue). Readers with long scans are
+    additionally protected by RETAIN_CONF. A CONCURRENT rebuild is
+    guarded two ways: version dirs newer than the last committed flip
+    (the live pointer file's mtime) are skipped, so a half-written swap
+    target is never deleted mid-flip; and because a flip can commit
+    BETWEEN our catalog read and the pointer-mtime read (making the new
+    live dir look both non-live and old), the pointer's CONTENT and the
+    catalog location are re-read AFTER capturing the mtime and unioned
+    into the keep set. Returns the number of dirs removed."""
+    live = _table_location(spark, identifier)
+    if live is None:
+        return 0
+    base = _re_sub_version(live)
+    try:
+        ref_mtime = os.path.getmtime(_live_pointer_path(base))
+    except OSError:  # pre-pointer table: fall back to the live dir
+        ref_mtime = os.path.getmtime(live) if os.path.isdir(live) else None
+    return _vacuum_keeping_live(spark, identifier, base, {live}, ref_mtime)
 
 
 def _evolve_schema(
@@ -885,8 +961,6 @@ def snapshot_scd2(
     column and the rewrite scoped to affected partitions; the whole-table
     swap here is the local-parquet rendition of that contract.
     """
-    from pyspark.sql import functions as F
-
     if not isinstance(unique_key, str):
         # dbt 1.9+ allows list unique_key for snapshots; this renderer
         # keys the SCD machinery on one column throughout (joins, scd_id,

@@ -159,6 +159,16 @@ def test_write_to_model_roundtrip(jaffle):
     assert fal.ref("audit_snapshot").count() == 20
 
 
+def test_write_to_model_rejects_unknown_mode(jaffle):
+    """A misspelled mode fails loudly instead of falling through to an
+    append (or any other write)."""
+    fal, _, _ = jaffle
+    df = fal.execute_sql("select customer_id from {{ ref('customers') }} limit 3")
+    with pytest.raises(ValueError, match="overwite"):
+        fal.write_to_model(df, "mode_typo_target", mode="overwite")
+    assert not fal.spark.catalog.tableExists(f"{fal.schema}.mode_typo_target")
+
+
 def test_failure_propagation(spark):
     os.environ["TESTDATA_DIR"] = SF_DIR
     spark.sql("DROP DATABASE IF EXISTS broken_proj CASCADE")

@@ -7,6 +7,7 @@ environment those artifacts were built in.
 
 from __future__ import annotations
 
+import os
 import shutil
 import textwrap
 from pathlib import Path
@@ -14,6 +15,7 @@ from pathlib import Path
 import pytest
 
 from dbt_fal_spark.api import FalSpark
+from dbt_fal_spark.materialize import _table_location
 
 
 def _write_project(proj: Path, with_new_model: bool) -> None:
@@ -124,3 +126,37 @@ def test_defer_prefers_local_table_when_present(slim_ci):
     assert all(s == "success" for s in statuses.values())
     rows = {(r["id"], r["tag"]) for r in dev.ref("derived").collect()}
     assert rows == {(0, "Z"), (1, "A"), (2, "B")}  # (0,'Z') proves dev's base was read
+
+
+def test_defer_follows_live_version_after_rebuilds(slim_ci):
+    """Every rebuild in the state warehouse flips the table to a fresh
+    ``<name>__v<uuid8>`` dir; the canonical dir keeps an older version
+    until the vacuum deletes it. A deferred ref the catalog does not know
+    (the state environment's catalog was lost, as after a restart) must
+    attach the LIVE version."""
+    spark, tmp_path = slim_ci
+    proj = tmp_path / "proj4"
+    _write_project(proj, with_new_model=True)
+    for tag in ("x", "y", "z"):  # build, then two rebuilds
+        (proj / "models" / "base.sql").write_text(
+            f"SELECT * FROM (VALUES (1, '{tag}'), (2, '{tag}'), (3, '{tag}')) AS t(id, tag)"
+        )
+        prod = FalSpark(proj, spark=spark, schema="slim_prod")
+        assert all(s == "success" for s in prod.run(select=["base"]).values())
+    state_dir = tmp_path / "prod_state4"
+    shutil.copytree(proj / "target", state_dir)
+
+    # restart analogue: the catalog forgets slim_prod.base, its files stay
+    live = _table_location(spark, "slim_prod.base")
+    assert "__v" in live
+    saved = tmp_path / "saved_base"
+    shutil.copytree(live, saved)
+    spark.sql("DROP TABLE slim_prod.base")
+    if not os.path.isdir(live):
+        shutil.copytree(saved, live)
+
+    dev = FalSpark(proj, spark=spark, schema="slim_dev", state_path=state_dir, defer=True)
+    statuses = dev.run(select=["derived"])
+    assert statuses == {"model.slimci.derived": "success"}, statuses
+    rows = {(r["id"], r["tag"]) for r in dev.ref("derived").collect()}
+    assert rows == {(1, "Z"), (2, "Z")}  # the last build's rows, not a stale version
