@@ -1,29 +1,20 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"""Benchmark harness: times the composite query set at $SPARK_GRAFT_SF_DIR
+(default: the sf0.1 test data) on local[$SPARK_GRAFT_CPUS], paired with
+the DuckDB oracle in the same process, and prints JSON lines whose LAST
+line is the benchmark record: {"metric": ..., "value": total_sec, "unit":
+"sec", "queries": {name: sec}, "sf": ..., "raw_ratio": ...}.
 
-Each query is timed as: build the lazy plan + execute via a count-style
-action that forces full computation without driver-side collection of
-big results (we collect only to mirror the driver's correctness path for
-small outputs).
+Each query is timed as: build the lazy plan + run its full executed plan
+(`_full_result`), the work `toPandas()` does minus the row transfer. A
+`.count()` would let Catalyst prune projections, windows and Python UDF
+stages that `toPandas()` does run.
 
-The query-set contract (HEADLINE, skips, sweep prefixes, rotation pool,
-canary references) lives in dbt_fal_spark/bench_set.py, shared with
-tools/oracle_bench.py and tests/test_bench_contract.py.
-
-r13: the composite set = HEADLINE (incl. the four r12 TPC-H entries)
-+ the d_/s_/t_/e_/m_ sweep; oracled entries outside it (the remaining
+The query set is defined here: the composite = HEADLINE + the
+d_/s_/t_/e_/m_ sweep − SKIP; oracled entries outside it (the remaining
 q_*/q##/st_* family) rotate through a per-round ROTATE_N-entry timing
 slice reported on a separate `rotating_coverage` JSON line, excluded
-from the composite/ratios so round-over-round composites compare
-like-for-like.
-
-r14: the artifact self-diagnoses degraded host windows (VERDICT r13
-item 1) — after the floor phase, a fixed canary set is re-timed against
-committed cross-run minima; the tail JSON carries the canary evidence
-and a degraded_window flag, and a degraded first reading triggers ONE
-extra interleaved pass (minima absorb it) before the final verdict.
+from the composite and the ratios so round-over-round composites
+compare like-for-like.
 """
 
 from __future__ import annotations
@@ -35,18 +26,72 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from dbt_fal_spark.bench_set import (
-    CANARIES,
-    ROTATE_N,
-    canary_verdict,
-    composite_names,
-    eo_ratio_verdict,
-    rotate_pool,
-)
 from dbt_fal_spark.registry import all_queries
 from dbt_fal_spark.session import get_spark
 
 FLOOR_DIR = "/root/testdata/sf0.001"
+
+# Headline set: the scale-critical relational queries + one per extension
+# family. Kept explicit so bench timings are stable as the registry grows.
+HEADLINE = [
+    "q01_pricing_summary",
+    "q03_topk_order_revenue",
+    "q05_region_nation_revenue",
+    "q06_filtered_revenue",
+    "q11_important_parts",
+    "q12_latency_priority_pivot",
+    "q20_part_promotion_suppliers",
+    "q21_suppliers_kept_waiting",
+    "q_orders_daily_pivot",
+    "q_customer_order_stats",
+    "q_topk_orders_per_segment",
+    "q_customer_running_total",
+    "q_priority_distinct_customers",
+    "q_region_rollup_revenue",
+    # one entry for the batch-inference family (iterator pandas_udf);
+    # p_ prefix is not swept so it is listed explicitly
+    "p_sentiment_batch_inference",
+]
+
+# the packing pair is excluded from BOTH timing sides: the oracle is a
+# row-recursive CTE whose sf0.1 cost (~7 s) is a DuckDB implementation
+# artifact, not comparable work — pairing it would flatter the engine.
+# (Both stay fully oracle-checked at the sf0.01 correctness gate.)
+SKIP = frozenset({"t_pack_sequences", "t_pack_emit"})
+
+# extension families swept into the composite (sorted for stability)
+SWEEP_PREFIXES = ("d_", "s_", "t_", "e_", "m_")
+
+# rotating wall-time coverage: entries outside the composite get
+# ROTATE_N timing slots per round on a separate JSON line
+ROTATE_N = 12
+
+
+def composite_names(specs) -> list[str]:
+    """The per-round composite timing set: HEADLINE entries present in
+    the registry, then every oracled d_/s_/t_/e_/m_ entry not already
+    listed and not skipped (sorted). specs = registry.all_queries()."""
+    names = [n for n in HEADLINE if n in specs]
+    for name in sorted(specs):
+        if (
+            name not in names
+            and name not in SKIP
+            and specs[name].oracle is not None
+            and name.startswith(SWEEP_PREFIXES)
+        ):
+            names.append(name)
+    return names
+
+
+def rotate_pool(specs) -> list[str]:
+    """Every oracled registry entry with no composite slot — the pool
+    the per-round rotating slice cycles through."""
+    composite = set(composite_names(specs))
+    return sorted(
+        n
+        for n in specs
+        if n not in composite and n not in SKIP and specs[n].oracle is not None
+    )
 
 
 def _current_round() -> int:
@@ -88,8 +133,8 @@ def _oracle_connection(sf_dir: str):
 def _oracle_pass(con, names, specs, runs: int = 1) -> dict[str, float]:
     """One DuckDB pass: each query `runs` times back-to-back (min), so
     the oracle side gets the SAME per-pass sample count as the engine —
-    asymmetric sampling (engine min-of-6 vs oracle min-of-3) would bias
-    the ratio in the engine's favor under host noise (r12 review)."""
+    asymmetric sampling would bias the ratio in the engine's favor under
+    host noise."""
     out: dict[str, float] = {}
     for name in names:
         sql = specs[name].oracle
@@ -106,8 +151,7 @@ def _oracle_pass(con, names, specs, runs: int = 1) -> dict[str, float]:
 
 
 def _oracle_timings(names, specs, sf_dir: str, runs: int = 3) -> dict[str, float]:
-    """DuckDB oracle timings, tools/oracle_bench.py protocol (same query
-    set, min-of-N, warm connection)."""
+    """DuckDB oracle timings on a fresh warm connection, min-of-`runs`."""
     con = _oracle_connection(sf_dir)
     _oracle_pass(con, names, specs)  # warm
     best: dict[str, float] = {}
@@ -117,6 +161,13 @@ def _oracle_timings(names, specs, sf_dir: str, runs: int = 3) -> dict[str, float
                 best[name] = dt
     con.close()
     return {n: round(v, 3) for n, v in best.items()}
+
+
+def _full_result(df) -> int:
+    """Run `df`'s own executed plan to completion without moving rows to
+    Python. Unlike `df.count()`, Catalyst cannot prune columns, windows
+    or UDFs that `toPandas()` computes."""
+    return int(df._jdf.queryExecution().toRdd().count())
 
 
 def _time_engine(spark, jvm_gc, fn, sf_dir: str, runs: int) -> float:
@@ -130,7 +181,7 @@ def _time_engine(spark, jvm_gc, fn, sf_dir: str, runs: int) -> float:
     for _ in range(max(1, runs)):
         jvm_gc()
         t0 = time.time()
-        fn(spark, sf_dir).count()
+        _full_result(fn(spark, sf_dir))
         dt = time.time() - t0
         best = dt if best is None or dt < best else best
         spark.catalog.clearCache()
@@ -175,7 +226,7 @@ def _aggregate(names, engine_passes, oracle_passes):
     oracle_pass_totals = [
         round(sum(p[n] for n in oracle_timings), 3) for p in oracle_passes
     ]
-    return ok_names, timings, oracle_timings, engine_pass_totals, oracle_pass_totals
+    return timings, oracle_timings, engine_pass_totals, oracle_pass_totals
 
 
 def _engine_floor(spark, jvm_gc, specs, names, runs: int = 2) -> float:
@@ -189,19 +240,11 @@ def _engine_floor(spark, jvm_gc, specs, names, runs: int = 2) -> float:
 
 
 def _paired_ratios(
-    spark, jvm_gc, specs, engine_timings, oracle_timings, sf_dir: str, floors=None
-) -> tuple[dict, tuple | None]:
+    spark, jvm_gc, specs, engine_timings, oracle_timings, sf_dir: str
+) -> dict:
     """raw_ratio = paired engine/oracle minima-composite totals at
     sf_dir; floor_adjusted_ratio subtracts each side's sf0.001 totals
-    so the ratio reflects per-row data work. BENCH_FLOOR protocol from
-    r4/r5, emitted in the bench tail each run. Returns (ratios, floors)
-    so a degraded-window re-aggregation can reuse the measured floors
-    instead of re-running the floor phase — floors are KEYED by the
-    paired-name tuple they were measured over (ADVICE r14): if a query
-    breaks during the degraded-window rerun the paired set shrinks, and
-    subtracting the stale floor totals would deduct fixed costs for
-    queries no longer in the composite, skewing floor_adjusted_ratio.
-    On a mismatch the floors are remeasured for the current set."""
+    so the ratio reflects per-row data work."""
     paired = [n for n in engine_timings if n in oracle_timings]
     eng_total = sum(engine_timings[n] for n in paired)
     ora_total = sum(oracle_timings[n] for n in paired)
@@ -212,42 +255,14 @@ def _paired_ratios(
         "floor_adjusted_ratio": None,
     }
     if os.path.isdir(FLOOR_DIR) and os.path.abspath(sf_dir) != os.path.abspath(FLOOR_DIR):
-        if floors is None or floors[0] != tuple(paired):
-            eng_floor = _engine_floor(spark, jvm_gc, specs, paired)
-            ora_floor = sum(_oracle_timings(paired, specs, FLOOR_DIR, runs=2).values())
-            floors = (tuple(paired), eng_floor, ora_floor)
-        _, eng_floor, ora_floor = floors
+        eng_floor = _engine_floor(spark, jvm_gc, specs, paired)
+        ora_floor = sum(_oracle_timings(paired, specs, FLOOR_DIR, runs=2).values())
         out["engine_floor_sec"] = round(eng_floor, 3)
         out["oracle_floor_sec"] = round(ora_floor, 3)
         adj_num, adj_den = eng_total - eng_floor, ora_total - ora_floor
         if adj_num > 0 and adj_den > 0:
             out["floor_adjusted_ratio"] = round(adj_num / adj_den, 3)
-    return out, floors
-
-
-def _canary_phase(
-    spark, jvm_gc, specs, sf_dir: str, runs: int = 3
-) -> tuple[dict[str, float], dict[str, str]]:
-    """Re-time the fixed canary set (min-of-`runs`, same protocol as the
-    composite) — cheap, historically-stable queries whose committed
-    cross-run minima (bench_set.CANARY_REF) act as this host's known
-    noise floor. One canary erroring must not lose the others' evidence
-    (r15 adversarial review): failures are returned alongside so the
-    tail records WHICH canary broke instead of one opaque canary_error
-    for the whole phase (canary_verdict then returns no verdict for the
-    incomplete set — the diagnosis degrades explicitly, never guesses
-    from a partial sum)."""
-    timings: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    for name in CANARIES:
-        if name not in specs:
-            continue
-        try:
-            timings[name] = _time_engine(spark, jvm_gc, specs[name].fn, sf_dir, runs)
-        except Exception as exc:  # noqa: BLE001 — diagnosis is additive info
-            errors[name] = f"{type(exc).__name__}: {exc}"[:200]
-            spark.catalog.clearCache()
-    return timings, errors
+    return out
 
 
 def main() -> None:
@@ -264,24 +279,22 @@ def main() -> None:
     if os.path.isdir(FLOOR_DIR):
         for name in names + rotating:
             try:
-                specs[name].fn(spark, FLOOR_DIR).count()
+                _full_result(specs[name].fn(spark, FLOOR_DIR))
             except Exception:
                 pass
         spark.catalog.clearCache()
 
-    # Interleaved-pass protocol (VERDICT r11 item 3): N full
-    # engine-then-oracle PASSES, each running every query once. Host
-    # noise that lands in one pass hits both sides comparably instead of
-    # whichever side happened to be running; the primary artifact is the
-    # sum-of-per-query-MINIMA composite for BOTH sides (the noise-robust
-    # signal BASELINE.md previously computed by hand across runs), and
-    # the per-pass totals expose the spread in the same JSON line.
+    # Interleaved-pass protocol: N full engine-then-oracle PASSES, each
+    # running every query once. Host noise that lands in one pass hits
+    # both sides comparably instead of whichever side happened to be
+    # running; the primary artifact is the sum-of-per-query-MINIMA
+    # composite for BOTH sides, and the per-pass totals expose the
+    # spread in the same JSON line.
     n_passes = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3")))
     # within a pass each query is timed as min of K back-to-back runs:
     # the 2nd consecutive run is the steady-state number (JIT + caches
-    # hot for THIS query), keeping per-query values comparable with the
-    # pre-r12 protocol and BASELINE.md's bounds; the cross-PASS minima
-    # then absorb host-noise windows.
+    # hot for THIS query); the cross-PASS minima then absorb host-noise
+    # windows.
     runs_per_pass = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS_PER_PASS", "2")))
     paired_on = os.environ.get("SPARK_GRAFT_BENCH_PAIRED", "1") != "0"
     failures: dict[str, str] = {}
@@ -298,18 +311,17 @@ def main() -> None:
             failures["__oracle__"] = f"{type(exc).__name__}: {exc}"[:200]
             ora_con = None
 
-    def one_interleaved_pass():
+    for _ in range(n_passes):
         engine_passes.append(
             _engine_pass(
                 spark, jvm_gc, specs, names, sf_dir, runs_per_pass, broken, failures
             )
         )
-        nonlocal ora_con
         if ora_con is not None:
             # same per-pass sample count as the engine side; skip queries
             # the engine gave up on (their timings would be discarded);
             # one transient DuckDB error must not lose the engine record —
-            # degrade to an engine-only bench (r12 review)
+            # degrade to an engine-only bench
             try:
                 oracle_passes.append(
                     _oracle_pass(
@@ -326,16 +338,9 @@ def main() -> None:
                     ora_con.close()
                 finally:
                     ora_con = None
-
-    for _ in range(n_passes):
-        one_interleaved_pass()
-    (
-        ok_names,
-        timings,
-        oracle_timings,
-        engine_pass_totals,
-        oracle_pass_totals,
-    ) = _aggregate(names, engine_passes, oracle_passes)
+    timings, oracle_timings, engine_pass_totals, oracle_pass_totals = _aggregate(
+        names, engine_passes, oracle_passes
+    )
     total = round(sum(timings.values()), 3)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     print(
@@ -345,10 +350,6 @@ def main() -> None:
                 "value": total,
                 "unit": "sec",
                 "queries": timings,
-                # per-query ORACLE minima (r16): artifacts before this
-                # carried only oracle totals, which made the host-invariant
-                # canary_eo_ratio band underivable from history — future
-                # bands recompute from this key
                 "oracle_queries": oracle_timings,
                 "failures": failures,
                 "sf": sf,
@@ -362,30 +363,28 @@ def main() -> None:
     # parses to the totals — FIRST without ratios (failsafe: if the
     # paired phase below is killed by a harness timeout, this line is
     # still the last complete JSON), then again with the ratios.
-    def compact_line():
-        return {
-            "metric": "headline_queries_total_wall",
-            "value": round(sum(timings.values()), 3),  # sum of per-query engine minima
-            "unit": "sec",
-            "sf": sf,
-            "n_queries": len(timings),
-            # __oracle__ is a pseudo-entry (oracle-side degradation), not an
-            # engine query failure — readers of n_failures expect the latter
-            "n_failures": len([k for k in failures if k != "__oracle__"]),
-            "n_passes": len(engine_passes),
-            # per-pass totals = the spread; the composite above is the signal
-            "engine_pass_totals": engine_pass_totals,
-            "oracle_pass_totals": oracle_pass_totals,
-            "slowest": dict(sorted(timings.items(), key=lambda kv: -kv[1])[:5]),
-        }
+    compact = {
+        "metric": "headline_queries_total_wall",
+        "value": total,  # sum of per-query engine minima
+        "unit": "sec",
+        "sf": sf,
+        "n_queries": len(timings),
+        # __oracle__ is a pseudo-entry (oracle-side degradation), not an
+        # engine query failure — readers of n_failures expect the latter
+        "n_failures": len([k for k in failures if k != "__oracle__"]),
+        "n_passes": len(engine_passes),
+        # per-pass totals = the spread; the composite above is the signal
+        "engine_pass_totals": engine_pass_totals,
+        "oracle_pass_totals": oracle_pass_totals,
+        "slowest": dict(sorted(timings.items(), key=lambda kv: -kv[1])[:5]),
+    }
+    print(json.dumps(compact), flush=True)
 
-    print(json.dumps(compact_line()), flush=True)
-
-    # Rotating-coverage phase (VERDICT r12 item 1): runs AFTER the
-    # composite failsafe line is out — a harness timeout mid-rotation
-    # costs only the rotation evidence, never the composite. Own JSON
-    # line, kept out of the compact tail so the driver's 2000-char
-    # window still closes on composite + ratios.
+    # Rotating-coverage phase: runs AFTER the composite failsafe line is
+    # out — a harness timeout mid-rotation costs only the rotation
+    # evidence, never the composite. Own JSON line, kept out of the
+    # compact tail so a 2000-char tail window still closes on
+    # composite + ratios.
     if rotating:
         rotating_out: dict[str, dict] = {}
         rot_failures: dict[str, str] = {}
@@ -396,12 +395,7 @@ def main() -> None:
                 )
                 rec = {"engine_sec": round(best, 3)}
                 if ora_con is not None:
-                    ob = None
-                    for _ in range(runs_per_pass):
-                        t0 = time.time()
-                        ora_con.execute(specs[name].oracle).fetchall()
-                        dt = time.time() - t0
-                        ob = dt if ob is None or dt < ob else ob
+                    ob = _oracle_pass(ora_con, [name], specs, runs=runs_per_pass)[name]
                     rec["oracle_sec"] = round(ob, 3)
                 rotating_out[name] = rec
             except Exception as exc:  # noqa: BLE001 — coverage evidence only
@@ -419,118 +413,24 @@ def main() -> None:
             ),
             flush=True,
         )
+    if ora_con is not None:
+        ora_con.close()
 
-    # Paired baseline ratios (VERDICT r5 item 9, interleaved protocol
-    # r12): oracle minima-composite + floor adjustment, in-process so the
-    # driver's BENCH record carries {raw_ratio, floor_adjusted_ratio}
-    # without a separate artifact. SPARK_GRAFT_BENCH_PAIRED=0 skips the
-    # oracle side entirely for a fast engine-only run.
+    # Paired baseline ratios: oracle minima-composite + floor adjustment,
+    # in-process so the final record carries {raw_ratio,
+    # floor_adjusted_ratio} without a separate artifact.
+    # SPARK_GRAFT_BENCH_PAIRED=0 skips the oracle side entirely for a
+    # fast engine-only run.
     ratios: dict = {}
-    floors = None
     if oracle_timings:
         try:
-            ratios, floors = _paired_ratios(
+            ratios = _paired_ratios(
                 spark, jvm_gc, specs, timings, oracle_timings, sf_dir
             )
         except Exception as exc:  # noqa: BLE001 — ratios are additive info
             ratios = {"paired_error": f"{type(exc).__name__}: {exc}"[:200]}
 
-    # Degraded-window self-diagnosis (VERDICT r13 item 1): re-time the
-    # canary set against committed cross-run minima. If the window reads
-    # degraded, run ONE extra interleaved pass (the minima composites
-    # absorb it — on a transiently-noisy host the extra pass recovers
-    # the clean number; on a persistently-loaded host it leaves the
-    # degraded flag standing as the artifact's own adjudication), then
-    # re-time the canaries for the final verdict. Both canary readings
-    # ship in the tail JSON.
-    canary_info: dict = {}
-    try:
-        canary_timings, canary_errors = _canary_phase(spark, jvm_gc, specs, sf_dir)
-        verdict = canary_verdict(canary_timings, sf)
-        if verdict is None and canary_errors:
-            canary_info = {"canary_failures": canary_errors}
-        if verdict is not None:
-            rerun_on = (
-                os.environ.get("SPARK_GRAFT_BENCH_RERUN_ON_DEGRADED", "1") != "0"
-            )
-            if verdict["degraded_window"] and rerun_on and not broken:
-                first_reading = verdict
-                one_interleaved_pass()
-                (
-                    ok_names,
-                    timings,
-                    oracle_timings,
-                    engine_pass_totals,
-                    oracle_pass_totals,
-                ) = _aggregate(names, engine_passes, oracle_passes)
-                if oracle_timings:
-                    try:
-                        ratios, _ = _paired_ratios(
-                            spark,
-                            jvm_gc,
-                            specs,
-                            timings,
-                            oracle_timings,
-                            sf_dir,
-                            floors=floors,
-                        )
-                    except Exception as exc:  # noqa: BLE001
-                        ratios = {
-                            "paired_error": f"{type(exc).__name__}: {exc}"[:200]
-                        }
-                # re-emit the full per-query line: the rerun pass updated
-                # the minima, and cross-run merges (tools/bench_merge.py)
-                # take per-query values from the LAST line carrying a
-                # "queries" dict — leaving the pre-rerun line as the only
-                # one would merge stale values against the final composite
-                print(
-                    json.dumps(
-                        {
-                            "metric": "headline_queries_total_wall",
-                            "value": round(sum(timings.values()), 3),
-                            "unit": "sec",
-                            "queries": timings,
-                            "oracle_queries": oracle_timings,
-                            "failures": failures,
-                            "sf": sf,
-                        }
-                    ),
-                    flush=True,
-                )
-                retimed, rerun_errors = _canary_phase(spark, jvm_gc, specs, sf_dir)
-                verdict = canary_verdict(retimed, sf)
-                if verdict is None:
-                    # a canary broke during the rerun: keep the first
-                    # reading as the verdict rather than losing it
-                    verdict = dict(first_reading)
-                    if rerun_errors:
-                        verdict["canary_failures"] = rerun_errors
-                verdict["degraded_rerun"] = True
-                verdict["canaries_first_reading"] = first_reading["canaries"]
-                verdict["canary_ratio_first_reading"] = first_reading[
-                    "canary_ratio"
-                ]
-            canary_info = verdict
-    except Exception as exc:  # noqa: BLE001 — diagnosis is additive info
-        canary_info = {"canary_error": f"{type(exc).__name__}: {exc}"[:200]}
-
-    if ora_con is not None:
-        ora_con.close()
-    # Host-invariant engine-regression signal (VERDICT r15 item 2):
-    # same-run engine/oracle ratio over the canary set, computed from the
-    # final interleaved-pass minima (post-rerun when degraded) — host
-    # pressure moves both sides together, so unlike the absolute
-    # canary_ratio above this survives host-baseline drift. Decision
-    # rule: canary_ratio flags WINDOW quality, canary_eo_ratio flags
-    # ENGINE regression (band in bench_set.CANARY_EO_BAND, documented in
-    # BASELINE.md).
-    eo_info = eo_ratio_verdict(timings, oracle_timings, sf) or {}
-    for line in tail_emission(
-        timings,
-        oracle_timings,
-        sf,
-        {**compact_line(), **ratios, **canary_info, **eo_info},
-    ):
+    for line in tail_emission(timings, oracle_timings, sf, {**compact, **ratios}):
         print(line, flush=True)
 
 
@@ -538,18 +438,15 @@ def tail_emission(timings, oracle_timings, sf, final_payload) -> list[str]:
     """The last stdout lines, in print order (unit-locked by
     tests/test_round17_opt.py).
 
-    Full per-query engine+oracle minima map (VERDICT r16 item 1): the
-    driver's PERF per-query/geomean/scaling blocks join on a
-    `per_query` key shaped like the rotating line's records. It rides
-    its OWN JSON line, emitted just before the final compact line: the
-    83-entry map outgrows the driver's 2000-char tail window (the r4
-    lesson), so it must never be appended to the LAST line — a
-    head-truncated final line would cost the whole composite record.
-    Values are the same cross-pass minima as the `queries` /
-    `oracle_queries` keys of the full line (post-degraded-rerun when
-    that fired); additions-only, no existing key changes shape. The
-    final compact line is ALWAYS emitted last, even when the
-    ratio/canary phases produced nothing.
+    Full per-query engine+oracle minima map: per-query, geomean and
+    scaling reports join on a `per_query` key shaped like the rotating
+    line's records. It rides its OWN JSON line, emitted just before the
+    final compact line: the 83-entry map outgrows the 2000-char tail
+    window, so it must never be appended to the LAST line — a
+    head-truncated final line would cost the whole composite record. Values are the same cross-pass minima as the
+    `queries` / `oracle_queries` keys of the full line. The final
+    compact line is ALWAYS emitted last, even when the ratio phase
+    produced nothing.
 
     The FINAL line additionally carries a size-budgeted `queries` map
     (the driver-contract key its per-query joiner reads): the driver

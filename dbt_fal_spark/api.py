@@ -15,6 +15,7 @@ into RAM on every ``ref`` (project.py:696-715).
 
 from __future__ import annotations
 
+import ast
 import dataclasses
 import json
 import logging
@@ -1037,11 +1038,9 @@ class FalSpark:
                     allowed = t.params.get("values", [])
                     fail_df = df.filter(~col.isin(allowed))
                 elif t.test_type == "relationships":
-                    to_model = t.params["to"]
                     to_field = t.params["field"]
-                    # dbt ref syntax: "ref('model')"
-                    to_name = to_model.split("'")[1] if "'" in to_model else to_model
-                    parent = self.ref(to_name).select(F.col(to_field).alias("__k")).distinct()
+                    parent = self._relation_named(t.params["to"])
+                    parent = parent.select(F.col(to_field).alias("__k")).distinct()
                     fail_df = df.filter(col.isNotNull()).join(
                         parent, col == F.col("__k"), "left_anti"
                     )
@@ -1084,6 +1083,28 @@ class FalSpark:
         except Exception as e:
             t.status = "error"
             return {"test": t.name, "status": "error", "error": str(e)}
+
+    def _relation_named(self, to: str) -> DataFrame:
+        """The relation a ``relationships`` test's ``to:`` names: a bare
+        model name, ``ref('m')`` / ``ref('package', 'm')`` in either quote
+        style, or ``source('s', 't')``."""
+        call = re.fullmatch(r"\s*(\w+)\s*\((.*)\)\s*", to, re.S)
+        if call is None:
+            return self.ref(to.strip())
+        fn, arglist = call.groups()
+        try:
+            args = ast.literal_eval(f"({arglist},)")
+        except (SyntaxError, ValueError):
+            args = ()
+        if not (args and all(isinstance(a, str) for a in args)):
+            raise ValueError(f"relationships 'to': cannot parse arguments of {to!r}")
+        if fn == "ref" and len(args) <= 2:
+            return self.ref(args[-1])
+        if fn == "source" and len(args) == 2:
+            return self.source(*args)
+        raise ValueError(
+            f"relationships 'to' must be a model name, ref(...) or source(...), got {to!r}"
+        )
 
     def _load_sources_artifact(self) -> dict[str, dict]:
         """Parse a dbt ``target/sources.json`` freshness artifact

@@ -1,44 +1,37 @@
-"""Pin the bench coverage contract (dbt_fal_spark/bench_set.py).
+"""Pin the bench contract (bench.py).
 
-VERDICT r12 'What's wrong' 1 was bench drift: BASELINE.md claimed four
-entries were in the composite while bench.py's HEADLINE/sweep never
-timed them. The set now has ONE definition (bench_set.py) consumed by
-bench.py, tools/oracle_bench.py, and these tests — re-deriving it here
-(the r13 version of this file did) was itself the drift class this file
-exists to prevent (ADVICE r13). These tests pin: every oracled registry
-entry earns wall-time evidence either per-round (composite set) or via
-the rotating slice; the rotation provably cycles through its whole
-pool; both timers resolve the set from the shared module; and the
-r14 degraded-window canary logic behaves.
+The query set has ONE definition, in bench.py, read by these tests:
+every oracled registry entry earns wall-time evidence either per-round
+(composite set) or via the rotating slice, and the rotation provably
+cycles through its whole pool. The timed action runs the work
+``toPandas()`` runs, and one in-process run of ``bench.main`` locks the
+keys and order of its last output lines.
 """
 
 from __future__ import annotations
 
-import importlib.util
+import json
 import os
 import sys
+
+import pytest
+from py4j.protocol import Py4JJavaError
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from dbt_fal_spark import bench_set  # noqa: E402
+import bench  # noqa: E402
 from dbt_fal_spark.registry import all_queries  # noqa: E402
-
-
-def _load(path, name):
-    spec = importlib.util.spec_from_file_location(name, os.path.join(REPO, path))
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
+from tests.conftest import SF_DIR  # noqa: E402
 
 
 def test_headline_entries_exist_and_are_oracled():
     specs = all_queries()
-    missing = [n for n in bench_set.HEADLINE if n not in specs]
+    missing = [n for n in bench.HEADLINE if n not in specs]
     assert not missing, f"HEADLINE names absent from the registry: {missing}"
     # composite ratios pair engine vs oracle — an oracle-less HEADLINE
     # entry would silently drop from the paired totals
-    unoracled = [n for n in bench_set.HEADLINE if specs[n].oracle is None]
+    unoracled = [n for n in bench.HEADLINE if specs[n].oracle is None]
     assert not unoracled, f"HEADLINE entries without oracles: {unoracled}"
 
 
@@ -46,9 +39,9 @@ def test_every_oracled_entry_earns_timing_evidence():
     """composite set ∪ rotation pool ∪ documented skips == all oracled
     entries — nothing can silently fall outside wall-time coverage."""
     specs = all_queries()
-    composite = bench_set.composite_names(specs)
-    pool = bench_set.rotate_pool(specs)
-    covered = set(composite) | set(pool) | bench_set.SKIP
+    composite = bench.composite_names(specs)
+    pool = bench.rotate_pool(specs)
+    covered = set(composite) | set(pool) | bench.SKIP
     oracled = {n for n in specs if specs[n].oracle is not None}
     uncovered = oracled - covered
     assert not uncovered, f"oracled entries with no timing evidence path: {uncovered}"
@@ -62,10 +55,10 @@ def test_rotation_cycles_through_entire_pool():
     ceil(len(pool)/ROTATE_N) rounds — the deterministic advance can't
     skip entries."""
     specs = all_queries()
-    pool = bench_set.rotate_pool(specs)
+    pool = bench.rotate_pool(specs)
     if not pool:
         return
-    n = bench_set.ROTATE_N
+    n = bench.ROTATE_N
     rounds_needed = -(-len(pool) // n) + 1  # ceil + 1 for wraparound
     seen: set[str] = set()
     for rnd in range(13, 13 + rounds_needed):
@@ -75,141 +68,88 @@ def test_rotation_cycles_through_entire_pool():
     assert seen == set(pool), f"rotation never reaches: {set(pool) - seen}"
 
 
-def test_both_timers_resolve_the_shared_set():
-    """bench.py and tools/oracle_bench.py must take the set from
-    bench_set — neither may re-grow a private HEADLINE copy (the r13
-    drift) or a private sweep (the r13 ADVICE finding on this file)."""
-    bench = _load("bench.py", "bench_under_test")
-    assert not hasattr(bench, "HEADLINE"), "bench.py re-defines HEADLINE"
-    assert bench.composite_names is bench_set.composite_names
-    assert bench.rotate_pool is bench_set.rotate_pool
-    ob = _load(os.path.join("tools", "oracle_bench.py"), "oracle_bench_under_test")
-    assert ob.HEADLINE is bench_set.HEADLINE
-    assert ob.composite_names is bench_set.composite_names
-
-
 def test_skips_are_still_oracle_checked():
     """The bench skip set opts entries out of TIMING pairing only —
     they must still carry oracles so the correctness gate covers them."""
     specs = all_queries()
-    for name in bench_set.SKIP:
+    for name in bench.SKIP:
         assert name in specs and specs[name].oracle is not None
 
 
 # ---------------------------------------------------------------------------
-# r14 degraded-window canaries (VERDICT r13 item 1)
+# the timed action: the full result, not a pruned count
 # ---------------------------------------------------------------------------
 
 
-def test_canaries_are_composite_members_with_references():
-    """Canaries must sit INSIDE the composite set (their steady-state
-    walls are warmed and comparable) and every sf with a reference must
-    cover the full canary tuple — a partial reference would make the
-    composite ratio incomparable across rounds."""
-    specs = all_queries()
-    composite = set(bench_set.composite_names(specs))
-    for name in bench_set.CANARIES:
-        assert name in specs, f"canary {name} not in registry"
-        assert name in composite, f"canary {name} outside composite set"
-    for sf, refs in bench_set.CANARY_REF.items():
-        assert set(refs) == set(bench_set.CANARIES), (
-            f"CANARY_REF[{sf}] does not match CANARIES"
-        )
-        assert all(v > 0 for v in refs.values())
+def _counters(spark, group, action, df):
+    """Jobs, stages and tasks that ``action(df)`` ran under its own job
+    group, as the status store saw them (skipped stages count as nothing)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action(df)
+    finally:
+        sc.setJobGroup("idle", "idle")
+        spark.catalog.clearCache()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages, tasks = 0, 0
+    for jid in jobs:
+        for sid in tracker.getJobInfo(jid).stageIds:
+            try:
+                stage = store.lastStageAttempt(sid)
+            except Py4JJavaError:  # never attempted: skipped
+                continue
+            if str(stage.status()) != "SKIPPED":
+                stages += 1
+                tasks += stage.numTasks()
+    return {"jobs": len(jobs), "stages": stages, "tasks": tasks}
 
 
-def test_canary_verdict_clean_window():
-    """A re-time near the committed minima (ordinary steady-state noise,
-    ~1.1-1.2x) must NOT flag the window."""
-    refs = bench_set.CANARY_REF["0.1"]
-    timings = {n: v * 1.15 for n, v in refs.items()}
-    v = bench_set.canary_verdict(timings, "0.1")
-    assert v is not None and v["degraded_window"] is False
-    assert abs(v["canary_ratio"] - 1.15) < 0.01
-    assert set(v["canaries"]) == set(bench_set.CANARIES)
-
-
-def test_canary_verdict_degraded_window():
-    """The r13 contamination signature (every canary inflated together,
-    ~1.5-1.8x) must flag the window."""
-    refs = bench_set.CANARY_REF["0.1"]
-    timings = {n: v * 1.6 for n, v in refs.items()}
-    v = bench_set.canary_verdict(timings, "0.1")
-    assert v is not None and v["degraded_window"] is True
-    for rec in v["canaries"].values():
-        assert rec["sec"] > rec["ref_min"]
-
-
-def test_canary_verdict_decides_on_composite_not_single_query():
-    """One canary spiking (a per-query artifact, not host pressure) must
-    not flag the window while the composite stays under threshold."""
-    refs = bench_set.CANARY_REF["0.1"]
-    timings = dict(refs)
-    # inflate only the smallest canary 3x: composite ratio stays low
-    smallest = min(refs, key=refs.get)
-    timings[smallest] = refs[smallest] * 3
-    v = bench_set.canary_verdict(timings, "0.1")
-    assert v is not None
-    assert v["canary_ratio"] < bench_set.CANARY_THRESHOLD
-    assert v["degraded_window"] is False
-
-
-def test_canary_verdict_unknown_sf_or_missing_timing():
-    refs = bench_set.CANARY_REF["0.1"]
-    assert bench_set.canary_verdict({n: v for n, v in refs.items()}, "0.001") is None
-    partial = dict(list(refs.items())[:-1])
-    assert bench_set.canary_verdict(partial, "0.1") is None
+@pytest.mark.parametrize("name", ["t_repetition_stats", "p_sentiment_batch_inference"])
+def test_full_result_runs_what_to_pandas_runs(spark, name):
+    """Both entries lose operators under ``.count()``: projections and
+    the Arrow inference stage. The timed action must keep them."""
+    fn = all_queries()[name].fn
+    collected = _counters(spark, f"{name}:toPandas", lambda df: df.toPandas(), fn(spark, SF_DIR))
+    timed = _counters(spark, f"{name}:full_result", bench._full_result, fn(spark, SF_DIR))
+    assert timed["stages"] > 0
+    assert timed == collected
 
 
 # ---------------------------------------------------------------------------
-# r16 host-invariant engine-regression signal (VERDICT r15 item 2)
+# bench.main end to end: the last two lines and the final line's keys
 # ---------------------------------------------------------------------------
 
-
-def _eo_timings(mult_engine=1.0, mult_oracle=1.0):
-    eng = {n: 0.2 * (i + 1) * mult_engine for i, n in enumerate(bench_set.CANARIES)}
-    ora = {n: 0.1 * (i + 1) * mult_oracle for i, n in enumerate(bench_set.CANARIES)}
-    return eng, ora
-
-
-def test_eo_ratio_is_host_invariant():
-    """Uniform host inflation moves both sides together — the ratio must
-    not move (the property the absolute canary_ratio lacks)."""
-    eng, ora = _eo_timings()
-    base = bench_set.canary_eo_ratio(eng, ora)
-    eng_hot = {n: v * 1.7 for n, v in eng.items()}
-    ora_hot = {n: v * 1.7 for n, v in ora.items()}
-    assert abs(bench_set.canary_eo_ratio(eng_hot, ora_hot) - base) < 1e-12
+ALWAYS = {
+    "metric", "value", "unit", "sf", "n_queries", "n_failures", "n_passes",
+    "engine_pass_totals", "oracle_pass_totals", "slowest", "queries",
+    "queries_truncated_to_tail_budget",
+}
+PAIRED = {"n_paired", "oracle_total_sec", "raw_ratio", "floor_adjusted_ratio"}
+FLOORS = {"engine_floor_sec", "oracle_floor_sec"}
 
 
-def test_eo_ratio_verdict_band_decision():
-    lo, hi = bench_set.CANARY_EO_BAND["0.1"]
-    assert 0 < lo < hi
-    eng, ora = _eo_timings()
-    mid = (lo + hi) / 2
-    # scale engine so the ratio lands mid-band: clean
-    scale = mid / bench_set.canary_eo_ratio(eng, ora)
-    v = bench_set.eo_ratio_verdict({n: t * scale for n, t in eng.items()}, ora, "0.1")
-    assert v["engine_regression"] is False
-    assert "eo_ratio_below_band" not in v
-    # above band: engine regression flagged
-    scale = (hi * 1.2) / bench_set.canary_eo_ratio(eng, ora)
-    v = bench_set.eo_ratio_verdict({n: t * scale for n, t in eng.items()}, ora, "0.1")
-    assert v["engine_regression"] is True
-    # below band: suspect reading flagged, not a regression
-    scale = (lo * 0.8) / bench_set.canary_eo_ratio(eng, ora)
-    v = bench_set.eo_ratio_verdict({n: t * scale for n, t in eng.items()}, ora, "0.1")
-    assert v["engine_regression"] is False and v["eo_ratio_below_band"] is True
-
-
-def test_eo_ratio_missing_side_or_unknown_sf_degrades():
-    eng, ora = _eo_timings()
-    partial = dict(list(eng.items())[:-1])
-    assert bench_set.canary_eo_ratio(partial, ora) is None
-    assert bench_set.eo_ratio_verdict(partial, ora, "0.1") is None
-    # unknown sf: ratio reported, no band verdict
-    v = bench_set.eo_ratio_verdict(eng, ora, "0.001")
-    assert v is not None and "engine_regression" not in v
-    assert v["canary_eo_ratio"] > 0
-    # zeroed oracle side degrades to None, never divides
-    assert bench_set.canary_eo_ratio(eng, {n: 0.0 for n in ora}) is None
+def test_bench_main_final_line_carries_the_kept_keys(spark, monkeypatch, capsys):
+    two = ["q01_pricing_summary", "q06_filtered_revenue"]
+    monkeypatch.setattr(bench, "get_spark", lambda *a, **k: spark)
+    monkeypatch.setattr(bench, "composite_names", lambda specs: list(two))
+    for knob, value in {
+        "SPARK_GRAFT_SF_DIR": SF_DIR,
+        "SPARK_GRAFT_BENCH_PASSES": "1",
+        "SPARK_GRAFT_BENCH_RUNS_PER_PASS": "1",
+        "SPARK_GRAFT_BENCH_ROTATE": "0",
+    }.items():
+        monkeypatch.setenv(knob, value)
+    bench.main()
+    *_, before_last, last = capsys.readouterr().out.splitlines()
+    final, per_query = json.loads(last), json.loads(before_last)
+    floors = FLOORS if os.path.abspath(SF_DIR) != os.path.abspath(bench.FLOOR_DIR) else set()
+    assert set(final) == ALWAYS | PAIRED | floors
+    assert not [k for k in final if k.startswith("canary")]
+    assert "degraded_window" not in final and "engine_regression" not in final
+    assert final["n_queries"] == 2 and final["n_failures"] == 0 and final["n_paired"] == 2
+    assert set(final["queries"]) == set(two)
+    assert per_query["metric"] == "per_query_timings"
+    assert set(per_query["per_query"]) == set(two)

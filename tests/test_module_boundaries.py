@@ -1,13 +1,17 @@
-"""Module boundary: ``materialize`` owns the on-disk table format (version
-dirs, live pointer, vacuum keep sets, swap tokens). ``api`` calls its
-public verbs and must not reach into the format's internals."""
+"""Module boundaries. ``materialize`` owns the on-disk table format
+(version dirs, live pointer, vacuum keep sets, swap tokens): ``api`` calls
+its public verbs and must not reach into the format's internals. And
+``session`` alone reads the AQE conf: operators key scale-only plan
+shapes on the session's declared profile, never on an unrelated tuning
+flag."""
 
 from __future__ import annotations
 
 import ast
 from pathlib import Path
 
-API = Path(__file__).resolve().parents[1] / "dbt_fal_spark" / "api.py"
+PACKAGE = Path(__file__).resolve().parents[1] / "dbt_fal_spark"
+API = PACKAGE / "api.py"
 FORMAT_INTERNALS = {"RETAIN_CONF", "table_swap_token"}
 
 
@@ -26,3 +30,35 @@ def test_api_imports_no_table_format_internals_from_materialize():
     assert names, "api.py no longer imports materialize at all?"
     leaked = sorted(n for n in names if n.startswith("_") or n in FORMAT_INTERNALS)
     assert leaked == [], f"api.py imports materialize internals: {leaked}"
+
+
+def _docstrings(tree: ast.AST) -> set[ast.AST]:
+    return {
+        node.body[0].value
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
+        and node.body
+        and isinstance(node.body[0], ast.Expr)
+        and isinstance(node.body[0].value, ast.Constant)
+    }
+
+
+def test_only_session_reads_the_aqe_conf():
+    """No string literal outside ``session.py`` names ``spark.sql.adaptive``
+    (comments and docstrings may: ``readers.at_scale`` explains why it
+    does not read it)."""
+    readers = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        if path.name == "session.py" and path.parent == PACKAGE:
+            continue
+        tree = ast.parse(path.read_text())
+        docs = _docstrings(tree)
+        if any(
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and "spark.sql.adaptive" in node.value
+            and node not in docs
+            for node in ast.walk(tree)
+        ):
+            readers.append(str(path.relative_to(PACKAGE)))
+    assert readers == [], f"modules naming the AQE conf: {readers}"

@@ -5,6 +5,7 @@ plus the query-correctness layer it lacks.
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import tempfile
 from pathlib import Path
@@ -103,6 +104,33 @@ def test_test_select_scopes_to_model(jaffle):
     assert all("stg_orders" in t["test"] for t in scoped)
     # a selector matching nothing runs nothing
     assert fal.test(select="no_such_model") == []
+
+
+@pytest.mark.parametrize(
+    "to, field, status",
+    [
+        ("ref('stg_customers')", "customer_id", "tested"),  # the fixture's own
+        ('ref("stg_customers")', "customer_id", "tested"),
+        ("ref('jaffle_spark', 'stg_customers')", "customer_id", "tested"),
+        ("source('testdata', 'customer')", "c_custkey", "tested"),
+        ("stg_customers", "customer_id", "tested"),
+        ("model('stg_customers')", "customer_id", "error"),
+    ],
+)
+def test_relationships_to_spellings(jaffle, monkeypatch, to, field, status):
+    fal, _, _ = jaffle
+    rel = next(t for t in fal.manifest.tests.values() if t.test_type == "relationships")
+    monkeypatch.setitem(
+        fal.manifest.tests,
+        rel.unique_id,
+        dataclasses.replace(rel, params={**rel.params, "to": to, "field": field}),
+    )
+    [result] = [r for r in fal.test(select="stg_orders") if r["test"] == rel.name]
+    assert result["status"] == status, result
+    if status == "tested":
+        assert result["violations"] == 0
+    else:
+        assert "relationships 'to'" in result["error"]
 
 
 def test_source_freshness_statuses(jaffle):

@@ -13,17 +13,11 @@ Findings fixed this round:
   version pattern and was in nobody's keep set. Writers now register
   in-flight dirs (materialize._INFLIGHT_DIRS) and every vacuum path
   keeps them.
-- tools/bench_merge.py cross-run composites silently mixed query SETS
-  across a composite-set change; it now also reports the common-set
-  (like-for-like) composite. (Tested via subprocess below.)
 """
 
 from __future__ import annotations
 
-import json
 import os
-import subprocess
-import sys
 import threading
 
 import pytest
@@ -186,31 +180,3 @@ def test_swap_token_detects_drop_first_rebuild(spark, tmp_path):
     tok2 = table_swap_token(spark, ident)
     assert tok1 != tok2, "rebuild not visible in the swap token"
     assert tok1[0] == tok2[0] or tok2[0] is not None  # path may be stable
-
-
-def test_bench_merge_reports_common_set_composite(tmp_path):
-    a = tmp_path / "a.json"
-    b = tmp_path / "b.json"
-    a.write_text(json.dumps({"value": 3.0, "queries": {"x": 1.0, "y": 2.0}}) + "\n")
-    b.write_text(
-        json.dumps({"value": 4.5, "queries": {"x": 1.5, "y": 1.8, "z": 1.2}}) + "\n"
-    )
-    out = subprocess.run(
-        [sys.executable, os.path.join(REPO, "tools", "bench_merge.py"), str(a), str(b)],
-        capture_output=True,
-        text=True,
-        check=True,
-    )
-    d = json.loads(out.stdout)
-    assert d["engine_composite_sec"] == 4.0  # union minima (x=1.0,y=1.8,z=1.2)
-    assert d["common_set_composite_sec"] == 2.8  # like-for-like (x+y)
-    assert d["queries_not_in_all_runs"] == ["z"]
-    # identical sets → no common-set keys (composite IS like-for-like)
-    out2 = subprocess.run(
-        [sys.executable, os.path.join(REPO, "tools", "bench_merge.py"), str(a), str(a)],
-        capture_output=True,
-        text=True,
-        check=True,
-    )
-    d2 = json.loads(out2.stdout)
-    assert "common_set_composite_sec" not in d2

@@ -25,9 +25,6 @@ Findings fixed this round:
   * crashed-writer ``.__live_tmp_*`` litter (SIGKILL between mkstemp
     and rename) is now reaped opportunistically by later pointer
     writes, with a 1-hour age floor protecting concurrent writers;
-  * bench_merge with ZERO canary-clean runs previously dropped the
-    clean composite silently — it now emits all_runs_degraded so the
-    all-runs minima can't masquerade as a clean headline;
   * window_guard now FAILS on _CHECK_FIRST names absent from the
     registry (a rename/delete leaves the staged window pointing at
     nothing while an unstaged entry silently fills the 50th slot) and
@@ -38,16 +35,11 @@ Findings fixed this round:
     pair-consumer (table_swap_token) reads under the same commit_lock
     all writers hold — verified, behavior locked in round 15's
     roundtrip test; nothing further to fix.
-- VERDICT r15 item 2 (host-invariant canary): contract locks live in
-  tests/test_bench_contract.py; the bench/bench_merge plumbing locks
-  are here.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import subprocess
 import sys
 import time
 
@@ -259,60 +251,6 @@ def test_lm_surprise_shuffle_join_branch_values_unchanged(spark, oracle):
     finally:
         _restore_join_conf(spark, prev, prev_aqe)
         spark.catalog.clearCache()
-
-
-# ---------------------------------------------------------------------------
-# r16 adversarial: bench_merge with ZERO canary-clean runs
-# ---------------------------------------------------------------------------
-
-
-def test_bench_merge_zero_clean_runs_flags_all_degraded(tmp_path):
-    hot1 = {
-        "queries": {"a": 0.5, "b": 0.6},
-        "value": 1.1,
-        "canary_ratio": 2.0,
-        "degraded_window": True,
-    }
-    hot2 = {
-        "queries": {"a": 0.7, "b": 0.4},
-        "value": 1.1,
-        "canary_ratio": 1.8,
-        "degraded_window": True,
-    }
-    p1, p2 = tmp_path / "r1.json", tmp_path / "r2.json"
-    p1.write_text(json.dumps(hot1) + "\n")
-    p2.write_text(json.dumps(hot2) + "\n")
-    out = subprocess.run(
-        [sys.executable, os.path.join(REPO, "tools", "bench_merge.py"), str(p1), str(p2)],
-        capture_output=True, text=True, check=True,
-    )
-    doc = json.loads(out.stdout)
-    assert doc["n_clean_runs"] == 0
-    assert doc.get("all_runs_degraded") is True
-    assert "clean_runs_composite_sec" not in doc
-    # the all-runs minima still compute (they are just labeled degraded)
-    assert doc["engine_composite_sec"] == 0.9
-
-
-def test_bench_merge_carries_eo_ratio_fields(tmp_path):
-    run = {
-        "queries": {"a": 1.0},
-        "value": 1.0,
-        "canary_ratio": 1.1,
-        "degraded_window": False,
-        "canary_eo_ratio": 2.1,
-        "engine_regression": False,
-    }
-    p = tmp_path / "r.json"
-    p.write_text(json.dumps(run) + "\n")
-    out = subprocess.run(
-        [sys.executable, os.path.join(REPO, "tools", "bench_merge.py"), str(p)],
-        capture_output=True, text=True, check=True,
-    )
-    doc = json.loads(out.stdout)
-    assert doc["per_run"][0]["canary_eo_ratio"] == 2.1
-    assert doc["canary_eo_ratio_spread"] == [2.1, 2.1]
-    assert doc["n_engine_regression_flags"] == 0
 
 
 # ---------------------------------------------------------------------------

@@ -31,9 +31,6 @@ Changes locked here (see OPTIMIZATION_r17.md for measurements):
   top-K ``queries`` map — the driver joins per-query comparisons on the
   LAST parsed line's ``queries`` key, so the heaviest entries that fit
   under 1950 bytes ride there (VERDICT r16 item 1).
-- tools/paired_bench.py: record picker prefers the full line (the only
-  one with ``oracle_queries``) so paired artifacts stay full-width now
-  that the last line also has a (partial) ``queries`` key.
 """
 
 from __future__ import annotations
@@ -274,8 +271,7 @@ def test_bench_tail_emits_per_query_line_before_final_compact_line():
     complete final payload (the driver records only the final 2000
     chars)."""
     sys.path.insert(0, REPO)
-    from bench import tail_emission
-    from dbt_fal_spark.bench_set import composite_names
+    from bench import composite_names, tail_emission
     from dbt_fal_spark.registry import all_queries
 
     names = composite_names(all_queries())
@@ -324,29 +320,3 @@ def test_bench_tail_emits_per_query_line_before_final_compact_line():
     )
     assert set(small_final["queries"]) == set(few)
     assert small_final["queries_truncated_to_tail_budget"] is False
-
-
-def test_paired_bench_picks_full_line_over_partial_tail_map():
-    """tools/paired_bench.py must keep building FULL-width artifacts:
-    the last stdout line now carries a partial `queries` map, so the
-    picker prefers the full line (the only one with `oracle_queries`),
-    falls back to a bare `queries` line (oracle_bench.py), then any
-    JSON line."""
-    sys.path.insert(0, os.path.join(REPO, "tools"))
-    from paired_bench import pick_record
-
-    full = {"queries": {"a": 1.0, "b": 2.0}, "oracle_queries": {"a": 0.5}}
-    partial_tail = {"metric": "headline_queries_total_wall", "queries": {"b": 2.0}}
-    lines = [
-        "not json",
-        json.dumps(full),
-        json.dumps({"metric": "per_query_timings", "per_query": {}}),
-        json.dumps(partial_tail),
-    ]
-    assert pick_record(lines) == full
-    # oracle_bench output: one line with bare queries
-    ora = {"metric": "oracle", "queries": {"a": 0.4}}
-    assert pick_record([json.dumps(ora)]) == ora
-    # fallback: any JSON line
-    assert pick_record([json.dumps({"metric": "x"})]) == {"metric": "x"}
-    assert pick_record(["garbage"]) is None
