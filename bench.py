@@ -436,7 +436,7 @@ def main() -> None:
 
 def tail_emission(timings, oracle_timings, sf, final_payload) -> list[str]:
     """The last stdout lines, in print order (unit-locked by
-    tests/test_round17_opt.py).
+    tests/test_bench_contract.py).
 
     Full per-query engine+oracle minima map: per-query, geomean and
     scaling reports join on a `per_query` key shaped like the rotating

@@ -98,7 +98,7 @@ def _sized(df: DataFrame) -> DataFrame:
         qe = df._jdf.queryExecution()
         if _EXPLICIT_PARTITIONING.search(qe.analyzed().treeString()):
             return df
-        est = max(scan_bytes(df) or 0, int(qe.optimizedPlan().stats().sizeInBytes()))
+        est = max(scan_bytes(df), int(qe.optimizedPlan().stats().sizeInBytes()))
         cores = int(
             spark.conf.get("spark.sql.leafNodeDefaultParallelism", None)
             or spark.sparkContext.defaultParallelism
@@ -349,7 +349,9 @@ def _live_pointer_path(base: str) -> str:
 
 def _write_live_pointer(base: str, loc: str) -> None:
     """Atomically persist the live location (tmp file + rename). Line 1
-    is the location; line 2 is a fresh per-commit NONCE — the version
+    is the version dir's NAME, not its path: every version is a sibling
+    of ``base``, so a copied or restored warehouse resolves the pointer
+    inside itself. Line 2 is a fresh per-commit NONCE — the version
     component table_swap_token uses for drop-first swaps, whose
     committed location never changes (dir mtime alone has coarse-
     filesystem ticks).
@@ -379,7 +381,7 @@ def _write_live_pointer(base: str, loc: str) -> None:
     try:
         fd, tmp = tempfile.mkstemp(dir=os.path.dirname(base), prefix=".__live_tmp_")
         with os.fdopen(fd, "w") as f:
-            f.write(f"{os.path.abspath(loc)}\n{uuid.uuid4().hex}")
+            f.write(f"{os.path.basename(loc.rstrip('/'))}\n{uuid.uuid4().hex}")
         os.replace(tmp, _live_pointer_path(base))
         tmp = None  # consumed by the rename
     except OSError:
@@ -393,14 +395,16 @@ def _write_live_pointer(base: str, loc: str) -> None:
 
 
 def _read_live_pointer(base: str) -> str | None:
-    """Line 1 of the pointer file: the live location (single-line files
+    """The live location named by line 1 of the pointer file, resolved
+    as a sibling of ``base``. Pointer files that stored an absolute path
+    resolve the same way, by their last component (single-line files
     from before the nonce parse identically — no nonce line, that's all)."""
     try:
         with open(_live_pointer_path(base)) as f:
-            loc = f.readline().strip()
-        return loc or None
+            name = os.path.basename(f.readline().strip().rstrip("/"))
     except OSError:
         return None
+    return os.path.join(os.path.dirname(base), name) if name else None
 
 
 def _read_live_nonce(base: str) -> str | None:
@@ -746,11 +750,8 @@ def compact_table(
     else:
         # the current partition count decides coalesce (shrinking, no
         # shuffle) vs repartition (growing); the JVM-side RDD probe
-        # skips building the Python-conversion RDD df.rdd would
-        try:
-            cur = df._jdf.queryExecution().toRdd().getNumPartitions()
-        except Exception:  # foreign session without the internal API
-            cur = df.rdd.getNumPartitions()
+        # skips building a Python-side RDD
+        cur = df._jdf.queryExecution().toRdd().getNumPartitions()
         out = df.coalesce(n) if n <= cur else df.repartition(n)
     replace_relation_atomic(spark, out, identifier, expected_token=expected, **layout)
     return n

@@ -33,13 +33,7 @@ from pyspark.sql import functions as F
 
 from dbt_fal_spark.operators.similarity import FINITE_EMB
 from dbt_fal_spark.registry import query
-from dbt_fal_spark.sources.readers import (
-    at_scale,
-    load_table,
-    load_table_fresh,
-    persist_at_scale,
-    spread,
-)
+from dbt_fal_spark.sources.readers import load_table, load_table_fresh, spread
 
 # ---------------------------------------------------------------------------
 # Shared deterministic constants
@@ -166,10 +160,9 @@ def d_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from the set), so no separate sizes aggregate and no join back
     # after the pair count.
     # Persist (both join sides), hash-partitioned on the join key: the
-    # self-join inherits this 16-way partitioning (no re-exchange), so
-    # the quadratic candidate-pair stage runs wide even under the
-    # low-latency session profile (8 shuffle partitions); scale this
-    # width with input size on a real cluster.
+    # self-join inherits this partitioning (no re-exchange), so the
+    # quadratic candidate-pair stage runs at least 16 wide even when the
+    # session's shuffle width is narrower.
     def gen(batches):
         # nested + self-contained: executors cannot import dbt_fal_spark
         import pandas as pd
@@ -197,10 +190,9 @@ def d_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).astype("int64")
             yield out
 
-    # pair-stage width: 16 under the latency profile (8 shuffle
-    # partitions — measured best at small files), the session's
-    # shuffle-partition conf under the scale profile so the quadratic
-    # candidate stage runs cluster-wide, not 16-wide, at 100 TB
+    # pair-stage width: at least 16 (measured best at small files), or
+    # the session's shuffle-partition conf when that is wider, so the
+    # quadratic candidate stage runs cluster-wide on a wide session
     width = max(16, int(spark.conf.get("spark.sql.shuffle.partitions", "16")))
     sh = (
         spread(docs.select("doc_id", "text"))
@@ -219,20 +211,10 @@ def d_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("df") <= SHINGLE_DOC_CAP).drop("df")
     a = rare.alias("a")
     b = rare.alias("b")
+    # no size-ratio pre-prune (jaccard <= min(na,nb)/max(na,nb)): the
+    # per-row predicate on the probe stream measured slower than the
+    # pair shuffle volume it saves
     cond = (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id"))
-    if at_scale(spark):
-        # r17 (VERDICT r16 item 4): size-ratio pair prune, SCALE profile
-        # only. Sound for the t=0.5 gate: jaccard <= min(na,nb)/max(na,nb),
-        # so a pair with sizes outside [n/2, 2n] cannot reach 0.5
-        # (inclusive bounds keep boundary pairs — na=2nb with full overlap
-        # IS jaccard 0.5). Prunes 24% of pair occurrences BEFORE the pair
-        # shuffle (PLANS.md r16 adjudication, variant B: 1,265,779 ->
-        # 965,169 at sf0.1). Measured SLOWER locally (+12% med: the
-        # per-row predicate on the probe stream costs more than the saved
-        # in-memory shuffle volume), so the latency profile keeps the
-        # bare join; at cluster scale the pair shuffle crosses a network
-        # and pruned bytes are the win the guide's §2.3 orders first.
-        cond = cond & (F.col("a.n") <= 2 * F.col("b.n")) & (F.col("b.n") <= 2 * F.col("a.n"))
     pairs = (
         a.join(b, cond)
         .groupBy(
@@ -495,16 +477,16 @@ def d_lsh_levenshtein_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     set, never the corpus square; both engines' levenshtein() is the
     classic integer DP, so the gate is engine-exact.
 
-    r10 plan iteration (VERDICT r9 item 4): document char lengths ride
-    through the band-bucket shuffle inside the member structs (4 ints/
-    doc on top of the band signature — text itself never enters the
-    bucket exchange), so the Levenshtein LENGTH LOWER BOUND
-    ``lev(a,b) >= |len(a)-len(b)|`` prunes candidate pairs BEFORE any
-    text bytes move: a pair with |la-lb| > 0.4*max(la,lb) cannot pass
-    the final edit_ratio <= 0.4 filter, so dropping it is semantics-
-    free (oracle unchanged). Only surviving pairs join text back for
-    the DP stage — at 100 TB that join stays proportional to GATED
-    candidates (broadcast the pair ids, shuffle only matching docs)."""
+    Document char lengths ride through the band-bucket shuffle inside
+    the member structs (4 ints/doc on top of the band signature — text
+    itself never enters the bucket exchange), so the Levenshtein LENGTH
+    LOWER BOUND ``lev(a,b) >= |len(a)-len(b)|`` prunes candidate pairs
+    BEFORE any text bytes move: a pair with |la-lb| > 0.4*max(la,lb)
+    cannot pass the final edit_ratio <= 0.4 filter, so dropping it is
+    semantics-free (oracle unchanged). Surviving pairs then join text
+    back through two probes of the document scan, one per pair side; the
+    join strategy is the planner's (at the test scales the gated pair
+    set broadcasts and the doc scan streams past it)."""
     docs = load_table(spark, sf_dir, "documents")
     sig = _minhash_sig(docs, with_len=True)
     band_structs = [
@@ -535,46 +517,8 @@ def d_lsh_levenshtein_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b")
         .distinct()
     )
-    # r16 (optimization round): under the SCALE profile, prune the doc
-    # relation ONCE by the union of candidate ids (left_semi) and cache
-    # the matched docs (candidates-sized, bounded by the gated pair
-    # count) before the two text probes — one corpus text scan instead
-    # of two at 100 TB. At sub-GB bench scale the extra candidate
-    # materialization + semi-join measured ~0.2 s SLOWER than the two
-    # cheap rescans (A/B at sf0.1: 1.12 s -> 1.31 s min,
-    # OPTIMIZATION_r16.md), so the latency profile keeps the direct
-    # two-probe shape. Results identical either way (locked by
-    # tests/test_round16_opt.py).
-    #
-    # r17 (VERDICT r16 items 5/9): the id side of the text-pruning semi
-    # is explicitly BROADCAST when its measured row count is under
-    # spark.dbt_fal.lev.maxBroadcastIds — the post-aggregation size
-    # ESTIMATE the auto-threshold compares is unreliable, and a planner
-    # falling back to a sort-merge semi would shuffle the whole corpus
-    # TEXT by doc_id. The ids relation is persisted + counted first (one
-    # bounded job over the already-persisted cand relation — at scale
-    # that is noise next to the corpus pass it protects); a count over
-    # the cap falls back to the un-hinted semi (the planner's shuffle
-    # moves text once, still <= the old two-probe movement, and the
-    # driver never builds an oversized broadcast).
-    if at_scale(spark):
-        cand = persist_at_scale(cand)
-        ids = persist_at_scale(
-            cand.select(F.col("doc_a").alias("did"))
-            .union(cand.select(F.col("doc_b")))
-            .distinct()
-        )
-        max_bcast = int(spark.conf.get("spark.dbt_fal.lev.maxBroadcastIds", "50000000"))
-        id_side = F.broadcast(ids) if ids.count() <= max_bcast else ids
-        matched = persist_at_scale(
-            docs.select("doc_id", "text")
-            .join(id_side, F.col("doc_id") == F.col("did"), "left_semi")
-        )
-        da = matched.select(F.col("doc_id").alias("da_id"), F.col("text").alias("text_a"))
-        db = matched.select(F.col("doc_id").alias("db_id"), F.col("text").alias("text_b"))
-    else:
-        da = docs.select(F.col("doc_id").alias("da_id"), F.col("text").alias("text_a"))
-        db = docs.select(F.col("doc_id").alias("db_id"), F.col("text").alias("text_b"))
+    da = docs.select(F.col("doc_id").alias("da_id"), F.col("text").alias("text_a"))
+    db = docs.select(F.col("doc_id").alias("db_id"), F.col("text").alias("text_b"))
     lev = F.levenshtein("text_a", "text_b")
     ratio = lev.cast("double") / F.greatest(F.length("text_a"), F.length("text_b"))
     return (

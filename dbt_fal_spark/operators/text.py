@@ -474,21 +474,10 @@ def t_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # break the clustering the window reuses): at small-file sizes 8 wide
     # partitions beat 32 slivers; at real scan sizes the conf-sized
     # repartition applies. Width decided from the LEAF relations' size
-    # stats (pure driver-side plan visit; readers.scan_bytes) — the r16
-    # projected-plan estimate here scaled the text column by its
-    # schema-default width (20 B) and could under-call a genuinely wide
-    # scan (ADVICE r16); the leaf estimate is the file-byte total split
-    # planning itself divides. Conf parsed size-string-tolerantly
-    # (readers.conf_bytes) so "128m" doesn't dump us on the ~100 ms RDD
-    # fallback probe.
-    sb = scan_bytes(base)
-    if sb is None:  # foreign session without the internal API
-        small_scan = base.rdd.getNumPartitions() < 8
-    else:
-        small_scan = sb < 8 * conf_bytes(
-            spark, "spark.sql.files.maxPartitionBytes", 134217728
-        )
-    if small_scan:
+    # stats (readers.scan_bytes), the file-byte total split planning
+    # itself divides; a projected-plan estimate would scale the text
+    # column by its schema-default width (20 B) and under-call a wide scan.
+    if scan_bytes(base) < 8 * conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 134217728):
         base = base.repartition(8, F.col("doc_id"))
     else:
         base = base.repartition(F.col("doc_id"))

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from dbt_fal_spark.functions.numeric import dsum, o_dsum
 from dbt_fal_spark.registry import query
-from dbt_fal_spark.sources.readers import at_scale, load_table, persist_at_scale
+from dbt_fal_spark.sources.readers import load_table
 
 SESSION_GAP_SEC = 1800  # 30 min
 
@@ -373,22 +373,15 @@ def e_dau_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     size; the 7-day union is a 7-way map-only expansion of bounded
     state, never a re-scan of the week's raw events.
 
-    r16 (optimization round): the pre-r16 plan ran THREE full events
-    passes (the unpersisted register subtree was recomputed for the DAU
-    and WAU branches, and n_events was a third direct scan). Now the
-    register aggregation additionally counts its group's events
-    (count(*) per (day, bucket) — free in the same map-side partial),
-    the DAU state and the per-day event totals fold into ONE downstream
-    aggregate (per-day totals are the SUM of the per-bucket counts:
-    every event row lands in exactly one (day, bucket) group, NULL
-    groups included, so the sum equals the old direct
-    groupBy(day).count), and one join disappears. Under the scale
-    profile the bounded register relation is additionally persisted
-    (persist_at_scale) so the WAU branch reads the cache — ONE events
-    pass at 100 TB; at sub-GB bench scale the cache's memory-store
-    materialization measured slower than the second scan it saves, so
-    the latency profile keeps two scans (A/B interleaved at sf0.1,
-    OPTIMIZATION_r16.md)."""
+    One register pass feeds both branches: the register aggregation
+    also counts its group's events (count(*) per (day, bucket) — free in
+    the same map-side partial), and the DAU state and the per-day event
+    totals fold into ONE downstream aggregate (per-day totals are the
+    SUM of the per-bucket counts: every event row lands in exactly one
+    (day, bucket) group, NULL groups included). The register relation is
+    not persisted, so the DAU and WAU branches each scan events once —
+    two scans; caching the bounded register state measured slower than
+    the second scan at the bench's input sizes."""
     ev = load_table(spark, sf_dir, "events")
     h = ev.select(
         F.col("ts").cast("date").alias("day"),
@@ -399,12 +392,9 @@ def e_dau_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     rho = F.when(F.expr("hv div 4096") == 0, F.lit(49)).otherwise(
         F.lit(49) - F.length(F.expr("bin(hv div 4096)"))
     )
-    # bounded state: <= 4096 rows per day (+ one NULL-bucket row); cached
-    # only at scale (see persist_at_scale), cleared by the runner's
-    # post-query cache clear per the repo persist contract
-    regs = persist_at_scale(
-        h.groupBy("day", (F.col("hv") % 4096).alias("bucket"))
-        .agg(F.max(rho).cast("bigint").alias("r"), F.count(F.lit(1)).alias("n_ev"))
+    # bounded state: <= 4096 rows per day (+ one NULL-bucket row)
+    regs = h.groupBy("day", (F.col("hv") % 4096).alias("bucket")).agg(
+        F.max(rho).cast("bigint").alias("r"), F.count(F.lit(1)).alias("n_ev")
     )
 
     def day_state(df, s_name, v_name):
@@ -543,33 +533,14 @@ def e_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     users grouped by first-activity week, retention = share of the
     cohort active k weeks later.
 
-    r16 (optimization round) SCALE shape: the first stage is the
-    distinct (user_id, week) relation — the only event-sized shuffle,
-    collapsed map-side, bounded by users x active-weeks; cohort weeks
-    are its per-user min (min over a user's DISTINCT weeks == min over
-    all their event weeks), and the activity relation is the distinct
-    pairs joined back to cohort weeks — already distinct per
-    (user, cohort_week, offset) because offset is a function of the
-    distinct week, so the pre-r16 second distinct (which re-shuffled
-    the events-sized JOIN output) is gone. With the pair relation
-    persisted (persist_at_scale): ONE events pass at 100 TB where the
-    old shape took two scans plus an events-row shuffle.
-
-    r17 (VERDICT r16 item 3): the LATENCY profile reverts to the
-    pre-r16 shape (firsts aggregated directly from events; distinct
-    applied once, after the join). The r16 in-session A/B that read
-    distinct-first as faster locally did not replicate: two
-    independent interleaved A/Bs (min-of-8, sf0.1) put the uncached
-    distinct-first shape +18% / +41% on minima — without the cache the
-    event-sized distinct shuffle runs TWICE (once per consumer),
-    strictly more shuffled volume than the single post-join distinct
-    it replaced. The scale branch keeps the r16 shape: with the pair
-    relation cached the double-consumption costs one pass, and the
-    pre-r16 post-join distinct would re-shuffle an events-sized join
-    output — the exact stage the rewrite exists to avoid. Values are
-    identical in both shapes (locked by
-    tests/test_round16_opt.py::test_retention_matches_two_scan_reference
-    and the profile-equality assert in ::test_retention_single_events_scan).
+    firsts (each user's cohort week) is aggregated directly from events
+    and persisted: it is users-sized and consumed twice (the activity
+    join and the cohort sizes). The activity relation joins the events'
+    (user, week) pairs to it and applies distinct once, after the join.
+    A distinct-(user, week)-first shape measured slower uncached: its
+    events-sized distinct shuffle runs once per consumer. Values are
+    locked against a two-scan reference by
+    tests/test_sketch.py::test_retention_matches_two_scan_reference.
 
     Cohort sizes stay dimension-sized and broadcast back. NULL
     semantics are unchanged: NULL user_ids drop at the equi-join
@@ -578,36 +549,17 @@ def e_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     day = F.col("ts").cast("date")
     week = F.date_trunc("week", day).cast("date")
-    if at_scale(spark):
-        # one events pass: the cached distinct pair relation feeds the
-        # cohort-week min AND the activity join; cleared by the runner
-        # per the repo persist contract
-        uw = persist_at_scale(ev.select("user_id", week.alias("week")).distinct())
-        firsts = uw.groupBy("user_id").agg(F.min("week").alias("cohort_week")).persist()
-        activity = (
-            uw.join(firsts, "user_id")
-            .select(
-                "user_id",
-                "cohort_week",
-                (F.datediff(F.col("week"), F.col("cohort_week")) / 7).cast("bigint").alias("week_offset"),
-            )
+    firsts = ev.groupBy("user_id").agg(F.min(week).alias("cohort_week")).persist()
+    activity = (
+        ev.select("user_id", week.alias("week"))
+        .join(firsts, "user_id")
+        .select(
+            "user_id",
+            "cohort_week",
+            (F.datediff(F.col("week"), F.col("cohort_week")) / 7).cast("bigint").alias("week_offset"),
         )
-    else:
-        # firsts is users-sized and consumed twice (activity join +
-        # cohort sizes): persisted as pre-r16
-        firsts = (
-            ev.groupBy("user_id").agg(F.min(week).alias("cohort_week"))
-        ).persist()
-        activity = (
-            ev.select("user_id", week.alias("week"))
-            .join(firsts, "user_id")
-            .select(
-                "user_id",
-                "cohort_week",
-                (F.datediff(F.col("week"), F.col("cohort_week")) / 7).cast("bigint").alias("week_offset"),
-            )
-            .distinct()
-        )
+        .distinct()
+    )
     sizes = firsts.groupBy("cohort_week").agg(F.count(F.lit(1)).alias("cohort_size"))
     return (
         activity.groupBy("cohort_week", "week_offset")

@@ -51,10 +51,9 @@ _COMMON = {
 # machinery with wide shuffles. This mirrors what a production deployment
 # does with --conf per workload class.
 _LATENCY_PROFILE = {
-    # dedicated profile marker (r17, ADVICE r16): operators that gate
-    # scale-only plan shapes (readers.at_scale / persist_at_scale) key on
-    # this conf, NOT on spark.sql.adaptive.enabled — AQE is an unrelated
-    # tuning flag a caller may toggle independently
+    # profile marker for run records (perfbench writes it into
+    # meta.profile); no operator reads it: every operator builds one plan
+    # and the profile differs only in the confs below
     "spark.dbt_fal.profile": "latency",
     "spark.sql.adaptive.enabled": "false",
     # 8 post-shuffle partitions: sub-GB inputs leave reduce stages task-
@@ -70,7 +69,7 @@ _SCALE_PROFILE = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.shuffle.partitions": "200",
-    # Streaming state store (r17, guide §5): the default HDFS-backed
+    # Streaming state store: the default HDFS-backed
     # provider holds EVERY state row as deserialized objects on the
     # executor JVM heap, competing with execution memory — at 100 TB/day
     # the dedup / outer-interval-join state is the largest on-heap risk
@@ -78,7 +77,8 @@ _SCALE_PROFILE = {
     # with incremental snapshot checkpointing. Latency profile keeps the
     # default provider: for the KB-sized local state the JVM map is
     # faster than JNI round-trips (measured in STREAM_BENCH_r17.json;
-    # correctness under RocksDB is locked by tests/test_round17_opt.py).
+    # correctness under RocksDB is locked by
+    # tests/test_streaming_checkpoint.py).
     "spark.sql.streaming.stateStore.providerClass":
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
 }

@@ -6,6 +6,14 @@ dispatch at adapter_support.py:130-173) — all of that collapses to a single
 lazy ``spark.read.parquet`` here. Registration as temp views makes the
 tables addressable from ``spark.sql`` exactly like dbt sources
 (reference: projects/adapter/src/fal/dbt/integration/project.py:717-755).
+
+Persist contract: an operator persists a relation its plan consumes
+more than once and never unpersists it, because the cache must outlive
+the lazy plan it returns. The runners (bench.py, tools/check.py) call
+``spark.catalog.clearCache()`` after each query; a caller embedding the
+operators in a long-lived session owns the same step once the query's
+outputs are materialized. Every operator builds one plan whatever the
+session profile; the profile only sets session confs (session.py).
 """
 
 from __future__ import annotations
@@ -13,7 +21,6 @@ from __future__ import annotations
 import os
 import re
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -107,8 +114,7 @@ def register_testdata(spark: SparkSession, sf_dir: str) -> None:
 
 
 # Spark accepts byte-size confs either as bare numbers or as size strings
-# ("128m", "1g"); int() on the string form raised ValueError and silently
-# sent callers down their expensive fallback probe (ADVICE r16 item 3).
+# ("128m", "1g"), so a plain int() on the conf value is not enough.
 _SIZE_SUFFIX = {
     "": 1, "b": 1,
     "k": 1 << 10, "kb": 1 << 10,
@@ -132,27 +138,16 @@ def conf_bytes(spark: SparkSession, key: str, default: int) -> int:
     return int(m.group(1)) * _SIZE_SUFFIX[m.group(2)]
 
 
-def scan_bytes(df: DataFrame) -> int | None:
+def scan_bytes(df: DataFrame) -> int:
     """Optimizer estimate of the bytes this plan's SCANS read: the sum of
     the LEAF relations' stats (a pure driver-side plan visit, ~25 ms).
     The leaves report file-index totals — exactly the quantity split
     planning divides by maxPartitionBytes — unlike the projected plan's
     estimate, which scales by schema-default attribute widths (string =
     20 B) and can grossly underestimate a narrow (id, text) projection
-    of a table with large variable-length text (ADVICE r16 item 2: the
-    r16 projected-plan probe could consolidate a genuinely parallel scan
-    to 8 tasks at medium scale; the leaf estimate cannot, because a scan
-    whose files total under the cutoff never produced more than
-    target splits in the first place). Returns None on a session without
-    the internal plan API (callers fall back to the RDD probe); the
-    except is narrow around that internal access only."""
-    try:
-        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
-        return sum(
-            int(leaves.apply(i).stats().sizeInBytes()) for i in range(leaves.size())
-        )
-    except Exception:  # internal API unavailable (connect/foreign session)
-        return None
+    of a table with large variable-length text."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    return sum(int(leaves.apply(i).stats().sizeInBytes()) for i in range(leaves.size()))
 
 
 def spread(df: DataFrame) -> DataFrame:
@@ -166,83 +161,17 @@ def spread(df: DataFrame) -> DataFrame:
     0.44 s for the minhash stage at sf0.1). At real data sizes the scan
     is far over the size cutoff and this is a no-op.
 
-    r16 (optimization round): the width decision reads an optimizer
-    size estimate (a pure driver-side plan visit, ~25 ms) instead of
-    ``df.rdd.getNumPartitions()``, which materialized the physical plan
-    AND an RDD graph per call: measured ~100 ms of driver latency per
-    probe, times ~20 call sites per bench pass. Decision rule: a scan
-    whose files total under target x maxPartitionBytes cannot have
-    produced ``target`` full splits, so it gets the widening
-    repartition; anything larger already scans >= target-wide.
-
-    r17 (ADVICE r16): the estimate is now the sum of the plan's LEAF
-    stats (see scan_bytes) — the projected-plan estimate used in r16
-    under-counted wide text columns and could REDUCE real parallelism,
-    which the old RDD probe never did; the leaf estimate is the same
-    file-byte total split planning itself uses, so the repartition fires
-    exactly when the scan is genuinely narrower than `target`. The
-    maxPartitionBytes conf is parsed with size-string support
-    (conf_bytes) instead of a bare int() whose ValueError silently fell
-    back to the ~100 ms RDD probe this function exists to avoid."""
+    The width decision reads the leaf scan estimate (scan_bytes, a
+    driver-side plan visit) rather than probing the RDD's partition
+    count, which would build the physical plan and an RDD graph per call
+    (~100 ms each). A scan whose files total under
+    target x maxPartitionBytes cannot have produced ``target`` full
+    splits, so it gets the widening repartition; anything larger already
+    scans >= target-wide."""
     spark = df.sparkSession
     target = min(8, spark.sparkContext.defaultParallelism)
-    size = scan_bytes(df)
-    if size is None:  # foreign session without the internal API: stay safe
-        return df.repartition(target) if df.rdd.getNumPartitions() < target else df
-    if size < target * conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 134217728):
+    if scan_bytes(df) < target * conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 134217728):
         return df.repartition(target)
-    return df
-
-
-def at_scale(spark: SparkSession) -> bool:
-    """True iff the session declares the SCALE profile via the dedicated
-    marker conf ``spark.dbt_fal.profile`` (set to "scale"/"latency" by
-    session.pick_profile from the input footprint).
-
-    r17 (ADVICE r16 item 1): the profile used to be sniffed from
-    ``spark.sql.adaptive.enabled`` — an unrelated tuning flag
-    (default-on since Spark 3.2) whose independent toggling silently
-    flipped operator plan shapes, and whose default made every
-    non-harness session take the persist path. The dedicated conf
-    defaults to LATENCY (no persist) — the conservative fallback for
-    sessions that never declared a profile."""
-    try:
-        return spark.conf.get("spark.dbt_fal.profile", "latency") == "scale"
-    except Exception:
-        return False
-
-
-def persist_at_scale(df: DataFrame) -> DataFrame:
-    """persist() iff the session runs the SCALE profile (see at_scale).
-    Rationale (r16 optimization round, measured): caching a small
-    multi-consumer relation costs more in memory-store materialization
-    than the recompute it saves at sub-GB bench scale, but at cluster
-    scale the recompute is a full pass over raw inputs — exactly the
-    trade the session's profile machinery already encodes. Callers use
-    this for BOUNDED relations (sketch registers, distinct user-week
-    pairs, gated candidate matches) whose cache footprint is
-    dimension-sized, never corpus-sized. Results are identical either
-    way; only the plan's scan count changes.
-
-    r17 (VERDICT r16 item 5): the storage level is an explicit
-    serialized MEMORY_AND_DISK (PySpark's ``StorageLevel.MEMORY_AND_DISK``
-    carries deserialized=False — it IS the JVM's MEMORY_AND_DISK_SER;
-    the bare ``.persist()`` default is MEMORY_AND_DISK_DESER) —
-    "bounded" relations here are dimension-sized, not small (users x
-    active-weeks at 100 TB is tens of billions of rows); the serialized
-    representation is several x smaller than deserialized JVM objects
-    and overflow spills to disk instead of evicting under memory
-    pressure.
-
-    Unpersist contract: the operators themselves never unpersist (the
-    cache must outlive the returned lazy plan). The repo's runners
-    (bench.py, tools/check.py) call spark.catalog.clearCache() after
-    each query; a library consumer embedding these operators in a
-    long-lived session owns the same responsibility — clear the cache
-    (or unpersist via spark.catalog) once the query's outputs are
-    materialized."""
-    if at_scale(df.sparkSession):
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
     return df
 
 

@@ -5,7 +5,8 @@ every oracled registry entry earns wall-time evidence either per-round
 (composite set) or via the rotating slice, and the rotation provably
 cycles through its whole pool. The timed action runs the work
 ``toPandas()`` runs, and one in-process run of ``bench.main`` locks the
-keys and order of its last output lines.
+keys and order of its last output lines; ``tail_emission`` locks the
+per-query line and the size budget of the final line.
 """
 
 from __future__ import annotations
@@ -153,3 +154,60 @@ def test_bench_main_final_line_carries_the_kept_keys(spark, monkeypatch, capsys)
     assert set(final["queries"]) == set(two)
     assert per_query["metric"] == "per_query_timings"
     assert set(per_query["per_query"]) == set(two)
+
+
+def test_bench_tail_emits_per_query_line_before_final_compact_line():
+    """VERDICT r16 item 1 + the r4 tail lesson: the full per-query map
+    rides its own JSON line; the LAST stdout line stays the compact,
+    complete final payload (the driver records only the final 2000
+    chars)."""
+    sys.path.insert(0, REPO)
+    from bench import composite_names, tail_emission
+    from dbt_fal_spark.registry import all_queries
+
+    names = composite_names(all_queries())
+    timings = {n: round(0.1 + i * 0.001, 3) for i, n in enumerate(names)}
+    oracle = {n: round(0.05 + i * 0.001, 3) for i, n in enumerate(names)}
+    final_payload = {
+        "metric": "headline_queries_total_wall",
+        "value": round(sum(timings.values()), 3),
+        "n_queries": len(timings),
+        "slowest": {},
+    }
+    lines = tail_emission(timings, oracle, "0.1", final_payload)
+    parsed = [json.loads(ln) for ln in lines]
+    # exactly one per_query line, directly before the final line
+    assert parsed[-2]["metric"] == "per_query_timings"
+    pq = parsed[-2]["per_query"]
+    assert set(pq) == set(names)
+    assert all(
+        rec["engine_sec"] == timings[n] and rec["oracle_sec"] == oracle[n]
+        for n, rec in pq.items()
+    )
+    # engine-only fallback: oracle side degrades per-entry, not per-line
+    eng_only = json.loads(tail_emission(timings, {}, "0.1", final_payload)[0])
+    assert all("oracle_sec" not in r for r in eng_only["per_query"].values())
+    # the final line is LAST, compact, and never carries the big map
+    final = parsed[-1]
+    assert final["metric"] == "headline_queries_total_wall"
+    assert "per_query" not in final
+    # tail-window safety: the final line must fit the driver's 2000-char
+    # record with room to spare; the per-query map (which does not) must
+    # therefore never be merged into it
+    assert len(lines[-1]) < 2000 < len(lines[-2])
+    # the final line's size-budgeted `queries` map (the driver-contract
+    # join key): a strict top-K-by-time prefix of the composite, exact
+    # values, truncation flagged, and the whole line under budget
+    top = final["queries"]
+    assert 0 < len(top) < len(timings)
+    assert final["queries_truncated_to_tail_budget"] is True
+    ranked = sorted(timings.items(), key=lambda kv: (-kv[1], kv[0]))
+    assert top == {n: round(v, 3) for n, v in ranked[: len(top)]}
+    assert len(lines[-1]) <= 1950
+    # a small composite fits whole and is not flagged
+    few = {n: t for n, t in list(timings.items())[:5]}
+    small_final = json.loads(
+        tail_emission(few, oracle, "0.1", final_payload)[-1]
+    )
+    assert set(small_final["queries"]) == set(few)
+    assert small_final["queries_truncated_to_tail_budget"] is False

@@ -236,3 +236,28 @@ def test_compact_preserves_sort_by_clustering(spark, tmp_path):
     for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
         assert hi1 <= lo2, f"compact destroyed clustering: ({lo1},{hi1}) vs ({lo2},{hi2})"
     assert spark.table(ident).count() == 8192
+
+
+def test_copied_warehouse_reattaches_inside_the_copy(spark, tmp_path):
+    """A warehouse copied after a swap resolves its live pointer to the
+    copy's own version dir, not to the warehouse it was copied from."""
+    import os
+    import shutil
+
+    from dbt_fal_spark.materialize import live_version_dir, replace_relation_atomic
+
+    db_a, db_b = tmp_path / "A" / "reloc.db", tmp_path / "B" / "reloc.db"
+    spark.sql("DROP DATABASE IF EXISTS reloc CASCADE")
+    spark.sql(f"CREATE DATABASE reloc LOCATION '{db_a}'")
+    try:
+        write_table(spark.range(5).withColumnRenamed("id", "k"), "reloc.t")
+        replace_relation_atomic(spark, spark.range(7).withColumnRenamed("id", "k"), "reloc.t")
+        shutil.copytree(db_a, db_b)
+        # A stays intact while B resolves, so a pointer into A would be
+        # followed rather than fall back to B's own newest version dir
+        live = live_version_dir(db_b, "t")
+        assert live is not None and "__v" in os.path.basename(live)
+        assert os.path.commonpath([live, str(db_b.resolve())]) == str(db_b.resolve())
+        assert spark.read.parquet(live).count() == 7
+    finally:
+        spark.sql("DROP DATABASE IF EXISTS reloc CASCADE")
