@@ -31,88 +31,18 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # The correctness harness walks queries() in dict order and records
-# exactly the first 50 entries per round (CORRECTNESS_r01/r02/r03 all
-# cut at 50). The r03 window covered everything r02 had missed; for r4
-# the window is: q_profile_orders first (fixed in r3 but absent from
-# the r3 window, so it has no green driver row yet), then the round-4
-# additions (never checked), then the 44 entries whose last green row
-# is r02, to refresh them. Names absent from the registry are ignored;
-# registry entries not listed keep their registration order after
-# these.
-#
-# (Window history r5-r7 lives in git; the standing rule: lead each
-# round with every entry whose plan/semantics/source changed since its
-# last driver row, then the stalest remaining rows.)
-#
-# r8 WINDOW: lead with every entry whose PLAN, SEMANTICS,
-# or implementing-function source changed since its last driver row —
-# the two late-r7 rewrites that missed the r7 window
-# (d_embedding_neardup_lsh flat-buffer bucket stage,
-# d_ngram_jaccard_pairs conf-scaled width), the r8 rewrites
-# (e_dau_hll_sketch register-based oracle, d_containment_pairs
-# narrow pair exchange, st_upsert_stream namespaced cleanup), and the
-# three rank.py callers (persist-param signature change, plan
-# unchanged) — then the 35 entries whose last green driver row is r5
-# (the t_* text family, the r5 dedup rows, m_chunk_dedup, the
-# remaining q_* analytics rows, the e_* timeseries rows,
-# q_salted_join), filling the 50-entry window with the oldest r6
-# rows. Staging is now ALSO enforced mechanically: tools/
-# window_guard.py snapshots per-entry function-source+oracle hashes
-# (tools/plan_hashes.json, regenerated with --update at each window
-# staging) and tests/test_window_guard.py goes red if any entry's
-# hash changes without a leading window slot.
-#
-# (Window history r5-r9 lives in git; standing rule unchanged: lead
-# each round with every entry whose plan/semantics/source changed
-# since its last driver row, then the stalest remaining rows.)
-#
-# r10 WINDOW (previous round): CORRECTNESS_r09 was green over the full r9
-# window (50/50). Lead with the 12 entries whose source/closure changed
-# this round — st_upsert_stream (GC retention conf + lease touch), the
-# three rank.py callers (docstring-only rank change, closure-hashed),
-# d_lsh_levenshtein_refine (length-bound gate before the text join),
-# d_minhash_lsh_pairs / d_neardup_components / d_neardup_triangles
-# (_minhash_sig signature change, plans unchanged), and the NEW
-# p_sentiment_batch_inference / q_pii_masked_customers — then the 30
-# rows whose last green
-# driver row is r7 (computed from CORRECTNESS_r0*.json: the q_*
-# analytics family, the five s_knn_* entries, st_dedup_stream,
-# st_left_outer_interval_stream), then the 8 alphabetically-first r8
-# rows to fill the window to 50. After r10 no entry's driver
-# evidence is older than r8.
-#
-# r12 WINDOW (this round): CORRECTNESS_r11 was green over the full r11
-# window (50/50). Lead with the 16 entries changed this round — the 4
-# NEW adapted TPC-H queries (q11/q12/q20/q21, never driver-checked),
-# d_embedding_neardup_pairs (corpus-size guard + literal tile bound
-# replacing the broadcast-crossJoin max side), the two p_* flow entries
-# (FalSpark class closure changed: test-config + freshness-artifact
-# work), and the nine streaming entries whose shared drain helper moved
-# to per-session locked memory-sink GC (plans unchanged; closure
-# hashed) — then 34 of the 36 entries whose last green driver row is
-# r9. Two r9 rows (q_corr_stats_by_flag, q_histogram_totalprice —
-# single-table JVM aggregates, source untouched since r9, both also
-# pytest-covered) don't fit the 50-slot window this round and are the
-# FIRST stale rows of the r13 window; after r12 they are the only
-# entries with evidence older than r10.
+# exactly the first 50 entries per round. Standing rule for staging that
+# window: lead with every entry whose plan, semantics or source changed
+# since its last driver row (tools/window_guard.py enforces this against
+# the tools/plan_hashes.json snapshot), then the stalest remaining rows.
+# Names absent from the registry are ignored; registry entries not
+# listed keep their registration order after these. Window history
+# lives in git.
 _CHECK_FIRST = (
-    # --- r17 WINDOW (restaged in the r17 OPTIMIZATION round) ---
-    # (Window history r5-r16 lives in git; standing rule: lead each
-    # round with every entry whose plan/semantics/source changed since
-    # its last driver row, then the stalest remaining rows.)
-    # CORRECTNESS_r16 was green over the full r16 window (50/50).
-    # Changed this round — verify first (30): the entries window_guard
-    # flags for the r17 optimization work (readers width probes now sum
-    # LEAF relation stats and parse size-string confs — every spread
-    # caller's closure flips, t_tfidf likewise; scale-profile gating
-    # keys on spark.dbt_fal.profile instead of the AQE conf;
-    # e_retention_cohorts latency branch reverted to the pre-r16 shape
-    # after an adverse interleaved A/B, scale branch keeps the cached
-    # one-pass rewrite; d_ngram_jaccard_pairs gained a scale-only
-    # size-ratio pair prune; d_lsh_levenshtein_refine's scale semi is
-    # broadcast-guarded under a counted id cap — values byte-identical
-    # in every case, re-verified vs the DuckDB oracle at sf0.01 +
-    # sf0.001 before staging, see OPTIMIZATION_r17.md),
+    # Changed since the snapshot — verify first (40). The operators the
+    # readers width probes reach (every spread caller, t_tfidf_top_terms),
+    # the four that lost their scale-profile branches (latency plans
+    # unchanged) and the flow entries:
     "e_retention_cohorts", "e_dau_hll_sketch", "d_ngram_jaccard_pairs",
     "d_lsh_levenshtein_refine", "t_tfidf_top_terms",
     "d_substring_dedup_clean", "d_substring_dedup_keep_first",
@@ -125,21 +55,23 @@ _CHECK_FIRST = (
     "p_sentiment_batch_inference", "p_fal_model_pandas_forecast",
     "p_flow_run_customer_stats", "s_knn_bruteforce", "s_knn_int8",
     "s_knn_ivf", "s_knn_lsh_bucketed", "s_knn_lsh_multitable",
-    # then the stale refresh: the entire r13-evidence cohort (the 11
-    # stalest rows — after r17 no entry's driver evidence is older
-    # than r14),
+    # the streaming entries: the shared drain now drops its temp view on
+    # return and the upsert target moved to the application's temp dir;
+    # the three interval joins share one pair builder (analyzed plans
+    # unchanged),
+    "st_upsert_stream", "st_hourly_stream", "st_session_stream",
+    "st_user_totals_stateful", "st_enriched_stream",
+    "st_interval_join_stream", "st_dedup_stream",
+    "st_dedup_within_watermark_stream", "st_left_outer_interval_stream",
+    "st_full_outer_interval_stream",
+    # then the stale refresh: the r13-evidence cohort, after which no
+    # entry's driver evidence is older than r14. The 35 r14-evidence rows
+    # lead the next stale refresh, alphabetically from d_exact_dedup.
     "q_pii_masked_customers", "q_priority_distinct_customers",
     "q_quantity_quartiles", "q_range_join_price_band",
     "q_region_rollup_revenue", "q_repeat_customers_intersect",
     "q_revenue_trend_by_priority", "q_salted_join_supplier_volume",
     "q_status_set_per_priority", "q_topk_orders_per_segment",
-    "st_upsert_stream",
-    # then the 9 alphabetically-first r14 rows to fill the window to 50
-    # (the remaining 26 r14 rows lead the r18 stale refresh),
-    "d_exact_dedup", "d_keep_best_per_key", "d_simhash",
-    "e_asof_purchase_attribution", "e_changepoint_cusum",
-    "e_daily_active_users", "e_hll_register_state",
-    "e_interpolate_daily_user", "e_rolling_median_7d",
 )
 
 

@@ -34,7 +34,6 @@ import json
 import os
 import shutil
 import subprocess
-import sys
 import sysconfig
 import tempfile
 import threading
@@ -512,7 +511,3 @@ class CloudEnvironment(_ScriptRunner):
 
     def run_python_model(self, model_path: Path, payload: dict) -> dict:
         self._refuse()
-
-
-def current_interpreter() -> str:
-    return sys.executable

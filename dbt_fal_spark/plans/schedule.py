@@ -32,9 +32,6 @@ class TaskGroup:
     dependencies: list["TaskGroup"] = field(default_factory=list)
     status: str = "pending"  # pending | running | success | failure | skipped
 
-    def exit_statuses(self) -> None:
-        pass
-
 
 class Scheduler:
     def __init__(self, groups: list[TaskGroup]) -> None:

@@ -174,8 +174,3 @@ def spread(df: DataFrame) -> DataFrame:
         return df.repartition(target)
     return df
 
-
-def read_seed_csv(spark: SparkSession, path: str) -> DataFrame:
-    """dbt-style seed load (reference seeds are headered CSVs, e.g.
-    projects/adapter/cli_tests/projects/002_jaffle_shop/data/raw_orders.csv)."""
-    return spark.read.csv(path, header=True, inferSchema=True)

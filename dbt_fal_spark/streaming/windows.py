@@ -6,6 +6,12 @@ correctness contract is that a stream fully drained over the same input
 produces the batch answer (verified by the DuckDB oracle on the batch
 semantics).
 
+Lifetime: the module keeps no state between calls. A drained result
+lives as long as the DataFrame that holds it (its analyzed plan owns the
+memory sink's rows; no temp view outlives the drain). The
+``st_upsert_stream`` target lives in the application's temp dir, so it
+lives as long as the application: Spark deletes it on stop.
+
 Scale notes:
 - ``withWatermark`` bounds state: at 100 TB/day ingest the hourly window
   state is (hours retained × groups), not row count.
@@ -16,7 +22,8 @@ Scale notes:
 from __future__ import annotations
 
 import os
-import threading
+import shutil
+import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -92,46 +99,15 @@ def hourly_windowed_agg(events: DataFrame) -> DataFrame:
     )
 
 
-# drained memory-sink names per SparkSession, oldest first — see
-# run_stream_to_completion. Keyed by the JVM sessionUUID (stable and
-# unique per session — id() could be reused by a NEW session after the
-# old one is GC'd, handing it a ghost sink list; weak refs would be
-# nicer but SparkSession is not weakref-friendly across PySpark
-# versions) and guarded by a lock: concurrent drains otherwise race on
-# pop/append, and with multiple sessions an unkeyed list would drop a
-# view in the WRONG session — a no-op leak the tracking list still
-# counts as freed (ADVICE r11). Dead-session residue is NOT evicted:
-# an entry is one uuid string + ≤2 sink names (~200 B, bounded by the
-# number of sessions ever created), whereas evicting a LIVE session's
-# entry would orphan its tracked temp views — a real driver-memory
-# leak traded for a cosmetic one (r12 review). The views themselves
-# die with their session's catalog.
-_MEMORY_SINKS: dict[str, list[str]] = {}
-_MEMORY_SINKS_LOCK = threading.Lock()
-
-
-def _session_key(spark: SparkSession) -> str:
-    try:
-        return str(spark._jsparkSession.sessionUUID())
-    except Exception:  # pragma: no cover - connect-mode fallback
-        return f"id:{id(spark)}"
-
-
-def run_stream_to_completion(
-    result: DataFrame, name: str | None = None, mode: str = "complete"
-) -> DataFrame:
+def run_stream_to_completion(result: DataFrame, mode: str = "complete") -> DataFrame:
     """Drain a finite stream synchronously via a memory sink; returns the
     materialized result as a batch DataFrame.
 
-    Memory-sink GC (r11 adversarial review): every drain registers an
-    in-memory temp table that previously lived for the session — a
-    long-lived service re-running these entries grew driver memory
-    without bound. Older drained sinks are dropped here, keeping the
-    newest PREVIOUS one as a grace window for a DataFrame the caller is
-    still holding — the same one-version grace policy as the upsert
-    target GC below. Hold results across more than one subsequent drain
-    by persisting or writing them out."""
-    name = name or f"stream_out_{uuid.uuid4().hex[:8]}"
+    The sink's temp view is dropped before returning: the returned
+    DataFrame's analyzed plan already holds the sink's rows, so they live
+    exactly as long as the caller keeps the DataFrame, and repeated or
+    concurrent drains leave nothing behind in the session catalog."""
+    name = f"stream_out_{uuid.uuid4().hex[:8]}"
     q = (
         result.writeStream.outputMode(mode)
         .format("memory")
@@ -139,34 +115,12 @@ def run_stream_to_completion(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
     spark = result.sparkSession
-    # Analyze the return DataFrame BEFORE exposing the sink name to GC:
-    # an analyzed plan pins the in-memory sink relation, so a concurrent
-    # drain dropping this temp view later cannot break the returned
-    # DataFrame (r12 review: with ≥2 concurrent drains, the one-grace
-    # window alone could reap a caller's own sink between registration
-    # and spark.table()). The grace slot still covers external
-    # spark.table(name) lookups one drain later.
-    out = spark.table(name)
-    key = _session_key(spark)  # py4j round-trip — never under the lock
-    with _MEMORY_SINKS_LOCK:
-        sinks = _MEMORY_SINKS.pop(key, [])
-        sinks.append(name)
-        stale, sinks = sinks[:-2], sinks[-2:]
-        # a caller draining under a FIXED name re-uses the temp view:
-        # the new sink REPLACED the old view, so a stale entry with a
-        # kept name points at the LIVE view — dropping it would kill the
-        # result just returned (r15 adversarial review: the third drain
-        # of the same name previously dropped its own sink; external
-        # spark.table(name) lookups broke even though `out` survived
-        # via its analyzed plan)
-        stale = [s for s in stale if s not in sinks]
-        _MEMORY_SINKS[key] = sinks
-    # drop outside the lock — catalog calls go over py4j and can block
-    for old in stale:
-        spark.catalog.dropTempView(old)
-    return out
+    try:
+        q.awaitTermination()
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 @query(
@@ -374,6 +328,55 @@ def st_enriched_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_stream_to_completion(agg)
 
 
+def _purchase_click_pairs(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """The stream-stream interval join the three join entries drain:
+    purchases join the same user's clicks of the preceding 30 minutes,
+    each side under a 2-hour watermark; ``how`` is the join type."""
+
+    def side(event_type: str, p: str) -> DataFrame:
+        return (
+            read_events_stream(spark, sf_dir)
+            .filter(F.col("event_type") == event_type)
+            .select(
+                F.col("event_id").alias(f"{p}_event_id"),
+                F.col("user_id").alias(f"{p}_user_id"),
+                F.col("ts").alias(f"{p}_ts"),
+            )
+            .withWatermark(f"{p}_ts", "2 hours")
+        )
+
+    return side("purchase", "p").join(
+        side("click", "c"),
+        F.expr(
+            "p_user_id = c_user_id"
+            " AND c_ts >= p_ts - INTERVAL 30 minutes"
+            " AND c_ts <= p_ts"
+        ),
+        how,
+    )
+
+
+def _drain_cut(spark: SparkSession, sf_dir: str):
+    """least(max purchase ts, max click ts) − 3 h: the outer joins count
+    only rows at or before it, strictly inside the region both
+    watermarks have evicted at the end of a finite drain."""
+    from dbt_fal_spark.sources.readers import load_table
+
+    return (
+        load_table(spark, sf_dir, "events")
+        .agg(
+            (
+                F.least(
+                    F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))),
+                    F.max(F.when(F.col("event_type") == "click", F.col("ts"))),
+                )
+                - F.expr("INTERVAL 3 hours")
+            ).alias("c")
+        )
+        .collect()[0]["c"]
+    )
+
+
 @query(
     "st_interval_join_stream",
     oracle="""
@@ -402,34 +405,7 @@ def st_interval_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     (chaining a second stateful aggregate after a stream-stream join is
     the documented restriction this sidesteps). Must equal the batch
     self-join oracle."""
-    purchases = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("p_event_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "2 hours")
-    )
-    clicks = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("c_event_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "2 hours")
-    )
-    pairs = purchases.join(
-        clicks,
-        F.expr(
-            "p_user_id = c_user_id"
-            " AND c_ts >= p_ts - INTERVAL 30 minutes"
-            " AND c_ts <= p_ts"
-        ),
-    )
+    pairs = _purchase_click_pairs(spark, sf_dir, "inner")
     drained = run_stream_to_completion(pairs, mode="append")
     return drained.groupBy(F.col("p_user_id").alias("user_id")).agg(
         F.count(F.lit(1)).alias("n_pairs"),
@@ -526,6 +502,51 @@ def st_dedup_within_watermark_stream(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
+def drain_upserts(images: DataFrame) -> str | None:
+    """Drain an ``update``-mode stream of per-key row images into a
+    copy-on-write parquet target keyed on ``user_id``: each microbatch
+    full-outer merges onto the previous version (the delta row wins),
+    writes the next version and removes the one it superseded. Returns
+    the final version's path, or None when no batch ran.
+
+    The versions live under the application's temp dir
+    (``SparkFiles.getRootDirectory()``), which Spark deletes when the
+    application stops — so the target lives as long as the application,
+    and a DataFrame read from an earlier call stays readable. That dir
+    is local to the driver: local mode only."""
+    from pyspark import SparkFiles
+
+    workdir = tempfile.mkdtemp(prefix="st_upsert_", dir=SparkFiles.getRootDirectory())
+    final: str | None = None
+
+    def upsert(batch_df, batch_id: int) -> None:
+        nonlocal final
+        delta = batch_df.select("user_id", "n_events", "cents")
+        if final:
+            prev = batch_df.sparkSession.read.parquet(final).alias("t")
+            d = delta.alias("d")
+            # upsert: the delta row image replaces the target row
+            delta = prev.join(d, F.col("t.user_id") == F.col("d.user_id"), "full_outer").select(
+                F.coalesce(F.col("d.user_id"), F.col("t.user_id")).alias("user_id"),
+                F.coalesce(F.col("d.n_events"), F.col("t.n_events")).alias("n_events"),
+                F.coalesce(F.col("d.cents"), F.col("t.cents")).alias("cents"),
+            )
+        out = f"{workdir}/v{batch_id}"
+        delta.write.mode("overwrite").parquet(out)
+        if final:
+            shutil.rmtree(final, ignore_errors=True)
+        final = out
+
+    q = (
+        images.writeStream.outputMode("update")
+        .foreachBatch(upsert)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return final
+
+
 @query(
     "st_upsert_stream",
     oracle=f"""
@@ -542,116 +563,28 @@ def st_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     production pipeline ends in: ``update`` output mode hands each
     microbatch the keys whose aggregate CHANGED (with their new
     cumulative values — row images), and foreachBatch upserts them into
-    a persistent target: full-outer on the key, delta row wins. The
-    drained target must equal the batch aggregate no matter how the
-    source slices microbatches, because each row image is already
-    cumulative. On a lakehouse the merge body is one MERGE INTO
-    (Delta/Iceberg); the copy-on-write version directories here are the
-    plain-parquet rendition, final version = the table. State lives in
-    the stream's agg store; the target's exactly-once is the sink's
-    transactionality (file-sink variant tested in
-    tests/test_streaming_checkpoint.py).
+    a persistent target (``drain_upserts``). The drained target must
+    equal the batch aggregate no matter how the source slices
+    microbatches, because each row image is already cumulative. On a
+    lakehouse the merge body is one MERGE INTO (Delta/Iceberg); the
+    copy-on-write version directories here are the plain-parquet
+    rendition, final version = the table, read back distributed (it
+    never rides through the driver). State lives in the stream's agg
+    store; the target's exactly-once is the sink's transactionality
+    (file-sink variant tested in tests/test_streaming_checkpoint.py).
 
     Totals ride as integer cents (round(value·100), exact in int64), so
     the final double division matches the decimal oracle bit-for-bit.
     """
-    import shutil
-    import tempfile
-
     events = read_events_stream(spark, sf_dir)
     images = events.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
     )
-    workdir = tempfile.mkdtemp(prefix="st_upsert_")
-    versions: list[str] = []
-
-    def upsert(batch_df, batch_id: int) -> None:
-        spark_b = batch_df.sparkSession
-        delta = batch_df.select("user_id", "n_events", "cents")
-        if versions:
-            prev = spark_b.read.parquet(versions[-1]).alias("t")
-            d = delta.alias("d")
-            # upsert: the delta row image replaces the target row
-            merged = prev.join(d, F.col("t.user_id") == F.col("d.user_id"), "full_outer").select(
-                F.coalesce(F.col("d.user_id"), F.col("t.user_id")).alias("user_id"),
-                F.coalesce(F.col("d.n_events"), F.col("t.n_events")).alias("n_events"),
-                F.coalesce(F.col("d.cents"), F.col("t.cents")).alias("cents"),
-            )
-        else:
-            merged = delta
-        out = f"{workdir}/v{batch_id}"
-        merged.write.mode("overwrite").parquet(out)
-        versions.append(out)
-
-    q = (
-        images.writeStream.outputMode("update")
-        .foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if not versions:
+    final = drain_upserts(images)
+    if final is None:
         return spark.createDataFrame([], "user_id long, n_events long, total_value double")
-    # promote the final copy-on-write version to a per-invocation
-    # warehouse location and return the re-read DataFrame — the table
-    # never rides through the driver (no collect/createDataFrame
-    # round-trip; the target stays a real distributed table at any key
-    # cardinality). The suffix is unique per invocation so a re-run in
-    # the same session (driver re-verification, paired bench rounds)
-    # never clobbers files a previously returned DataFrame still reads;
-    # older targets beyond a one-dir grace window are cleaned here.
-    import os
-    import uuid as _uuid
-    from urllib.parse import urlparse
-
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", ""))
-    base = wh.path if wh.scheme in ("", "file") and wh.path else tempfile.gettempdir()
-    # namespace targets by Spark application id: cleanup may only touch
-    # THIS session's previous targets — two concurrent sessions sharing
-    # a warehouse/tmp dir must never delete each other's still-referenced
-    # target dirs (each app id is unique per SparkContext)
-    prefix = f"st_upsert_stream_target_{spark.sparkContext.applicationId}_"
-    prev = sorted(
-        (p for p in os.listdir(base) if p.startswith(prefix)),
-        key=lambda p: os.path.getmtime(os.path.join(base, p)),
-    ) if os.path.isdir(base) else []
-    for stale in prev[:-1]:  # keep the newest previous target as grace
-        shutil.rmtree(os.path.join(base, stale), ignore_errors=True)
-    # App-id namespacing means a DEAD session's newest target is never
-    # inside our prefix, so without this it leaks forever in the shared
-    # warehouse/tmp. Reclaim foreign-prefix targets by age, lease-style
-    # (ADVICE r9): the retention window is a session conf (the vacuum
-    # retainSeconds analogue, default 24h), and every invocation
-    # re-touches THIS session's surviving targets below — so any session
-    # that keeps running keeps renewing its lease, and only sessions
-    # idle past the window can lose a target. A session that merely
-    # HOLDS a returned DataFrame without re-invoking for longer than the
-    # window is still exposed — raise the conf in that deployment.
-    import time as _time
-
-    retain = int(
-        spark.conf.get("spark.dbt_fal_spark.streaming.upsertTargetRetainSeconds", str(24 * 3600))
-    )
-    cutoff = _time.time() - retain
-    for d in os.listdir(base) if os.path.isdir(base) else []:
-        p = os.path.join(base, d)
-        if d.startswith("st_upsert_stream_target_") and not d.startswith(prefix):
-            try:
-                if os.path.getmtime(p) < cutoff:
-                    shutil.rmtree(p, ignore_errors=True)
-            except OSError:
-                pass  # vanished under us — another session's GC won
-        elif d.startswith(prefix):
-            try:
-                os.utime(p)  # renew this session's lease on its live targets
-            except OSError:
-                pass
-    target = os.path.join(base, f"{prefix}{_uuid.uuid4().hex[:8]}")
-    os.makedirs(base, exist_ok=True)
-    shutil.move(versions[-1], target)
-    shutil.rmtree(workdir, ignore_errors=True)
-    return spark.read.parquet(target).select(
+    return spark.read.parquet(final).select(
         "user_id",
         "n_events",
         (F.col("cents").cast("double") / 100.0).alias("total_value"),
@@ -706,51 +639,9 @@ def st_left_outer_interval_stream(spark: SparkSession, sf_dir: str) -> DataFrame
     least 3 h before least(max purchase ts, max click ts) — strictly
     inside the evicted region, making boundary semantics irrelevant.
     """
-    purchases = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("p_event_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "2 hours")
-    )
-    clicks = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("c_event_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "2 hours")
-    )
-    pairs = purchases.join(
-        clicks,
-        F.expr(
-            "p_user_id = c_user_id"
-            " AND c_ts >= p_ts - INTERVAL 30 minutes"
-            " AND c_ts <= p_ts"
-        ),
-        "leftOuter",
-    )
+    pairs = _purchase_click_pairs(spark, sf_dir, "leftOuter")
     drained = run_stream_to_completion(pairs, mode="append")
-    from dbt_fal_spark.sources.readers import load_table
-
-    cut = (
-        load_table(spark, sf_dir, "events")
-        .agg(
-            (
-                F.least(
-                    F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))),
-                    F.max(F.when(F.col("event_type") == "click", F.col("ts"))),
-                )
-                - F.expr("INTERVAL 3 hours")
-            ).alias("c")
-        )
-        .collect()[0]["c"]
-    )
+    cut = _drain_cut(spark, sf_dir)
     return (
         drained.filter(F.col("p_ts") <= F.lit(cut))
         .groupBy(F.col("p_user_id").alias("user_id"))
@@ -825,51 +716,9 @@ def st_full_outer_interval_stream(spark: SparkSession, sf_dir: str) -> DataFrame
     may or may not have fired at the finite drain boundary; its counts
     are zero either way, so the group filter makes the row set
     irrelevant)."""
-    purchases = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("p_event_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "2 hours")
-    )
-    clicks = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("c_event_id"),
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "2 hours")
-    )
-    pairs = purchases.join(
-        clicks,
-        F.expr(
-            "p_user_id = c_user_id"
-            " AND c_ts >= p_ts - INTERVAL 30 minutes"
-            " AND c_ts <= p_ts"
-        ),
-        "fullOuter",
-    )
+    pairs = _purchase_click_pairs(spark, sf_dir, "fullOuter")
     drained = run_stream_to_completion(pairs, mode="append")
-    from dbt_fal_spark.sources.readers import load_table
-
-    cut = (
-        load_table(spark, sf_dir, "events")
-        .agg(
-            (
-                F.least(
-                    F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))),
-                    F.max(F.when(F.col("event_type") == "click", F.col("ts"))),
-                )
-                - F.expr("INTERVAL 3 hours")
-            ).alias("c")
-        )
-        .collect()[0]["c"]
-    )
+    cut = _drain_cut(spark, sf_dir)
     p_in = F.col("p_ts") <= F.lit(cut)
     c_in = F.col("c_ts") <= F.lit(cut)
     agg = (

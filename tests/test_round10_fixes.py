@@ -1,15 +1,11 @@
 """Round-10 regression locks (r9 ADVICE items): the selectors.yml DNF
-cross-product cap, and the upsert-target GC's configurable retention +
-lease-touch (a live session renews its own targets' mtimes each
-invocation, so only sessions idle past the window can lose a target).
-The window-guard constant-hashing fixes live in test_window_guard.py.
+cross-product cap. The window-guard constant-hashing fixes live in
+test_window_guard.py.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import time
 
 import pytest
 
@@ -281,71 +277,6 @@ def test_sentiment_batch_inference_shape_and_semantics(spark):
         assert (r.sentiment_score > 0) == (r.label == "positive")
         assert (r.sentiment_score < 0) == (r.label == "negative")
         assert r.n_pos + r.n_neg <= r.n_tokens
-
-
-# --- ADVICE low: upsert-target retention conf + lease touch -----------------
-
-
-def _wh_base(spark):
-    from urllib.parse import urlparse
-
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
-    os.makedirs(wh, exist_ok=True)
-    return wh
-
-
-def test_upsert_stream_retention_is_configurable(spark):
-    """With retainSeconds=3600, a 2h-old foreign target is reclaimed and
-    a 30min-old one survives — the 24h default is a conf, not a magic
-    number."""
-    from dbt_fal_spark.registry import all_queries
-
-    base = _wh_base(spark)
-    old = os.path.join(base, "st_upsert_stream_target_local-7777777777777_aa")
-    fresh = os.path.join(base, "st_upsert_stream_target_local-6666666666666_bb")
-    for d in (old, fresh):
-        os.makedirs(d, exist_ok=True)
-    t_old, t_fresh = time.time() - 2 * 3600, time.time() - 1800
-    os.utime(old, (t_old, t_old))
-    os.utime(fresh, (t_fresh, t_fresh))
-    spark.conf.set("spark.dbt_fal_spark.streaming.upsertTargetRetainSeconds", "3600")
-    try:
-        df = all_queries()["st_upsert_stream"].fn(spark, SF_DIR)
-        assert df.count() > 0
-        assert not os.path.isdir(old), "2h-old foreign target not reclaimed at retain=1h"
-        assert os.path.isdir(fresh), "30min-old foreign target deleted at retain=1h"
-    finally:
-        spark.conf.unset("spark.dbt_fal_spark.streaming.upsertTargetRetainSeconds")
-        shutil.rmtree(old, ignore_errors=True)
-        shutil.rmtree(fresh, ignore_errors=True)
-
-
-def test_upsert_stream_touches_own_targets_as_lease(spark):
-    """A backdated target belonging to THIS session has its mtime
-    renewed by the next invocation — a continuously-running session can
-    never age past any retention window."""
-    from dbt_fal_spark.registry import all_queries
-
-    base = _wh_base(spark)
-    prefix = f"st_upsert_stream_target_{spark.sparkContext.applicationId}_"
-    # clear earlier targets from other tests so ours is the sole grace dir
-    for d in os.listdir(base):
-        if d.startswith(prefix):
-            shutil.rmtree(os.path.join(base, d), ignore_errors=True)
-    mine = os.path.join(base, prefix + "leaseprobe")
-    os.makedirs(mine, exist_ok=True)
-    stale_t = time.time() - 25 * 3600
-    os.utime(mine, (stale_t, stale_t))
-    start = time.time()
-    try:
-        df = all_queries()["st_upsert_stream"].fn(spark, SF_DIR)
-        assert df.count() > 0
-        assert os.path.isdir(mine), "grace target was deleted"
-        assert os.path.getmtime(mine) >= start - 5, "lease mtime was not renewed"
-    finally:
-        for d in os.listdir(base):
-            if d.startswith(prefix):
-                shutil.rmtree(os.path.join(base, d), ignore_errors=True)
 
 
 def test_incremental_model_keeps_declared_bucket_layout(spark, tmp_path):

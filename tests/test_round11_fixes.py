@@ -57,75 +57,6 @@ def test_dunder_py_files_are_not_models(tmp_path):
     assert not any(m.name == "__init__" for m in manifest.models.values())
 
 
-def test_memory_sink_gc_keeps_one_grace_sink(spark):
-    """run_stream_to_completion drops this session's older drained
-    memory sinks (keeping the newest previous as grace) — previously
-    every drain leaked an in-memory table for the session's lifetime."""
-    import dbt_fal_spark.streaming.windows as W
-    from tests.conftest import SF_DIR
-
-    # clean baseline: earlier tests in the session legitimately leave up
-    # to two tracked sinks plus (pre-fix ordering) stray ones — drop them
-    # all so the invariant below is about THIS test's drains
-    for t in spark.catalog.listTables():
-        if t.name.startswith("stream_out_"):
-            spark.catalog.dropTempView(t.name)
-    W._MEMORY_SINKS.clear()
-    results = []
-    for _ in range(4):
-        events = W.read_events_stream(spark, SF_DIR)
-        results.append(W.run_stream_to_completion(W.hourly_windowed_agg(events)))
-    # r12: sinks are tracked PER SparkSession (dict keyed by the JVM
-    # sessionUUID) under a lock — an unkeyed list dropped views in the
-    # wrong session when several sessions drained, and concurrent
-    # drains raced
-    key = W._session_key(spark)
-    tracked = W._MEMORY_SINKS[key]
-    assert set(W._MEMORY_SINKS) == {key}
-    assert len(tracked) <= 2  # current + one grace
-    live = {t.name for t in spark.catalog.listTables() if t.name.startswith("stream_out_")}
-    assert live == set(tracked)
-    # the newest result (and the grace one) remain readable
-    assert results[-1].count() > 0
-
-
-def test_memory_sink_gc_concurrent_drains_consistent(spark):
-    """Concurrent drains must not race the tracking list: after N
-    parallel drains the tracked set exactly matches the live temp views
-    (no double-free, no untracked leak) and at most one grace sink
-    beyond the survivors of each thread's last drain remains."""
-    import threading as th
-
-    import dbt_fal_spark.streaming.windows as W
-    from tests.conftest import SF_DIR
-
-    for t in spark.catalog.listTables():
-        if t.name.startswith("stream_out_"):
-            spark.catalog.dropTempView(t.name)
-    W._MEMORY_SINKS.clear()
-    errs = []
-
-    def drain():
-        try:
-            events = W.read_events_stream(spark, SF_DIR)
-            W.run_stream_to_completion(W.hourly_windowed_agg(events))
-        except Exception as e:  # pragma: no cover - failure path
-            errs.append(e)
-
-    threads = [th.Thread(target=drain) for _ in range(4)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert not errs
-    tracked = set(W._MEMORY_SINKS.get(W._session_key(spark), []))
-    live = {t.name for t in spark.catalog.listTables() if t.name.startswith("stream_out_")}
-    # every tracked sink is live, and nothing beyond the tracked set
-    # plus in-flight grace survivors leaked
-    assert tracked <= live
-    assert len(tracked) <= 2
-
-
 def test_scripts_and_python_models_run_as_main(tmp_path, spark):
     """Reference contract (cli_tests/features/main_module.feature):
     scripts and fal models execute with __name__ == '__main__', so

@@ -12,9 +12,6 @@ Findings fixed this round:
   hint is gone (AQE's choice now) and the phantom "stopword prune"
   docstring claim is removed. Locked by scanning the optimized plan
   for a broadcast hint.
-- streaming memory-sink GC dropped a caller's LIVE temp view on the
-  third drain under a FIXED query name (the stale list contained the
-  same name as the newest sink, which had REPLACED the old view).
 - _vacuum_versions re-checks the in-flight writer registry per
   directory, immediately before each rmtree (ADVICE r14: the
   caller-side snapshot left a register-after-snapshot window).
@@ -123,30 +120,6 @@ def test_vocab_entries_still_match_their_oracles(spark):
                     assert a == b, (name, col, a, b)
         spark.catalog.clearCache()
     con.close()
-
-
-# ---------------------------------------------------------------------------
-# streaming memory-sink GC under a fixed query name (r15 adversarial)
-# ---------------------------------------------------------------------------
-
-
-def test_memory_sink_fixed_name_survives_repeated_drains(spark):
-    """Three drains under the SAME query name: the GC must not drop the
-    temp view the newest drain just registered (pre-fix, the third drain
-    put the shared name on the stale list and killed its own sink)."""
-    from dbt_fal_spark.streaming.windows import (
-        hourly_windowed_agg,
-        read_events_stream,
-        run_stream_to_completion,
-    )
-
-    src = hourly_windowed_agg(read_events_stream(spark, SF_DIR))
-    for _ in range(3):
-        out = run_stream_to_completion(src, name="r15_fixed_name")
-        assert out.count() > 0
-    # the view of the LAST drain must still be resolvable by name
-    assert spark.table("r15_fixed_name").count() > 0
-    spark.catalog.dropTempView("r15_fixed_name")
 
 
 # ---------------------------------------------------------------------------

@@ -1,6 +1,6 @@
 """Round-8 regression locks (VERDICT r7 / ADVICE items): pointer-flip
 rollback safety, live-pointer re-attach, vacuum's concurrent-rebuild
-guard + time-based retention, per-session streaming-upsert namespacing."""
+guard + time-based retention."""
 
 from __future__ import annotations
 
@@ -258,33 +258,3 @@ def test_retention_window_protects_recent_versions(spark, tmp_path):
         assert spark.table(ident).count() == 20
     finally:
         spark.conf.set(RETAIN_CONF, "0")
-
-
-# --- streaming upsert target namespacing (ADVICE low) ----------------------
-
-
-def test_upsert_target_cleanup_is_namespaced_per_session(spark):
-    """Another session's upsert target (different app id prefix) must
-    survive this session's cleanup; this session's target dir carries
-    its own app id."""
-    from urllib.parse import urlparse
-
-    from dbt_fal_spark.registry import all_queries
-
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
-    foreign = os.path.join(wh, "st_upsert_stream_target_local-0000000000000_aa")
-    os.makedirs(foreign, exist_ok=True)
-    with open(os.path.join(foreign, "keep.parquet"), "wb") as f:
-        f.write(b"other session's data")
-    try:
-        df = all_queries()["st_upsert_stream"].fn(spark, SF_DIR)
-        assert df.count() > 0
-        assert os.path.isdir(foreign), "cleanup crossed session namespaces"
-        app = spark.sparkContext.applicationId
-        mine = [
-            d for d in os.listdir(wh)
-            if d.startswith(f"st_upsert_stream_target_{app}_")
-        ]
-        assert mine, "target dir is not namespaced by application id"
-    finally:
-        shutil.rmtree(foreign, ignore_errors=True)

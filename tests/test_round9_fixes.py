@@ -1,13 +1,11 @@
 """Round-9 regression locks (r8 ADVICE items): vacuum's flip-TOCTOU
 keep-set, the rank persist=False partition pinning, selectors.yml
-nested-composition distribution, upsert-target age GC, and the
-live-pointer tmp-file leak."""
+nested-composition distribution, and the live-pointer tmp-file leak."""
 
 from __future__ import annotations
 
 import os
 import shutil
-import time
 
 from dbt_fal_spark.api import FalSpark
 from dbt_fal_spark.materialize import (
@@ -144,31 +142,3 @@ def test_selector_terms_intersection_of_intersections_flattens():
         {"intersection": [{"intersection": ["a", "b"]}, "c"]}
     )
     assert terms == ["a,b,c"]  # ',' composes associatively
-
-
-# --- ADVICE low: dead-session upsert targets are reclaimed by age ----------
-
-
-def test_upsert_stream_gc_reclaims_old_foreign_targets(spark):
-    from urllib.parse import urlparse
-
-    from dbt_fal_spark.registry import all_queries
-
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
-    os.makedirs(wh, exist_ok=True)
-    old = os.path.join(wh, "st_upsert_stream_target_local-9999999999999_zz")
-    fresh = os.path.join(wh, "st_upsert_stream_target_local-8888888888888_yy")
-    for d in (old, fresh):
-        os.makedirs(d, exist_ok=True)
-        with open(os.path.join(d, "data.parquet"), "wb") as f:
-            f.write(b"foreign session's data")
-    stale_t = time.time() - 25 * 3600
-    os.utime(old, (stale_t, stale_t))  # > 24h: a dead session's leak
-    try:
-        df = all_queries()["st_upsert_stream"].fn(spark, SF_DIR)
-        assert df.count() > 0
-        assert not os.path.isdir(old), "dead session's target was not reclaimed"
-        assert os.path.isdir(fresh), "age GC deleted a recent foreign target"
-    finally:
-        shutil.rmtree(old, ignore_errors=True)
-        shutil.rmtree(fresh, ignore_errors=True)

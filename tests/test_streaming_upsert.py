@@ -2,19 +2,20 @@
 
 The registry drain of st_upsert_stream usually sees ONE microbatch; this
 test stages three source files with maxFilesPerTrigger=1 so the
-replace-on-key merge path actually executes across batches, and the
-final target must still equal the batch aggregate.
+library's replace-on-key merge (``drain_upserts``) actually executes
+across batches, and the final target must still equal the batch
+aggregate.
 """
 
 from __future__ import annotations
 
-import shutil
-import tempfile
+import os
 
 import pandas as pd
-import pytest
 
 from pyspark.sql import functions as F
+
+from dbt_fal_spark.streaming.windows import drain_upserts
 
 
 def _write_events(path, rows):
@@ -49,38 +50,15 @@ def test_upsert_across_microbatches_equals_batch(spark, tmp_path):
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
     )
-    workdir = tempfile.mkdtemp(prefix="upsert_test_")
-    versions: list[str] = []
-
-    def upsert(batch_df, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        delta = batch_df.select("user_id", "n_events", "cents")
-        if versions:
-            prev = sp.read.parquet(versions[-1]).alias("t")
-            d = delta.alias("d")
-            delta = prev.join(d, F.col("t.user_id") == F.col("d.user_id"), "full_outer").select(
-                F.coalesce(F.col("d.user_id"), F.col("t.user_id")).alias("user_id"),
-                F.coalesce(F.col("d.n_events"), F.col("t.n_events")).alias("n_events"),
-                F.coalesce(F.col("d.cents"), F.col("t.cents")).alias("cents"),
-            )
-        out = f"{workdir}/v{batch_id}"
-        delta.write.mode("overwrite").parquet(out)
-        versions.append(out)
-
-    q = (
-        images.writeStream.outputMode("update")
-        .foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    assert len(versions) == 3  # one per staged file
-    final = {
+    final = drain_upserts(images)
+    assert final.endswith("v2")  # one batch per staged file
+    # each batch removed the version it superseded
+    assert os.listdir(os.path.dirname(final)) == ["v2"]
+    got = {
         r["user_id"]: (r["n_events"], r["cents"])
-        for r in spark.read.parquet(versions[-1]).collect()
+        for r in spark.read.parquet(final).collect()
     }
-    shutil.rmtree(workdir, ignore_errors=True)
-    assert final == {
+    assert got == {
         10: (3, 201),   # 1.25 + 0.75 + 0.01 = 2.01
         11: (1, 250),
         12: (1, 999),
