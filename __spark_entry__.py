@@ -39,7 +39,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # listed keep their registration order after these. Window history
 # lives in git.
 _CHECK_FIRST = (
-    # Changed since the snapshot — verify first (40). The operators the
+    # Changed since the snapshot — verify first (43). The operators the
     # readers width probes reach (every spread caller, t_tfidf_top_terms),
     # the four that lost their scale-profile branches (latency plans
     # unchanged) and the flow entries:
@@ -64,14 +64,18 @@ _CHECK_FIRST = (
     "st_interval_join_stream", "st_dedup_stream",
     "st_dedup_within_watermark_stream", "st_left_outer_interval_stream",
     "st_full_outer_interval_stream",
-    # then the stale refresh: the r13-evidence cohort, after which no
-    # entry's driver evidence is older than r14. The 35 r14-evidence rows
-    # lead the next stale refresh, alphabetically from d_exact_dedup.
+    # the rank entries: the distributed rank keeps one pinning strategy
+    # (plans unchanged),
+    "q_customer_value_deciles", "q_customer_value_deciles_ranged",
+    "q_gini_customer_value",
+    # then the stale refresh: seven of the r13-evidence cohort. The other
+    # three (q_salted_join_supplier_volume, q_status_set_per_priority,
+    # q_topk_orders_per_segment) lead the next stale refresh, then the 35
+    # r14-evidence rows, alphabetically from d_exact_dedup.
     "q_pii_masked_customers", "q_priority_distinct_customers",
     "q_quantity_quartiles", "q_range_join_price_band",
     "q_region_rollup_revenue", "q_repeat_customers_intersect",
-    "q_revenue_trend_by_priority", "q_salted_join_supplier_volume",
-    "q_status_set_per_priority", "q_topk_orders_per_segment",
+    "q_revenue_trend_by_priority",
 )
 
 

@@ -492,8 +492,13 @@ class FalSpark:
             else:
                 nanos_cols = (src.meta or {}).get("nanos_cols", [])
                 if nanos_cols:
-                    # parquet TIMESTAMP(NANOS): read as int64, truncate to µs
-                    self.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+                    # parquet TIMESTAMP(NANOS) has no Spark type: infer
+                    # the schema (nanos as int64) in a throwaway session
+                    # so the legacy conf never leaks into this one, then
+                    # read with that explicit schema; truncate to µs below
+                    probe = self.spark.newSession()
+                    probe.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+                    reader = reader.schema(probe.read.format(src.format).load(path).schema)
                 df = reader.format(src.format).load(path)
                 from pyspark.sql import functions as F
 

@@ -1,25 +1,30 @@
 """Distributed graph helpers.
 
 ``min_label_components`` is the engine's connected-components kernel
-(used by ``operators/dedup.py::d_neardup_components``): iterative
-min-label propagation with driver-side convergence detection. The
-fixpoint (every node labeled with the min node id reachable from it) is
-unique, so results are independent of partitioning and execution order.
+(used by ``operators/dedup.py::d_neardup_components``): every node is
+labeled with the min node id reachable from it. That fixpoint is
+unique, so results are independent of partitioning, execution order and
+of which of the kernel's two paths ran.
 
-Scale notes: each round is one edge⋈labels shuffle join + one
-min-aggregate — O(|E|) per round, rounds = graph diameter. Near-dup
-graphs are shallow (a handful of rounds even at 100 TB); when the
-diameter is adversarial, the kernel escalates (after ``escalate_after``
-non-converged rounds) to ``star_contraction_components`` —
-large-star/small-star alternation (Kiveris et al., "Connected Components
-in MapReduce and Beyond"), which converges in O(log²) rounds because
-each large-star halves every long path instead of shortening it by one.
+- An edge list that fits the driver (≤ ``LOCAL_THRESHOLD`` rows) is
+  labeled by a driver-side union-find in one collect.
+- A larger one runs ``star_contraction_components``: large-star /
+  small-star alternation (Kiveris et al., "Connected Components in
+  MapReduce and Beyond", SoCC 2014), exact in O(log²) rounds on any
+  diameter, because each large-star halves every long path instead of
+  shortening it by one.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
+
+# Edge rows the driver union-find takes; above it, star contraction.
+LOCAL_THRESHOLD = 500_000
+# Non-trivial labels the union-find ships back as a literal map
+# expression; above it, a broadcast join (bounds the plan's size).
+LITERAL_THRESHOLD = 20_000
 
 
 def star_contraction_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
@@ -27,9 +32,8 @@ def star_contraction_components(nodes: DataFrame, edges: DataFrame) -> DataFrame
     (Kiveris et al., "Connected Components in MapReduce and Beyond").
 
     ``edges`` are undirected pairs (src, dst), orientation irrelevant.
-    Returns (id, label) with label = min node id of the component — the
-    same unique fixpoint as min-label propagation, reached in O(log²)
-    rounds on ANY diameter:
+    Returns (id, label) with label = min node id of the component,
+    reached in O(log²) rounds on ANY diameter:
 
     - large-star: each node u links every LARGER neighbor to the minimum
       of its neighborhood (incl. u) — halves long paths,
@@ -37,7 +41,7 @@ def star_contraction_components(nodes: DataFrame, edges: DataFrame) -> DataFrame
       that minimum — contracts the stars large-star built.
 
     Each round is two grouped-min joins over the current edge list —
-    O(|E|) shuffle per round, same skeleton as one min-label round.
+    O(|E|) shuffle per round.
     Convergence = edge-set fixpoint, detected by (count, hash-sum): both
     are order-independent and the edge set is distinct-canonicalized, so
     an unchanged pair IS set equality (up to a 2⁻⁶⁴ hash collision — and
@@ -104,147 +108,80 @@ def star_contraction_components(nodes: DataFrame, edges: DataFrame) -> DataFrame
     )
 
 
-def min_label_components(
-    nodes: DataFrame,
-    edges: DataFrame,
-    *,
-    local_threshold: int = 500_000,
-    literal_threshold: int = 20_000,
-    symmetrize: bool = False,
-    with_sizes: bool = False,
-    escalate_after: int = 5,
-) -> DataFrame:
-    """Label every node with min reachable node id.
+
+
+def min_label_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+    """Label every node with the min node id of its component.
 
     ``nodes``: one column ``id`` (long). ``edges``: columns ``src``,
-    ``dst`` — DIRECTED propagation channels dst→src unless
-    ``symmetrize=True``, in which case each row is an undirected edge
-    and the kernel adds the reverse orientation itself (only the
-    iterative path needs it — union-find is orientation-blind, so the
-    local path skips the symmetrizing explode entirely). Returns
-    (id, label), plus ``component_size`` when ``with_sizes``.
+    ``dst``, undirected (orientation irrelevant). Returns (id, label,
+    component_size).
 
-    When the edge list fits the driver (≤ ``local_threshold`` rows —
+    When the edge list fits the driver (≤ ``LOCAL_THRESHOLD`` rows —
     for near-dup graphs the edges are the DUPLICATE pairs, tiny relative
     to the corpus even at 100 TB), the label map is computed with a
-    driver-side union-find: diameter-many shuffle rounds collapse to one
-    collect. The size probe IS the collect — ``limit(threshold+1)``
-    either returns the whole edge list (one job, no separate count) or
-    proves it exceeds the threshold. Non-trivial labels (nodes whose
-    label ≠ own id — only edge-touched nodes can differ) ship back as a
-    LITERAL map expression when few (≤ ``literal_threshold``): labeling
-    is then a pure map-side lookup over the node scan, no join, no
-    second shuffle; bigger maps ride a broadcast join. Above
-    ``local_threshold``, iterative min-label propagation. All paths
-    reach the same unique fixpoint. Callers should persist ``edges``
-    when the iterative path may run (it re-reads edges every round).
-
-    Iterative path: labels start as own id and only ever decrease (min
-    over a set that contains the old label), so Σlabel is strictly
-    monotone until the fixpoint — an unchanged sum IS convergence,
-    checked without a self-join. Per-round persist + aggregate truncates
-    lineage so round N never recomputes rounds 1..N-1.
+    driver-side union-find: the whole kernel is one collect. The size
+    probe IS the collect — ``limit(threshold+1)`` either returns the
+    whole edge list (one job, no separate count) or proves it exceeds
+    the threshold. Non-trivial labels (nodes whose label ≠ own id — only
+    edge-touched nodes can differ) and component sizes ship back as
+    LITERAL map expressions when few (≤ ``LITERAL_THRESHOLD`` labels):
+    labeling is then a pure map-side lookup over the node scan, no join,
+    no second shuffle; bigger maps ride broadcast joins. Above ``LOCAL_THRESHOLD``, star contraction;
+    callers should persist ``edges`` so its first round reads the cache
+    the probe filled.
     """
-    edge_rows = edges.select("src", "dst").limit(local_threshold + 1).collect()
-    if len(edge_rows) <= local_threshold:
-        parent: dict[int, int] = {}
-
-        def find(x: int) -> int:
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != x:  # path compression
-                parent[x], x = root, parent[x]
-            return root
-
-        for row in edge_rows:
-            ra, rb = find(row[0]), find(row[1])
-            if ra != rb:
-                # union by label order: root IS the min id of its tree
-                if rb < ra:
-                    ra, rb = rb, ra
-                parent[rb] = ra
-        label_of = {x: find(x) for x in list(parent)}
-        label_of = {x: lbl for x, lbl in label_of.items() if x != lbl}
-        sizes: dict[int, int] = {}
-        for lbl in label_of.values():
-            sizes[lbl] = sizes.get(lbl, 0) + 1
-        for lbl in list(sizes):
-            sizes[lbl] += 1  # the root labels itself
-        spark = nodes.sparkSession
-
-        def _with_sizes(labeled: DataFrame) -> DataFrame:
-            if not with_sizes:
-                return labeled
-            if not sizes:
-                return labeled.withColumn("component_size", F.lit(1))
-            size_map = F.create_map(
-                *[F.lit(v) for kv in sizes.items() for v in kv]
-            )
-            return labeled.withColumn(
-                "component_size",
-                F.coalesce(F.element_at(size_map, F.col("label")), F.lit(1)),
-            )
-
-        if not label_of:
-            return _with_sizes(nodes.select("id", F.col("id").alias("label")))
-        if len(label_of) <= literal_threshold:
-            label_map = F.create_map(
-                *[F.lit(v) for kv in label_of.items() for v in kv]
-            )
-            return _with_sizes(
-                nodes.select(
-                    "id",
-                    F.coalesce(F.element_at(label_map, F.col("id")), F.col("id")).alias(
-                        "label"
-                    ),
-                )
-            )
-        lbl = spark.createDataFrame(list(label_of.items()), "id long, label long")
-        return _with_sizes(
-            nodes.join(F.broadcast(lbl), "id", "left").select(
-                "id", F.coalesce("label", "id").alias("label")
-            )
-        )
-
-    if symmetrize:
-        edges = edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("src"), F.col("dst")),
-                    F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
-                )
-            ).alias("e")
-        ).select("e.src", "e.dst")
-    labels = nodes.select(F.col("id"), F.col("id").alias("label")).persist()
-    prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-    rounds = 0
-    while True:
-        if rounds >= escalate_after:
-            # diameter exceeds the cheap path's budget (a long-chain /
-            # adversarial graph): restart on the O(log²)-round star
-            # contraction. Partial min-label progress is discarded — it
-            # cost `escalate_after` rounds, bounded by construction.
-            labels.unpersist()
-            labels = star_contraction_components(nodes, edges).persist()
-            break
-        neighbor = edges.join(labels, edges.dst == labels.id).select(
-            F.col("src").alias("id"), "label"
-        )
-        new_labels = (
-            labels.unionByName(neighbor).groupBy("id").agg(F.min("label").alias("label"))
-        ).persist()
-        new_sum = new_labels.agg(F.sum("label")).collect()[0][0]
-        labels.unpersist()
-        labels = new_labels
-        rounds += 1
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    if with_sizes:
-        from pyspark.sql import Window as W
-
-        return labels.withColumn(
+    edge_rows = edges.select("src", "dst").limit(LOCAL_THRESHOLD + 1).collect()
+    if len(edge_rows) > LOCAL_THRESHOLD:
+        return star_contraction_components(nodes, edges).withColumn(
             "component_size", F.count(F.lit(1)).over(W.partitionBy("label"))
         )
-    return labels
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        root = x
+        while parent.get(root, root) != root:
+            root = parent[root]
+        while parent.get(x, x) != x:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for row in edge_rows:
+        ra, rb = find(row[0]), find(row[1])
+        if ra != rb:
+            # union by label order: root IS the min id of its tree
+            if rb < ra:
+                ra, rb = rb, ra
+            parent[rb] = ra
+    label_of = {x: find(x) for x in list(parent)}
+    label_of = {x: lbl for x, lbl in label_of.items() if x != lbl}
+    sizes: dict[int, int] = {}
+    for lbl in label_of.values():
+        sizes[lbl] = sizes.get(lbl, 0) + 1
+    for lbl in list(sizes):
+        sizes[lbl] += 1  # the root labels itself
+
+    if not label_of:
+        return nodes.select("id", F.col("id").alias("label")).withColumn(
+            "component_size", F.lit(1)
+        )
+    if len(label_of) <= LITERAL_THRESHOLD:
+        label_map = F.create_map(*[F.lit(v) for kv in label_of.items() for v in kv])
+        size_map = F.create_map(*[F.lit(v) for kv in sizes.items() for v in kv])
+        return nodes.select(
+            "id",
+            F.coalesce(F.element_at(label_map, F.col("id")), F.col("id")).alias("label"),
+        ).withColumn(
+            "component_size",
+            F.coalesce(F.element_at(size_map, F.col("label")), F.lit(1)),
+        )
+    # the size map is as long as the label map, so it rides a broadcast too
+    spark = nodes.sparkSession
+    lbl = spark.createDataFrame(list(label_of.items()), "id long, label long")
+    size = spark.createDataFrame(list(sizes.items()), "label long, component_size int")
+    return (
+        nodes.join(F.broadcast(lbl), "id", "left")
+        .select("id", F.coalesce("label", "id").alias("label"))
+        .join(F.broadcast(size), "label", "left")
+        .select("id", "label", F.coalesce("component_size", F.lit(1)).alias("component_size"))
+    )

@@ -32,7 +32,6 @@ def global_row_number_with_total(
     order_cols: list[str],
     out_col: str = "i",
     num_partitions: int | None = None,
-    persist: bool = True,
 ) -> tuple[DataFrame, int]:
     """Rank rows 1..N in the total order of ``order_cols`` (which must be
     a unique key for a deterministic result). Returns (ranked df, N) —
@@ -43,39 +42,19 @@ def global_row_number_with_total(
     physical partitioning — RangePartitioner re-samples split points
     per job (seeded from the fresh RDD id), so letting the two jobs
     each run their own repartitionByRange can shift rows across
-    boundaries and duplicate/skip global ranks. With ``persist=True``
-    (default) the range-shuffled input is cached to pin it; the cache
-    is released by the query harness's post-query
-    ``spark.catalog.clearCache()`` (registry.py's documented
-    lifecycle). Library callers OUTSIDE that harness (api/
-    materialization code) pass ``persist=False`` — the partitioning is
-    then pinned with an eager ``localCheckpoint`` instead (materialized
-    on executors, lineage truncated, storage reclaimed by the context
-    cleaner when the DataFrame is GC'd), leaving no session-lifetime
-    cache entry behind. Recomputation is never the pinning strategy.
-
-    Fault-tolerance trade-off of the persist=False path (ADVICE r9):
-    localCheckpoint blocks are executor-local and NOT replicated, and
-    lineage truncation means they cannot be recomputed — losing an
-    executor mid-job fails the whole job (persist=True can recompute;
-    localCheckpoint cannot). persist+unpersist is NOT a fix: the
-    returned DataFrame is lazy, so an unpersist before the caller's
-    action would un-pin the partitioning and reintroduce the
-    rank-misalignment bug this path exists to prevent. On a cluster
-    where executor loss is routine, callers should prefer persist=True
-    and release the cache themselves, or set a reliable checkpoint dir
-    and swap ``localCheckpoint`` for ``checkpoint`` at the call site."""
+    boundaries and duplicate/skip global ranks. The range-shuffled input
+    is therefore cached to pin it (recomputation is never the pinning
+    strategy); the cache is released by the query harness's post-query
+    ``spark.catalog.clearCache()`` (registry.py's documented lifecycle)."""
     spark = df.sparkSession
     n_parts = num_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions", "32")
     )
-    parts = df.repartitionByRange(n_parts, *order_cols).withColumn(
-        "__pid", F.spark_partition_id()
+    parts = (
+        df.repartitionByRange(n_parts, *order_cols)
+        .withColumn("__pid", F.spark_partition_id())
+        .persist()
     )
-    if persist:
-        parts = parts.persist()
-    else:
-        parts = parts.localCheckpoint(eager=True)
     sizes = parts.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt")).collect()
     offsets, acc = [], 0
     for row in sorted(sizes, key=lambda r: r["__pid"]):
@@ -92,24 +71,12 @@ def global_row_number_with_total(
     return ranked, acc
 
 
-def global_row_number(
-    df: DataFrame,
-    order_cols: list[str],
-    out_col: str = "i",
-    num_partitions: int | None = None,
-    persist: bool = True,
-) -> DataFrame:
-    ranked, _ = global_row_number_with_total(
-        df, order_cols, out_col, num_partitions, persist=persist
-    )
-    return ranked
-
-
 def ntile_from_rank(rank_col: str, n_rows: int, n_buckets: int):
     """SQL-standard ntile bucket from an exact global rank: the first
     ``n_rows mod n_buckets`` buckets take ``ceil(n/k)`` rows, the rest
     ``floor(n/k)`` — pure int64 arithmetic on driver-side constants, so
-    it composes with global_row_number into a fully distributed ntile."""
+    it composes with global_row_number_with_total into a fully distributed
+    ntile."""
     base, rem = divmod(n_rows, n_buckets)
     if base == 0:
         # fewer rows than buckets: each row is its own bucket (ntile spec)

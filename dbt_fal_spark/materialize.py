@@ -244,6 +244,13 @@ _FLIP_LOCKS: dict[str, threading.Lock] = collections.defaultdict(threading.Lock)
 _INFLIGHT_DIRS: set[str] = set()
 _INFLIGHT_LOCK = threading.Lock()
 
+# insert_overwrite sets the session-wide partitionOverwriteMode around its
+# write (insertInto ignores a per-write option: it overwrote statically).
+# Two such writes sharing a session must not interleave: a write whose
+# conf another merge already restored to static truncates every partition
+# outside its batch. Same single-driver scope as _FLIP_LOCKS.
+_OVERWRITE_MODE_LOCK = threading.Lock()
+
 
 def inflight_version_dirs() -> set[str]:
     """Snapshot of version dirs currently being written in this process
@@ -877,14 +884,15 @@ def incremental_merge(
     if strategy == "insert_overwrite":
         if not partition_by:
             raise ValueError(f"{identifier}: insert_overwrite requires partition_by")
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            cols = spark.table(identifier).columns  # insertInto is positional
-            batch, rows = count_rows(new_rows.select(*cols))
-            batch.write.mode("overwrite").insertInto(identifier)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        cols = spark.table(identifier).columns  # insertInto is positional
+        batch, rows = count_rows(new_rows.select(*cols))
+        with _OVERWRITE_MODE_LOCK:
+            prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+            try:
+                batch.write.mode("overwrite").insertInto(identifier)
+            finally:
+                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
         return rows()
     if strategy not in ("merge", "delete+insert"):
         raise ValueError(f"{identifier}: unknown incremental strategy {strategy!r}")

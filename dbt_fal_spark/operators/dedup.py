@@ -28,7 +28,7 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from dbt_fal_spark.operators.similarity import FINITE_EMB
@@ -321,36 +321,45 @@ def _band_sig_oracle(band: int) -> str:
     return f"md5({joined})"
 
 
-def _lsh_candidate_pairs(sig: DataFrame, *, distinct: bool = True) -> DataFrame:
-    """(doc_a, doc_b) candidate pairs from banded signatures, doc_a <
-    doc_b, distinct across bands. One pass over ``sig`` explodes the
-    band structs; pairs are emitted MAP-SIDE from each (band, bsig)
-    bucket's sorted member list — one shuffle of 4 rows/doc, versus the
-    band self-join's two shuffle sides plus join (measured ~1.4× slower).
-    Degenerate buckets (> LSH_BUCKET_CAP members = a giant identical-doc
+def _lsh_buckets(sig: DataFrame, member: Column) -> DataFrame:
+    """(band_id, bsig, ds): every (band, band signature) bucket of
+    ``sig`` with its members' ``member`` values as a sorted array ``ds``.
+    One pass over ``sig`` explodes the band structs, so bucketing is one
+    shuffle of 4 rows/doc; consumers emit pairs MAP-SIDE from ``ds``,
+    versus the band self-join's two shuffle sides plus join (measured
+    ~1.4× slower). ``member`` is ``doc_id`` or a struct leading with it
+    (array_sort then orders by doc_id). Singletons pair with nobody, and
+    degenerate buckets (> LSH_BUCKET_CAP members = a giant identical-doc
     cluster, better handled by exact dedup / connected components) are
-    cut before pair emission — the cap is mirrored in the oracles, and a
-    pair sharing any OTHER small bucket still surfaces."""
+    cut — the cap is mirrored in the oracles, and a pair sharing any
+    OTHER small bucket still surfaces."""
     band_structs = [
         F.struct(F.lit(band).alias("band_id"), _band_sig_spark(band).alias("bsig"))
         for band in range(N_BANDS)
     ]
-    bands = sig.select("doc_id", F.explode(F.array(*band_structs)).alias("b")).select(
-        "doc_id", "b.band_id", "b.bsig"
-    )
-    grouped = (
-        bands.groupBy("band_id", "bsig")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
+    bands = sig.select(member, F.explode(F.array(*band_structs)).alias("b"))
+    m = bands.columns[0]
+    return (
+        bands.select(m, "b.band_id", "b.bsig")
+        .groupBy("band_id", "bsig")
+        .agg(F.array_sort(F.collect_list(m)).alias("ds"))
         .filter(F.size("ds").between(2, LSH_BUCKET_CAP))
     )
+
+
+def _lsh_candidate_pairs(sig: DataFrame) -> DataFrame:
+    """(doc_a, doc_b) candidate pairs from banded signatures, doc_a <
+    doc_b, distinct across bands."""
     pairs = F.expr(
         "flatten(transform(ds, (x, i) -> "
         "transform(slice(ds, i + 2, size(ds)), y -> struct(x as doc_a, y as doc_b))))"
     )
-    out = grouped.select(F.explode(pairs).alias("p")).select("p.doc_a", "p.doc_b")
-    # consumers that key on pair identity (est-jaccard join) need the
-    # cross-band dedup; union-find does not — let it skip the shuffle
-    return out.distinct() if distinct else out
+    return (
+        _lsh_buckets(sig, F.col("doc_id"))
+        .select(F.explode(pairs).alias("p"))
+        .select("p.doc_a", "p.doc_b")
+        .distinct()
+    )
 
 
 @query(
@@ -405,19 +414,7 @@ def d_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # band-independent (a pure function of the two signatures), so the
     # cross-band DISTINCT can dedupe on the full triple.
     sig_arr = F.array(*[F.col(f"m{i}") for i in range(N_PERM)])
-    band_structs = [
-        F.struct(F.lit(band).alias("band_id"), _band_sig_spark(band).alias("bsig"))
-        for band in range(N_BANDS)
-    ]
-    bands = sig.select(
-        F.struct("doc_id", sig_arr.alias("sig")).alias("m"),
-        F.explode(F.array(*band_structs)).alias("b"),
-    ).select("m", "b.band_id", "b.bsig")
-    grouped = (
-        bands.groupBy("band_id", "bsig")
-        .agg(F.array_sort(F.collect_list("m")).alias("ds"))
-        .filter(F.size("ds").between(2, LSH_BUCKET_CAP))
-    )
+    grouped = _lsh_buckets(sig, F.struct("doc_id", sig_arr.alias("sig")).alias("m"))
     # agreement over the two 16-slot signatures, interpreted HOF but only
     # on candidate pairs (~linear in corpus for a fixed dup rate)
     agree = (
@@ -489,19 +486,7 @@ def d_lsh_levenshtein_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     set broadcasts and the doc scan streams past it)."""
     docs = load_table(spark, sf_dir, "documents")
     sig = _minhash_sig(docs, with_len=True)
-    band_structs = [
-        F.struct(F.lit(band).alias("band_id"), _band_sig_spark(band).alias("bsig"))
-        for band in range(N_BANDS)
-    ]
-    bands = sig.select(
-        F.struct("doc_id", F.col("n_chars").alias("n")).alias("m"),
-        F.explode(F.array(*band_structs)).alias("b"),
-    ).select("m", "b.band_id", "b.bsig")
-    grouped = (
-        bands.groupBy("band_id", "bsig")
-        .agg(F.array_sort(F.collect_list("m")).alias("ds"))
-        .filter(F.size("ds").between(2, LSH_BUCKET_CAP))
-    )
+    grouped = _lsh_buckets(sig, F.struct("doc_id", F.col("n_chars").alias("n")).alias("m"))
     pairs = F.expr(
         "flatten(transform(ds, (x, i) -> "
         "transform(slice(ds, i + 2, size(ds)), y -> "
@@ -1272,13 +1257,11 @@ def d_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny relative to the corpus, so below a threshold they collect to a
     driver union-find whose label/size maps ship back as literal map
     expressions — labeling is a pure map lookup over the doc scan. Above
-    it, iterative min-label propagation: one edge⋈labels shuffle + min
-    aggregate per round, rounds = graph diameter (shallow for near-dup
-    clusters; swap in large-star/small-star rounds, Kiveris et al., for
-    adversarial diameters). The fixpoint (min reachable id) is unique,
-    so results are independent of execution order and of which path ran
-    — the DuckDB oracle computes it as a recursive-CTE transitive
-    closure.
+    it, large-star/small-star contraction (Kiveris et al.), exact in
+    O(log²) rounds on any diameter, with sizes from a window count per
+    label. The fixpoint (min reachable id) is unique, so results are
+    independent of execution order and of which path ran — the DuckDB
+    oracle computes it as a recursive-CTE transitive closure.
     """
     docs = load_table(spark, sf_dir, "documents")
     sig = _minhash_sig(docs)
@@ -1288,35 +1271,23 @@ def d_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # edges per bucket — the first star-trick of the large-star/small-star
     # family, applied at emission. The oracle's transitive closure over
     # the FULL pair graph reaches the identical fixpoint.
-    band_structs = [
-        F.struct(F.lit(band).alias("band_id"), _band_sig_spark(band).alias("bsig"))
-        for band in range(N_BANDS)
-    ]
-    bands = sig.select("doc_id", F.explode(F.array(*band_structs)).alias("b")).select(
-        "doc_id", "b.band_id", "b.bsig"
-    )
-    grouped = (
-        bands.groupBy("band_id", "bsig")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
-        .filter(F.size("ds").between(2, LSH_BUCKET_CAP))
-    )
     star = F.expr(
         "transform(slice(ds, 2, size(ds) - 1), y -> struct(ds[0] as src, y as dst))"
     )
     # persist: the kernel's limit-collect probe materializes this cache in
-    # one job; if the graph exceeds the driver threshold, the iterative
-    # rounds then re-read edges from cache instead of re-running the
-    # whole sig+band pipeline per round.
-    edges = grouped.select(F.explode(star).alias("e")).select("e.src", "e.dst").persist()
+    # one job; if the graph exceeds the driver threshold, star contraction
+    # then reads edges from cache instead of re-running the whole
+    # sig+band pipeline.
+    edges = (
+        _lsh_buckets(sig, F.col("doc_id"))
+        .select(F.explode(star).alias("e"))
+        .select("e.src", "e.dst")
+        .persist()
+    )
 
     from dbt_fal_spark.functions.graph import min_label_components
 
-    labels = min_label_components(
-        docs.select(F.col("doc_id").alias("id")),
-        edges,
-        symmetrize=True,
-        with_sizes=True,
-    )
+    labels = min_label_components(docs.select(F.col("doc_id").alias("id")), edges)
     edges.unpersist()
     return labels.select(
         F.col("id").alias("doc_id"),

@@ -536,14 +536,14 @@ def q_gini_customer_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select("c_custkey")
     orders = load_table(spark, sf_dir, "orders")
     from dbt_fal_spark.functions.numeric import DEC, dec
-    from dbt_fal_spark.functions.rank import global_row_number
+    from dbt_fal_spark.functions.rank import global_row_number_with_total
 
     v = (
         cust.join(orders, cust.c_custkey == orders.o_custkey)
         .groupBy("c_custkey")
         .agg(F.sum(dec("o_totalprice")).cast(DEC).alias("x"))
     )
-    r = global_row_number(v, ["x", "c_custkey"], out_col="i")
+    r, _ = global_row_number_with_total(v, ["x", "c_custkey"], out_col="i")
     n = F.count("*")
     total_d = F.sum("x").cast("double")
     sum_ix_d = F.sum(F.col("i") * F.col("x")).cast("double")

@@ -47,7 +47,7 @@ def _events_schema(ts_type: T.DataType) -> T.StructType:
 
 
 # Legacy shape: ts as raw int64 (parquet TIMESTAMP(NANOS) has no Spark
-# type, so it reads as long under spark.sql.legacy.parquet.nanosAsLong).
+# type; an explicit long schema reads its raw nanos without any conf).
 # Kept importable for tests that stage their own int64-ns files.
 EVENTS_SCHEMA = _events_schema(T.LongType())
 
@@ -57,17 +57,16 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     FileStreamSource cannot infer schemas, so probe the parquet footer
     (driver-side metadata read, no data IO) and match the writer's
-    physical type: TIMESTAMP(NANOS) reads as raw long (legacy conf) and
-    truncates to micros like the batch path in sources/readers.py;
-    micro/milli timestamps read natively as TIMESTAMP."""
+    physical type: TIMESTAMP(NANOS) reads as raw long through the
+    explicit long schema (no session conf is touched) and truncates to
+    micros like the batch path in sources/readers.py; micro/milli
+    timestamps read natively as TIMESTAMP."""
     import pyarrow.parquet as pq
 
     ts_physical = str(pq.read_schema(os.path.join(sf_dir, "events.parquet")).field("ts").type)
     # tz-adjusted nanos stringify as "timestamp[ns, tz=UTC]" — prefix
     # match so they also take the legacy nanos-as-long path.
     nanos = ts_physical.startswith("timestamp[ns") or ts_physical == "int64"
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = _events_schema(T.LongType() if nanos else T.TimestampType())
     # FileStreamSource requires a directory; glob-filter to the events file
     raw = (

@@ -33,6 +33,62 @@ def test_insert_overwrite_replaces_only_touched_partitions(spark):
     assert got == {("d1", 1, "a"), ("d1", 2, "b"), ("d2", 9, "z"), ("d3", 4, "d")}
 
 
+def test_concurrent_insert_overwrites_keep_untouched_partitions(spark, monkeypatch):
+    """Two insert_overwrite merges in one session, forced to interleave
+    the way an unserialized pair can: A sets the dynamic mode and holds
+    at its write until B reaches its own write (or a timeout passes),
+    and B's write waits until A's merge has returned. Each table must
+    keep the partitions its batch does not touch, and the session's
+    overwrite mode must end at its prior value."""
+    import threading
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    ta, tb = f"{SCHEMA}.io_race_a", f"{SCHEMA}.io_race_b"
+    seed = [("d1", 1, "a"), ("d2", 2, "b")]
+    for t in (ta, tb):
+        incremental_merge(spark, _df(spark, seed), t, None,
+                          strategy="insert_overwrite", partition_by="day")
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prior = spark.conf.get(key, "static")
+    a_at_write, b_at_write, a_returned = (threading.Event() for _ in range(3))
+    orig = DataFrameWriter.insertInto
+
+    def insert_into(self, tableName, overwrite=None):
+        if tableName == ta:
+            a_at_write.set()
+            b_at_write.wait(timeout=8)
+        else:
+            b_at_write.set()
+            a_returned.wait(timeout=60)
+        return orig(self, tableName, overwrite)
+
+    monkeypatch.setattr(DataFrameWriter, "insertInto", insert_into)
+    errors = []
+
+    def merge(t, day, after=None):
+        try:
+            incremental_merge(spark, _df(spark, [(day, 9, "z")]), t, None,
+                              strategy="insert_overwrite", partition_by="day")
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+        finally:
+            if after is not None:
+                after.set()
+
+    a = threading.Thread(target=merge, args=(ta, "d2", a_returned))
+    a.start()
+    assert a_at_write.wait(timeout=60)
+    b = threading.Thread(target=merge, args=(tb, "d1"))
+    b.start()
+    a.join(timeout=120)
+    b.join(timeout=120)
+    assert errors == []
+    assert {(r.day, r.k) for r in spark.table(ta).collect()} == {("d1", 1), ("d2", 9)}
+    assert {(r.day, r.k) for r in spark.table(tb).collect()} == {("d1", 9), ("d2", 2)}
+    assert spark.conf.get(key, "static") == prior
+
+
 def test_insert_overwrite_requires_partition_by(spark):
     t = f"{SCHEMA}.io_bad"
     write_table(_df(spark, [("d1", 1, "a")]), t)

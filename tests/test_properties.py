@@ -13,10 +13,13 @@ import networkx as nx
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from dbt_fal_spark.functions import graph
 from dbt_fal_spark.functions.graph import min_label_components
 from dbt_fal_spark.functions.skew import salted_join
 
 N_NODES = 12
+# the kernel's thresholds as shipped; the tests below force each path
+LOCAL, LITERAL = graph.LOCAL_THRESHOLD, graph.LITERAL_THRESHOLD
 
 edge_lists = st.lists(
     st.tuples(
@@ -29,25 +32,30 @@ edge_lists = st.lists(
 
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(edges=edge_lists)
-def test_components_match_networkx(spark, edges):
+def test_components_match_networkx(spark, monkeypatch, edges):
     g = nx.Graph()
     g.add_nodes_from(range(N_NODES))
     g.add_edges_from(edges)
-    expected = {n: min(comp) for comp in nx.connected_components(g) for n in comp}
+    expected = {
+        n: (min(comp), len(comp)) for comp in nx.connected_components(g) for n in comp
+    }
 
     nodes = spark.createDataFrame([(i,) for i in range(N_NODES)], "id long")
-    sym = [(a, b) for a, b in edges if a != b]
-    sym = sym + [(b, a) for a, b in sym]
-    if sym:
-        edf = spark.createDataFrame(sym, "src long, dst long")
+    pairs = [(a, b) for a, b in edges if a != b]  # undirected: one orientation
+    if pairs:
+        edf = spark.createDataFrame(pairs, "src long, dst long")
     else:
         edf = spark.createDataFrame([], "src long, dst long")
-    # threshold=0 forces the distributed iterative path; the default
-    # exercises the driver-local union-find — both must hit the fixpoint
-    for threshold in (0, 500_000):
+    # a zero edge threshold forces the distributed star-contraction path;
+    # the defaults exercise the driver-local union-find with literal maps,
+    # a zero label threshold its broadcast joins — all must hit the
+    # fixpoint and agree on component sizes
+    for local, literal in ((0, LITERAL), (LOCAL, LITERAL), (LOCAL, 0)):
+        monkeypatch.setattr(graph, "LOCAL_THRESHOLD", local)
+        monkeypatch.setattr(graph, "LITERAL_THRESHOLD", literal)
         got = {
-            r["id"]: r["label"]
-            for r in min_label_components(nodes, edf, local_threshold=threshold).collect()
+            r["id"]: (r["label"], r["component_size"])
+            for r in min_label_components(nodes, edf).collect()
         }
         assert got == expected
 
@@ -132,22 +140,20 @@ def test_star_contraction_matches_networkx(spark, edges):
     assert got == expected
 
 
-def test_adversarial_chain_escalates_to_star_contraction(spark):
-    """A path graph's diameter defeats per-round min-label propagation;
-    after escalate_after rounds the kernel must hand off to
-    large-star/small-star and still reach the exact fixpoint."""
+def test_adversarial_chain_reaches_fixpoint_distributed(spark, monkeypatch):
+    """A path graph's diameter is the worst case for label spreading;
+    above the driver threshold the kernel's star contraction must still
+    reach the exact fixpoint, with the whole chain as one component."""
     n = 64
     nodes = spark.createDataFrame([(i,) for i in range(n)], "id long")
     chain = [(i, i + 1) for i in range(n - 1)]
-    sym = chain + [(b, a) for a, b in chain]
-    edf = spark.createDataFrame(sym, "src long, dst long").persist()
+    edf = spark.createDataFrame(chain, "src long, dst long").persist()
+    monkeypatch.setattr(graph, "LOCAL_THRESHOLD", 0)
     got = {
-        r["id"]: r["label"]
-        for r in min_label_components(
-            nodes, edf, local_threshold=0, escalate_after=3
-        ).collect()
+        r["id"]: (r["label"], r["component_size"])
+        for r in min_label_components(nodes, edf).collect()
     }
-    assert got == {i: 0 for i in range(n)}
+    assert got == {i: (0, n) for i in range(n)}
     edf.unpersist()
 
 

@@ -1,6 +1,6 @@
 """Round-9 regression locks (r8 ADVICE items): vacuum's flip-TOCTOU
-keep-set, the rank persist=False partition pinning, selectors.yml
-nested-composition distribution, and the live-pointer tmp-file leak."""
+keep-set, selectors.yml nested-composition distribution, and the
+live-pointer tmp-file leak."""
 
 from __future__ import annotations
 
@@ -83,37 +83,6 @@ def test_write_live_pointer_failure_leaves_no_tmp_litter(tmp_path):
         _write_live_pointer(base, "/anywhere")  # swallows the OSError
     litter = [f for f in os.listdir(db) if f.startswith(".__live_tmp_")]
     assert litter == [], litter
-
-
-# --- ADVICE medium: rank persist=False pins the range partitioning ---------
-
-
-def test_global_row_number_persist_false_is_exact(spark):
-    """persist=False must still produce an exact 1..N permutation: the
-    size pass and the rank job have to see identical range-partition
-    boundaries (pinned via localCheckpoint), never two independently
-    sampled repartitionByRange runs."""
-    from dbt_fal_spark.functions.rank import global_row_number_with_total
-
-    # non-trivial lineage: a shuffle upstream of the rank's range shuffle
-    df = (
-        spark.range(0, 5000)
-        .selectExpr("id", "cast(id % 97 as int) AS g")
-        .groupBy("g")
-        .agg({"id": "max"})
-        .selectExpr("g", "`max(id)` AS m")
-    )
-    ranked, n = global_row_number_with_total(
-        df, ["m", "g"], out_col="i", persist=False
-    )
-    rows = ranked.select("i").collect()
-    got = sorted(r["i"] for r in rows)
-    assert n == 97
-    assert got == list(range(1, 98)), "ranks are not an exact 1..N permutation"
-    # repeated evaluation of the RETURNED frame must stay stable too —
-    # the checkpoint pinned the boundaries, so no re-sample can shift ranks
-    again = sorted(r["i"] for r in ranked.select("i").collect())
-    assert again == got
 
 
 # --- ADVICE low: selectors.yml nested composition ---------------------------

@@ -40,7 +40,6 @@ def _write_events(path: str, ids: list[int], mtime: float) -> None:
 
 
 def _run_once(spark, src_dir: str, sink_dir: str, ckpt_dir: str) -> None:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = spark.readStream.schema(EVENTS_SCHEMA).format("parquet").load(src_dir)
     out = raw.select("event_id", F.timestamp_micros(F.expr("ts div 1000")).alias("ts"))
     q = (

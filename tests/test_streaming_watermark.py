@@ -72,7 +72,6 @@ def staged_stream_dir(tmp_path):
 
 
 def test_late_rows_dropped_and_windows_finalize_once(spark, staged_stream_dir):
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = (
         spark.readStream.schema(EVENTS_SCHEMA)
         .format("parquet")
@@ -145,7 +144,6 @@ def test_dedup_within_watermark_bounded_state(spark, dup_stream_dir):
     st_dedup_within_watermark_stream entry builds on (its hour-in-key
     design keeps every duplicate inside the horizon, which is why the
     entry can equal batch DISTINCT)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = (
         spark.readStream.schema(EVENTS_SCHEMA)
         .format("parquet")
