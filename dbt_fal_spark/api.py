@@ -30,9 +30,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from dbt_fal_spark.materialize import (
     apply_dtype_casts,
+    attach_live_table,
     compact_table,
     incremental_merge,
-    live_version_dir,
     replace_relation_atomic,
     snapshot_scd2,
     vacuum_table,
@@ -150,7 +150,7 @@ def _write_model(
     written, observed on the write itself."""
     if spark.catalog.tableExists(identifier) if exists is None else exists:
         return replace_relation_atomic(spark, df, identifier, **layout)
-    return write_table(df, identifier, mode="overwrite", **layout)
+    return write_table(df, identifier, **layout)
 
 
 class FalSpark:
@@ -269,8 +269,9 @@ class FalSpark:
         The reference relies on the warehouse being durable between CLI
         invocations (`fal run` reads the previous `dbt run`'s tables —
         reference: fal_runner.py:34-76); mirror that by attaching each
-        model's live version dir on disk (``live_version_dir``) as an
-        external parquet table.
+        model's live version dir on disk as an external parquet table
+        (``attach_live_table``, which also recovers a partitioned table's
+        partitions).
         View/ephemeral models are re-created lazily on first reference
         (see ``_identifier``) — dbt semantics, where a view is just stored
         SQL."""
@@ -278,12 +279,7 @@ class FalSpark:
         for model in self.manifest.models.values():
             if model.materialization in ("view", "ephemeral"):
                 continue
-            identifier = f"{self.schema}.{model.target_name}"
-            if self.spark.catalog.tableExists(identifier):
-                continue
-            loc = live_version_dir(db_dir, model.target_name)
-            if loc is not None:
-                self.spark.sql(f"CREATE TABLE {identifier} USING parquet LOCATION '{loc}'")
+            attach_live_table(self.spark, f"{self.schema}.{model.target_name}", db_dir)
 
     def _warehouse_path(self) -> Path:
         """The warehouse this FalSpark writes into: the profile target's
@@ -333,22 +329,14 @@ class FalSpark:
         warehouse the artifacts were built into). Takes the PHYSICAL
         (alias-resolved) name: an aliased upstream was materialized in the
         state warehouse under its alias, not its model name. The table is
-        attached at its LIVE version dir: every rebuild there flips it to
-        a fresh ``<name>__v<uuid8>`` dir, so the canonical dir holds a
-        stale version or nothing."""
+        attached at its LIVE version dir (every commit there writes a
+        fresh ``<name>__v<uuid8>`` dir; see ``attach_live_table``)."""
         meta = self._load_state_meta()
         schema, wh = meta.get("schema"), meta.get("warehouse_dir")
         if not schema or not wh:
             return None
         ident = f"{schema}.{physical_name}"
-        if self.spark.catalog.tableExists(ident):
-            return ident
-        loc = live_version_dir(Path(wh) / f"{schema}.db", physical_name)
-        if loc is not None:
-            self.spark.sql(f"CREATE DATABASE IF NOT EXISTS `{schema}`")
-            self.spark.sql(f"CREATE TABLE IF NOT EXISTS {ident} USING parquet LOCATION '{loc}'")
-            return ident
-        return None
+        return ident if attach_live_table(self.spark, ident, Path(wh) / f"{schema}.db") else None
 
     def _model(self, name: str) -> DbtModel | None:
         """The model called ``name``, None when the project has none."""
@@ -809,7 +797,7 @@ class FalSpark:
         (reference: teleport read, teleport.py:43-56). Accepts the same
         local-path / object-store URL forms as ``teleport_export``."""
         df = self.spark.read.parquet(self._resolve_path_or_url(url))
-        write_table(df, f"{self.schema}.{name}", mode="overwrite")
+        write_table(df, f"{self.schema}.{name}")
 
     def _load_state(self) -> dict[str, str]:
         """Prior name→checksum snapshot for ``state:new/modified`` selectors
@@ -1062,9 +1050,7 @@ class FalSpark:
                 # write itself wrote: a separate count would run the
                 # whole pipeline twice, and under limit() the two jobs
                 # could even select different rows.
-                violations = write_table(
-                    fail_df, f"{self.schema}_dbt_test__audit.{t.name}", mode="overwrite"
-                )()
+                violations = write_table(fail_df, f"{self.schema}_dbt_test__audit.{t.name}")()
             else:
                 violations = fail_df.count()
             # dbt status resolution: severity=error checks error_if
@@ -1263,9 +1249,9 @@ class FalSpark:
         batch; thousands of tiny files throttle every downstream scan
         with per-file open/footer costs). The table is read, coalesced
         to ``target_partitions`` (default: executor parallelism), and
-        swapped in atomically — safe against concurrent readers of the
-        old files, same guarantee as any model rebuild. Returns the
-        partition count written.
+        committed as a new version like any model rebuild — safe against
+        concurrent readers of the old files, partitioned tables included.
+        Returns the partition count written.
 
         Concurrent REBUILDS are handled optimistically: the live
         version is captured before the read, and the swap commits only
@@ -1285,9 +1271,9 @@ class FalSpark:
         )
 
     def vacuum(self, model_name: str) -> int:
-        """Delete a model's non-live copy-on-write version directories
-        (the atomic swap keeps ONE previous version as a grace window
-        for in-flight readers — see materialize.replace_relation_atomic;
+        """Delete a model's non-live version directories (every table
+        commit keeps ONE previous version as a grace window for
+        in-flight readers — see materialize.replace_relation_atomic;
         Delta's VACUUM analogue). Call when no readers are active, e.g.
         between pipeline runs; readers with long scans are additionally
         protected by ``spark.falspark.vacuum.retainSeconds`` (version
@@ -1344,7 +1330,7 @@ class _ModelTask:
         log.debug("executing model %s (%s)", model.name, model.materialization)
         if model.materialization == "seed":
             df = spark.read.csv(str(model.path), header=True, inferSchema=True)
-            n = write_table(df, f"{fal.schema}.{model.target_name}", mode="overwrite")()
+            n = write_table(df, f"{fal.schema}.{model.target_name}")()
             fal._record(model, "CREATE TABLE", n)
             return SUCCESS
         if model.python_model is not None:

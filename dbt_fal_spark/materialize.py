@@ -5,23 +5,32 @@ The reference delegates materialization to dbt macros + warehouse DDL
 table.sql, atomic swap at src/fal/dbt/integration/lib.py:286-329,424-472);
 here the engine owns them:
 
-- seed        CSV → saveAsTable
-- table       CREATE OR REPLACE via saveAsTable(overwrite)
+- seed        CSV → table commit
+- table       table commit (create or replace)
 - view        lazy temp view over the rendered SQL
 - ephemeral   same as view (Catalyst inlines it; no storage)
-- incremental first run full table; then append, or merge-by-key via
-              anti-join + union with the reference's temp-swap protocol
+- incremental first run full table; then append, insert_overwrite, or
+              merge-by-key via anti-join + union and a table commit
 
 This module is the only one that knows the on-disk table format. It owns
 the writes (``write_table``, ``incremental_merge``, ``snapshot_scd2``),
 the atomic swap (``replace_relation_atomic``), the copy-on-write version
 dirs and their live pointer file, compaction (``compact_table``), vacuum
-(``vacuum_table``) and finding the live version to re-attach a table the
-catalog forgot (``live_version_dir``). ``api.FalSpark`` calls these verbs.
+(``vacuum_table``) and re-attaching a table the catalog forgot
+(``attach_live_table``). ``api.FalSpark`` calls these verbs.
 
-Scale notes: tables are parquet in the session warehouse; the temp-swap
-(write ``<name>__f__<uuid8>``, drop, rename) is exactly the reference's
-atomic-overwrite dance — on Delta this would be a transactional REPLACE.
+One commit protocol writes every table, in the manner of Delta Lake's
+log-structured commit: each write lands in a fresh external version dir
+``<base>__v<uuid8>`` (``base`` is ``<database location>/<table>``), and
+one record, the live pointer file, names the live version. The new
+version is written through a temp table; then, under the table's commit
+lock, the catalog entry is either re-pointed (SET LOCATION, when it
+already describes the new files) or replaced (DROP, which removes
+metadata only, then RENAME of the temp table). The previous version
+stays on disk as the grace dir for in-flight readers; older ones are
+vacuumed. On Delta this whole protocol is a transactional REPLACE.
+Trade-off: ``DROP TABLE`` on a model table leaves its version dirs on
+disk, as it always did for tables re-attached after a restart.
 
 File sizing: a write with no declared layout is coalesced to
 ``ceil(estimate / split)`` files, where the estimate is the larger of the
@@ -36,10 +45,9 @@ plans holding an explicit repartition or coalesce (a ``REPARTITION`` /
 ``compact_table(target_partitions=...)``). Incremental appends still add
 one file set per batch; ``compact_table`` heals those.
 
-Row counts: ``write_table`` and ``replace_relation_atomic`` attach a
-metrics-only Observation above any exchange they add and return a reader
-of the rows written, so a write reports its rows without a second job
-re-reading them.
+Row counts: a table commit attaches a metrics-only Observation above
+any exchange it adds and returns a reader of the rows written, so a
+write reports its rows without a second job re-reading them.
 """
 
 from __future__ import annotations
@@ -114,26 +122,19 @@ def _sized(df: DataFrame) -> DataFrame:
     return df.coalesce(min(max(1, -(-est // max(1, split))), (1 << 31) - 1))
 
 
-def _default_location(spark: SparkSession, identifier: str) -> str:
-    """Canonical warehouse path for a table name (version-suffix base)."""
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse"))
+def _fs_path(uri: str) -> str:
+    """A local path for a ``file:`` or scheme-less URI; others unchanged."""
+    u = urlparse(uri)
+    return u.path if u.scheme in ("", "file") else uri
+
+
+def _new_table_base(spark: SparkSession, identifier: str) -> str:
+    """Version-dir base of a table the catalog does not hold:
+    ``<database location>/<table>``. The database's own location, not
+    the session warehouse, since a FalSpark target pins one per schema."""
     *db, table = identifier.lower().split(".")
-    db_dir = f"{db[-1]}.db" if db and db[-1] != "default" else ""
-    return os.path.join(os.path.abspath(wh.path), db_dir, table)
-
-
-def _clean_orphan_location(spark: SparkSession, identifier: str) -> None:
-    """A table directory left by a previous session (the in-memory catalog
-    forgets tables across sessions; their warehouse dirs persist) blocks
-    saveAsTable with LOCATION_ALREADY_EXISTS — remove it when the catalog
-    has no such table."""
-    if spark.catalog.tableExists(identifier):
-        return
-    if urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).scheme not in ("", "file"):
-        return
-    loc = _default_location(spark, identifier)
-    if os.path.isdir(loc):
-        shutil.rmtree(loc, ignore_errors=True)
+    db_uri = spark.catalog.getDatabase(db[-1] if db else spark.catalog.currentDatabase()).locationUri
+    return os.path.join(_fs_path(db_uri), table)
 
 
 def layout_cols(spec) -> list[str]:
@@ -181,10 +182,10 @@ def _bucket_spec(bucket_by: dict | None) -> tuple[int, tuple[str, ...]] | None:
     return int(bucket_by.get("n", 32)), tuple(layout_cols(bucket_by["cols"]))
 
 
-def _parquet_writer(df: DataFrame, mode: str, partition_by, bucket_by):
-    """A parquet writer for ``df`` carrying the declared partition and
-    bucket layout."""
-    writer = df.write.mode(mode).format("parquet")
+def _parquet_writer(df: DataFrame, partition_by, bucket_by):
+    """An overwriting parquet writer for ``df`` carrying the declared
+    partition and bucket layout."""
+    writer = df.write.mode("overwrite").format("parquet")
     if partition_by:
         writer = writer.partitionBy(*layout_cols(partition_by))
     if bucket_by:
@@ -196,13 +197,14 @@ def _parquet_writer(df: DataFrame, mode: str, partition_by, bucket_by):
 def write_table(
     df: DataFrame,
     identifier: str,
-    mode: str = "overwrite",
     partition_by: str | None = None,
     bucket_by: dict | None = None,
     sort_by: str | None = None,
 ) -> Callable[[], int]:
-    """Eager write — the write boundary forces materialization, matching
-    the reference's eager write_to_* semantics (SURVEY §7 risk note).
+    """Eager write of ``df`` as table ``identifier``, created or replaced
+    by the one table commit (see ``replace_relation_atomic``) — the write
+    boundary forces materialization, matching the reference's eager
+    write_to_* semantics (SURVEY §7 risk note).
     ``partition_by`` lays the table out hive-partitioned (the 100 TB
     contract: partition pruning + per-partition overwrite both need it).
     ``bucket_by`` = {"cols": "k1,k2", "n": 32} hash-buckets (and sorts)
@@ -212,21 +214,15 @@ def write_table(
     ``sort_by`` range-clusters files for min/max data skipping
     (see _range_cluster); with no layout the output is sized (_sized).
     Returns a reader of the rows written (see count_rows)."""
-    # observed above any exchange _shape adds: a range exchange runs its
-    # input twice (sampling, then the shuffle), which would double a
-    # count taken below it
-    df, rows = count_rows(_shape(df, partition_by, bucket_by, sort_by))
-    _clean_orphan_location(df.sparkSession, identifier)
-    _parquet_writer(df, mode, partition_by, bucket_by).saveAsTable(identifier)
-    return rows
+    return _commit(df.sparkSession, df, identifier, partition_by, bucket_by, sort_by)
 
 
 # the suffix of a copy-on-write version dir, ``<table>__v<uuid8>``
 _VERSION_RE = re.compile(r"__v[0-9a-f]{8}$")
 
-# Per-table-base commit locks for the pointer flip: a maintenance verb
-# (compact) and a model rebuild racing on the SAME table must serialize
-# their check-then-flip sections, or last-writer-wins silently replaces
+# Per-table commit locks: a maintenance verb (compact) and a model
+# rebuild racing on the SAME table must serialize their check-then-commit
+# sections, or last-writer-wins silently replaces
 # the rebuild's fresh data with recompacted stale data.
 # In-process only — one driver owns a parquet warehouse by design; a
 # multi-writer deployment needs a transactional table format (Delta/
@@ -267,31 +263,19 @@ class ConcurrentRebuildError(RuntimeError):
 
 def table_swap_token(spark: SparkSession, identifier: str):
     """Opaque version token for optimistic read-then-replace:
-    (location, commit-nonce, local-dir mtime). Location alone
-    identifies pointer-flip versions (every flip mints a fresh ``__v``
-    dir) but NOT drop-first swaps — RENAME TO lands a rebuilt
-    hive-partitioned table on the same canonical path every time. For
-    those, the per-commit NONCE carries the version: every committed
-    swap rewrites the live pointer file with a fresh uuid (an mtime-only
-    token compares equal when a rebuild lands in the same coarse-
-    filesystem tick as the token capture, letting compact commit stale
-    data undetected). The directory mtime
-    rides along as a third component for in-place writes that bypass
-    the swap path (incremental appends touch the dir but not the
-    pointer). Pre-pointer tables and non-local locations degrade
-    gracefully (nonce/mtime None)."""
+    (location, local-dir mtime). Every commit mints a fresh ``__v`` dir,
+    so the location names the committed version; the mtime catches
+    in-place writes that bypass the commit (incremental appends and
+    insert_overwrite write into the live dir). None for an absent
+    table; the mtime is None for a non-local location."""
     loc = _table_location(spark, identifier)
     if loc is None:
         return None
-    base = _re_sub_version(loc)
-    mtime = None
-    parsed = urlparse(loc)
-    if parsed.scheme in ("", "file"):
-        try:
-            mtime = os.path.getmtime(parsed.path or loc)
-        except OSError:
-            mtime = None
-    return (loc, _read_live_nonce(base), mtime)
+    try:
+        mtime = os.path.getmtime(loc)
+    except OSError:
+        mtime = None
+    return (loc, mtime)
 
 
 def _re_sub_version(loc: str) -> str:
@@ -306,6 +290,10 @@ def _describe(spark: SparkSession, identifier: str) -> dict[str, str]:
         f"DESCRIBE TABLE EXTENDED {_q(identifier)}").collect()}
 
 
+# the ``_describe`` key present exactly when the table is hive-partitioned
+_PARTITIONED = "# Partition Information"
+
+
 def _table_location(
     spark: SparkSession, identifier: str, desc: dict[str, str] | None = None
 ) -> str | None:
@@ -316,10 +304,7 @@ def _table_location(
             return None
         desc = _describe(spark, identifier)
     loc = desc.get("Location")
-    if loc is None:
-        return None
-    u = urlparse(loc)
-    return u.path if u.scheme in ("", "file") else loc
+    return None if loc is None else _fs_path(loc)
 
 
 def _table_bucket_spec(
@@ -347,21 +332,18 @@ RETAIN_CONF = "spark.falspark.vacuum.retainSeconds"
 
 
 def _live_pointer_path(base: str) -> str:
-    """Sidecar file recording the live version dir (written after each
-    successful pointer flip). '_'-prefixed so a parquet reader listing
-    the parent never sees it as data; a plain file so _vacuum_versions
-    (dirs only) never removes it."""
+    """Sidecar file recording the live version dir (written by each
+    table commit). '_'-prefixed so a parquet reader listing the parent
+    never sees it as data; a plain file so _vacuum_versions (dirs only)
+    never removes it."""
     return os.path.join(os.path.dirname(base), f"_{os.path.basename(base)}.__live__")
 
 
 def _write_live_pointer(base: str, loc: str) -> None:
-    """Atomically persist the live location (tmp file + rename). Line 1
-    is the version dir's NAME, not its path: every version is a sibling
-    of ``base``, so a copied or restored warehouse resolves the pointer
-    inside itself. Line 2 is a fresh per-commit NONCE — the version
-    component table_swap_token uses for drop-first swaps, whose
-    committed location never changes (dir mtime alone has coarse-
-    filesystem ticks).
+    """Atomically persist the live location (tmp file + rename) as one
+    line: the version dir's NAME, not its path. Every version is a
+    sibling of ``base``, so a copied or restored warehouse resolves the
+    pointer inside itself.
 
     A writer killed between mkstemp and the rename (the in-process
     cleanup below can't run on SIGKILL) leaves a ``.__live_tmp_*`` file
@@ -388,7 +370,7 @@ def _write_live_pointer(base: str, loc: str) -> None:
     try:
         fd, tmp = tempfile.mkstemp(dir=os.path.dirname(base), prefix=".__live_tmp_")
         with os.fdopen(fd, "w") as f:
-            f.write(f"{os.path.basename(loc.rstrip('/'))}\n{uuid.uuid4().hex}")
+            f.write(os.path.basename(loc.rstrip("/")))
         os.replace(tmp, _live_pointer_path(base))
         tmp = None  # consumed by the rename
     except OSError:
@@ -403,27 +385,15 @@ def _write_live_pointer(base: str, loc: str) -> None:
 
 def _read_live_pointer(base: str) -> str | None:
     """The live location named by line 1 of the pointer file, resolved
-    as a sibling of ``base``. Pointer files that stored an absolute path
-    resolve the same way, by their last component (single-line files
-    from before the nonce parse identically — no nonce line, that's all)."""
+    as a sibling of ``base``. Older pointer files parse the same way:
+    an absolute path resolves by its last component, and a second line
+    (a per-commit nonce once written there) is ignored."""
     try:
         with open(_live_pointer_path(base)) as f:
             name = os.path.basename(f.readline().strip().rstrip("/"))
     except OSError:
         return None
     return os.path.join(os.path.dirname(base), name) if name else None
-
-
-def _read_live_nonce(base: str) -> str | None:
-    """Line 2 of the pointer file: the per-commit nonce (None for
-    single-line pointer files and pointerless tables)."""
-    try:
-        with open(_live_pointer_path(base)) as f:
-            f.readline()
-            nonce = f.readline().strip()
-        return nonce or None
-    except OSError:
-        return None
 
 
 def _version_dirs(base: str) -> list[str]:
@@ -456,18 +426,38 @@ def live_version_dir(db_dir: str | Path, name: str) -> str | None:
     data under ``db_dir`` (a ``<schema>.db`` directory), for attaching a
     table the catalog does not know: after a process restart (the
     in-memory catalog forgets tables, their dirs persist) or for a
-    deferred ref into another warehouse. The live pointer each committed
-    swap writes names it. Without a usable pointer (tables written before
-    pointers existed) the newest version dir holding committed parquet
-    wins — which can pick a version that committed its files but crashed
-    before its flip, the gap the pointer closes. None when no dir has
-    data."""
+    deferred ref into another warehouse. The live pointer each table
+    commit writes names it. Without a usable pointer (tables written
+    before pointers existed, whose un-suffixed dir counts as a version)
+    the newest version dir holding committed parquet wins — which can
+    pick a version that wrote its files but crashed before its commit,
+    the gap the pointer closes. None when no dir has data."""
     base = os.path.join(db_dir, name)
     ptr = _read_live_pointer(base)
     if ptr is not None and os.path.isdir(ptr) and _has_committed_parquet(Path(ptr)):
         return str(Path(ptr).resolve())
     live = [Path(d) for d in _version_dirs(base) if _has_committed_parquet(Path(d))]
     return str(max(live, key=lambda p: p.stat().st_mtime).resolve()) if live else None
+
+
+def attach_live_table(spark: SparkSession, identifier: str, db_dir: str | Path) -> bool:
+    """Register ``identifier`` (``<schema>.<table>``) at its live version
+    dir under ``db_dir`` when the catalog does not hold it — after a
+    process restart, or for a deferred ref into another warehouse. A
+    hive-partitioned table gets its partitions recovered from the dir
+    layout: a bare CREATE TABLE ... LOCATION registers the partition
+    columns but no partitions, so the table would read 0 rows. Returns
+    whether the catalog holds the table now."""
+    if spark.catalog.tableExists(identifier):
+        return True
+    loc = live_version_dir(db_dir, identifier.lower().split(".")[-1])
+    if loc is None:
+        return False
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {_q(identifier.split('.')[0])}")
+    spark.sql(f"CREATE TABLE IF NOT EXISTS {_q(identifier)} USING parquet LOCATION '{loc}'")
+    if _PARTITIONED in _describe(spark, identifier):
+        spark.sql(f"ALTER TABLE {_q(identifier)} RECOVER PARTITIONS")
+    return True
 
 
 def _vacuum_versions(base: str, keep: set[str], keep_newer_than: float | None = None) -> int:
@@ -535,7 +525,12 @@ def _vacuum_keeping_live(
     ITS dir the live one. That snapshot is itself racy, which is why
     _vacuum_versions also re-reads the pointer before each rmtree. With
     RETAIN_CONF set, dirs modified within the retention window are kept
-    too (slow-reader cover)."""
+    too (slow-reader cover). When ``keep`` already holds every version
+    dir, as after a table's first commit, nothing can be removed and
+    the catalog is not read."""
+    kept = {os.path.abspath(k) for k in keep if k}
+    if all(os.path.abspath(d) in kept for d in _version_dirs(base)):
+        return 0
     retain = float(spark.conf.get(RETAIN_CONF, "0") or "0")
     if retain > 0:
         cutoff = time.time() - retain
@@ -555,23 +550,32 @@ def replace_relation_atomic(
 ) -> Callable[[], int]:
     """Atomic table replacement, safe when ``df`` reads from
     ``identifier`` itself (reference: lib.py:286-329 overwrite_target /
-    _replace_relation) AND against concurrent readers:
+    _replace_relation) AND against concurrent readers. It is the one
+    table commit every write takes (``write_table`` too):
 
-    - Default (unpartitioned / bucketed, schema unchanged): copy-on-
-      write pointer flip. The new version is written to a fresh sibling
-      directory ``<table>__v<uuid8>``, then ONE metadata call (``ALTER
-      TABLE ... SET LOCATION``) switches the table to it. In-flight
-      readers keep scanning the previous version's files — which are
-      left on disk as a one-version grace window — so a racing read
-      resolves either the old or the new file set, never a deleted
-      file (tests/test_round7_fixes.py::test_compact_concurrent_reader).
-      Version dirs older than the grace window are vacuumed here.
-      This is the plain-parquet rendition of Delta/Iceberg snapshot
-      isolation; on a transactional lakehouse it is REPLACE TABLE.
-    - Hive-partitioned tables or a changed schema: drop-first temp-swap
-      (per-partition catalog locations and table schemas cannot be
-      flipped atomically in a v1 catalog) — use insert_overwrite for
-      reader-safe partitioned refreshes.
+    - The new version is written to a fresh external sibling directory
+      ``<base>__v<uuid8>`` through a temp table. No live file is
+      touched.
+    - Under the table's commit lock, ONE catalog change makes it live.
+      When the catalog entry already describes the new files (same
+      columns and types, same bucket spec, no partitions on either
+      side), ``ALTER TABLE ... SET LOCATION`` re-points it. Otherwise
+      (a new table, ``partition_by``, a schema or bucket change) the
+      entry is dropped — metadata only, as every table this module
+      writes is external — and the temp table is renamed into its place;
+      an external table keeps its location, registered partitions and
+      bucket spec across the rename. Between the DROP and the RENAME
+      the name resolves to no table; a reader that resolved it before
+      keeps scanning its files.
+    - The live pointer file is rewritten to name the new version, and
+      version dirs older than the one just replaced are vacuumed. In-
+      flight readers keep scanning the previous version's files, left
+      on disk as a one-version grace window, so a racing read resolves
+      either the old or the new file set, never a deleted file
+      (tests/test_round7_fixes.py::test_compact_concurrent_reader).
+
+    This is the plain-parquet rendition of Delta/Iceberg snapshot
+    isolation; on a transactional lakehouse it is REPLACE TABLE.
 
     ``bucket_by``/``sort_by``/``partition_by`` carry the declared layout
     through the swap — a rebuild that silently flattened a partitioned
@@ -581,105 +585,90 @@ def replace_relation_atomic(
     ``expected_token`` (maintenance verbs): optimistic
     concurrency for read-then-replace callers. compact_table rewrites the
     data it READ — if another writer commits between that read and this
-    swap, flipping anyway would silently replace the newer rebuild with
+    swap, committing anyway would silently replace the newer rebuild with
     recompacted stale data (lost update). Passing the
     ``table_swap_token`` the caller captured before reading makes the
-    commit conditional: the check and the flip run under a per-table
+    commit conditional: the check and the commit run under a per-table
     lock (_FLIP_LOCKS — model rebuilds take the same lock, so
-    in-process check-then-flip is atomic), and a moved token raises
+    in-process check-then-commit is atomic), and a moved token raises
     ConcurrentRebuildError after cleaning up the never-made-live
     version directory. Rebuilds themselves pass None: the model's own
     output is the newest truth regardless of what it read.
 
     Returns a reader of the rows written (see count_rows)."""
-    tmp = f"{identifier}__f__{uuid.uuid4().hex[:8]}"
-    # observed above any exchange _shape adds (see write_table)
+    return _commit(spark, df, identifier, partition_by, bucket_by, sort_by, expected_token)
+
+
+def _commit(
+    spark: SparkSession,
+    df: DataFrame,
+    identifier: str,
+    partition_by: str | None,
+    bucket_by: dict | None,
+    sort_by: str | None,
+    expected_token: tuple | None = None,
+) -> Callable[[], int]:
+    """The table commit behind ``write_table`` and
+    ``replace_relation_atomic`` (the protocol is described there)."""
+    # observed above any exchange _shape adds: a range exchange runs its
+    # input twice (sampling, then the shuffle), which would double a
+    # count taken below it
     df, rows = count_rows(_shape(df, partition_by, bucket_by, sort_by))
-
-    def _check_expected():
-        if expected_token is not None:
-            cur = table_swap_token(spark, identifier)
-            if cur != expected_token:
-                raise ConcurrentRebuildError(
-                    f"{identifier}: live version moved "
-                    f"({expected_token!r} -> {cur!r}) since the "
-                    "maintenance read — aborting the swap; re-run the verb "
-                    "against the current version"
-                )
-
     exists = spark.catalog.tableExists(identifier)
-    # one DESCRIBE before the write: the bucket check and the version base
     desc = _describe(spark, identifier) if exists else {}
-    # nullability differs freely between plans — including NESTED
-    # nullability (ArrayType.containsNull after transform()/collect_list,
-    # struct field nullables), which simpleString() strips and dataType
-    # equality would not; only name/type changes make the catalog schema
-    # stale for the pointer flip
-    _sig = lambda s: [(f.name, f.dataType.simpleString()) for f in s.fields]  # noqa: E731
-    schema_changed = exists and _sig(spark.table(identifier).schema) != _sig(df.schema)
-    # the pointer flip reuses the live table's metadata, so the declared
-    # bucket layout must already match it (e.g. a table re-attached after
-    # a restart has no bucket spec) — otherwise rebuild the metadata too
-    bucket_mismatch = exists and _table_bucket_spec(spark, identifier, desc) != _bucket_spec(bucket_by)
-
-    commit_lock = _FLIP_LOCKS[identifier.lower()]
-
-    if partition_by or schema_changed or bucket_mismatch or not exists:
-        # drop-first temp-swap; the expensive write
-        # happens before the lock — only the catalog swap serializes
-        try:
-            _parquet_writer(df, "overwrite", partition_by, bucket_by).saveAsTable(tmp)
-            with commit_lock:
-                _check_expected()
-                spark.sql(f"DROP TABLE IF EXISTS {_q(identifier)}")
-                _clean_orphan_location(spark, identifier)
-                spark.sql(f"ALTER TABLE {_q(tmp)} RENAME TO {_q(identifier)}")
-                if partition_by:
-                    # RENAME keeps per-partition catalog locations pointing at
-                    # the temp path — SYNC re-registers the moved directories
-                    spark.sql(f"MSCK REPAIR TABLE {_q(identifier)} SYNC PARTITIONS")
-                # The nonce rewrite must be atomic with the catalog swap:
-                # with the pointer written outside the lock, a
-                # maintenance verb running _check_expected under the lock
-                # between the RENAME and the pointer rewrite reads the STALE
-                # nonce — and if the dir mtime lands in the same coarse
-                # filesystem tick, its expected_token compares equal and it
-                # commits recompacted stale data over the fresh rebuild.
-                committed = _table_location(spark, identifier)
-                if committed:
-                    _write_live_pointer(_re_sub_version(committed), committed)
-        except Exception:
-            spark.sql(f"DROP TABLE IF EXISTS {_q(tmp)}")
-            raise
-        return rows
-
-    # copy-on-write pointer flip; the base (the location minus its
-    # version suffix) is the same for every version, so a flip racing
-    # this write cannot move it
+    # the base (the location minus its version suffix) is the same for
+    # every version, so a commit racing this write cannot move it
     pre_loc = _table_location(spark, identifier, desc)
-    base = _re_sub_version(pre_loc) if pre_loc else _default_location(spark, identifier)
+    base = _re_sub_version(pre_loc) if pre_loc else _new_table_base(spark, identifier)
     new_loc = f"{base}__v{uuid.uuid4().hex[:8]}"
+    tmp = f"{identifier}__f__{uuid.uuid4().hex[:8]}"
+    # SET LOCATION keeps the catalog entry, so it must already describe
+    # the new files. Nullability differs freely between plans (nested
+    # nullability too, which simpleString() strips): only name/type
+    # changes make the schema stale. Per-partition locations cannot be
+    # re-pointed, and a table re-attached after a restart has no bucket
+    # spec.
+    _sig = lambda s: [(f.name, f.dataType.simpleString()) for f in s.fields]  # noqa: E731
+    reuse = (
+        exists
+        and not partition_by
+        and _PARTITIONED not in desc
+        and _sig(spark.table(identifier).schema) == _sig(df.schema)
+        and _table_bucket_spec(spark, identifier, desc) == _bucket_spec(bucket_by)
+    )
     old_loc = None
-    flipped = False
+    flipped = False  # the catalog references new_loc
     with _INFLIGHT_LOCK:
         _INFLIGHT_DIRS.add(new_loc)
     try:
         try:
-            # option("path") makes tmp EXTERNAL: dropping it later removes
-            # only metadata, never the files the live table now points at
-            _parquet_writer(df, "overwrite", partition_by, bucket_by).option(
-                "path", new_loc
-            ).saveAsTable(tmp)
-            with commit_lock:
-                _check_expected()
-                # the version this flip replaces, read under the lock: a
-                # rebuild of the same table may have flipped during the
+            # the path option makes tmp EXTERNAL: dropping it (or the
+            # table it replaces) removes only metadata, never files
+            _parquet_writer(df, partition_by, bucket_by).option("path", new_loc).saveAsTable(tmp)
+            with _FLIP_LOCKS[identifier.lower()]:
+                if expected_token is not None:
+                    cur = table_swap_token(spark, identifier)
+                    if cur != expected_token:
+                        raise ConcurrentRebuildError(
+                            f"{identifier}: live version moved "
+                            f"({expected_token!r} -> {cur!r}) since the "
+                            "maintenance read — aborting the swap; re-run the verb "
+                            "against the current version"
+                        )
+                # the version this commit replaces, read under the lock: a
+                # rebuild of the same table may have committed during the
                 # write, and the rollback and the vacuum's keep set need
                 # the version live right before ours
                 old_loc = _table_location(spark, identifier)
-                spark.sql(f"ALTER TABLE {_q(identifier)} SET LOCATION '{new_loc}'")
-                flipped = True
-                spark.sql(f"REFRESH TABLE {_q(identifier)}")
+                if reuse:
+                    spark.sql(f"ALTER TABLE {_q(identifier)} SET LOCATION '{new_loc}'")
+                    flipped = True
+                    spark.sql(f"REFRESH TABLE {_q(identifier)}")
+                else:
+                    if old_loc is not None:
+                        spark.sql(f"DROP TABLE {_q(identifier)}")
+                    spark.sql(f"ALTER TABLE {_q(tmp)} RENAME TO {_q(identifier)}")
+                    flipped = True
                 _write_live_pointer(base, new_loc)
         except Exception:
             try:
@@ -688,10 +677,10 @@ def replace_relation_atomic(
                 pass  # cleanup must not mask the original error
             # Only delete new_loc while the catalog does NOT reference it:
             # after a committed SET LOCATION, a failure (e.g. in REFRESH)
-            # must roll the pointer back to old_loc first — rmtree'ing the
+            # must roll the location back to old_loc first — rmtree'ing the
             # directory the catalog points at would brick every later read.
             safe_to_delete = not flipped
-            if flipped and old_loc:
+            if flipped and reuse and old_loc:
                 try:
                     spark.sql(f"ALTER TABLE {_q(identifier)} SET LOCATION '{old_loc}'")
                     spark.sql(f"REFRESH TABLE {_q(identifier)}")
@@ -704,7 +693,8 @@ def replace_relation_atomic(
     finally:
         with _INFLIGHT_LOCK:
             _INFLIGHT_DIRS.discard(new_loc)
-    spark.sql(f"DROP TABLE IF EXISTS {_q(tmp)}")
+    if reuse:
+        spark.sql(f"DROP TABLE IF EXISTS {_q(tmp)}")
     # vacuum versions beyond the grace window: always keep the live dir,
     # the immediately previous one, and any version dir an in-process
     # writer is currently producing (_vacuum_versions re-checks the
@@ -765,13 +755,13 @@ def compact_table(
 
 
 def vacuum_table(spark: SparkSession, identifier: str) -> int:
-    """Delete a table's non-live copy-on-write version directories (the
-    swap keeps ONE previous version as a grace window for in-flight
+    """Delete a table's non-live copy-on-write version directories (each
+    commit keeps ONE previous version as a grace window for in-flight
     readers; Delta's VACUUM analogue). Readers with long scans are
     additionally protected by RETAIN_CONF. A CONCURRENT rebuild is
-    guarded two ways: version dirs newer than the last committed flip
-    (the live pointer file's mtime) are skipped, so a half-written swap
-    target is never deleted mid-flip; and because a flip can commit
+    guarded two ways: version dirs newer than the last commit (the live
+    pointer file's mtime) are skipped, so a half-written version is
+    never deleted mid-commit; and because a commit can land
     BETWEEN our catalog read and the pointer-mtime read (making the new
     live dir look both non-live and old), the pointer's CONTENT and the
     catalog location are re-read AFTER capturing the mtime and unioned
@@ -870,8 +860,7 @@ def incremental_merge(
     """
     if not spark.catalog.tableExists(identifier):
         return write_table(
-            new_rows, identifier, mode="overwrite",
-            partition_by=partition_by, bucket_by=bucket_by, sort_by=sort_by,
+            new_rows, identifier, partition_by=partition_by, bucket_by=bucket_by, sort_by=sort_by
         )()
     strategy = strategy or ("merge" if unique_key else "append")
     new_rows = _evolve_schema(spark, new_rows, identifier, on_schema_change)
@@ -1030,7 +1019,7 @@ def snapshot_scd2(
         )
 
     if not spark.catalog.tableExists(identifier):
-        write_table(_with_meta(staged, valid_from), identifier, mode="overwrite")
+        write_table(_with_meta(staged, valid_from), identifier)
         return
 
     existing = spark.table(identifier)

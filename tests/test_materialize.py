@@ -317,3 +317,237 @@ def test_copied_warehouse_reattaches_inside_the_copy(spark, tmp_path):
         assert spark.read.parquet(live).count() == 7
     finally:
         spark.sql("DROP DATABASE IF EXISTS reloc CASCADE")
+
+
+# --- the table commit: version dirs, live pointer, swap token ----------------
+
+
+def _project(tmp_path, name, models):
+    proj = tmp_path / name
+    (proj / "models").mkdir(parents=True)
+    (proj / "dbt_project.yml").write_text(f"name: {name}\n")
+    for mname, sql in models.items():
+        (proj / "models" / f"{mname}.sql").write_text(sql)
+    return proj
+
+
+def test_every_commit_lands_external_at_the_version_dir_the_pointer_names(spark):
+    """A first write, a same-shape rebuild, and a partitioned,
+    schema-changed and bucket-changed rebuild each leave an EXTERNAL
+    table at a fresh ``__v<uuid8>`` dir, the one the live pointer names."""
+    import os
+    import re
+
+    from dbt_fal_spark.materialize import (
+        _describe,
+        _read_live_pointer,
+        _re_sub_version,
+        _table_location,
+        replace_relation_atomic,
+    )
+
+    t = f"{SCHEMA}.commits"
+    rows = lambda n, extra="": spark.range(n).selectExpr(  # noqa: E731
+        "id AS k", "cast(id % 3 as string) AS p", *([extra] if extra else [])
+    )
+    steps = [
+        ("first write", lambda: write_table(rows(10), t), 10),
+        ("same-shape rebuild", lambda: replace_relation_atomic(spark, rows(11), t), 11),
+        ("partitioned rebuild",
+         lambda: replace_relation_atomic(spark, rows(12), t, partition_by="p"), 12),
+        ("schema-changed rebuild",
+         lambda: replace_relation_atomic(spark, rows(13, "id * 2 AS v"), t, partition_by="p"), 13),
+        ("bucket-changed rebuild",
+         lambda: replace_relation_atomic(
+             spark, rows(14, "id * 2 AS v"), t, bucket_by={"cols": "k", "n": 4}), 14),
+    ]
+    seen = set()
+    for step, commit, n in steps:
+        commit()
+        loc = _table_location(spark, t)
+        assert _describe(spark, t)["Type"] == "EXTERNAL", step
+        assert re.search(r"__v[0-9a-f]{8}$", loc), (step, loc)
+        assert loc not in seen, (step, loc)
+        seen.add(loc)
+        assert os.path.abspath(_read_live_pointer(_re_sub_version(loc))) == os.path.abspath(loc), step
+        assert spark.table(t).count() == n, step
+
+
+def test_partitioned_rebuild_keeps_read_files_until_vacuum(spark):
+    """A reader's file list from before a partitioned rebuild stays on
+    disk after it (the previous version is the grace dir) and vacuum
+    then removes it."""
+    import os
+    from urllib.parse import urlparse
+
+    from dbt_fal_spark.materialize import replace_relation_atomic, vacuum_table
+
+    t = f"{SCHEMA}.part_grace"
+    df = spark.range(30).selectExpr("id AS k", "cast(id % 3 as string) AS p")
+    write_table(df, t, partition_by="p")
+    before = [urlparse(f).path for f in spark.table(t).inputFiles()]
+    assert before
+    replace_relation_atomic(spark, df.filter("k < 20"), t, partition_by="p")
+    assert all(os.path.exists(f) for f in before)
+    assert spark.table(t).count() == 20
+    assert vacuum_table(spark, t) == 1
+    assert not any(os.path.exists(f) for f in before)
+    assert spark.table(t).count() == 20
+
+
+def test_restart_reattaches_partitioned_model_with_its_rows(spark, tmp_path):
+    """A ``partition_by`` model whose live version a previous session
+    committed reads every row once FalSpark re-attaches it: attaching
+    recovers the partitions from the dir layout."""
+    from dbt_fal_spark.api import FalSpark
+
+    proj = _project(tmp_path, "reattach_part", {
+        "pt": "{{ config(partition_by='p') }}\n"
+              "SELECT id AS k, cast(id % 3 as string) AS p FROM range(30)",
+    })
+    wh = tmp_path / "wh"
+    (proj / "profiles.yml").write_text(
+        "reattach_part:\n  target: dev\n  outputs:\n    dev:\n"
+        f"      schema: reattach_part\n      warehouse_dir: {wh}\n"
+    )
+    spark.range(30).selectExpr("id AS k", "cast(id % 3 as string) AS p").write.partitionBy(
+        "p"
+    ).parquet(str(wh / "reattach_part.db" / "pt__v0123abcd"))
+    try:
+        fal = FalSpark(proj, spark=spark)
+        assert spark.table(fal._identifier("pt")).count() == 30
+    finally:
+        spark.sql("DROP DATABASE IF EXISTS reattach_part CASCADE")
+
+
+def test_attach_live_table_resolves_a_legacy_unsuffixed_dir(spark):
+    """A table written before version dirs and pointers (data in the
+    un-suffixed ``<db>/<name>`` dir) still attaches."""
+    from pathlib import Path
+    from urllib.parse import urlparse
+
+    from dbt_fal_spark.materialize import attach_live_table
+
+    db_dir = Path(urlparse(spark.catalog.getDatabase(SCHEMA).locationUri).path)
+    spark.range(6).write.mode("overwrite").parquet(str(db_dir / "legacy"))
+    assert attach_live_table(spark, f"{SCHEMA}.legacy", db_dir)
+    assert spark.table(f"{SCHEMA}.legacy").count() == 6
+    assert not attach_live_table(spark, f"{SCHEMA}.nothing_here", db_dir)
+
+
+def test_live_pointer_roundtrip_and_legacy_formats(tmp_path):
+    """The pointer names the version dir; older pointer files (an
+    absolute path on one line, or a second nonce line) parse the same."""
+    import os
+
+    from dbt_fal_spark.materialize import (
+        _live_pointer_path,
+        _read_live_pointer,
+        _write_live_pointer,
+    )
+
+    base = str(tmp_path / "t")
+    loc = str(tmp_path / "t__v01234567")
+    _write_live_pointer(base, loc)
+    assert _read_live_pointer(base) == os.path.abspath(loc)
+    for legacy in (os.path.abspath(loc), f"{os.path.abspath(loc)}\n0123456789abcdef"):
+        with open(_live_pointer_path(base), "w") as f:
+            f.write(legacy)
+        assert _read_live_pointer(base) == os.path.abspath(loc)
+
+
+def test_pointer_write_holds_commit_lock(spark, monkeypatch):
+    """The live pointer is rewritten while the per-table commit lock is
+    held, so a maintenance verb's token check under that lock sees the
+    catalog and the pointer agree."""
+    import dbt_fal_spark.materialize as mat
+
+    ident = f"{SCHEMA}.lock_tbl"
+    seen = {"locked": None, "calls": 0}
+    real = mat._write_live_pointer
+
+    def spy(base, loc):
+        seen["calls"] += 1
+        seen["locked"] = mat._FLIP_LOCKS[ident.lower()].locked()
+        return real(base, loc)
+
+    monkeypatch.setattr(mat, "_write_live_pointer", spy)
+    df = spark.range(10).selectExpr("id AS k", "cast(id % 3 as string) AS p")
+    mat.replace_relation_atomic(spark, df, ident, partition_by="p")
+    assert seen["calls"] == 1
+    assert seen["locked"] is True, "pointer rewrite ran outside the commit lock"
+
+
+def test_swap_token_changes_across_same_mtime_tick_rebuilds(spark):
+    """Two partitioned rebuilds forced onto the SAME directory mtime
+    still produce different tokens: every commit mints a new location."""
+    import os
+
+    from dbt_fal_spark.materialize import (
+        _table_location,
+        replace_relation_atomic,
+        table_swap_token,
+    )
+
+    ident = f"{SCHEMA}.tick_tbl"
+    pinned = (1_700_000_000, 1_700_000_000)
+    df1 = spark.range(10).selectExpr("id AS k", "cast(id % 3 as string) AS p")
+    replace_relation_atomic(spark, df1, ident, partition_by="p")
+    os.utime(_table_location(spark, ident), pinned)
+    tok1 = table_swap_token(spark, ident)
+
+    df2 = spark.range(20).selectExpr("id AS k", "cast(id % 3 as string) AS p")
+    replace_relation_atomic(spark, df2, ident, partition_by="p")
+    os.utime(_table_location(spark, ident), pinned)  # the coarse same-tick landing
+    tok2 = table_swap_token(spark, ident)
+    assert tok1 != tok2, "same-tick rebuild produced an equal swap token"
+
+
+def test_stale_swap_token_aborts_a_partitioned_commit(spark):
+    """A token captured before a partitioned rebuild mismatches after
+    it, even with the dir mtime pinned equal, so a commit conditioned on
+    it aborts; a token captured after the rebuild commits."""
+    import os
+
+    from dbt_fal_spark.materialize import (
+        ConcurrentRebuildError,
+        _table_location,
+        replace_relation_atomic,
+        table_swap_token,
+    )
+
+    ident = f"{SCHEMA}.stale_tok_tbl"
+    pinned = (1_700_000_000, 1_700_000_000)
+    df1 = spark.range(8).selectExpr("id AS k", "cast(id % 2 as string) AS p")
+    replace_relation_atomic(spark, df1, ident, partition_by="p")
+    os.utime(_table_location(spark, ident), pinned)
+    stale_tok = table_swap_token(spark, ident)
+
+    df2 = spark.range(16).selectExpr("id AS k", "cast(id % 2 as string) AS p")
+    replace_relation_atomic(spark, df2, ident, partition_by="p")
+    os.utime(_table_location(spark, ident), pinned)
+    with pytest.raises(ConcurrentRebuildError):
+        replace_relation_atomic(spark, df1, ident, partition_by="p", expected_token=stale_tok)
+    assert spark.table(ident).count() == 16
+    fresh_tok = table_swap_token(spark, ident)
+    replace_relation_atomic(spark, df2, ident, partition_by="p", expected_token=fresh_tok)
+
+
+def test_swap_token_detects_partitioned_rebuild(spark, tmp_path):
+    """A partitioned model rebuilt by a run changes the swap token, so
+    optimistic compaction can detect the rebuild."""
+    from dbt_fal_spark.api import FalSpark
+    from dbt_fal_spark.materialize import table_swap_token
+
+    proj = _project(tmp_path, "tok_part", {
+        "t": "{{ config(partition_by='p') }}\n"
+             "SELECT id % 3 AS p, id AS v FROM range(60)",
+    })
+    fal = FalSpark(proj, spark=spark)
+    fal.run(select=["t"])
+    ident = fal._identifier("t")
+    tok1 = table_swap_token(spark, ident)
+    fal.run(select=["t"])
+    tok2 = table_swap_token(spark, ident)
+    assert tok1 != tok2, "rebuild not visible in the swap token"
+    assert tok1[0] != tok2[0], "the rebuild reused its version dir"

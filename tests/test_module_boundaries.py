@@ -1,6 +1,7 @@
 """Module boundaries. ``materialize`` owns the on-disk table format
-(version dirs, live pointer, vacuum keep sets, swap tokens): ``api`` calls
-its public verbs and must not reach into the format's internals. And
+(version dirs, live pointer, vacuum keep sets, swap tokens) and the table
+DDL that commits and attaches them: ``api`` calls its public verbs and
+must not reach into the format's internals. And
 ``session`` alone names the AQE conf and the profile marker: every
 operator builds one plan, and the profile only sets session confs."""
 
@@ -63,3 +64,27 @@ def test_only_session_reads_the_aqe_conf():
         ):
             readers.append(str(path.relative_to(PACKAGE)))
     assert readers == [], f"modules naming a session-only conf: {readers}"
+
+
+TABLE_DDL = ("SET LOCATION", "RENAME TO", "MSCK REPAIR", "RECOVER PARTITIONS", "USING parquet LOCATION")
+
+
+def test_only_materialize_holds_table_ddl():
+    """No string literal outside ``materialize.py`` holds the DDL that
+    commits or attaches a table's version dir (comments and docstrings
+    may name it)."""
+    holders = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        if path.name == "materialize.py" and path.parent == PACKAGE:
+            continue
+        tree = ast.parse(path.read_text())
+        docs = _docstrings(tree)
+        if any(
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and any(ddl in node.value for ddl in TABLE_DDL)
+            and node not in docs
+            for node in ast.walk(tree)
+        ):
+            holders.append(str(path.relative_to(PACKAGE)))
+    assert holders == [], f"modules holding table DDL: {holders}"

@@ -12,6 +12,7 @@ from pathlib import Path
 import pytest
 
 from dbt_fal_spark.api import FalSpark
+from dbt_fal_spark.materialize import live_version_dir
 from dbt_fal_spark.project.loader import load_profile
 
 
@@ -83,6 +84,12 @@ def test_no_profiles_yml_is_fine(tmp_path):
     assert load_profile(tmp_path) is None
 
 
+def _live_dir_inside(db_dir, name) -> bool:
+    """The table's live version dir lies in ``db_dir`` and holds files."""
+    live = live_version_dir(db_dir, name)
+    return live is not None and Path(live).parent == db_dir.resolve() and any(Path(live).iterdir())
+
+
 def test_target_switch_changes_warehouse_and_context(spark, profiled_project, tmp_path):
     for tgt in ("profiled_dev", "profiled_prod"):
         spark.sql(f"DROP DATABASE IF EXISTS {tgt} CASCADE")
@@ -92,8 +99,7 @@ def test_target_switch_changes_warehouse_and_context(spark, profiled_project, tm
     assert dev.threads == 2
     statuses = dev.run()
     assert all(s == "success" for s in statuses.values()), statuses
-    dev_table_dir = tmp_path / "wh_dev" / "profiled_dev.db" / "one"
-    assert dev_table_dir.is_dir() and any(dev_table_dir.iterdir())
+    assert _live_dir_inside(tmp_path / "wh_dev" / "profiled_dev.db", "one")
     # script saw the active target name
     assert (profiled_project / "record_target.py.target").read_text() == "dev"
 
@@ -101,8 +107,7 @@ def test_target_switch_changes_warehouse_and_context(spark, profiled_project, tm
     assert prod.target_name == "prod" and prod.schema == "profiled_prod"
     statuses = prod.run()
     assert all(s == "success" for s in statuses.values()), statuses
-    prod_table_dir = tmp_path / "wh_prod" / "profiled_prod.db" / "one"
-    assert prod_table_dir.is_dir() and any(prod_table_dir.iterdir())
+    assert _live_dir_inside(tmp_path / "wh_prod" / "profiled_prod.db", "one")
     assert (profiled_project / "record_target.py.target").read_text() == "prod"
 
     # the two targets are fully disjoint: schemas and directories

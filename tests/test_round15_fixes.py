@@ -15,9 +15,6 @@ Findings fixed this round:
 - _vacuum_versions re-checks the in-flight writer registry per
   directory, immediately before each rmtree (ADVICE r14: the
   caller-side snapshot left a register-after-snapshot window).
-- table_swap_token carries a per-commit nonce from the live pointer
-  file (ADVICE r14: drop-first swaps landing in the same coarse
-  filesystem mtime tick compared equal).
 - _clean_output on documents that become fully covered by duplicated
   spans: verified consistent with the oracle (both drop the doc) —
   adversarial pass came up empty, behavior locked here.
@@ -123,7 +120,7 @@ def test_vocab_entries_still_match_their_oracles(spark):
 
 
 # ---------------------------------------------------------------------------
-# vacuum in-flight re-check + swap-token nonce (ADVICE r14)
+# vacuum in-flight re-check (ADVICE r14)
 # ---------------------------------------------------------------------------
 
 
@@ -152,60 +149,6 @@ def test_vacuum_rechecks_inflight_registry_per_directory(tmp_path):
     # after deregistration the same dir is collectable
     assert mat._vacuum_versions(str(base), keep=set()) == 1
     assert not os.path.isdir(late)
-
-
-def test_swap_token_changes_across_same_mtime_tick_rebuilds(spark, tmp_path):
-    """Two drop-first swaps forced onto the SAME directory mtime must
-    still produce different tokens — the per-commit nonce, not the
-    coarse-filesystem timestamp, carries the version (ADVICE r14)."""
-    from dbt_fal_spark.materialize import (
-        _table_location,
-        replace_relation_atomic,
-        table_swap_token,
-    )
-
-    ident = "r15_nonce_tbl"
-    spark.sql(f"DROP TABLE IF EXISTS {ident}")
-    df1 = spark.range(10).selectExpr("id AS k", "cast(id % 3 as string) AS p")
-    replace_relation_atomic(spark, df1, ident, partition_by="p")
-    loc1 = _table_location(spark, ident)
-    pinned = (1_700_000_000, 1_700_000_000)
-    os.utime(loc1, pinned)
-    tok1 = table_swap_token(spark, ident)
-
-    df2 = spark.range(20).selectExpr("id AS k", "cast(id % 3 as string) AS p")
-    replace_relation_atomic(spark, df2, ident, partition_by="p")
-    loc2 = _table_location(spark, ident)
-    os.utime(loc2, pinned)  # simulate the coarse same-tick landing
-    tok2 = table_swap_token(spark, ident)
-    assert tok1 != tok2, "same-tick rebuild produced an equal swap token"
-    spark.sql(f"DROP TABLE IF EXISTS {ident}")
-
-
-def test_live_pointer_roundtrip_with_nonce(tmp_path):
-    """Pointer file carries (location, nonce); location parsing is
-    unchanged for readers, and every write refreshes the nonce. Pre-r15
-    single-line pointer files still parse (nonce None)."""
-    from dbt_fal_spark.materialize import (
-        _live_pointer_path,
-        _read_live_nonce,
-        _read_live_pointer,
-        _write_live_pointer,
-    )
-
-    base = str(tmp_path / "t")
-    loc = str(tmp_path / "t__v01234567")
-    _write_live_pointer(base, loc)
-    assert _read_live_pointer(base) == os.path.abspath(loc)
-    n1 = _read_live_nonce(base)
-    assert n1
-    _write_live_pointer(base, loc)
-    assert _read_live_nonce(base) != n1
-    # pre-r15 format: single line, no nonce
-    with open(_live_pointer_path(base), "w") as f:
-        f.write(os.path.abspath(loc))
-    assert _read_live_pointer(base) == os.path.abspath(loc)
-    assert _read_live_nonce(base) is None
 
 
 # ---------------------------------------------------------------------------

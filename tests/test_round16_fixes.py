@@ -1,14 +1,6 @@
 """Round-16 regression locks (VERDICT r15 items 4/6 + ADVICE r15).
 
 Findings fixed this round:
-- ADVICE r15 (medium): in the drop-first temp-swap branch of
-  replace_relation_atomic, the committed-location read and the live
-  pointer rewrite (which mints the per-commit nonce) now run INSIDE the
-  commit_lock block — previously a maintenance verb running
-  _check_expected under the lock between the RENAME and the pointer
-  rewrite read the STALE nonce; a same-mtime-tick landing then made its
-  expected_token compare equal and it committed recompacted stale data
-  over the fresh rebuild.
 - ADVICE r15 (low): _vacuum_versions re-reads the live pointer PER
   DIRECTORY (after the in-flight re-check — order matters, writers
   deregister only after the pointer rewrite) before each rmtree, so a
@@ -29,12 +21,6 @@ Findings fixed this round:
     registry (a rename/delete leaves the staged window pointing at
     nothing while an unstaged entry silently fills the 50th slot) and
     reports stale snapshot keys;
-  * the two-line live pointer file: each read opens the file ONCE
-    (atomic os.replace means any single open sees one committed
-    version); no caller pairs loc+nonce across two opens, and the one
-    pair-consumer (table_swap_token) reads under the same commit_lock
-    all writers hold — verified, behavior locked in round 15's
-    roundtrip test; nothing further to fix.
 """
 
 from __future__ import annotations
@@ -45,78 +31,6 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = "/root/testdata/sf0.001"
-
-
-# ---------------------------------------------------------------------------
-# ADVICE r15 medium: pointer rewrite atomic with the drop-first catalog swap
-# ---------------------------------------------------------------------------
-
-
-def test_drop_first_pointer_write_holds_commit_lock(spark, monkeypatch):
-    """_write_live_pointer must run while the per-table commit lock is
-    held in the drop-first branch (partitioned table forces it) — the
-    nonce rewrite is what makes a concurrent verb's token check see the
-    new version."""
-    import dbt_fal_spark.materialize as mat
-
-    ident = "r16_lock_tbl"
-    spark.sql(f"DROP TABLE IF EXISTS {ident}")
-    seen = {"locked": None, "calls": 0}
-    real = mat._write_live_pointer
-
-    def spy(base, loc):
-        seen["calls"] += 1
-        seen["locked"] = mat._FLIP_LOCKS[ident.lower()].locked()
-        return real(base, loc)
-
-    monkeypatch.setattr(mat, "_write_live_pointer", spy)
-    df = spark.range(10).selectExpr("id AS k", "cast(id % 3 as string) AS p")
-    mat.replace_relation_atomic(spark, df, ident, partition_by="p")
-    assert seen["calls"] == 1
-    assert seen["locked"] is True, (
-        "pointer/nonce rewrite ran outside commit_lock — the ADVICE r15 "
-        "stale-nonce window is open"
-    )
-    spark.sql(f"DROP TABLE IF EXISTS {ident}")
-
-
-def test_swap_token_read_after_swap_sees_new_nonce(spark):
-    """End-to-end shape of the ADVICE r15 scenario: a token captured
-    before a drop-first rebuild must mismatch a token captured after it,
-    even when the directory mtime is pinned equal — and the post-rebuild
-    token must be self-consistent immediately (no stale-nonce window)."""
-    from dbt_fal_spark.materialize import (
-        ConcurrentRebuildError,
-        _table_location,
-        replace_relation_atomic,
-        table_swap_token,
-    )
-
-    ident = "r16_nonce_window_tbl"
-    spark.sql(f"DROP TABLE IF EXISTS {ident}")
-    df1 = spark.range(8).selectExpr("id AS k", "cast(id % 2 as string) AS p")
-    replace_relation_atomic(spark, df1, ident, partition_by="p")
-    pinned = (1_700_000_000, 1_700_000_000)
-    os.utime(_table_location(spark, ident), pinned)
-    stale_tok = table_swap_token(spark, ident)
-
-    df2 = spark.range(16).selectExpr("id AS k", "cast(id % 2 as string) AS p")
-    replace_relation_atomic(spark, df2, ident, partition_by="p")
-    os.utime(_table_location(spark, ident), pinned)
-    # the verb's conditional commit with the stale token must abort
-    try:
-        replace_relation_atomic(
-            spark, df1, ident, partition_by="p", expected_token=stale_tok
-        )
-        raise AssertionError("stale-token swap committed (lost update)")
-    except ConcurrentRebuildError:
-        pass
-    # a token captured NOW (post-rebuild, no further writes) must commit
-    fresh_tok = table_swap_token(spark, ident)
-    replace_relation_atomic(
-        spark, df2, ident, partition_by="p", expected_token=fresh_tok
-    )
-    spark.sql(f"DROP TABLE IF EXISTS {ident}")
 
 
 # ---------------------------------------------------------------------------

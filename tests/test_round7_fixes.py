@@ -304,7 +304,8 @@ def test_incremental_merge_is_pointer_flipped(spark, tmp_path):
 
 def test_schema_change_rebuild_falls_back_and_lands(spark, tmp_path):
     """A rebuild that changes columns cannot pointer-flip (stale catalog
-    schema) — it must take the drop-first flow and land the NEW schema."""
+    schema) — it must replace the catalog entry (DROP + RENAME) and land
+    the NEW schema."""
     from dbt_fal_spark.materialize import replace_relation_atomic, write_table
 
     spark.sql("CREATE DATABASE IF NOT EXISTS r7schema")
@@ -376,7 +377,7 @@ def test_bucketed_join_zero_shuffle_survives_compact(spark, tmp_path):
 
 
 def test_reattach_skips_interrupted_version_dirs(spark, tmp_path):
-    """A crashed pointer-flip leaves a newest '<name>__v*' dir holding
+    """A crashed commit leaves a newest '<name>__v*' dir holding
     only _temporary staging files — reattach must pick the older dir
     with COMMITTED parquet, not the staging debris (and not fail)."""
     import time as _time
@@ -389,17 +390,12 @@ def test_reattach_skips_interrupted_version_dirs(spark, tmp_path):
     from dbt_fal_spark.materialize import _table_location
 
     ident = fal._identifier("t")
-    live = _table_location(spark, ident)
-    db_dir = os.path.dirname(live)
-    import shutil as _shutil
-
-    saved = str(tmp_path / "saved_t")
-    _shutil.copytree(live, saved)  # before DROP deletes the managed dir
-    # forget the table (simulating a process restart losing the catalog)
+    db_dir = os.path.dirname(_table_location(spark, ident))
+    # forget the table (simulating a process restart losing the catalog;
+    # the external table's files stay) and its live pointer (a table
+    # written before pointers existed)
     spark.sql(f"DROP TABLE {ident}")
-    real = os.path.join(db_dir, "t")
-    if not os.path.isdir(real):
-        _shutil.copytree(saved, real)
+    os.remove(os.path.join(db_dir, "_t.__live__"))
     # fabricate a NEWER crashed version dir: only staging files inside
     _time.sleep(0.05)
     crashed = os.path.join(db_dir, "t__vdeadbeef")

@@ -111,6 +111,47 @@ def test_const_fingerprint_is_order_independent():
     assert g._const_fingerprint([1, object()]) is None
 
 
+def _probe_hash(g, probe, src):
+    """closure_hash of ``probe`` as if its source were ``src``."""
+    import unittest.mock as um
+
+    real_getsource = g.inspect.getsource
+
+    def fake_getsource(obj):
+        return src if obj is probe else real_getsource(obj)
+
+    g._ref_cache.clear()
+    try:
+        with um.patch.object(g.inspect, "getsource", fake_getsource):
+            return g.closure_hash(probe, None)
+    finally:
+        g._ref_cache.clear()
+
+
+def test_comment_and_docstring_edits_keep_the_hash():
+    g = _load_guard()
+
+    def probe(x):
+        return x + 1
+
+    base = _probe_hash(g, probe, "def probe(x):\n    return x + 1\n")
+    commented = "def probe(x):\n    # add one\n\n    return x + 1  # the successor\n"
+    documented = 'def probe(x):\n    """Add one."""\n    return x + 1\n'
+    assert _probe_hash(g, probe, commented) == base
+    assert _probe_hash(g, probe, documented) == base
+
+
+def test_one_token_code_edit_flips_the_hash():
+    g = _load_guard()
+
+    def probe(x):
+        return x + 1
+
+    base = _probe_hash(g, probe, "def probe(x):\n    return x + 1\n")
+    assert _probe_hash(g, probe, "def probe(x):\n    return x + 2\n") != base
+    assert _probe_hash(g, probe, "def probe(x):\n    return x - 1\n") != base
+
+
 def test_every_changed_entry_is_inside_the_staged_window():
     """Runs the guard CLI in a FRESH subprocess: closure hashes are
     defined at import time, and this pytest process may already have

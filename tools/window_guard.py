@@ -17,13 +17,19 @@ Protocol:
   window (the first 50 names of the final queries() ordering).
 
 Granularity (hardened in r9, VERDICT r8 item 6; widened in r10, ADVICE
-r9): the hash covers the entry's own function source, its oracle
-string, the sources of its TRANSITIVE in-package callees — module-level
+r9): the hash covers the entry's own function code, its oracle
+string, the code of its TRANSITIVE in-package callees — module-level
 names it references, ``from dbt_fal_spark...`` imports inside its body,
 and attribute calls on in-package modules — AND the VALUES of
 in-package module-level data constants those functions reference
 (N_PERM, SHINGLE_DOC_CAP, PERMS, ...), fingerprinted deterministically
 for plain-data types (scalars / str / bytes and containers thereof).
+A function's or class's code is the ``ast.dump`` of its source with
+every docstring stripped (``_code``): comments never reach the AST and
+the dump carries no line numbers, so an edit to comments, docstrings or
+blank lines leaves every hash as it was, while any edit to code flips
+it. The dump format follows the Python version's AST, so re-snapshot
+after moving to another Python minor version.
 Editing a SHARED helper or a semantic constant therefore flips every
 calling entry's hash; no manual stage-the-callers step remains for
 functions, classes, or plain-data constants. Remaining manual-staging
@@ -200,9 +206,33 @@ def _callees(fn) -> list:
     return _refs(fn)[0]
 
 
+def _code(obj) -> str:
+    """The hashed form of a function or class: ``ast.dump`` of its
+    source with every docstring stripped. Source that does not parse on
+    its own (a lambda's line) hashes as text."""
+    try:
+        src = textwrap.dedent(inspect.getsource(obj))
+    except (OSError, TypeError):
+        return "<source unavailable>"
+    try:
+        tree = ast.parse(src)
+    except SyntaxError:
+        return src
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, (ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
+            and node.body
+            and isinstance(node.body[0], ast.Expr)
+            and isinstance(node.body[0].value, ast.Constant)
+            and isinstance(node.body[0].value.value, str)
+        ):
+            node.body = node.body[1:]
+    return ast.dump(tree)
+
+
 def closure_sources(fn) -> list[tuple[str, str]]:
-    """Deterministic [(qualified name, source)] for fn's transitive
-    in-package callee closure (fn itself excluded)."""
+    """Deterministic [(qualified name, code)] for fn's transitive
+    in-package callee closure (fn itself excluded; see ``_code``)."""
     seen: set[tuple[str, str]] = set()
     stack = list(_callees(fn))
     found = []
@@ -214,13 +244,7 @@ def closure_sources(fn) -> list[tuple[str, str]]:
         seen.add(key)
         found.append((f"{key[0]}.{key[1]}", f))
         stack.extend(_callees(f))
-    srcs = []
-    for qual, f in sorted(found, key=lambda t: t[0]):
-        try:
-            srcs.append((qual, textwrap.dedent(inspect.getsource(f))))
-        except (OSError, TypeError):
-            srcs.append((qual, "<source unavailable>"))
-    return srcs
+    return [(qual, _code(f)) for qual, f in sorted(found, key=lambda t: t[0])]
 
 
 def closure_consts(fn) -> list[tuple[str, str]]:
@@ -246,10 +270,7 @@ def closure_consts(fn) -> list[tuple[str, str]]:
 
 def closure_hash(fn, oracle: str | None) -> str:
     h = hashlib.sha256()
-    try:
-        h.update(inspect.getsource(fn).encode())
-    except (OSError, TypeError):
-        h.update(b"<source unavailable>")
+    h.update(_code(fn).encode())
     h.update(b"\x1f")
     h.update((oracle or "").encode())
     for qual, src in closure_sources(fn):
