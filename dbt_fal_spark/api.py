@@ -11,18 +11,26 @@ into RAM on every ``ref`` (project.py:696-715).
     df = fal.ref("orders_daily")             # lazy DataFrame
     fal.write_to_model(df2, "audit", mode="append")
     fal.execute_sql("SELECT * FROM {{ ref('customers') }} LIMIT 10")
+
+User Python (before/after scripts, pre/post hooks, global scripts and
+Python models — reference: FalScript.exec, fal_script.py:258-299) has
+one path: ``FalSpark._globals`` builds the namespace, ``_exec_user_code``
+is the one in-process ``exec``, a model with ``meta.fal.environment``
+hands its code to that environment's one child runner instead
+(``environments.py``), and ``FalSpark._side_tasks`` lists one side of a
+model's scripts and hooks for both ``run`` and ``run_scripts``.
 """
 
 from __future__ import annotations
 
 import ast
-import dataclasses
 import json
 import logging
 import os
 import re
+import tempfile
 import time
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 from pathlib import Path
 from typing import Any, Callable
 
@@ -40,10 +48,10 @@ from dbt_fal_spark.materialize import (
 )
 from dbt_fal_spark.plans.executor import parallel_executor
 from dbt_fal_spark.plans.node_graph import NodeGraph, NodeKind
-from dbt_fal_spark.plans.schedule import FAILURE, SUCCESS, Scheduler, TaskGroup
+from dbt_fal_spark.plans.schedule import SUCCESS, Scheduler, TaskGroup
 from dbt_fal_spark.plans.selectors import model_checksums, select_nodes
 from dbt_fal_spark.project.jinja import render_model_sql
-from dbt_fal_spark.environments import load_environments
+from dbt_fal_spark.environments import CloudEnvironment, load_environments, user_code
 from dbt_fal_spark.project.loader import load_profile, load_project
 from dbt_fal_spark.project.manifest import DbtModel, DbtTest
 from dbt_fal_spark.session import get_spark
@@ -98,7 +106,8 @@ def _model_bound_write(fal: "FalSpark", model: "DbtModel"):
     reference's partial happens to let it slip through and silently
     redirect the write to a different model — an accidental hole, not a
     contract — so this binding raises TypeError on it too (documented
-    deviation)."""
+    deviation). ``.called`` turns True once a write has succeeded: a
+    fal-style Python model must have written itself."""
 
     def _write(df, *_a, **kw):
         if _a:
@@ -118,8 +127,25 @@ def _model_bound_write(fal: "FalSpark", model: "DbtModel"):
             )
         kw.setdefault("mode", "overwrite")
         fal.write_to_model(df, model.name, **kw)
+        _write.called = True
 
+    _write.called = False
     return _write
+
+
+def _to_pandas(fn):
+    """``fn`` with its DataFrame result pulled to the driver as pandas."""
+    return lambda *a, **kw: fn(*a, **kw).toPandas()
+
+
+def _exec_user_code(path: Path, namespace: dict) -> dict:
+    """Run the script or Python model at ``path`` in ``namespace`` as the
+    ``__main__`` module (reference: main_module.feature — ``if __name__ ==
+    "__main__":`` blocks run); a notebook runs its code cells. Returns the
+    namespace."""
+    namespace.update(__name__="__main__", __file__=str(path))
+    exec(compile(user_code(path), str(path), "exec"), namespace)
+    return namespace
 
 
 def _test_threshold(count: int, expr: str) -> bool:
@@ -172,6 +198,7 @@ class FalSpark:
         self.state_path = Path(state_path) if state_path else None
         self.defer = defer
         self._run_selected: set[str] | None = None  # short names, during run()
+        self._full_refresh = False  # dbt --full-refresh, during run()
         # profiles.yml-lite: the active target supplies schema, warehouse
         # location, thread default and per-target Spark conf (reference:
         # parse.py:59-98 + load_db_profile.py:40-60); absent profiles.yml
@@ -249,8 +276,6 @@ class FalSpark:
             # host, regardless of fal_project.yml. Out of scope here
             # (D10): wrap them in the documented stub so execution fails
             # loudly instead of silently running locally.
-            from dbt_fal_spark.environments import CloudEnvironment
-
             self.environments = {
                 name: CloudEnvironment(
                     name=name,
@@ -376,17 +401,81 @@ class FalSpark:
                 f"(defined: {', '.join(sorted(self.environments)) or 'none'})"
             ) from None
 
-    def _current_model(self, model: DbtModel, **extra) -> dict:
-        """The ``current_model`` fields every script, hook and Python
-        model context carries, plus ``extra``."""
-        return dict(
-            name=model.name,
-            alias=model.target_name,
-            status=model.status,
-            meta=model.meta,
-            is_incremental=model.is_incremental,
-            **extra,
-        )
+    def _context(self, model: DbtModel | None, arguments: dict | None = None) -> Context:
+        """The ``context`` user Python gets (reference: fal_script.py:
+        86-153); ``current_model`` is None for a global script or a
+        notebook. An isolated run gets it as JSON (``asdict``)."""
+        current = None
+        if model is not None:
+            current = CurrentModel(
+                name=model.name,
+                alias=model.target_name,
+                status=model.status,
+                columns=model.columns,
+                tests=model.tests,
+                meta=model.meta,
+                is_incremental=model.is_incremental,
+                adapter_response=self._adapter_responses.get(model.name),
+            )
+        return Context(current_model=current, arguments=arguments or {}, target=self.target_name)
+
+    def _globals(
+        self,
+        model: DbtModel | None,
+        *,
+        arguments: dict | None = None,
+        pandas: bool = False,
+        hook: bool = False,
+    ) -> dict[str, Any]:
+        """The globals every script, hook, global script, Python model
+        and notebook (``magics.init_fal``) runs with (reference:
+        FalScript.exec, fal_script.py:258-299). ``write_to_model`` is
+        bound to ``model`` when there is one. ``pandas`` hands every read
+        back as a pandas frame (the model's ``interop: pandas`` opt-in);
+        otherwise reads are lazy DataFrames carrying ``.to_pandas()``.
+        ``hook`` bans both writes: hooks observe model runs, writes belong
+        in the model or an after script (reference: fal_script.py:284-296,
+        run.feature 'Post hooks with write_to_model will fail')."""
+        read = _to_pandas if pandas else (lambda fn: fn)
+
+        def not_allowed(fn_name: str):
+            def _raise(*_a, **_kw):
+                raise RuntimeError(
+                    f"{fn_name} is not allowed in hooks — hooks observe "
+                    "model runs; move the write into the model or an "
+                    "after script"
+                )
+
+            return _raise
+
+        if hook:
+            write_model, write_source = not_allowed("write_to_model"), not_allowed("write_to_source")
+        else:
+            write_model = self.write_to_model if model is None else _model_bound_write(self, model)
+            write_source = self.write_to_source
+        return {
+            "context": self._context(model, arguments),
+            "ref": read(self.ref),
+            "source": read(self.source),
+            "execute_sql": read(self.execute_sql),
+            "write_to_model": write_model,
+            "write_to_source": write_source,
+            "list_models": self.list_models,
+            "list_models_ids": self.list_models_ids,
+            "list_sources": self.list_sources,
+            "list_tests": self.list_tests,
+            "list_features": self.list_features,
+            "session": self.spark,
+        }
+
+    def _side_tasks(self, model: DbtModel, before: bool) -> list[_ScriptTask]:
+        """One side of ``model``'s user Python, in run order: its before
+        scripts then its pre-hooks, or its after scripts then its
+        post-hooks."""
+        return [_ScriptTask(self, model, script) for script in model.get_scripts(before=before)] + [
+            _ScriptTask(self, model, h.path, h.arguments, environment=h.environment, is_hook=True)
+            for h in model.get_hooks(pre=before)
+        ]
 
     # URL schemes teleport/source paths accept verbatim (reference:
     # A/src/dbt/fal/adapters/teleport/info.py:32-73 builds local and
@@ -704,16 +793,11 @@ class FalSpark:
             if kind == NodeKind.FAL_SCRIPT:
                 continue  # scripts attach to their model below
             model: DbtModel = self.graph.node_attr(node, "model")
-            pre, post = (
-                [_ScriptTask(self, model, script) for script in model.get_scripts(before=side)]
-                + [_ScriptTask.hook(self, model, h) for h in model.get_hooks(pre=side)]
-                for side in (True, False)
-            )
             groups[node] = TaskGroup(
                 group_id=node,
                 task=_ModelTask(self, node),
-                pre_hooks=pre,
-                post_hooks=post,
+                pre_hooks=self._side_tasks(model, True),
+                post_hooks=self._side_tasks(model, False),
             )
         for node, group in groups.items():
             for dep in self.graph.graph.predecessors(node):
@@ -909,7 +993,9 @@ class FalSpark:
         ``use_last_run=False``, the reference's ``--all``). ``before``
         scopes which side runs — True = BEFORE scripts/pre-hooks only (the
         reference's `fal run --before`), False = AFTER/post only (the
-        reference's plain `fal run`), None = both (API convenience).
+        reference's plain `fal run`), None = both (API convenience). A
+        model's tasks run in `flow run` order: before scripts, pre-hooks,
+        after scripts, post-hooks (``_side_tasks``).
 
         GLOBAL scripts (schema.yml top-level ``fal:`` block) run once per
         invocation — before everything on the BEFORE side, after
@@ -925,20 +1011,20 @@ class FalSpark:
         ran: list[str] = []
         context: dict = {"errors": []}
         sides = (True, False) if before is None else (before,)
-        # reference fal_runner.py:129-137: a --scripts filter applies to
-        # global scripts too — `fal run --scripts x.py --globals` runs
-        # only global scripts named in the filter
-        def _global_scripts(side: str) -> list[str]:
-            return [
-                s
-                for s in self.manifest.global_scripts[side]
-                if not only_scripts or s in only_scripts
-            ]
 
-        if run_globals and True in sides:
-            for script in _global_scripts("before"):
-                _ScriptTask(self, None, script).execute(context)
-                ran.append(f"script.GLOBAL.BEFORE.{script}")
+        def run_global_scripts(side: bool) -> None:
+            # reference fal_runner.py:129-137: a --scripts filter applies
+            # to global scripts too — `fal run --scripts x.py --globals`
+            # runs only global scripts named in the filter
+            if not run_globals or side not in sides:
+                return
+            key = "before" if side else "after"
+            for script in self.manifest.global_scripts[key]:
+                if not only_scripts or script in only_scripts:
+                    _ScriptTask(self, None, script).execute(context)
+                    ran.append(f"script.GLOBAL.{key.upper()}.{script}")
+
+        run_global_scripts(True)
         selected = select_nodes(self.graph, select, exclude, state=self._load_state())
         if use_last_run:
             rr = self.target_dir / "run_results.json"
@@ -954,21 +1040,16 @@ class FalSpark:
                 continue
             model: DbtModel = self.graph.node_attr(node, "model")
             for side in sides:
-                for script in model.get_scripts(before=side):
-                    if only_scripts and script not in only_scripts:
+                for task in self._side_tasks(model, side):
+                    if only_scripts and task.script not in only_scripts:
                         continue
-                    _ScriptTask(self, model, script).execute(context)
-                    ran.append(f"script.{model.name}.{'BEFORE' if side else 'AFTER'}.{script}")
-            for pre in sides:
-                for h in model.get_hooks(pre=pre):
-                    if only_scripts and h.path not in only_scripts:
-                        continue
-                    _ScriptTask.hook(self, model, h).execute(context)
-                    ran.append(f"hook.{model.name}.{'PRE' if pre else 'POST'}.{h.path}")
-        if run_globals and False in sides:
-            for script in _global_scripts("after"):
-                _ScriptTask(self, None, script).execute(context)
-                ran.append(f"script.GLOBAL.AFTER.{script}")
+                    task.execute(context)
+                    if task.is_hook:
+                        label = f"hook.{model.name}.{'PRE' if side else 'POST'}"
+                    else:
+                        label = f"script.{model.name}.{'BEFORE' if side else 'AFTER'}"
+                    ran.append(f"{label}.{task.script}")
+        run_global_scripts(False)
         return ran
 
     def test(self, select: str | list[str] | None = None) -> list[dict]:
@@ -1337,7 +1418,7 @@ class _ModelTask:
             return self._run_python_model(model)
         identifier = f"{fal.schema}.{model.target_name}"
         exists = spark.catalog.tableExists(identifier)
-        full_refresh = getattr(fal, "_full_refresh", False)
+        full_refresh = fal._full_refresh
         df = spark.sql(fal._render(
             model.raw_sql,
             this_name=identifier,
@@ -1399,105 +1480,60 @@ class _ModelTask:
           parse.py:120-140): the body IS the model and must call
           ``write_to_model(...)`` (target defaults to this model).
 
-        pandas interop (the reference's data currency — project.py:
-        696-715 returns pandas from every read): opt in per model with
-        schema.yml ``meta: {fal: {interop: pandas}}`` or, dbt-style,
-        ``dbt.config(interop="pandas")`` — reads then hand the model
-        pandas frames and the returned/written frame may be pandas.
-        Without the opt-in, reads stay lazy Spark DataFrames carrying a
-        ``.to_pandas()`` escape hatch, and pandas returns are still
-        accepted. The pull to the driver happens only at these explicit
-        boundaries; aggregate-then-convert keeps it bounded at scale."""
+        The module runs with the globals a script of this model gets
+        (``FalSpark._globals``). pandas interop (the reference's data
+        currency — project.py:696-715 returns pandas from every read):
+        opt in per model with schema.yml ``meta: {fal: {interop:
+        pandas}}`` or, dbt-style, ``dbt.config(interop="pandas")`` —
+        reads then hand the model pandas frames and the returned/written
+        frame may be pandas. Without the opt-in, reads stay lazy Spark
+        DataFrames carrying a ``.to_pandas()`` escape hatch, and pandas
+        returns are still accepted. The pull to the driver happens only
+        at these explicit boundaries; aggregate-then-convert keeps it
+        bounded at scale."""
         fal = self.fal
-        if model.environment:
-            return self._run_python_model_isolated(model)
-        code = model.python_model.read_text()
-        if model.python_model.suffix == ".ipynb":
-            code = _process_ipynb(code)
-        pandas_mode = ((model.meta or {}).get("fal", {}) or {}).get("interop") == "pandas"
-
-        def _read(df: DataFrame):
-            return df.toPandas() if pandas_mode else fal._with_pandas_alias(df)
-
-        wrote = {"called": False}
-
-        _bound_write = _model_bound_write(fal, model)
-
-        def _write(df, *a, **kw):
-            # model-scoped write_to_model: the target is THIS model
-            # (reference fal models omit the name — orders_forecast.py:57).
-            # Flag only AFTER the write succeeds: flipping it before
-            # validation would let a caught TypeError path count as
-            # "wrote" and report stale-table success
-            _bound_write(df, *a, **kw)
-            wrote["called"] = True
-
-        namespace: dict = {
-            # reference contract: scripts/models execute as __main__
-            # (cli_tests/features/main_module.feature — `if __name__ ==
-            # "__main__":` blocks must run)
-            "__name__": "__main__",
-            "__file__": str(model.python_model),
-            "ref": lambda *parts: _read(fal.ref(parts[-1])),
-            "source": lambda s, t: _read(fal.source(s, t)),
-            "execute_sql": lambda q: _read(fal.execute_sql(q)),
-            "write_to_model": _write,
-            "session": fal.spark,
-            "context": Context(
-                current_model=CurrentModel(
-                    **fal._current_model(model, columns=model.columns, tests=[])
-                ),
-                target=fal.target_name,
-            ),
-        }
-        exec(compile(code, str(model.python_model), "exec"), namespace)
-        fn = namespace.get("model")
         # alias-aware: materialize and read back under target_name, the
         # same identifier ref() resolution / bootstrap / docs use — a
         # config.alias'd python model otherwise writes schema.name while
         # downstream refs read schema.alias
         identifier = f"{fal.schema}.{model.target_name}"
-        if fn is None:
-            # fal-style script model: the body must have materialized
-            # itself through the injected write_to_model
-            if not wrote["called"]:
+        if model.environment:
+            n = self._run_python_model_isolated(model, identifier)
+        else:
+            pandas_mode = ((model.meta or {}).get("fal", {}) or {}).get("interop") == "pandas"
+            namespace = fal._globals(model, pandas=pandas_mode)
+            write = namespace["write_to_model"]
+            fn = _exec_user_code(model.python_model, namespace).get("model")
+            if fn is not None:
+                df = fn(_DbtObj(fal, model, pandas_mode), fal.spark)
+                if df is None:
+                    raise ValueError(f"python model {model.name} returned no DataFrame")
+                n = _write_model(fal.spark, fal._to_spark(df), identifier)()
+            elif write.called:
+                # the body may have written more than once: count what it left
+                n = fal.spark.table(identifier).count()
+            else:
                 raise ValueError(
                     f"python model {model.name} defines no model(dbt, session) "
                     "and its body never called write_to_model(...) — one of "
                     "the two contracts is required"
                 )
-            # the body may have written more than once: count what it left
-            n = fal.spark.table(identifier).count()
-        else:
-            dbt_obj = _DbtObj(fal, model, pandas_meta=pandas_mode)
-            df = fn(dbt_obj, fal.spark)
-            if df is None:
-                raise ValueError(f"python model {model.name} returned no DataFrame")
-            n = _write_model(fal.spark, fal._to_spark(df), identifier)()
         fal._record(model, "CREATE TABLE", n)
         return SUCCESS
 
-    def _run_python_model_isolated(self, model: DbtModel) -> int:
+    def _run_python_model_isolated(self, model: DbtModel, identifier: str) -> int:
         """Python model with ``meta.fal.environment``: run it in the named
         env's interpreter (reference: structured_hooks.feature 'Run
-        isolated models'). A SparkSession cannot cross interpreters, so
-        the data boundary is parquet interchange — the model's DECLARED
-        dependencies (AST-extracted refs/sources, D5) are pre-exported,
-        the child transforms in pandas, and the parquet result is
-        materialized as the model table. Bounded by the same
-        aggregate-then-isolate discipline as the pandas interop: declare
-        an aggregating parent model and isolate the small last mile.
-        A ``.ipynb`` model is not supported isolated (the env has no
-        notebook strip step) — convert it to .py or drop the env."""
+        isolated models') and return the rows materialized. A
+        SparkSession cannot cross interpreters, so the data boundary is
+        parquet interchange — the model's DECLARED dependencies
+        (AST-extracted refs/sources, D5) are pre-exported, the child
+        transforms in pandas, and the parquet result is materialized as
+        the model table. Bounded by the same aggregate-then-isolate
+        discipline as the pandas interop: declare an aggregating parent
+        model and isolate the small last mile."""
         fal = self.fal
         env = fal._environment(model, model.environment)
-        if model.python_model.suffix == ".ipynb":
-            raise ValueError(
-                f"isolated execution of notebook model {model.name} is not "
-                "supported — convert it to .py or remove meta.fal.environment"
-            )
-        import tempfile
-
         with tempfile.TemporaryDirectory(prefix="fal_isolated_") as td:
             relations: dict[str, str] = {}
             sources: dict[str, str] = {}
@@ -1517,84 +1553,76 @@ class _ModelTask:
             env.run_python_model(
                 model.python_model,
                 {
+                    **asdict(fal._context(model)),
                     "relations": relations,
                     "sources": sources,
                     "out": out,
-                    "this": f"{fal.schema}.{model.target_name}",
-                    "current_model": fal._current_model(model),
-                    "target": fal.target_name,
+                    "this": identifier,
                 },
             )
-            n = _write_model(
-                fal.spark, fal.spark.read.parquet(out), f"{fal.schema}.{model.target_name}"
-            )()
-        fal._record(model, "CREATE TABLE", n)
-        return SUCCESS
+            return _write_model(fal.spark, fal.spark.read.parquet(out), identifier)()
 
 
 class _DbtObj:
-    """The ``dbt`` handle passed into Python models (dbt-style)."""
+    """The ``dbt`` handle passed into Python models (dbt-style):
+    ``this``, ``config(**kw)`` (``config.get(key)`` reads it back) and
+    ``ref``/``source``, which hand back pandas frames in pandas mode."""
 
-    def __init__(self, fal: FalSpark, model: DbtModel, pandas_meta: bool = False) -> None:
+    def __init__(self, fal: FalSpark, model: DbtModel, pandas_meta: bool) -> None:
         self._fal = fal
         self._pandas_meta = pandas_meta
         self.this = f"{fal.schema}.{model.target_name}"
-        self.config = _ConfigCollector()
+        values: dict = {}
 
-    def _pandas_mode(self) -> bool:
+        def config(**kwargs) -> str:
+            values.update(kwargs)
+            return ""
+
+        config.get = values.get
+        self.config = config
+
+    def _read(self, fn):
         # dbt.config(interop="pandas") is usually the model's first
         # statement, so checking at read time sees it; schema.yml meta
         # (resolved before execution) is the declarative spelling
-        return self._pandas_meta or self.config.get("interop") == "pandas"
+        pandas = self._pandas_meta or self.config.get("interop") == "pandas"
+        return _to_pandas(fn) if pandas else fn
 
     def ref(self, *parts: str) -> DataFrame:
-        df = self._fal.ref(parts[-1])
-        return df.toPandas() if self._pandas_mode() else df
+        return self._read(self._fal.ref)(parts[-1])
 
     def source(self, source_name: str, table_name: str) -> DataFrame:
-        df = self._fal.source(source_name, table_name)
-        return df.toPandas() if self._pandas_mode() else df
-
-
-class _ConfigCollector:
-    def __call__(self, **kwargs):
-        self.values = kwargs
-        return ""
-
-    def get(self, key, default=None):
-        return getattr(self, "values", {}).get(key, default)
+        return self._read(self._fal.source)(source_name, table_name)
 
 
 class _ScriptTask:
-    """Run a before/after script with injected globals
-    (reference: FalScript.exec, fal_script.py:258-299). ``model=None``
-    is the reference's GLOBAL script mode (fal_script.py:189 — a
-    FalScript whose model is None): ``context.current_model`` is None
-    and ``write_to_model`` takes an explicit target name."""
+    """Run a before/after script or a pre-/post-hook (``is_hook``, whose
+    `with:` arguments arrive as ``arguments``) with injected globals
+    (reference: FalScript.exec, fal_script.py:258-299). ``model=None`` is
+    the reference's GLOBAL script mode (fal_script.py:189 — a FalScript
+    whose model is None): ``context.current_model`` is None and
+    ``write_to_model`` takes an explicit target name. ``environment``
+    overrides the model's environment for this task alone (reference:
+    fal_script.py:43-83 create_hook — LocalHook vs IsolatedHook): a named
+    env wins over the model's, the special name "local" forces
+    in-process, None inherits the model's."""
 
     def __init__(
-        self, fal: FalSpark, model: DbtModel | None, script: str, arguments: dict | None = None
+        self,
+        fal: FalSpark,
+        model: DbtModel | None,
+        script: str,
+        arguments: dict | None = None,
+        *,
+        environment: str | None = None,
+        is_hook: bool = False,
     ) -> None:
         self.fal = fal
         self.model = model
         self.script = script
         self.arguments = arguments or {}
-        # per-hook environment override (reference: fal_script.py:43-83
-        # create_hook): a named env wins over the model's; the special
-        # name "local" forces in-process; None inherits the model's
-        self.env_override: str | None = None
-        self.is_hook = False
-
-    @classmethod
-    def hook(cls, fal: FalSpark, model: DbtModel, h) -> "_ScriptTask":
-        """meta.fal pre-/post-hook ``h`` with its `with:` arguments and
-        optional per-hook `environment:` override (reference:
-        fal_script.py:43-83 create_hook — LocalHook vs IsolatedHook
-        selection)."""
-        task = cls(fal, model, h.path, h.arguments)
-        task.env_override = h.environment
-        task.is_hook = True
-        return task
+        self.environment = environment
+        self.is_hook = is_hook
 
     def execute(self, context: dict) -> int:
         fal = self.fal
@@ -1609,86 +1637,17 @@ class _ScriptTask:
         if not path.exists() and (fal.project_dir / self.script).exists():
             path = fal.project_dir / self.script
         env_name = model.environment if model is not None else None
-        if self.env_override is not None:
-            env_name = None if self.env_override == "local" else self.env_override
+        if self.environment is not None:
+            env_name = None if self.environment == "local" else self.environment
         if env_name:
             # isolated execution (reference: IsolatedHook → environments):
             # the script runs in the named venv's interpreter with the
             # context shim; no SparkSession crosses the boundary.
-            resp = fal._adapter_responses.get(model.name)
             fal._environment(model, env_name).run_script(
-                path,
-                {
-                    "current_model": fal._current_model(
-                        model, adapter_response=resp and dataclasses.asdict(resp)
-                    ),
-                    "arguments": self.arguments,
-                    "target": fal.target_name,
-                },
+                path, asdict(fal._context(model, self.arguments))
             )
-            return SUCCESS
-        code = path.read_text()
-        if path.suffix == ".ipynb":
-            code = _process_ipynb(code)
-        script_context = Context(
-            current_model=CurrentModel(**fal._current_model(
-                model,
-                columns=model.columns,
-                tests=[t for t in fal.manifest.tests.values() if t.model_id == model.unique_id],
-                adapter_response=fal._adapter_responses.get(model.name),
-            ))
-            if model is not None
-            else None,
-            arguments=self.arguments,
-            target=fal.target_name,
-        )
-        namespace = {
-            # reference: FalScript runs as the __main__ module
-            # (cli_tests/features/main_module.feature)
-            "__name__": "__main__",
-            "__file__": str(path),
-            "context": script_context,
-            "ref": fal.ref,
-            "source": fal.source,
-            "execute_sql": fal.execute_sql,
-            "write_to_source": fal.write_to_source,
-            "write_to_model": (
-                _model_bound_write(fal, model)
-                if model is not None
-                else fal.write_to_model
-            ),
-            "list_models": fal.list_models,
-            "list_models_ids": fal.list_models_ids,
-            "list_sources": fal.list_sources,
-            "list_tests": fal.list_tests,
-            "list_features": fal.list_features,
-            "session": fal.spark,
-        }
-        if self.is_hook:
-            # hooks observe, they don't materialize (reference:
-            # fal_script.py:284-296 — _not_allowed_function_maker replaces
-            # both write functions; run.feature 'Post hooks with
-            # write_to_model will fail'). Writes belong in the model or an
-            # after script.
-            def _not_allowed(fn_name: str):
-                def _raise(*_a, **_kw):
-                    raise RuntimeError(
-                        f"{fn_name} is not allowed in hooks — hooks observe "
-                        "model runs; move the write into the model or an "
-                        "after script"
-                    )
-
-                return _raise
-
-            namespace["write_to_model"] = _not_allowed("write_to_model")
-            namespace["write_to_source"] = _not_allowed("write_to_source")
-        exec(compile(code, str(path), "exec"), namespace)
+        else:
+            _exec_user_code(
+                path, fal._globals(model, arguments=self.arguments, hook=self.is_hook)
+            )
         return SUCCESS
-
-
-# moved to project/loader.py (model discovery needs it too); re-bound
-# here so script execution keeps one import site
-from dbt_fal_spark.project.loader import process_ipynb as _process_ipynb  # noqa: E402
-
-
-_ = FAILURE  # re-exported for task implementations

@@ -7,13 +7,16 @@ The reference ran fal scripts in named virtual environments so that
 models with conflicting Python dependencies (Prophet vs torch pins)
 could coexist in one project. On Spark the heavy compute runs on
 executors, so isolation here is DRIVER-side and deliberately narrow:
-an isolated script executes in the environment's own interpreter as a
-subprocess, receives the script ``context`` (model metadata, arguments,
-target) over a JSON handoff, and exchanges data with the pipeline
-through files — it does NOT get a live SparkSession (a JVM handle
-cannot cross an interpreter boundary; the reference had the same
-restriction for its cloud/isolated backends and re-created connections
-inside the environment).
+an isolated script, hook or Python model executes in the environment's
+own interpreter as a subprocess — one child runner for all of them
+(``_ScriptRunner._exec_in_env``; a model adds parquet ``ref``/``source``
+and ``write_to_model``). The child receives the user code (a notebook's
+code cells) and the ``context`` (model metadata, arguments, target) over
+a JSON handoff, and exchanges data with the pipeline through files — it
+does NOT get a live SparkSession (a JVM handle cannot cross an
+interpreter boundary; the reference had the same restriction for its
+cloud/isolated backends and re-created connections inside the
+environment).
 
 Environments are declared in ``fal_project.yml`` (the reference's file):
 
@@ -43,14 +46,85 @@ from pathlib import Path
 
 import yaml
 
+from dbt_fal_spark.project.loader import process_ipynb
 
 # per-env-dir creation locks (see VirtualEnvironment.ensure): defaultdict
 # is itself guarded by the GIL for single-key access patterns used here
 _ENSURE_LOCKS: dict[str, threading.Lock] = collections.defaultdict(threading.Lock)
 
 
+def user_code(path: Path) -> str:
+    """The source of a user script or Python model: a notebook's code
+    cells with magics stripped, else the file's text."""
+    code = Path(path).read_text()
+    return process_ipynb(code) if Path(path).suffix == ".ipynb" else code
+
+
+# The child's program: load the payload, build the ``context`` shim and
+# run the user code as ``__main__`` (reference: main_module.feature). A
+# Python model inserts _MODEL_PART before the exec and gets its output
+# check in ``_finish``.
+_RUNNER_HEAD = (
+    "import json, sys\n"
+    "payload = json.load(open(sys.argv[1]))\n"
+    "class _Ctx:\n"
+    "    result = None\n"
+    "context = _Ctx()\n"
+    "context.current_model = payload['current_model']\n"
+    "context.arguments = payload['arguments']\n"
+    "context.target = payload['target']\n"
+    "ns = {'context': context, '__file__': payload['script'], '__name__': '__main__'}\n"
+    "def _finish():\n"
+    "    pass\n"
+)
+_MODEL_PART = (
+    "import pandas as pd\n"
+    "rels, srcs = payload['relations'], payload['sources']\n"
+    "def ref(*parts):\n"
+    "    name = parts[-1]\n"
+    "    if name not in rels:\n"
+    "        raise ValueError(\n"
+    "            f'isolated model ref({name!r}): only DECLARED (AST-visible, '\n"
+    "            f'literal-name) dependencies are exported to the environment; '\n"
+    "            f'available: {sorted(rels)}')\n"
+    "    return pd.read_parquet(rels[name])\n"
+    "def source(s, t):\n"
+    "    key = s + '::' + t\n"
+    "    if key not in srcs:\n"
+    "        raise ValueError(\n"
+    "            f'isolated model source({s!r}, {t!r}): only declared literal-name '\n"
+    "            f'sources are exported; available: {sorted(srcs)}')\n"
+    "    return pd.read_parquet(srcs[key])\n"
+    "def write_to_model(df, *a, **kw):\n"
+    "    df.to_parquet(payload['out'])\n"
+    "    write_to_model.called = True\n"
+    "write_to_model.called = False\n"
+    "class _Dbt:\n"
+    "    this = payload['this']\n"
+    "    ref, source = staticmethod(ref), staticmethod(source)\n"
+    "    config = staticmethod(lambda **kw: '')\n"
+    "ns.update(ref=ref, source=source, write_to_model=write_to_model, session=None)\n"
+    "def _finish():\n"
+    "    fn = ns.get('model')\n"
+    "    if fn is not None:\n"
+    "        res = fn(_Dbt(), None)\n"
+    "        if res is None:\n"
+    "            raise ValueError('python model returned no DataFrame')\n"
+    "        write_to_model(res)\n"
+    "    if not write_to_model.called:\n"
+    "        raise ValueError('isolated python model produced no output: '\n"
+    "                         'define model(dbt, session) or call write_to_model(...)')\n"
+)
+_RUNNER_TAIL = (
+    "exec(compile(payload['code'], payload['script'], 'exec'), ns)\n"
+    "_finish()\n"
+    "json.dump({'status': 'success', 'result': context.result, 'python': sys.executable},\n"
+    "          open(sys.argv[2], 'w'))\n"
+)
+
+
 class _ScriptRunner:
-    """Shared isolated-script protocol: subclasses provide ``ensure()``
+    """Shared isolated-run protocol: subclasses provide ``ensure()``
     (returning the environment's interpreter) and ``name``; the JSON
     handoff runner is identical for every backend, as in the reference
     (base.py's shared run protocol over per-backend connections)."""
@@ -62,37 +136,40 @@ class _ScriptRunner:
 
     def run_script(self, script_path: Path, payload: dict) -> dict:
         """Execute a fal script inside this environment. The child gets a
-        ``context`` shim (current_model dict, arguments, target) and
-        ``__file__``; status and any ``context['result']`` come back as
-        JSON."""
-        python = self.ensure()
-        runner = (
-            "import json, sys\n"
-            "payload = json.load(open(sys.argv[1]))\n"
-            "class _Ctx:\n"
-            "    pass\n"
-            "context = _Ctx()\n"
-            "context.current_model = payload['current_model']\n"
-            "context.arguments = payload['arguments']\n"
-            "context.target = payload['target']\n"
-            "context.result = None\n"
-            "ns = {'context': context, '__file__': payload['script'],\n"
-            "      '__name__': '__main__'}\n"  # reference: main_module.feature
-            "code = open(payload['script']).read()\n"
-            "exec(compile(code, payload['script'], 'exec'), ns)\n"
-            "json.dump({'status': 'success', 'result': context.result,\n"
-            "           'python': sys.executable}, open(sys.argv[2], 'w'))\n"
-        )
-        return self._exec_in_env(runner, {**payload, "script": str(script_path)},
-                                 what=f"script {script_path}")
+        ``context`` shim (``payload``'s current_model dict, arguments and
+        target) and ``__file__``; status and any ``context.result`` come
+        back as JSON."""
+        return self._exec_in_env(script_path, payload, model=False)
 
-    def _exec_in_env(self, runner: str, payload: dict, what: str) -> dict:
-        """Shared child-process plumbing: payload/result hand-off as JSON
-        files, clear errors for crashes and sys.exit escapes."""
+    def run_python_model(self, model_path: Path, payload: dict) -> dict:
+        """Execute a PYTHON MODEL inside this environment (reference:
+        structured_hooks.feature 'Run isolated models'). A SparkSession
+        cannot cross interpreters, so the boundary is the pandas interop
+        one: the parent pre-exports the model's declared dependencies as
+        parquet (payload['relations'] name→path, payload['sources']
+        's::t'→path), the child's injected ``ref``/``source`` read them
+        with pandas, and the result lands at payload['out'] as parquet
+        for the parent to materialize. Both model contracts run:
+        script-style bodies call ``write_to_model``; dbt-style
+        ``model(dbt, session)`` gets ``session=None`` (there is no Spark
+        in the env — the reference's isolated backends had the same
+        restriction) and returns a pandas frame."""
+        return self._exec_in_env(model_path, payload, model=True)
+
+    def _exec_in_env(self, path: Path, payload: dict, *, model: bool) -> dict:
+        """The one child runner: build the environment, hand it the
+        payload plus the user code (a notebook's code cells) as JSON, and
+        report crashes and ``sys.exit`` escapes clearly."""
         python = self.ensure()
+        what = f"{'python model' if model else 'script'} {path}"
+        runner = _RUNNER_HEAD + (_MODEL_PART if model else "") + _RUNNER_TAIL
         with tempfile.TemporaryDirectory() as td:
             pf, rf, runf = Path(td, "payload.json"), Path(td, "result.json"), Path(td, "runner.py")
-            pf.write_text(json.dumps(payload))
+            # default=str: a YAML date in the model's meta or columns
+            # reaches the child as text instead of failing the handoff
+            pf.write_text(json.dumps(
+                {**payload, "script": str(path), "code": user_code(path)}, default=str
+            ))
             runf.write_text(runner)
             proc = subprocess.run(
                 [str(python), str(runf), str(pf), str(rf)],
@@ -115,78 +192,6 @@ class _ScriptRunner:
                     f"stderr: {proc.stderr[-1000:]}"
                 )
             return json.loads(rf.read_text())
-
-    def run_python_model(self, model_path: Path, payload: dict) -> dict:
-        """Execute a PYTHON MODEL inside this environment (reference:
-        structured_hooks.feature 'Run isolated models'). A SparkSession
-        cannot cross interpreters, so the boundary is the pandas interop
-        one: the parent pre-exports the model's declared dependencies as
-        parquet (payload['relations'] name→path, payload['sources']
-        's::t'→path), the child's injected ``ref``/``source`` read them
-        with pandas, and the result lands at payload['out'] as parquet
-        for the parent to materialize. Both model contracts run:
-        script-style bodies call ``write_to_model``; dbt-style
-        ``model(dbt, session)`` gets ``session=None`` (there is no Spark
-        in the env — the reference's isolated backends had the same
-        restriction) and returns a pandas frame."""
-        runner = (
-            "import json, sys\n"
-            "payload = json.load(open(sys.argv[1]))\n"
-            "import pandas as pd\n"
-            "rels, srcs = payload['relations'], payload['sources']\n"
-            "def ref(*parts):\n"
-            "    name = parts[-1]\n"
-            "    if name not in rels:\n"
-            "        raise ValueError(\n"
-            "            f'isolated model ref({name!r}): only DECLARED (AST-visible, '\n"
-            "            f'literal-name) dependencies are exported to the environment; '\n"
-            "            f'available: {sorted(rels)}')\n"
-            "    return pd.read_parquet(rels[name])\n"
-            "def source(s, t):\n"
-            "    key = s + '::' + t\n"
-            "    if key not in srcs:\n"
-            "        raise ValueError(\n"
-            "            f'isolated model source({s!r}, {t!r}): only declared literal-name '\n"
-            "            f'sources are exported; available: {sorted(srcs)}')\n"
-            "    return pd.read_parquet(srcs[key])\n"
-            "_state = {'written': False}\n"
-            "def write_to_model(df, *a, **kw):\n"
-            "    df.to_parquet(payload['out'])\n"
-            "    _state['written'] = True\n"
-            "class _Ctx:\n"
-            "    pass\n"
-            "context = _Ctx()\n"
-            "context.current_model = payload['current_model']\n"
-            "context.arguments = {}\n"
-            "context.target = payload['target']\n"
-            "class _Dbt:\n"
-            "    this = payload['this']\n"
-            "    def config(self, **kw):\n"
-            "        return ''\n"
-            "    def ref(self, *p):\n"
-            "        return ref(*p)\n"
-            "    def source(self, s, t):\n"
-            "        return source(s, t)\n"
-            "ns = {'ref': ref, 'source': source, 'write_to_model': write_to_model,\n"
-            "      'context': context, 'session': None,\n"
-            "      '__file__': payload['script'], '__name__': '__main__'}\n"
-            "code = open(payload['script']).read()\n"
-            "exec(compile(code, payload['script'], 'exec'), ns)\n"
-            "fn = ns.get('model')\n"
-            "if fn is not None:\n"
-            "    res = fn(_Dbt(), None)\n"
-            "    if res is None:\n"
-            "        raise ValueError('python model returned no DataFrame')\n"
-            "    res.to_parquet(payload['out'])\n"
-            "    _state['written'] = True\n"
-            "if not _state['written']:\n"
-            "    raise ValueError('isolated python model produced no output: '\n"
-            "                     'define model(dbt, session) or call write_to_model(...)')\n"
-            "json.dump({'status': 'success', 'python': sys.executable},\n"
-            "          open(sys.argv[2], 'w'))\n"
-        )
-        return self._exec_in_env(runner, {**payload, "script": str(model_path)},
-                                 what=f"python model {model_path}")
 
 
 @dataclass
@@ -498,16 +503,8 @@ class CloudEnvironment(_ScriptRunner):
         "isolated local execution (SURVEY §2 D8-D10)."
     )
 
-    def _refuse(self):
+    def ensure(self) -> Path:
+        # every run builds its environment first, so this refuses them all
         raise NotImplementedError(
             self._MSG.format(name=self.name, host=self.host, machine=self.machine_type)
         )
-
-    def ensure(self) -> Path:
-        self._refuse()
-
-    def run_script(self, script_path: Path, payload: dict) -> dict:
-        self._refuse()
-
-    def run_python_model(self, model_path: Path, payload: dict) -> dict:
-        self._refuse()

@@ -1,9 +1,10 @@
 """Notebook integration (reference F4: `%init_fal` magic,
 projects/adapter/src/fal/dbt/integration/magics.py:195-240).
 
-``init_fal(project_dir=...)`` injects the script-global surface —
-``ref``, ``source``, ``execute_sql``, ``write_to_model``,
-``write_to_source``, ``list_*``, ``session`` — into the calling
+``init_fal(project_dir=...)`` injects the globals a global script gets
+(``FalSpark._globals``: ``ref``, ``source``, ``execute_sql``,
+``write_to_model``, ``write_to_source``, ``list_*``, ``session``,
+``context``) plus the project handle ``faldbt`` into the calling
 namespace, exactly what the reference's magic does for Jupyter cells but
 Spark-backed and usable from any interpreter (the IPython line-magic
 registration is attempted when IPython is importable; the function works
@@ -12,24 +13,6 @@ without it)."""
 from __future__ import annotations
 
 import inspect
-from typing import Any
-
-
-def _build_globals(fal) -> dict[str, Any]:
-    return {
-        "ref": fal.ref,
-        "source": fal.source,
-        "execute_sql": fal.execute_sql,
-        "write_to_model": fal.write_to_model,
-        "write_to_source": fal.write_to_source,
-        "list_models": fal.list_models,
-        "list_models_ids": fal.list_models_ids,
-        "list_sources": fal.list_sources,
-        "list_tests": fal.list_tests,
-        "list_features": fal.list_features,
-        "session": fal.spark,
-        "faldbt": fal,  # reference exposes the project handle too
-    }
 
 
 def init_fal(
@@ -48,7 +31,7 @@ def init_fal(
     if namespace is None:
         frame = inspect.currentframe().f_back
         namespace = frame.f_globals if frame is not None else {}
-    namespace.update(_build_globals(fal))
+    namespace.update(fal._globals(None), faldbt=fal)  # the reference exposes the handle too
     return fal
 
 

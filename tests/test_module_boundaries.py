@@ -3,7 +3,9 @@
 DDL that commits and attaches them: ``api`` calls its public verbs and
 must not reach into the format's internals. And
 ``session`` alone names the AQE conf and the profile marker: every
-operator builds one plan, and the profile only sets session confs."""
+operator builds one plan, and the profile only sets session confs. User
+Python runs through one in-process ``exec`` (``api``) and one child
+runner (``environments``)."""
 
 from __future__ import annotations
 
@@ -88,3 +90,28 @@ def test_only_materialize_holds_table_ddl():
         ):
             holders.append(str(path.relative_to(PACKAGE)))
     assert holders == [], f"modules holding table DDL: {holders}"
+
+
+def _exec_calls(tree: ast.AST) -> int:
+    return sum(
+        isinstance(node, ast.Call) and isinstance(node.func, ast.Name) and node.func.id == "exec"
+        for node in ast.walk(tree)
+    )
+
+
+def test_user_python_has_one_exec_site_and_one_child_runner():
+    """The package calls ``exec`` in-process once, in ``api.py``, and
+    ``environments.py`` holds one child-runner string that ``exec``s."""
+    sites = {
+        str(path.relative_to(PACKAGE)): n
+        for path in sorted(PACKAGE.rglob("*.py"))
+        if (n := _exec_calls(ast.parse(path.read_text())))
+    }
+    assert sites == {"api.py": 1}, sites
+    tree = ast.parse((PACKAGE / "environments.py").read_text())
+    runners = [
+        node
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Constant) and isinstance(node.value, str) and "exec(compile(" in node.value
+    ]
+    assert len(runners) == 1, [r.lineno for r in runners]

@@ -57,81 +57,6 @@ def test_dunder_py_files_are_not_models(tmp_path):
     assert not any(m.name == "__init__" for m in manifest.models.values())
 
 
-def test_scripts_and_python_models_run_as_main(tmp_path, spark):
-    """Reference contract (cli_tests/features/main_module.feature):
-    scripts and fal models execute with __name__ == '__main__', so
-    `if __name__ == "__main__":` blocks run. Previously __name__ was
-    absent from the exec namespace and the guard raised NameError."""
-    import json as _json
-    import os
-
-    from dbt_fal_spark.api import FalSpark
-    from tests.conftest import SF_DIR
-
-    os.environ["TESTDATA_DIR"] = SF_DIR
-    proj = _copy_project(tmp_path)
-    out = tmp_path / "main_probe.json"
-    (proj / "scripts" / "main_probe.py").write_text(
-        "import json\n"
-        "if __name__ == '__main__':\n"
-        f"    json.dump({{'name': __name__}}, open({str(out)!r}, 'w'))\n"
-    )
-    (proj / "fal_models" / "main_model.py").write_text(
-        "import pandas as pd\n"
-        "assert __name__ == '__main__', __name__\n"
-        "df = ref('orders_daily')\n"
-        "write_to_model(df.limit(1), mode='overwrite')\n"
-    )
-    schema_yml = proj / "models" / "schema.yml"
-    schema_yml.write_text(
-        schema_yml.read_text().replace(
-            "        scripts:\n          after:\n            - scripts/after_audit.py",
-            "        scripts:\n          after:\n            - scripts/after_audit.py\n            - scripts/main_probe.py",
-        )
-    )
-    spark.sql("DROP DATABASE IF EXISTS jaffle_spark CASCADE")
-    fal = FalSpark(proj, spark=spark)
-    statuses = fal.run(threads=2)
-    assert statuses["model.jaffle_spark.main_model"] == "success"
-    assert _json.load(open(out))["name"] == "__main__"
-    spark.sql("DROP DATABASE IF EXISTS jaffle_spark CASCADE")
-
-
-def test_hooks_cannot_write_to_model_or_source(tmp_path, spark):
-    """Reference contract (run.feature 'Post hooks with write_to_model
-    will fail', fal_script.py:284-296): hooks observe model runs; calling
-    write_to_model/write_to_source from a hook raises, and the node
-    reports error. Before/after SCRIPTS keep write access."""
-    import os
-
-    from dbt_fal_spark.api import FalSpark
-    from tests.conftest import SF_DIR
-
-    os.environ["TESTDATA_DIR"] = SF_DIR
-    proj = _copy_project(tmp_path)
-    (proj / "scripts" / "writing_hook.py").write_text(
-        "write_to_model(ref('customers'), mode='overwrite')\n"
-    )
-    schema_yml = proj / "models" / "schema.yml"
-    schema_yml.write_text(
-        schema_yml.read_text().replace(
-            "        pre-hook:",
-            "        post-hook:\n"
-            "          - path: scripts/writing_hook.py\n"
-            "        pre-hook:",
-        )
-    )
-    spark.sql("DROP DATABASE IF EXISTS jaffle_spark CASCADE")
-    fal = FalSpark(proj, spark=spark)
-    statuses = fal.run(threads=2)
-    assert statuses["model.jaffle_spark.customers"] == "error"
-    import json as _json
-
-    errors = _json.loads((fal.target_dir / "run_results.json").read_text()).get("errors", [])
-    assert any("not allowed in hooks" in e for e in errors), errors
-    spark.sql("DROP DATABASE IF EXISTS jaffle_spark CASCADE")
-
-
 def test_model_alias_config(tmp_path, spark):
     """dbt `alias` config (reference: run.feature 'fal run provides
     model aliases'): the physical relation takes the alias name, ref()

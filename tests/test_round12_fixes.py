@@ -3,8 +3,7 @@
 - accepted_values NULL semantics + severity:warn + store_failures
   (VERDICT r11 'What's wrong' 1 / 'Next round' 1 — dbt-core test
   configs the reference inherits via delegation)
-- alias-aware Python models and --defer (ADVICE r11 medium + low)
-- write_to_model positional-target guard (ADVICE r11)
+- --defer resolves an aliased upstream (ADVICE r11 low)
 - $DBT_PROFILES_DIR error-message origin (ADVICE r11)
 """
 
@@ -158,83 +157,6 @@ def test_singular_test_config_severity_warn(tmp_path, spark):
     sg = by_name["always_fails"]
     assert sg["status"] == "warn" and sg["violations"] == 1
     spark.sql("DROP DATABASE IF EXISTS tproj CASCADE")
-
-
-# ---------------------------------------------------------------------------
-# alias-aware Python models (ADVICE r11 medium)
-# ---------------------------------------------------------------------------
-
-
-def test_python_model_alias_config(tmp_path, spark):
-    """A dbt-style Python model with config.alias materializes under the
-    ALIAS (like SQL models); downstream ref() by model name resolves to
-    the aliased relation. Previously the python path wrote schema.name
-    while refs read schema.alias (ADVICE r11 medium)."""
-    import os
-
-    from dbt_fal_spark.api import FalSpark
-    from tests.conftest import SF_DIR
-
-    os.environ["TESTDATA_DIR"] = SF_DIR
-    proj = _copy_project(tmp_path)
-    (proj / "models" / "py_aliased.py").write_text(
-        "def model(dbt, session):\n"
-        "    df = dbt.ref('stg_orders')\n"
-        "    return df.groupBy('status').count()\n"
-    )
-    (proj / "models" / "py_script_aliased.py").write_text(
-        "df = ref('stg_orders').limit(5)\n"
-        "write_to_model(df)\n"
-    )
-    schema_yml = proj / "models" / "schema.yml"
-    schema_yml.write_text(
-        schema_yml.read_text()
-        + "  - name: py_aliased\n"
-        + "    config: {alias: py_alias_target}\n"
-        + "  - name: py_script_aliased\n"
-        + "    config: {alias: py_script_target}\n"
-        + "  - name: py_downstream\n"
-    )
-    (proj / "models" / "py_downstream.sql").write_text(
-        "select count(*) as n from {{ ref('py_aliased') }}\n"
-    )
-    spark.sql("DROP DATABASE IF EXISTS jaffle_spark CASCADE")
-    fal = FalSpark(proj, spark=spark)
-    statuses = fal.run(threads=2)
-    assert statuses["model.jaffle_spark.py_aliased"] == "success"
-    assert statuses["model.jaffle_spark.py_script_aliased"] == "success"
-    assert statuses["model.jaffle_spark.py_downstream"] == "success"
-    # physical relations carry the alias; model names are not tables
-    assert spark.catalog.tableExists("jaffle_spark.py_alias_target")
-    assert not spark.catalog.tableExists("jaffle_spark.py_aliased")
-    assert spark.catalog.tableExists("jaffle_spark.py_script_target")
-    assert not spark.catalog.tableExists("jaffle_spark.py_script_aliased")
-    # downstream ref by MODEL name reads through the alias
-    assert fal.ref("py_downstream").collect()[0]["n"] > 0
-    spark.sql("DROP DATABASE IF EXISTS jaffle_spark CASCADE")
-
-
-def test_write_to_model_positional_target_raises(tmp_path, spark):
-    """Inside a fal-style python model, write_to_model is bound to THAT
-    model: an explicit positional target must fail loudly (the reference
-    hard-wires target_1 via functools.partial → TypeError), not be
-    silently ignored (ADVICE r11)."""
-    import os
-
-    from dbt_fal_spark.api import FalSpark
-    from tests.conftest import SF_DIR
-
-    os.environ["TESTDATA_DIR"] = SF_DIR
-    proj = _copy_project(tmp_path)
-    (proj / "models" / "py_bad_target.py").write_text(
-        "df = ref('stg_orders').limit(3)\n"
-        "write_to_model(df, 'some_other_model')\n"
-    )
-    spark.sql("DROP DATABASE IF EXISTS jaffle_spark CASCADE")
-    fal = FalSpark(proj, spark=spark)
-    statuses = fal.run(select="py_bad_target")
-    assert statuses["model.jaffle_spark.py_bad_target"] == "error"
-    spark.sql("DROP DATABASE IF EXISTS jaffle_spark CASCADE")
 
 
 # ---------------------------------------------------------------------------

@@ -11,10 +11,6 @@
   fal_script.py:94-102) populated for post-hook scripts
 - delete+insert incremental strategy accepted (reference
   python/impl.py:256-291)
-- `fal run --scripts x.py --globals` filters GLOBAL scripts too
-  (reference fal_runner.py:129-137)
-- fal-scripts-path takes precedence over project root (reference
-  parse.py get_scripts_dir)
 """
 
 from __future__ import annotations
@@ -219,81 +215,6 @@ def test_current_model_incremental_and_adapter_response(spark, ctx_project, tmp_
     assert got["code"] == "INSERT"
     assert got["rows_affected"] == 1
     assert got["message"] == "INSERT 1"
-
-
-# --- fal run global-script filter + scripts-path precedence -----------------
-
-
-@pytest.fixture(scope="module")
-def globals_project(tmp_path_factory):
-    root = tmp_path_factory.mktemp("glb_proj")
-    (root / "models").mkdir()
-    (root / "fal_scripts").mkdir()
-    (root / "dbt_project.yml").write_text(
-        'name: glb_proj\nmodel-paths: ["models"]\n'
-        "vars:\n  fal-scripts-path: fal_scripts\n"
-    )
-    (root / "models" / "m1.sql").write_text("select 1 as k\n")
-    (root / "models" / "schema.yml").write_text(
-        textwrap.dedent(
-            """
-            fal:
-              scripts:
-                before:
-                  - g_before.py
-                after:
-                  - g_after.py
-            models:
-              - name: m1
-            """
-        )
-    )
-    for name in ("g_before.py", "g_after.py"):
-        (root / "fal_scripts" / name).write_text(
-            "import os\n"
-            "with open(os.environ['GLB_LOG'], 'a') as f:\n"
-            f"    f.write('{name}\\n')\n"
-        )
-    # the precedence probe: same script name at project root AND at
-    # fal-scripts-path; the fal-scripts-path copy must win
-    (root / "probe.py").write_text(
-        "import os\n"
-        "with open(os.environ['GLB_LOG'], 'a') as f:\n"
-        "    f.write('root-copy\\n')\n"
-    )
-    (root / "fal_scripts" / "probe.py").write_text(
-        "import os\n"
-        "with open(os.environ['GLB_LOG'], 'a') as f:\n"
-        "    f.write('scripts-path-copy\\n')\n"
-    )
-    yield root
-
-
-def test_globals_filtered_by_only_scripts(spark, globals_project, tmp_path, monkeypatch):
-    log = tmp_path / "glb.log"
-    log.write_text("")
-    monkeypatch.setenv("GLB_LOG", str(log))
-    spark.sql("DROP DATABASE IF EXISTS glb_proj CASCADE")
-    fal = FalSpark(globals_project, spark=spark)
-    fal.run()
-    log.write_text("")  # keep only the run_scripts phase
-    ran = fal.run_scripts(
-        use_last_run=False, only_scripts=["g_after.py"], include_globals=True
-    )
-    lines = log.read_text().split()
-    assert lines == ["g_after.py"], (ran, lines)
-    spark.sql("DROP DATABASE IF EXISTS glb_proj CASCADE")
-
-
-def test_scripts_path_precedence(spark, globals_project, tmp_path, monkeypatch):
-    log = tmp_path / "prec.log"
-    log.write_text("")
-    monkeypatch.setenv("GLB_LOG", str(log))
-    from dbt_fal_spark.api import _ScriptTask
-
-    fal = FalSpark(globals_project, spark=spark)
-    _ScriptTask(fal, None, "probe.py").execute({})
-    assert log.read_text().split() == ["scripts-path-copy"]
 
 
 # --- full-outer stream-stream interval join ---------------------------------
