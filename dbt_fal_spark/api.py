@@ -19,6 +19,14 @@ is the one in-process ``exec``, a model with ``meta.fal.environment``
 hands its code to that environment's one child runner instead
 (``environments.py``), and ``FalSpark._side_tasks`` lists one side of a
 model's scripts and hooks for both ``run`` and ``run_scripts``.
+
+A model's table has one write, ``FalSpark._materialize``: seeds, SQL
+tables, an incremental model's first build and full refresh, Python
+models, ``write_to_model`` overwrites and ``teleport_import`` all commit
+the model's alias table in its declared layout (``DbtModel.layout``);
+only an incremental run on an existing table merges instead. That layout
+is the model's one config, resolved at load: schema.yml ``config:`` with
+the model file's own ``config()`` on top.
 """
 
 from __future__ import annotations
@@ -32,7 +40,7 @@ import tempfile
 import time
 from dataclasses import asdict, dataclass, field
 from pathlib import Path
-from typing import Any, Callable
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -166,17 +174,6 @@ def _test_threshold(count: int, expr: str) -> bool:
         ">": count > n,
         "<": count < n,
     }[op]
-
-
-def _write_model(
-    spark: SparkSession, df: DataFrame, identifier: str, exists: bool | None = None, **layout
-) -> Callable[[], int]:
-    """Overwrite a model's relation — atomic swap when it exists (looked
-    up unless ``exists`` is given) — and return a reader of the rows
-    written, observed on the write itself."""
-    if spark.catalog.tableExists(identifier) if exists is None else exists:
-        return replace_relation_atomic(spark, df, identifier, **layout)
-    return write_table(df, identifier, **layout)
 
 
 class FalSpark:
@@ -369,6 +366,25 @@ class FalSpark:
             return self.manifest.model_by_name(name)
         except KeyError:
             return None
+
+    def _relation(self, name: str) -> tuple[str, dict]:
+        """The table model ``name`` writes, under its alias when it has one
+        (a name that is no model: ``schema.name``), and its declared
+        layout."""
+        model = self._model(name)
+        if model is None:
+            return f"{self.schema}.{name}", {}
+        return f"{self.schema}.{model.target_name}", model.layout
+
+    def _materialize(self, name: str, df: DataFrame) -> int:
+        """The one write of a model's table: ``df`` replaces it, in the
+        model's declared layout. Returns the rows written."""
+        identifier, layout = self._relation(name)
+        # both verbs are the one table commit (materialize._commit); the
+        # choice only names the trace span: a rebuild or a first build
+        if self.spark.catalog.tableExists(identifier):
+            return replace_relation_atomic(self.spark, df, identifier, **layout)()
+        return write_table(df, identifier, **layout)()
 
     def _render(self, sql: str, **kw) -> str:
         """Render Jinja SQL against this project: refs, sources, vars and
@@ -654,18 +670,12 @@ class FalSpark:
             raise ValueError(f"write_to_model mode must be 'overwrite' or 'append', got {mode!r}")
         name = target_2 or target_1
         df = apply_dtype_casts(self._to_spark(df), dtype)
-        model = self._model(name)
-        # dbt alias: write to the PHYSICAL relation (run.feature 'model aliases')
-        identifier = f"{self.schema}.{model.target_name if model is not None else name}"
-        layout = {
-            "partition_by": getattr(model, "partition_by", None),
-            "bucket_by": getattr(model, "bucket_by", None),
-            "sort_by": getattr(model, "sort_by", None),
-        }
         if mode == "overwrite":
-            _write_model(self.spark, df, identifier, **layout)
+            self._materialize(name, df)
         else:  # aligns columns by name; the first append creates the table
+            identifier, layout = self._relation(name)
             incremental_merge(self.spark, df, identifier, unique_key=None, strategy="append", **layout)
+        model = self._model(name)
         if model is not None:
             model.status = "success"
 
@@ -722,8 +732,10 @@ class FalSpark:
             return
         df = apply_dtype_casts(df, dtype)
         if src.path:
-            path = self._resolve_path_or_url(str(src.path))
-            df.write.mode(mode).format(src.format if src.format != "csv" else "parquet").save(path)
+            writer = df.write.mode(mode).format(src.format)
+            if src.format == "csv":  # the source reads CSV with header=True
+                writer = writer.option("header", True)
+            writer.save(self._resolve_path_or_url(str(src.path)))
         else:
             df.write.mode(mode).format("parquet").saveAsTable(table_name)
 
@@ -880,8 +892,7 @@ class FalSpark:
         """Import interchange parquet at ``url`` as a model table
         (reference: teleport read, teleport.py:43-56). Accepts the same
         local-path / object-store URL forms as ``teleport_export``."""
-        df = self.spark.read.parquet(self._resolve_path_or_url(url))
-        write_table(df, f"{self.schema}.{name}")
+        self.write_to_model(self.spark.read.parquet(self._resolve_path_or_url(url)), name)
 
     def _load_state(self) -> dict[str, str]:
         """Prior name→checksum snapshot for ``state:new/modified`` selectors
@@ -1346,9 +1357,7 @@ class FalSpark:
             self.spark,
             self._identifier(model_name),
             target_partitions,
-            partition_by=model.partition_by,
-            bucket_by=model.bucket_by,
-            sort_by=model.sort_by,
+            **model.layout,
         )
 
     def vacuum(self, model_name: str) -> int:
@@ -1411,59 +1420,44 @@ class _ModelTask:
         log.debug("executing model %s (%s)", model.name, model.materialization)
         if model.materialization == "seed":
             df = spark.read.csv(str(model.path), header=True, inferSchema=True)
-            n = write_table(df, f"{fal.schema}.{model.target_name}")()
-            fal._record(model, "CREATE TABLE", n)
+            fal._record(model, "CREATE TABLE", fal._materialize(model.name, df))
             return SUCCESS
         if model.python_model is not None:
             return self._run_python_model(model)
         identifier = f"{fal.schema}.{model.target_name}"
-        exists = spark.catalog.tableExists(identifier)
-        full_refresh = fal._full_refresh
-        df = spark.sql(fal._render(
-            model.raw_sql,
-            this_name=identifier,
-            is_incremental=model.is_incremental and exists and not full_refresh,
-        ))
-        mat = model.materialization
-        if mat in ("view", "ephemeral"):
+        # dbt --full-refresh rebuilds an incremental model from scratch
+        incremental = (
+            model.is_incremental
+            and not fal._full_refresh
+            and spark.catalog.tableExists(identifier)
+        )
+        df = spark.sql(fal._render(model.raw_sql, this_name=identifier, is_incremental=incremental))
+        if model.materialization in ("view", "ephemeral"):
             fal._view_models.add(model.name)
             df.createOrReplaceTempView(fal._identifier(model.name))
             fal._record(model, "CREATE VIEW", None)
             return SUCCESS
-        code = "CREATE TABLE"
-        if mat == "incremental" and not full_refresh:
-            if exists:
-                # reference semantics: rows affected by THIS batch, not the
-                # post-merge table total (fal_script.py:87-91). Persist:
-                # the merge reads the batch twice (its keys and its rows),
-                # and a non-deterministic model must merge the rows it
-                # reports.
-                code = "INSERT"
-                df = df.persist()
-            try:
-                n = incremental_merge(
-                    spark,
-                    df,
-                    identifier,
-                    model.unique_key,
-                    strategy=model.incremental_strategy,
-                    partition_by=model.partition_by,
-                    on_schema_change=model.on_schema_change,
-                    bucket_by=model.bucket_by,
-                    sort_by=model.sort_by,
-                )
-            finally:
-                df.unpersist()
-        elif mat == "incremental":
-            # full refresh: atomic swap (the table may feed the model's own SQL)
-            n = _write_model(spark, df, identifier, exists, partition_by=model.partition_by)()
-        else:  # table
-            n = _write_model(
-                spark, df, identifier, exists,
-                bucket_by=model.bucket_by, sort_by=model.sort_by,
-                partition_by=model.partition_by,
-            )()
-        fal._record(model, code, n)
+        if not incremental:
+            fal._record(model, "CREATE TABLE", fal._materialize(model.name, df))
+            return SUCCESS
+        # reference semantics: rows affected by THIS batch, not the
+        # post-merge table total (fal_script.py:87-91). Persist: the merge
+        # reads the batch twice (its keys and its rows), and a
+        # non-deterministic model must merge the rows it reports.
+        df = df.persist()
+        try:
+            n = incremental_merge(
+                spark,
+                df,
+                identifier,
+                model.unique_key,
+                strategy=model.incremental_strategy,
+                on_schema_change=model.on_schema_change,
+                **model.layout,
+            )
+        finally:
+            df.unpersist()
+        fal._record(model, "INSERT", n)
         return SUCCESS
 
     def _run_python_model(self, model: DbtModel) -> int:
@@ -1492,10 +1486,8 @@ class _ModelTask:
         at these explicit boundaries; aggregate-then-convert keeps it
         bounded at scale."""
         fal = self.fal
-        # alias-aware: materialize and read back under target_name, the
-        # same identifier ref() resolution / bootstrap / docs use — a
-        # config.alias'd python model otherwise writes schema.name while
-        # downstream refs read schema.alias
+        # the physical (alias-aware) table: the isolated child's ``this``,
+        # and what a fal-style body's writes are counted from
         identifier = f"{fal.schema}.{model.target_name}"
         if model.environment:
             n = self._run_python_model_isolated(model, identifier)
@@ -1508,7 +1500,7 @@ class _ModelTask:
                 df = fn(_DbtObj(fal, model, pandas_mode), fal.spark)
                 if df is None:
                     raise ValueError(f"python model {model.name} returned no DataFrame")
-                n = _write_model(fal.spark, fal._to_spark(df), identifier)()
+                n = fal._materialize(model.name, fal._to_spark(df))
             elif write.called:
                 # the body may have written more than once: count what it left
                 n = fal.spark.table(identifier).count()
@@ -1560,7 +1552,7 @@ class _ModelTask:
                     "this": identifier,
                 },
             )
-            return _write_model(fal.spark, fal.spark.read.parquet(out), identifier)()
+            return fal._materialize(model.name, fal.spark.read.parquet(out))
 
 
 class _DbtObj:

@@ -16,6 +16,10 @@ calls), mirroring the reference's module_check
 (reference: projects/adapter/src/fal/dbt/cli/model_generator/
 module_check.py:258-320) — but feeding our own DAG directly, with no
 generated SQL stub files.
+
+A model's config is resolved once, at load (``_add_model``): the
+schema.yml ``config:`` block, with the model file's own ``config()`` on
+top — dbt's precedence.
 """
 
 from __future__ import annotations
@@ -121,26 +125,53 @@ def _scan_python_models(
         if ppath.suffix == ".ipynb":
             code = process_ipynb(code)
         refs, sources = extract_python_deps(code)
-        mname = ppath.stem
-        props = model_props.get(mname, {})
-        uid = f"model.{name}.{mname}"
-        _reject_duplicate_model(manifest, uid, ppath)
-        model = DbtModel(
-            name=mname,
-            unique_id=uid,
-            path=ppath,
-            python_model=ppath,
-            materialization=props.get("config", {}).get("materialized", "table"),
-            tags=list(props.get("tags", [])),
-            meta=props.get("meta", {}) or {},
-            columns={c["name"]: c for c in props.get("columns", [])},
-            alias_name=props.get("config", {}).get("alias"),
-        )
-        model.depends_on = [f"model.{name}.{r}" for r in refs] + [
-            f"source.{name}.{s}.{t}" for (s, t) in sources
-        ]
-        manifest.models[uid] = model
-        _collect_tests(manifest, name, props, model_id=uid, source_id=None, owner_node=model)
+        _add_model(manifest, name, ppath, model_props, refs, sources, python_model=ppath)
+
+
+def _add_model(
+    manifest: Manifest,
+    project: str,
+    path: Path,
+    model_props: dict[str, dict],
+    refs: list[str],
+    sources: list[tuple[str, str]],
+    config: dict | None = None,
+    *,
+    raw_sql: str | None = None,
+    python_model: Path | None = None,
+) -> None:
+    """Register the SQL or Python model at ``path``. Its config is
+    resolved once, here, as dbt does: the schema.yml ``config:`` block
+    with the file's own ``config()`` on top (a Python model has none at
+    load time); tags and meta merge both."""
+    mname = path.stem
+    props = model_props.get(mname, {})
+    config = config or {}
+    cfg = {**(props.get("config") or {}), **config}
+    uid = f"model.{project}.{mname}"
+    _reject_duplicate_model(manifest, uid, path)
+    model = DbtModel(
+        name=mname,
+        unique_id=uid,
+        path=path,
+        raw_sql=raw_sql,
+        python_model=python_model,
+        materialization=cfg.get("materialized", "table"),
+        unique_key=cfg.get("unique_key"),
+        incremental_strategy=cfg.get("incremental_strategy"),
+        partition_by=cfg.get("partition_by"),
+        on_schema_change=cfg.get("on_schema_change", "ignore"),
+        bucket_by=cfg.get("bucket_by"),
+        sort_by=cfg.get("sort_by"),
+        tags=list(config.get("tags", [])) + list(props.get("tags", [])),
+        meta={**(props.get("meta", {}) or {}), **(config.get("meta", {}) or {})},
+        columns={c["name"]: c for c in props.get("columns", [])},
+        alias_name=cfg.get("alias"),
+        depends_on=[f"model.{project}.{r}" for r in refs]
+        + [f"source.{project}.{s}.{t}" for (s, t) in sources],
+    )
+    manifest.models[uid] = model
+    _collect_tests(manifest, project, props, model_id=uid, source_id=None, owner_node=model)
 
 
 def load_project(project_dir: str | Path, vars: dict[str, Any] | None = None) -> Manifest:
@@ -264,33 +295,7 @@ def load_project(project_dir: str | Path, vars: dict[str, Any] | None = None) ->
             refs, sources, config = extract_dependencies(
                 raw, macros=manifest.macros, vars=merged_vars
             )
-            mname = spath.stem
-            props = model_props.get(mname, {})
-            meta = {**(props.get("meta", {}) or {}), **(config.get("meta", {}) or {})}
-            uid = f"model.{name}.{mname}"
-            _reject_duplicate_model(manifest, uid, spath)
-            model = DbtModel(
-                name=mname,
-                unique_id=uid,
-                path=spath,
-                raw_sql=raw,
-                materialization=config.get("materialized", props.get("config", {}).get("materialized", "table")),
-                unique_key=config.get("unique_key"),
-                incremental_strategy=config.get("incremental_strategy"),
-                partition_by=config.get("partition_by"),
-                on_schema_change=config.get("on_schema_change", "ignore"),
-                bucket_by=config.get("bucket_by"),
-                sort_by=config.get("sort_by"),
-                tags=list(config.get("tags", [])) + list(props.get("tags", [])),
-                meta=meta,
-                columns={c["name"]: c for c in props.get("columns", [])},
-                alias_name=config.get("alias", props.get("config", {}).get("alias")),
-            )
-            model.depends_on = [f"model.{name}.{r}" for r in refs] + [
-                f"source.{name}.{s}.{t}" for (s, t) in sources
-            ]
-            manifest.models[uid] = model
-            _collect_tests(manifest, name, props, model_id=uid, source_id=None, owner_node=model)
+            _add_model(manifest, name, spath, model_props, refs, sources, config, raw_sql=raw)
         # .py and .ipynb models share the contract (reference scans both:
         # model_generator.py:18-103); notebooks are stripped to their code
         # cells for dependency extraction and execution

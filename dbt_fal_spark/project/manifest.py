@@ -85,6 +85,16 @@ class DbtModel:
         return self.materialization == "incremental"
 
     @property
+    def layout(self) -> dict[str, Any]:
+        """The declared file layout every write of this model's table
+        carries (``write_table`` / ``incremental_merge`` keywords)."""
+        return {
+            "partition_by": self.partition_by,
+            "bucket_by": self.bucket_by,
+            "sort_by": self.sort_by,
+        }
+
+    @property
     def environment(self) -> str | None:
         """Named isolated environment for this model's scripts
         (reference: meta.fal.environment → packages/environments)."""

@@ -5,7 +5,8 @@ must not reach into the format's internals. And
 ``session`` alone names the AQE conf and the profile marker: every
 operator builds one plan, and the profile only sets session confs. User
 Python runs through one in-process ``exec`` (``api``) and one child
-runner (``environments``)."""
+runner (``environments``). A model's table has one write site in
+``api``, ``FalSpark._materialize``."""
 
 from __future__ import annotations
 
@@ -115,3 +116,52 @@ def test_user_python_has_one_exec_site_and_one_child_runner():
         if isinstance(node, ast.Constant) and isinstance(node.value, str) and "exec(compile(" in node.value
     ]
     assert len(runners) == 1, [r.lineno for r in runners]
+
+
+TABLE_WRITES = {"write_table", "replace_relation_atomic"}
+LAYOUT_KEYS = {"partition_by", "bucket_by", "sort_by"}
+
+
+def _calls_by_function(tree: ast.AST) -> dict[str, list[ast.Call]]:
+    """Every call in ``tree``, keyed by the qualified name of the
+    innermost function around it (``Class.method``)."""
+    out: dict[str, list[ast.Call]] = {}
+
+    def visit(node: ast.AST, scope: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, f"{scope}.{child.name}".lstrip("."))
+                continue
+            if isinstance(child, ast.Call):
+                out.setdefault(scope, []).append(child)
+            visit(child, scope)
+
+    visit(tree, "")
+    return out
+
+
+def test_model_tables_have_one_write_site():
+    """In ``api.py`` only ``FalSpark._materialize`` calls the table-write
+    verbs, save the test audit write of ``store_failures``, and no model
+    layout is read through ``getattr``: every model-table write takes the
+    model's declared layout from one place."""
+    sites = {}
+    layout_getattrs = []
+    for scope, calls in _calls_by_function(ast.parse(API.read_text())).items():
+        for call in calls:
+            fn = call.func
+            if isinstance(fn, ast.Name) and fn.id in TABLE_WRITES:
+                sites.setdefault(scope, []).append(fn.id)
+            if (
+                isinstance(fn, ast.Name)
+                and fn.id == "getattr"
+                and len(call.args) >= 2
+                and isinstance(call.args[1], ast.Constant)
+                and call.args[1].value in LAYOUT_KEYS
+            ):
+                layout_getattrs.append(call.lineno)
+    assert sites == {
+        "FalSpark._materialize": ["replace_relation_atomic", "write_table"],
+        "FalSpark._run_test": ["write_table"],
+    }, sites
+    assert layout_getattrs == [], f"layout read through getattr at lines {layout_getattrs}"

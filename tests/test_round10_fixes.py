@@ -60,91 +60,6 @@ def test_layout_cols_accepts_both_forms():
     assert "[" not in "".join(layout_cols(["k1", "k2"]))
 
 
-def test_list_form_layout_survives_run_and_compact(spark, tmp_path):
-    """dbt users write partition_by/bucket_by cols as YAML/Jinja LISTS as
-    often as comma strings; both must materialize AND survive compact
-    with the declared layout intact (pre-fix: bracketed garbage column
-    names -> AnalysisException)."""
-    from dbt_fal_spark.api import FalSpark
-    from dbt_fal_spark.materialize import _table_bucket_spec
-
-    spark.sql("DROP DATABASE IF EXISTS listlayout CASCADE")
-    proj = tmp_path / "listlayout"
-    (proj / "models").mkdir(parents=True)
-    (proj / "dbt_project.yml").write_text("name: listlayout\n")
-    (proj / "models" / "bkt.sql").write_text(
-        "{{ config(materialized='table', bucket_by={'cols': ['k', 'v'], 'n': 4}) }}\n"
-        "SELECT id AS k, id % 7 AS v FROM range(50)"
-    )
-    (proj / "models" / "parted.sql").write_text(
-        "{{ config(materialized='table', partition_by=['p']) }}\n"
-        "SELECT id AS x, id % 3 AS p FROM range(30)"
-    )
-    fal = FalSpark(proj, spark=spark)
-    statuses = fal.run()
-    assert all(s == "success" for s in statuses.values()), statuses
-    assert _table_bucket_spec(spark, fal._identifier("bkt")) == (4, ("k", "v"))
-    assert fal.compact("bkt") == 4
-    assert _table_bucket_spec(spark, fal._identifier("bkt")) == (4, ("k", "v"))
-    fal.compact("parted", target_partitions=2)
-    assert spark.table(fal._identifier("parted")).count() == 30
-    assert "p" in [
-        r.col_name
-        for r in spark.sql(
-            f"DESCRIBE TABLE {fal._identifier('parted')}"
-        ).collect()
-    ]
-    spark.sql("DROP DATABASE IF EXISTS listlayout CASCADE")
-
-
-# --- r10 adversarial review: write_to_model alignment + layout --------------
-
-
-def test_write_to_model_append_aligns_columns(spark, tmp_path):
-    """insertInto is positional: appending a df whose columns arrive in a
-    different order previously wrote values into the wrong columns."""
-    from dbt_fal_spark.api import FalSpark
-
-    spark.sql("DROP DATABASE IF EXISTS wtmalign CASCADE")
-    proj = tmp_path / "wtmalign"
-    (proj / "models").mkdir(parents=True)
-    (proj / "dbt_project.yml").write_text("name: wtmalign\n")
-    (proj / "models" / "t.sql").write_text("SELECT id AS a, id * 100 AS b FROM range(3)")
-    fal = FalSpark(proj, spark=spark)
-    fal.run()
-    # reordered columns: b first
-    extra = spark.createDataFrame([(300, 3), (400, 4)], "b long, a long")
-    fal.write_to_model(extra, "t", mode="append")
-    rows = {(r.a, r.b) for r in fal.ref("t").collect()}
-    assert (3, 300) in rows and (4, 400) in rows, rows
-    assert (300, 3) not in rows, "append wrote columns positionally, not by name"
-    spark.sql("DROP DATABASE IF EXISTS wtmalign CASCADE")
-
-
-def test_write_to_model_overwrite_keeps_declared_layout(spark, tmp_path):
-    """A script's write_to_model overwrite must not flatten the model's
-    declared bucket layout."""
-    from dbt_fal_spark.api import FalSpark
-    from dbt_fal_spark.materialize import _table_bucket_spec
-
-    spark.sql("DROP DATABASE IF EXISTS wtmlayout CASCADE")
-    proj = tmp_path / "wtmlayout"
-    (proj / "models").mkdir(parents=True)
-    (proj / "dbt_project.yml").write_text("name: wtmlayout\n")
-    (proj / "models" / "bk.sql").write_text(
-        "{{ config(materialized='table', bucket_by={'cols': 'k', 'n': 4}) }}\n"
-        "SELECT id AS k, id AS v FROM range(20)"
-    )
-    fal = FalSpark(proj, spark=spark)
-    fal.run()
-    ident = fal._identifier("bk")
-    assert _table_bucket_spec(spark, ident) == (4, ("k",))
-    fal.write_to_model(spark.range(30).selectExpr("id AS k", "id*2 AS v"), "bk")
-    assert spark.table(ident).count() == 30
-    assert _table_bucket_spec(spark, ident) == (4, ("k",)), "overwrite flattened the bucket layout"
-    spark.sql("DROP DATABASE IF EXISTS wtmlayout CASCADE")
-
-
 # --- r10 adversarial review: snapshot composite-key contract error ----------
 
 
@@ -277,58 +192,6 @@ def test_sentiment_batch_inference_shape_and_semantics(spark):
         assert (r.sentiment_score > 0) == (r.label == "positive")
         assert (r.sentiment_score < 0) == (r.label == "negative")
         assert r.n_pos + r.n_neg <= r.n_tokens
-
-
-def test_incremental_model_keeps_declared_bucket_layout(spark, tmp_path):
-    """An incremental model's declared bucket layout must survive BOTH
-    the first-run write and the merge swap (pre-fix: incremental_merge
-    never received bucket_by/sort_by — the table was created unbucketed,
-    and a bucketed table hitting the merge path was silently flattened
-    by the swap, voiding the zero-shuffle-join contract). Also verifies
-    the append strategy maintains bucketing via insertInto (bucket spec
-    comes from the catalog there)."""
-    import re
-
-    from dbt_fal_spark.api import FalSpark
-    from dbt_fal_spark.materialize import _table_bucket_spec, _table_location
-
-    spark.sql("DROP DATABASE IF EXISTS incbkt CASCADE")
-    proj = tmp_path / "incbkt"
-    (proj / "models").mkdir(parents=True)
-    (proj / "dbt_project.yml").write_text("name: incbkt\n")
-    (proj / "models" / "merged.sql").write_text(
-        "{{ config(materialized='incremental', unique_key='k',"
-        " bucket_by={'cols': 'k', 'n': 4}) }}\n"
-        "SELECT id AS k, id % 7 AS v FROM range(50)"
-    )
-    (proj / "models" / "appended.sql").write_text(
-        "{{ config(materialized='incremental', incremental_strategy='append',"
-        " bucket_by={'cols': 'k', 'n': 4}) }}\n"
-        "SELECT id AS k, id % 7 AS v FROM range(20)"
-    )
-    fal = FalSpark(proj, spark=spark)
-    statuses = fal.run()
-    assert all(s == "success" for s in statuses.values()), statuses
-    # first run creates the bucket layout
-    for m in ("merged", "appended"):
-        assert _table_bucket_spec(spark, fal._identifier(m)) == (4, ("k",)), m
-    # second run: merge swap and append must both keep it
-    statuses = fal.run()
-    assert all(s == "success" for s in statuses.values()), statuses
-    for m in ("merged", "appended"):
-        assert _table_bucket_spec(spark, fal._identifier(m)) == (4, ("k",)), (
-            f"{m}: incremental rerun flattened the bucket layout"
-        )
-    # the appended files are REALLY bucketed (bucket-id suffix), not just
-    # catalog metadata over unbucketed data
-    loc = _table_location(spark, fal._identifier("appended"))
-    import os
-
-    data_files = [f for f in os.listdir(loc) if f.endswith(".parquet")]
-    assert data_files and all(re.search(r"_\d{5}\.c\d+", f) for f in data_files)
-    assert spark.table(fal._identifier("merged")).count() == 50
-    assert spark.table(fal._identifier("appended")).count() == 40
-    spark.sql("DROP DATABASE IF EXISTS incbkt CASCADE")
 
 
 def test_circular_ref_reports_cycle_clearly(spark, tmp_path):

@@ -57,46 +57,6 @@ def test_dunder_py_files_are_not_models(tmp_path):
     assert not any(m.name == "__init__" for m in manifest.models.values())
 
 
-def test_model_alias_config(tmp_path, spark):
-    """dbt `alias` config (reference: run.feature 'fal run provides
-    model aliases'): the physical relation takes the alias name, ref()
-    keeps resolving by MODEL name, and context.current_model.alias
-    reports the alias to scripts."""
-    import os
-
-    from dbt_fal_spark.api import FalSpark
-    from tests.conftest import SF_DIR
-
-    os.environ["TESTDATA_DIR"] = SF_DIR
-    proj = _copy_project(tmp_path)
-    (proj / "models" / "agent_wait_time.sql").write_text(
-        "{{ config(materialized='table', alias='wait_time') }}\n"
-        "select count(*) as n from {{ ref('stg_orders') }}\n"
-    )
-    (proj / "scripts" / "alias_probe.py").write_text(
-        "open(__file__ + '.out', 'w').write(\n"
-        "    f'alias={context.current_model.alias} name={context.current_model.name}')\n"
-    )
-    schema_yml = proj / "models" / "schema.yml"
-    schema_yml.write_text(
-        schema_yml.read_text()
-        + "  - name: agent_wait_time\n"
-        + "    meta: {fal: {scripts: {after: [scripts/alias_probe.py]}}}\n"
-    )
-    spark.sql("DROP DATABASE IF EXISTS jaffle_spark CASCADE")
-    fal = FalSpark(proj, spark=spark)
-    statuses = fal.run(threads=2)
-    assert statuses["model.jaffle_spark.agent_wait_time"] == "success"
-    # physical relation carries the alias; the model name is not a table
-    assert spark.catalog.tableExists("jaffle_spark.wait_time")
-    assert not spark.catalog.tableExists("jaffle_spark.agent_wait_time")
-    # ref() by MODEL name resolves to the aliased relation
-    assert fal.ref("agent_wait_time").collect()[0]["n"] > 0
-    probe = (proj / "scripts" / "alias_probe.py.out").read_text()
-    assert probe == "alias=wait_time name=agent_wait_time"
-    spark.sql("DROP DATABASE IF EXISTS jaffle_spark CASCADE")
-
-
 def test_tests_attached_to_model_and_source_objects(tmp_path):
     """list_models()/list_sources() consumers enumerate per-node tests
     (reference: dbt_test.feature 'Source tests are present in context');

@@ -14,7 +14,7 @@ from pathlib import Path
 
 import pytest
 
-from dbt_fal_spark.project.loader import load_profile, load_project
+from dbt_fal_spark.project.loader import load_profile
 
 FIXTURE = Path(__file__).parent / "fixtures" / "jaffle_spark"
 

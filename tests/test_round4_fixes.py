@@ -14,7 +14,6 @@
 from __future__ import annotations
 
 import textwrap
-from pathlib import Path
 
 import pandas as pd
 import pytest

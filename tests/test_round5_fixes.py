@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import re
 import textwrap
-from pathlib import Path
 
 import numpy as np
 import pytest

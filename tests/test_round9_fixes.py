@@ -10,7 +10,6 @@ import shutil
 from dbt_fal_spark.api import FalSpark
 from dbt_fal_spark.materialize import (
     _live_pointer_path,
-    _read_live_pointer,
     _table_location,
     _write_live_pointer,
 )
