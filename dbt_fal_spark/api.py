@@ -55,9 +55,9 @@ from dbt_fal_spark.materialize import (
     write_table,
 )
 from dbt_fal_spark.plans.executor import parallel_executor
-from dbt_fal_spark.plans.node_graph import NodeGraph, NodeKind
+from dbt_fal_spark.plans.node_graph import NodeGraph
 from dbt_fal_spark.plans.schedule import SUCCESS, Scheduler, TaskGroup
-from dbt_fal_spark.plans.selectors import model_checksums, select_nodes
+from dbt_fal_spark.plans.selectors import Selector, SelectorError, model_checksums, select_nodes
 from dbt_fal_spark.project.jinja import render_model_sql
 from dbt_fal_spark.environments import CloudEnvironment, load_environments, user_code
 from dbt_fal_spark.project.loader import load_profile, load_project
@@ -780,8 +780,8 @@ class FalSpark:
 
     def run(
         self,
-        select: str | list[str] | None = None,
-        exclude: str | list[str] | None = None,
+        select: Selector = None,
+        exclude: Selector = None,
         threads: int | None = None,
         full_refresh: bool = False,
         fail_fast: bool = False,
@@ -794,16 +794,14 @@ class FalSpark:
         # defer scope: refs from selected nodes to models NOT in this set
         # resolve against the state environment (when --defer is on)
         self._run_selected = {n.split(".")[-1] for n in selected}
-        order = [n for n in self.graph.sort_nodes() if n in selected]
+        nodes = self.graph.sort_nodes()
+        order = [n for n in nodes if n in selected]
         log.debug(
             "run: %d/%d nodes selected (select=%r exclude=%r threads=%d full_refresh=%s)",
-            len(order), len(self.graph.sort_nodes()), select, exclude, threads, full_refresh,
+            len(order), len(nodes), select, exclude, threads, full_refresh,
         )
         groups: dict[str, TaskGroup] = {}
         for node in order:
-            kind = self.graph.node_kind(node)
-            if kind == NodeKind.FAL_SCRIPT:
-                continue  # scripts attach to their model below
             model: DbtModel = self.graph.node_attr(node, "model")
             groups[node] = TaskGroup(
                 group_id=node,
@@ -815,7 +813,6 @@ class FalSpark:
             for dep in self.graph.graph.predecessors(node):
                 if dep in groups:
                     group.dependencies.append(groups[dep])
-                # BEFORE-script predecessor: already a pre-hook
         scheduler = Scheduler(list(groups.values()))
         context: dict = {"errors": []}
         t0 = time.time()
@@ -838,7 +835,7 @@ class FalSpark:
         self._write_state()
         return statuses
 
-    def snapshot(self, select: str | list[str] | None = None, as_of: str | None = None) -> dict[str, str]:
+    def snapshot(self, select: Selector = None, as_of: str | None = None) -> dict[str, str]:
         """dbt snapshot: run every (or the selected) snapshot's select and
         SCD2-merge it into snapshot.<name> history tables
         (materialize.snapshot_scd2). ``as_of`` stamps check-strategy
@@ -846,6 +843,8 @@ class FalSpark:
         take their boundaries from the source's own updated_at)."""
         wanted = None
         if select:
+            if isinstance(select, dict):
+                raise SelectorError(f"snapshots are selected by name, not by {select!r}")
             wanted = set(select.split() if isinstance(select, str) else select)
         statuses: dict[str, str] = {}
         for snap in self.manifest.snapshots.values():
@@ -990,8 +989,8 @@ class FalSpark:
 
     def run_scripts(
         self,
-        select: str | list[str] | None = None,
-        exclude: str | list[str] | None = None,
+        select: Selector = None,
+        exclude: Selector = None,
         *,
         use_last_run: bool = True,
         only_scripts: list[str] | None = None,
@@ -1047,7 +1046,7 @@ class FalSpark:
                 }
                 selected &= last
         for node in self.graph.sort_nodes():
-            if node not in selected or self.graph.node_kind(node) == NodeKind.FAL_SCRIPT:
+            if node not in selected:
                 continue
             model: DbtModel = self.graph.node_attr(node, "model")
             for side in sides:
@@ -1063,23 +1062,24 @@ class FalSpark:
         run_global_scripts(False)
         return ran
 
-    def test(self, select: str | list[str] | None = None) -> list[dict]:
+    def test(self, select: Selector = None, exclude: Selector = None) -> list[dict]:
         """Generic + singular tests → violation counts
         (reference behavior: dbt test; SURVEY §2.G generic tests row).
         ``select`` scopes to tests whose owning model matches the
-        selection (dbt semantics: selecting a model selects its tests);
-        source-owned and singular tests run only unselected. Tests run on
-        ``threads`` workers, as dbt runs them on the run's thread pool;
-        results come back in manifest order."""
+        selection (dbt semantics: selecting a model selects its tests),
+        and ``exclude`` drops the tests of the models it matches;
+        source-owned and singular tests run only without ``select``.
+        Tests run on ``threads`` workers, as dbt runs them on the run's
+        thread pool; results come back in manifest order."""
         from concurrent.futures import ThreadPoolExecutor
 
-        selected_ids: set[str] | None = None
-        if select:
-            selected_ids = select_nodes(self.graph, select, state=self._load_state())
-        tests = [
-            t for t in self.manifest.tests.values()
-            if selected_ids is None or t.model_id in selected_ids
-        ]
+        tests = list(self.manifest.tests.values())
+        if select or exclude:
+            keep = select_nodes(self.graph, select, exclude, state=self._load_state())
+            tests = [
+                t for t in tests
+                if t.model_id in keep or (not select and t.model_id not in self.graph.graph)
+            ]
         if any(t.store_failures for t in tests):
             self.spark.sql(f"CREATE DATABASE IF NOT EXISTS `{self.schema}_dbt_test__audit`")
         with ThreadPoolExecutor(max_workers=max(1, self.threads)) as pool:

@@ -137,59 +137,9 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
-_MAX_DNF_TERMS = 10_000
-
-
-def _selector_terms(d) -> list[str]:
-    """Translate a selectors.yml definition into selector-language terms
-    (dbt schema: a definition is a selector STRING, a LIST = union, or a
-    DICT — {union:[...]}, {intersection:[...]}, or a {method, value,
-    parents/children[, parents_depth/children_depth]} criterion). The
-    output feeds the same engine --select feeds: space-separated terms
-    are a union, ','-joined terms an intersection."""
-    if isinstance(d, str):
-        return d.split()
-    if isinstance(d, list):
-        return [t for item in d for t in _selector_terms(item)]
-    if isinstance(d, dict):
-        if "union" in d:
-            return [t for item in d["union"] for t in _selector_terms(item)]
-        if "intersection" in d:
-            # Each child resolves to a UNION of terms; distribute the
-            # intersection over those unions ((a∪b)∩c = (a∩c)∪(b∩c)) by
-            # cross-product — flattening all children into one ','-term
-            # would wrongly compute a∩b∩c. ',' composes associatively,
-            # so nested intersections inside a child stay correct.
-            from itertools import product as _product
-            from math import prod as _prod
-
-            child_unions = [_selector_terms(item) for item in d["intersection"]]
-            if not child_unions:
-                return []
-            # DNF term count is the product of child union sizes —
-            # bound it so a pathological selectors.yml fails fast with
-            # a clear message instead of materializing millions of
-            # --select terms (ADVICE r9)
-            n_terms = _prod(len(u) for u in child_unions)
-            if n_terms > _MAX_DNF_TERMS:
-                raise ValueError(
-                    f"selectors.yml intersection expands to {n_terms} terms "
-                    f"(> {_MAX_DNF_TERMS}): distributing the intersection over "
-                    "its child unions is combinatorial — simplify the nested "
-                    "union/intersection structure"
-                )
-            return [",".join(combo) for combo in _product(*child_unions)]
-        if "method" in d:
-            method, value = d["method"], str(d.get("value", ""))
-            body = value if method in ("fqn", "path") else f"{method}:{value}"
-            pre = ("+" if d.get("parents_depth") is None else f"{d['parents_depth']}+") if d.get("parents") else ""
-            post = ("+" if d.get("children_depth") is None else f"+{d['children_depth']}") if d.get("children") else ""
-            return [f"{pre}{body}{post}"]
-    raise ValueError(f"unsupported selectors.yml definition: {d!r}")
-
-
-def resolve_named_selector(project_dir: str, name: str) -> list[str]:
-    """Load selectors.yml and resolve ``name`` to --select terms."""
+def resolve_named_selector(project_dir: str, name: str):
+    """Load selectors.yml and return the definition of selector ``name``
+    as loaded (a string, list or dict, evaluated by ``select_nodes``)."""
     from pathlib import Path
 
     import yaml
@@ -200,7 +150,10 @@ def resolve_named_selector(project_dir: str, name: str) -> list[str]:
     doc = yaml.safe_load(path.read_text()) or {}
     for entry in doc.get("selectors", []):
         if entry.get("name") == name:
-            return _selector_terms(entry.get("definition"))
+            if not entry.get("definition"):
+                # an empty definition would select every node
+                raise ValueError(f"--selector {name!r} has no definition in selectors.yml")
+            return entry["definition"]
     known = ", ".join(e.get("name", "?") for e in doc.get("selectors", []))
     raise ValueError(f"--selector {name!r} not found in selectors.yml (have: {known})")
 
@@ -302,6 +255,18 @@ def main(argv: list[str] | None = None) -> int:
         # lines/task — useless for debugging a model DAG)
         fal.spark.sparkContext.setLogLevel("ERROR")
 
+    from dbt_fal_spark.plans.selectors import SelectorError
+
+    try:
+        return _command(fal, args)
+    except SelectorError as e:
+        # a selector the graph cannot evaluate: usage error, not a traceback
+        print(str(e), file=sys.stderr)
+        return 2
+
+
+def _command(fal, args) -> int:
+    """Run the verb ``args`` names against the loaded project."""
     if args.command == "debug":
         # dbt debug parity: each check prints OK/FAIL; exit 1 on any FAIL
         ok = True
@@ -350,7 +315,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.command == "test":
-        results = fal.test(select=args.select)
+        results = fal.test(select=args.select, exclude=args.exclude)
         bad = 0
         for r in results:
             status = r["status"]
@@ -389,9 +354,9 @@ def main(argv: list[str] | None = None) -> int:
         # (+ @), tag:/path:/state: prefixes, comma-intersections, path
         # separators, AND the fnmatch glob set (* ? [) honored by
         # _name_match — 'stg_?' must route through the selector engine,
-        # not the exact-name branch (ADVICE r10)
+        # not the exact-name branch; so must every named selector
         plain = lambda t: not any(ch in t for ch in "+:,*@/?[")  # noqa: E731
-        if args.select and all(plain(t) for t in args.select) and not args.exclude:
+        if args.select and not args.selector and all(plain(t) for t in args.select) and not args.exclude:
             # plain model names: exact-name contract — unknown names and
             # an explicit view/ephemeral both error clearly (the latter
             # inside compact/analyze)
@@ -409,21 +374,13 @@ def main(argv: list[str] | None = None) -> int:
             # through the same engine flow run uses, then — like bulk
             # mode — keep only table-materialized models (a tag sweep
             # legitimately matches views; they have no files to maintain)
-            from dbt_fal_spark.plans.node_graph import NodeKind
             from dbt_fal_spark.plans.selectors import select_nodes
 
             sel = select_nodes(
                 fal.graph, args.select, args.exclude, state=fal._load_state()
             )
-            names = sorted(
-                {
-                    m.name
-                    for node in sel
-                    if fal.graph.node_kind(node) != NodeKind.FAL_SCRIPT
-                    and (m := fal.graph.node_attr(node, "model")) is not None
-                    and fal.is_table_model(m.name)
-                }
-            )
+            models = (fal.graph.node_attr(node, "model") for node in sel)
+            names = sorted(m.name for m in models if fal.is_table_model(m.name))
             if not names:
                 print(
                     "maintenance: selector matched no table-materialized models",

@@ -1,10 +1,12 @@
-"""DAG over models / scripts — networkx DiGraph, driver-side.
+"""The model DAG — a networkx DiGraph, driver-side.
 
 Mirrors the reference's NodeGraph (reference: projects/adapter/src/fal/
-dbt/node_graph.py:100-141 build, :147-249 traversal): model nodes plus
-BEFORE/AFTER script nodes named ``script.<model>.<BEFORE|AFTER>.<file>``,
-edges from ``depends_on``. Spark is not involved — this is pure
-orchestration structure.
+dbt/node_graph.py:100-141 build, :147-249 traversal): one node per model
+and seed, keyed by unique id and carrying its ``DbtModel`` as ``model``,
+with edges from ``depends_on``. Sources are always available and are not
+nodes. Before/after scripts and hooks are not nodes either: each runs as
+a side task of its model (``FalSpark._side_tasks``). Spark is not
+involved — this is pure orchestration structure.
 """
 
 from __future__ import annotations
@@ -18,18 +20,6 @@ from dbt_fal_spark.project.manifest import Manifest
 
 
 @dataclass
-class NodeKind:
-    DBT_MODEL = "dbt_model"
-    FAL_MODEL = "fal_model"  # python model
-    FAL_SCRIPT = "fal_script"
-    SEED = "seed"
-
-
-def script_node_id(model_name: str, when: str, script: str) -> str:
-    return f"script.{model_name}.{when}.{script}"
-
-
-@dataclass
 class NodeGraph:
     graph: nx.DiGraph = field(default_factory=nx.DiGraph)
 
@@ -37,27 +27,9 @@ class NodeGraph:
     def from_manifest(cls, manifest: Manifest) -> "NodeGraph":
         g = nx.DiGraph()
         for uid, model in manifest.models.items():
-            if model.materialization == "seed":
-                kind = NodeKind.SEED
-            elif model.python_model is not None:
-                kind = NodeKind.FAL_MODEL
-            else:
-                kind = NodeKind.DBT_MODEL
-            g.add_node(uid, kind=kind, model=model)
-            for before in (True, False):
-                when = "BEFORE" if before else "AFTER"
-                for script in model.get_scripts(before=before):
-                    sid = script_node_id(model.name, when, script)
-                    g.add_node(sid, kind=NodeKind.FAL_SCRIPT, model=model, script=script)
-                    if before:
-                        g.add_edge(sid, uid)
-                    else:
-                        g.add_edge(uid, sid)
+            g.add_node(uid, model=model)
         for uid, model in manifest.models.items():
-            for dep in model.depends_on:
-                if dep in g:
-                    g.add_edge(dep, uid)
-                # sources are not graph nodes; they're always available
+            g.add_edges_from((dep, uid) for dep in model.depends_on if dep in g)
         return cls(graph=g)
 
     # --- traversal (reference: node_graph.py:147-249) ---
@@ -99,9 +71,6 @@ class NodeGraph:
             seen.update(nxt)
             frontier = nxt
         return sorted(seen)
-
-    def node_kind(self, node: str) -> str:
-        return self.graph.nodes[node].get("kind", "")
 
     def node_attr(self, node: str, key: str) -> Any:
         return self.graph.nodes[node].get(key)

@@ -1,23 +1,35 @@
-"""dbt-style node selection language.
+"""dbt-style node selection over the model DAG.
 
-Mirrors the reference's selector semantics (reference: projects/adapter/
+``select_nodes`` is the one evaluator of a selector definition. It takes
+each form dbt accepts and evaluates it directly to a set of nodes:
+
+- a string: space-separated words are a union, ``a,b`` an intersection
+  of the fully expanded components (``+a,b+`` is (+a) ∩ (b+)) (reference:
+  selectors.py:78-125);
+- a list: the union of its items;
+- a selectors.yml dict: ``{union: [...]}``, ``{intersection: [...]}``, or
+  a ``method``/``value`` criterion (methods ``fqn``, ``path``, ``tag``,
+  ``state``) with optional ``parents``/``children`` and their depths.
+
+``--exclude`` takes the same forms and subtracts. The words of the
+selector language mirror the reference's (reference: projects/adapter/
 src/fal/dbt/cli/selectors.py:13-65 plan build, :156-226 SelectorPlan,
 :228-242 tag/complex, :294-303 regex ops):
 
-- ``model``           the node itself
+- ``model``           the node itself (fnmatch globs: ``stg_*``)
 - ``+model``          ancestors + node          (``n+model`` = n levels)
 - ``model+``          node + descendants        (``model+n`` = n levels)
 - ``@model``          node + descendants + ancestors-of-descendants
 - ``tag:x``           nodes carrying tag x
-- ``script.py``       scripts by file name
+- ``dir/file.sql``    models whose file path ends with the term
 - ``state:modified`` / ``state:new``  models whose checksum changed / that
   did not exist in the saved state (reference: selectors.py:228-242 routes
   these to dbt's state machinery; here the state is the checksum snapshot
   the last run wrote — see ``model_checksums`` / FalSpark ``target/``)
-- space-separated selectors = union; comma-separated = intersection
-  (``tag:nightly,state:modified`` = nodes matching BOTH, each component
-  fully expanded through its own graph operators before intersecting,
-  reference: selectors.py:78-125); ``--exclude`` subtracts.
+
+Scripts are not graph nodes: they run as side tasks of their model, so a
+bare ``*.py``/``*.ipynb`` word is an error that points to
+``fal run --scripts``.
 """
 
 from __future__ import annotations
@@ -29,7 +41,15 @@ from dataclasses import dataclass
 
 from dbt_fal_spark.plans.node_graph import NodeGraph
 
-OP_PLUS_RE = r"(?P<pre_n>\d*)(?P<pre_plus>\+?)(?P<body>[^+]+?)(?P<post_plus>\+?)(?P<post_n>\d*)$"
+# a depth counts only next to its `+`: `m15` is a name, `2+m` and `m+1` are depths
+OP_PLUS_RE = r"(?:(?P<pre_n>\d*)(?P<pre_plus>\+))?(?P<body>[^+]+?)(?:(?P<post_plus>\+)(?P<post_n>\d*))?$"
+
+# a selector definition: a string of words, a list, or a selectors.yml dict
+Selector = str | list | dict | None
+
+
+class SelectorError(ValueError):
+    """A selector definition the graph cannot evaluate (a usage error)."""
 
 
 def model_checksum(model) -> str:
@@ -92,52 +112,40 @@ def _name_match(name: str, pattern: str) -> bool:
     return name == pattern
 
 
-def _match_nodes(graph: NodeGraph, plan: SelectorPlan, state: dict[str, str] | None = None) -> set[str]:
+def _path_match(path, pattern: str) -> bool:
+    """Path-form selector (dbt `path:` method / bare path terms like
+    models/staging/orders.sql): match the model file's trailing path."""
+    pattern = pattern.lstrip("/")
+    return path is not None and (
+        str(path).endswith("/" + pattern) or fnmatch.fnmatchcase(str(path), "*/" + pattern)
+    )
+
+
+def _match_nodes(graph: NodeGraph, plan: SelectorPlan, state: dict[str, str] | None) -> set[str]:
+    if not (plan.is_tag or plan.is_state or "/" in plan.body) and plan.body.endswith((".py", ".ipynb")):
+        raise SelectorError(
+            f"selector {plan.body!r} names a script file, and scripts are not graph "
+            f"nodes: they run with their model. Use `fal run --scripts {plan.body}`."
+        )
     out: set[str] = set()
-    for node in graph.graph.nodes:
-        attrs = graph.graph.nodes[node]
-        model = attrs.get("model")
+    for node, model in graph.graph.nodes(data="model"):
         if plan.is_state:
-            if model is None:
-                continue
+            # "modified" counts new models too (dbt semantics)
             prior = (state or {}).get(model.name)
-            if plan.body == "new":
-                changed = prior is None
-            else:  # "modified" (dbt semantics: new counts as modified)
-                changed = prior is None or prior != model_checksum(model)
-            if changed:
-                out.add(node)
-            continue
-        if plan.is_tag:
-            if model is not None and any(
-                _name_match(t, plan.body) for t in (model.tags or [])
-            ):
-                out.add(node)
-            continue
-        if attrs.get("kind") == "fal_script":
-            # select scripts by file name (reference: 'script.py' selectors)
-            if attrs.get("script") == plan.body:
-                out.add(node)
-            continue
-        short = node.split(".")[-1]
-        if _name_match(short, plan.body):
+            hit = prior is None or (plan.body != "new" and prior != model_checksum(model))
+        elif plan.is_tag:
+            hit = any(_name_match(t, plan.body) for t in model.tags or [])
+        else:
+            hit = _name_match(node.split(".")[-1], plan.body) or (
+                "/" in plan.body and _path_match(model.path, plan.body)
+            )
+        if hit:
             out.add(node)
-            continue
-        # path-form selector (dbt `path:` method / bare path terms like
-        # models/staging/orders.sql): match the model file's trailing path
-        if model is not None and "/" in plan.body:
-            p = getattr(model, "path", None)
-            if p is not None and (
-                str(p).endswith("/" + plan.body.lstrip("/"))
-                or fnmatch.fnmatchcase(str(p), "*/" + plan.body.lstrip("/"))
-            ):
-                out.add(node)
     return out
 
 
-def _eval_component(graph: NodeGraph, raw: str, state: dict[str, str] | None) -> set[str]:
+def _expand(graph: NodeGraph, plan: SelectorPlan, state: dict[str, str] | None) -> set[str]:
     """One selector component: match + graph-operator expansion."""
-    plan = SelectorPlan.parse(raw)
     base = _match_nodes(graph, plan, state)
     expanded = set(base)
     for node in base:
@@ -152,37 +160,59 @@ def _eval_component(graph: NodeGraph, raw: str, state: dict[str, str] | None) ->
     return expanded
 
 
-def _eval_selector(graph: NodeGraph, raw: str, state: dict[str, str] | None) -> set[str]:
+def _eval_word(graph: NodeGraph, word: str, state: dict[str, str] | None) -> set[str]:
     """One space-delimited selector word; ``a,b`` intersects the fully
-    expanded component sets (dbt semantics — `+a,b+` is (+a) ∩ (b+))."""
-    out: set[str] | None = None
-    for part in raw.split(","):
-        if not part:
-            continue
-        nodes = _eval_component(graph, part, state)
-        out = nodes if out is None else out & nodes
-    return out or set()
+    expanded component sets."""
+    parts = [_expand(graph, SelectorPlan.parse(p), state) for p in word.split(",") if p]
+    return set.intersection(*parts) if parts else set()
+
+
+_METHODS = {"fqn": {}, "path": {}, "tag": {"is_tag": True}, "state": {"is_state": True}}
+
+
+def _criterion(d: dict) -> SelectorPlan:
+    """A selectors.yml ``method``/``value`` criterion as a selector plan."""
+    if d["method"] not in _METHODS:
+        raise SelectorError(
+            f"unsupported selectors.yml method {d['method']!r} (have: {', '.join(_METHODS)})"
+        )
+    depth = lambda key: None if d.get(key) is None else int(d[key])  # noqa: E731
+    return SelectorPlan(
+        body=str(d.get("value", "")),
+        ancestors=bool(d.get("parents")),
+        ancestor_levels=depth("parents_depth"),
+        descendants=bool(d.get("children")),
+        descendant_levels=depth("children_depth"),
+        **_METHODS[d["method"]],
+    )
+
+
+def _evaluate(graph: NodeGraph, d: Selector, state: dict[str, str] | None) -> set[str]:
+    if isinstance(d, str):
+        return set().union(*(_eval_word(graph, w, state) for w in d.split()))
+    if isinstance(d, list):
+        return set().union(*(_evaluate(graph, item, state) for item in d))
+    if isinstance(d, dict):
+        if "union" in d:
+            return _evaluate(graph, d["union"], state)
+        if "intersection" in d:
+            parts = [_evaluate(graph, item, state) for item in d["intersection"]]
+            return set.intersection(*parts) if parts else set()
+        if "method" in d:
+            return _expand(graph, _criterion(d), state)
+    raise SelectorError(f"unsupported selectors.yml definition: {d!r}")
 
 
 def select_nodes(
     graph: NodeGraph,
-    select: list[str] | str | None,
-    exclude: list[str] | str | None = None,
+    select: Selector,
+    exclude: Selector = None,
     state: dict[str, str] | None = None,
 ) -> set[str]:
-    """Evaluate selectors → node id set. None selects everything.
-    ``state`` is the prior name→checksum snapshot for ``state:`` selectors."""
-    if select is None or select == [] or select == "":
-        selected = set(graph.graph.nodes)
-    else:
-        if isinstance(select, str):
-            select = select.split()
-        selected = set()
-        for raw in select:
-            selected |= _eval_selector(graph, raw, state)
+    """Evaluate a selector definition → node id set; an empty one selects
+    everything. ``state`` is the prior name→checksum snapshot for
+    ``state:`` selectors."""
+    selected = _evaluate(graph, select, state) if select else set(graph.graph.nodes)
     if exclude:
-        if isinstance(exclude, str):
-            exclude = exclude.split()
-        for raw in exclude:
-            selected -= _eval_selector(graph, raw, state)
+        selected -= _evaluate(graph, exclude, state)
     return selected

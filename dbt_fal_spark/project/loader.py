@@ -92,16 +92,17 @@ def extract_python_deps(code: str) -> tuple[list[str], list[tuple[str, str]]]:
     return refs, sources
 
 
-def _reject_duplicate_model(manifest: Manifest, uid: str, path: Path) -> None:
-    """dbt errors on two models sharing a name; previously the
-    later-scanned file silently replaced the earlier one (r11
-    adversarial review) — ambiguous `ref()` targets must be loud."""
-    if uid in manifest.models:
-        raise ValueError(
-            f"duplicate model name {uid.rsplit('.', 1)[-1]!r}: "
-            f"{manifest.models[uid].path} and {path} — model names must be "
-            "unique across model-paths/fal-models-paths (rename one file)"
-        )
+def _reject_duplicate_model(manifest: Manifest, project: str, name: str, path: Path) -> None:
+    """dbt errors on two models, or a model and a seed, sharing a name:
+    both would write ``schema.<name>`` and ``ref(name)`` would be
+    ambiguous, so the clash must be loud."""
+    for uid in (f"model.{project}.{name}", f"seed.{project}.{name}"):
+        if uid in manifest.models:
+            raise ValueError(
+                f"duplicate model name {name!r}: {manifest.models[uid].path} "
+                f"and {path} — model and seed names must be unique across "
+                "model-paths/fal-models-paths/seed-paths (rename one file)"
+            )
 
 
 def _scan_python_models(
@@ -149,7 +150,7 @@ def _add_model(
     config = config or {}
     cfg = {**(props.get("config") or {}), **config}
     uid = f"model.{project}.{mname}"
-    _reject_duplicate_model(manifest, uid, path)
+    _reject_duplicate_model(manifest, project, mname, path)
     model = DbtModel(
         name=mname,
         unique_id=uid,
@@ -257,6 +258,7 @@ def load_project(project_dir: str | Path, vars: dict[str, Any] | None = None) ->
         if not sdir.exists():
             continue
         for csv in sorted(sdir.glob("*.csv")):
+            _reject_duplicate_model(manifest, name, csv.stem, csv)
             uid = f"seed.{name}.{csv.stem}"
             manifest.models[uid] = DbtModel(
                 name=csv.stem,

@@ -109,6 +109,9 @@ def test_parser_models_alias_and_short_select():
 
 def test_named_selector_resolution(tmp_path):
     from dbt_fal_spark.cli import resolve_named_selector
+    from dbt_fal_spark.plans.node_graph import NodeGraph
+    from dbt_fal_spark.plans.selectors import model_checksums, select_nodes
+    from dbt_fal_spark.project.manifest import DbtModel, Manifest
 
     (tmp_path / "selectors.yml").write_text(
         """
@@ -133,10 +136,28 @@ selectors:
       children_depth: 2
 """
     )
-    assert resolve_named_selector(str(tmp_path), "plain") == ["tag:nightly", "stg_a+"]
-    assert resolve_named_selector(str(tmp_path), "listed") == ["model_a", "model_b"]
-    assert resolve_named_selector(str(tmp_path), "both") == ["tag:nightly,state:modified"]
-    assert resolve_named_selector(str(tmp_path), "crit") == ["+tag:nightly+2"]
+    # raw → stg_a (nightly) → mid → top → leaf; lone (nightly); model_a; model_b
+    deps = {"raw": [], "stg_a": ["raw"], "mid": ["stg_a"], "top": ["mid"], "leaf": ["top"],
+            "lone": [], "model_a": [], "model_b": []}
+    m = Manifest(project_name="t", project_dir=tmp_path)
+    for name, parents in deps.items():
+        m.models[f"model.t.{name}"] = DbtModel(
+            name=name, unique_id=f"model.t.{name}", raw_sql=f"select '{name}'",
+            depends_on=[f"model.t.{d}" for d in parents],
+            tags=["nightly"] if name in ("stg_a", "lone") else [],
+        )
+    graph = NodeGraph.from_manifest(m)
+    state = model_checksums(m)
+    del state["lone"]  # new since the saved state, so modified too
+
+    def selected(name):
+        definition = resolve_named_selector(str(tmp_path), name)
+        return {n.split(".")[-1] for n in select_nodes(graph, definition, state=state)}
+
+    assert selected("plain") == {"stg_a", "lone", "mid", "top", "leaf"}
+    assert selected("listed") == {"model_a", "model_b"}
+    assert selected("both") == {"lone"}
+    assert selected("crit") == {"raw", "stg_a", "lone", "mid", "top"}
     with pytest.raises(ValueError, match="not found"):
         resolve_named_selector(str(tmp_path), "nope")
 
@@ -184,6 +205,23 @@ def test_cli_maintenance_accepts_selector_syntax(cli_env, capsys):
         ["maintenance", "compact", "--project-dir", FIXTURE,
          "--select", "big_orders+"]
     ) in (0, 2)  # depends on downstream tables; must not raise
+
+
+def test_cli_maintenance_named_selector_routes_through_selectors(cli_env, capsys, tmp_path):
+    """A named selector never takes the exact-name branch, even when its
+    definition is a plain model name: it is evaluated like any selector,
+    so a view it matches is skipped, not an error."""
+    import shutil
+
+    proj = tmp_path / "maintsel"
+    shutil.copytree(FIXTURE, proj)
+    (proj / "selectors.yml").write_text(
+        "selectors:\n  - name: a_view\n    definition: big_orders\n"
+    )
+    capsys.readouterr()
+    assert main(["maintenance", "compact", "--project-dir", str(proj),
+                 "--selector", "a_view"]) == 2
+    assert "matched no table-materialized models" in capsys.readouterr().err
 
 
 def test_cli_maintenance_glob_routes_through_selectors(cli_env, capsys):
@@ -253,3 +291,26 @@ def test_cli_debug_flag_emits_debug_logs(cli_env, capsys, caplog):
     assert main(["flow", "run", "--project-dir", FIXTURE,
                  "--select", "customers"]) == 0
     assert not any("nodes selected" in r.message for r in caplog.records)
+
+
+def test_cli_vars_accepts_yaml_and_json():
+    from dbt_fal_spark.cli import _parse_cli_vars
+
+    # the reference's documented example: a YAML string, not JSON
+    assert _parse_cli_vars("{my_variable: my_value}") == {"my_variable": "my_value"}
+    assert _parse_cli_vars('{"k": 1}') == {"k": 1}  # JSON still works
+    assert _parse_cli_vars("{}") == {}
+    assert _parse_cli_vars("") == {}
+    with pytest.raises(ValueError, match="YAML dict"):
+        _parse_cli_vars("[1, 2]")
+    with pytest.raises(ValueError, match="not valid YAML"):
+        _parse_cli_vars("{unclosed: [")
+
+
+def test_cli_test_exclude_drops_the_excluded_models_tests(cli_env, capsys):
+    """`test --exclude` runs every test but those of the excluded model;
+    the singular test, owned by no model, still runs."""
+    main(["test", "--project-dir", FIXTURE, "--exclude", "stg_orders"])
+    ran = capsys.readouterr().out.splitlines()
+    assert any("clv_not_negative" in line for line in ran), ran
+    assert not any("stg_orders" in line for line in ran), ran

@@ -356,17 +356,15 @@ def test_incremental_model_keeps_declared_bucket_layout(spark, tmp_path):
     spark.sql("DROP DATABASE IF EXISTS incbkt CASCADE")
 
 
-def test_model_alias_config(tmp_path, spark):
+def test_model_alias_config(tmp_path, spark, monkeypatch):
     """dbt `alias` config (reference: run.feature 'fal run provides
     model aliases'): the physical relation takes the alias name, ref()
     keeps resolving by MODEL name, and context.current_model.alias
     reports the alias to scripts."""
-    import os
-
     from dbt_fal_spark.api import FalSpark
     from tests.conftest import SF_DIR
 
-    os.environ["TESTDATA_DIR"] = SF_DIR
+    monkeypatch.setenv("TESTDATA_DIR", SF_DIR)
     proj = tmp_path / "proj"
     shutil.copytree(FIXTURES / "jaffle_spark", proj)
     (proj / "models" / "agent_wait_time.sql").write_text(
@@ -473,3 +471,15 @@ def test_write_to_source_keeps_a_csv_source_csv(spark, tmp_path, fresh_db):
     fal.write_to_source(spark.createDataFrame([(3, "c")], "id int, name string"), "raw", "people")
     rows = sorted((r.id, r.name) for r in fal.source("raw", "people").collect())
     assert rows == [(1, "a"), (2, "b"), (3, "c")]
+
+
+def test_layout_cols_accepts_both_forms():
+    from dbt_fal_spark.materialize import layout_cols
+
+    assert layout_cols("k1, k2") == ["k1", "k2"]
+    assert layout_cols(["k1", "k2"]) == ["k1", "k2"]
+    assert layout_cols(("k1",)) == ["k1"]
+    assert layout_cols(None) == []
+    assert layout_cols("") == []
+    # the pre-fix failure: str(list).split(",") produced "['k1'" garbage
+    assert "[" not in "".join(layout_cols(["k1", "k2"]))

@@ -6,7 +6,8 @@ must not reach into the format's internals. And
 operator builds one plan, and the profile only sets session confs. User
 Python runs through one in-process ``exec`` (``api``) and one child
 runner (``environments``). A model's table has one write site in
-``api``, ``FalSpark._materialize``."""
+``api``, ``FalSpark._materialize``. The DAG holds models and seeds only,
+and ``plans/selectors`` alone evaluates selectors.yml set algebra."""
 
 from __future__ import annotations
 
@@ -165,3 +166,33 @@ def test_model_tables_have_one_write_site():
         "FalSpark._run_test": ["write_table"],
     }, sites
     assert layout_getattrs == [], f"layout read through getattr at lines {layout_getattrs}"
+
+
+def test_graph_holds_models_only():
+    """Every node of the DAG is a model or seed of the manifest: scripts
+    and hooks run as side tasks of their model, not as nodes."""
+    from dbt_fal_spark.plans.node_graph import NodeGraph
+    from dbt_fal_spark.project.loader import load_project
+
+    manifest = load_project(Path(__file__).parent / "fixtures" / "jaffle_spark")
+    assert any(m.get_scripts(before=False) for m in manifest.models.values())
+    graph = NodeGraph.from_manifest(manifest)
+    assert set(graph.graph) == set(manifest.models)
+
+
+SELECTOR_SET_KEYS = {"union", "intersection"}
+
+
+def test_only_selectors_evaluates_selector_set_algebra():
+    """No package module but ``plans/selectors.py`` holds the selectors.yml
+    keys ``union`` or ``intersection`` as a string literal."""
+    holders = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        if path == PACKAGE / "plans" / "selectors.py":
+            continue
+        if any(
+            isinstance(node, ast.Constant) and node.value in SELECTOR_SET_KEYS
+            for node in ast.walk(ast.parse(path.read_text()))
+        ):
+            holders.append(str(path.relative_to(PACKAGE)))
+    assert holders == [], f"modules holding selectors.yml set keys: {holders}"

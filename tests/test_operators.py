@@ -81,3 +81,22 @@ def test_generic_tests_values_match_per_test_aggregates(spark):
         ).collect()[0]["v"],
     }
     assert got == want
+
+
+def test_sentiment_batch_inference_shape_and_semantics(spark):
+    from dbt_fal_spark.operators.inference import p_sentiment_batch_inference
+
+    df = p_sentiment_batch_inference(spark, SF_DIR)
+    assert [f.name for f in df.schema.fields] == [
+        "doc_id", "n_tokens", "n_pos", "n_neg", "sentiment_score", "label",
+    ]
+    rows = df.collect()
+    assert rows, "no scored documents"
+    labels = {r.label for r in rows}
+    assert labels <= {"positive", "negative", "neutral"}
+    assert len(labels) >= 2, "degenerate scoring — lexicon missing from corpus"
+    for r in rows:
+        assert -1.0 <= r.sentiment_score <= 1.0
+        assert (r.sentiment_score > 0) == (r.label == "positive")
+        assert (r.sentiment_score < 0) == (r.label == "negative")
+        assert r.n_pos + r.n_neg <= r.n_tokens

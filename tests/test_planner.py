@@ -167,6 +167,59 @@ def test_selector_plan_parse():
     assert SelectorPlan.parse("tag:x").is_tag
 
 
+def test_selectors_yml_wide_intersection_of_unions(tmp_path):
+    """A 25×25×25 selectors.yml intersection of unions is evaluated as
+    set algebra: no expansion into 15,625 selector terms, no term cap."""
+    import yaml
+
+    from dbt_fal_spark.cli import resolve_named_selector
+
+    graph = NodeGraph.from_manifest(_manifest({f"m{i}": [] for i in range(40)}))
+    spans = [range(0, 25), range(10, 35), range(15, 40)]
+    definition = {"intersection": [{"union": [f"m{i}" for i in span]} for span in spans]}
+    (tmp_path / "selectors.yml").write_text(
+        yaml.safe_dump({"selectors": [{"name": "wide", "definition": definition}]})
+    )
+    got = select_nodes(graph, resolve_named_selector(str(tmp_path), "wide"))
+    assert _names(got) == {f"m{i}" for i in range(15, 25)}
+
+
+def test_script_file_selector_is_an_error(tmp_path):
+    """Scripts are not graph nodes: a bare script-file term points to
+    `fal run --scripts` instead of selecting nothing. A path-form term
+    still selects a Python model by its file."""
+    m = _manifest({"a": []})
+    m.models["model.t.py_m"] = DbtModel(
+        name="py_m", unique_id="model.t.py_m",
+        path=tmp_path / "models" / "py_m.py", python_model=tmp_path / "models" / "py_m.py",
+    )
+    graph = NodeGraph.from_manifest(m)
+    for term in ("after.py", "*.py", "nb.ipynb", "a after.py", "a,after.py+"):
+        with pytest.raises(ValueError, match="--scripts"):
+            select_nodes(graph, term)
+    with pytest.raises(ValueError, match="--scripts"):
+        select_nodes(graph, None, exclude=["after.py"])
+    assert _names(select_nodes(graph, "models/py_m.py")) == {"py_m"}
+    assert _names(select_nodes(graph, {"method": "path", "value": "models/*.py"})) == {"py_m"}
+
+
+def test_selectors_yml_unsupported_forms_are_errors():
+    graph = NodeGraph.from_manifest(_manifest({"a": []}))
+    for bad in ({"method": "source", "value": "a"}, {"exclude": ["a"]}, 3, ["a", None]):
+        with pytest.raises(ValueError, match="unsupported selectors.yml"):
+            select_nodes(graph, bad)
+
+
+def test_selector_names_with_digits():
+    """Digits are a depth only next to a `+`: `m15` names model m15, not
+    model m at depth 15."""
+    graph = NodeGraph.from_manifest(_manifest({"m": [], "m15": ["m"], "2024_orders": ["m15"]}))
+    assert _names(select_nodes(graph, "m15")) == {"m15"}
+    assert _names(select_nodes(graph, "2024_orders")) == {"2024_orders"}
+    assert _names(select_nodes(graph, "1+2024_orders")) == {"m15", "2024_orders"}
+    assert _names(select_nodes(graph, "m15+1")) == {"m15", "2024_orders"}
+
+
 # --- state: selectors (reference: selectors.py:228-242 state routing) ---
 
 def test_select_state_modified_and_new():
@@ -249,3 +302,89 @@ def test_fail_fast_skips_later_waves():
     bad, ok, later = build()
     parallel_executor(Scheduler([bad, ok, later]), {}, threads=2, fail_fast=False)
     assert (bad.status, ok.status, later.status) == ("failure", "success", "success")
+
+
+def test_selector_glob_and_path_matching(spark, tmp_path):
+    from dbt_fal_spark.api import FalSpark
+
+    proj = tmp_path / "globsel"
+    (proj / "models" / "staging").mkdir(parents=True)
+    (proj / "dbt_project.yml").write_text("name: globsel\n")
+    (proj / "models" / "staging" / "stg_orders.sql").write_text(
+        "{{ config(tags=['nightly_a']) }} SELECT 1 AS x"
+    )
+    (proj / "models" / "staging" / "stg_items.sql").write_text(
+        "{{ config(tags=['nightly_b']) }} SELECT 2 AS x"
+    )
+    (proj / "models" / "final.sql").write_text(
+        "SELECT * FROM {{ ref('stg_orders') }}"
+    )
+    fal = FalSpark(proj, spark=spark)
+    from dbt_fal_spark.plans.node_graph import NodeGraph
+    from dbt_fal_spark.plans.selectors import select_nodes
+
+    graph = NodeGraph.from_manifest(fal.manifest)
+    short = lambda ns: {n.split(".")[-1] for n in ns}  # noqa: E731
+    # name glob (dbt: --select stg_*)
+    assert short(select_nodes(graph, ["stg_*"])) == {"stg_orders", "stg_items"}
+    # tag glob (dbt: --select tag:nightly*)
+    assert short(select_nodes(graph, ["tag:nightly_*"])) == {
+        "stg_orders", "stg_items",
+    }
+    # path form (dbt path: method emits bare paths)
+    assert short(select_nodes(graph, ["staging/stg_orders.sql"])) == {"stg_orders"}
+    assert short(select_nodes(graph, ["models/staging/*.sql"])) == {
+        "stg_orders", "stg_items",
+    }
+    # graph ops compose with globs: descendants of the glob match
+    assert "final" in short(select_nodes(graph, ["stg_*+"]))
+    # exact names keep exact semantics (no accidental glob)
+    assert short(select_nodes(graph, ["stg_orders"])) == {"stg_orders"}
+
+
+def test_var_conditional_ref_is_a_dag_edge(spark, tmp_path):
+    """dbt parses with real project vars: a ref inside
+    {% if var('flag') %} where dbt_project.yml sets the flag true MUST
+    become a DAG edge (pre-fix: var-less parse took the else-branch,
+    missed the edge, and the dependency could build after its
+    consumer)."""
+    from dbt_fal_spark.api import FalSpark
+
+    spark.sql("DROP DATABASE IF EXISTS varcond CASCADE")
+    proj = tmp_path / "varcond"
+    (proj / "models").mkdir(parents=True)
+    (proj / "dbt_project.yml").write_text(
+        "name: varcond\nvars:\n  enable_extra: true\n"
+    )
+    (proj / "models" / "base.sql").write_text("SELECT id AS k FROM range(5)")
+    (proj / "models" / "top.sql").write_text(
+        "{% if var('enable_extra') %}\n"
+        "SELECT k FROM {{ ref('base') }}\n"
+        "{% else %}\nSELECT 99 AS k\n{% endif %}"
+    )
+    fal = FalSpark(proj, spark=spark)
+    top = next(m for m in fal.manifest.models.values() if m.name == "top")
+    assert "model.varcond.base" in top.depends_on, top.depends_on
+    statuses = fal.run()
+    assert all(s == "success" for s in statuses.values()), statuses
+    rows = sorted(r.k for r in fal.ref("top").collect())
+    assert rows == [0, 1, 2, 3, 4]  # the TRUE branch ran against base
+    spark.sql("DROP DATABASE IF EXISTS varcond CASCADE")
+
+
+def test_circular_ref_reports_cycle_clearly(spark, tmp_path):
+    """Two models ref'ing each other must fail with dbt's 'Found a cycle'
+    wording naming the nodes, not a raw networkx.NetworkXUnfeasible
+    leaking out of topological_sort."""
+    import pytest as _pytest
+
+    from dbt_fal_spark.api import FalSpark
+
+    proj = tmp_path / "cyc"
+    (proj / "models").mkdir(parents=True)
+    (proj / "dbt_project.yml").write_text("name: cyc\n")
+    (proj / "models" / "a.sql").write_text("SELECT * FROM {{ ref('b') }}")
+    (proj / "models" / "b.sql").write_text("SELECT * FROM {{ ref('a') }}")
+    fal = FalSpark(proj, spark=spark)
+    with _pytest.raises(ValueError, match="Found a cycle.*-->"):
+        fal.run()

@@ -660,3 +660,18 @@ def test_python_model_dbt_style_pandas_config(jaffle, tmp_path, spark):
     seg = {r["segment"]: r["n_customers"] for r in fal.ref("seg_pandas").collect()}
     assert sum(seg.values()) == fal.ref("customers").count()
     spark.sql("DROP DATABASE IF EXISTS jaffle_spark CASCADE")
+
+
+def test_seed_and_model_sharing_a_name_fail_to_load(tmp_path):
+    """A seed and a model named alike would both write ``schema.c`` and
+    make ``ref('c')`` ambiguous; the load refuses the pair, as it refuses
+    two models named alike."""
+    from dbt_fal_spark.project.loader import load_project
+
+    (tmp_path / "models").mkdir()
+    (tmp_path / "seeds").mkdir()
+    (tmp_path / "dbt_project.yml").write_text("name: p\n")
+    (tmp_path / "seeds" / "c.csv").write_text("k\n1\n")
+    (tmp_path / "models" / "c.sql").write_text("select 1 as k\n")
+    with pytest.raises(ValueError, match="duplicate model name 'c'"):
+        load_project(tmp_path)

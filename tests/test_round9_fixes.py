@@ -1,11 +1,12 @@
 """Round-9 regression locks (r8 ADVICE items): vacuum's flip-TOCTOU
-keep-set, selectors.yml nested-composition distribution, and the
+keep-set, selectors.yml nested composition, and the
 live-pointer tmp-file leak."""
 
 from __future__ import annotations
 
 import os
 import shutil
+from pathlib import Path
 
 from dbt_fal_spark.api import FalSpark
 from dbt_fal_spark.materialize import (
@@ -87,26 +88,38 @@ def test_write_live_pointer_failure_leaves_no_tmp_litter(tmp_path):
 # --- ADVICE low: selectors.yml nested composition ---------------------------
 
 
-def test_selector_terms_distributes_union_inside_intersection():
-    from dbt_fal_spark.cli import _selector_terms
+def _abc_graph():
+    """Models a, b, c and ab (tagged a and b) — enough to tell (a∪b)∩c
+    from a∩b∩c."""
+    from dbt_fal_spark.plans.node_graph import NodeGraph
+    from dbt_fal_spark.project.manifest import DbtModel, Manifest
 
-    terms = _selector_terms({"intersection": [{"union": ["a", "b"]}, "c"]})
-    assert terms == ["a,c", "b,c"]  # (a∪b)∩c — NOT a∩b∩c
+    m = Manifest(project_name="t", project_dir=Path("."))
+    for name, tags in {"a": ["c"], "b": [], "c": [], "ab": ["a", "b"]}.items():
+        m.models[f"model.t.{name}"] = DbtModel(
+            name=name, unique_id=f"model.t.{name}", raw_sql="select 1", tags=tags
+        )
+    return NodeGraph.from_manifest(m)
+
+
+def _select(definition):
+    from dbt_fal_spark.plans.selectors import select_nodes
+
+    return {n.split(".")[-1] for n in select_nodes(_abc_graph(), definition)}
+
+
+def test_selector_terms_distributes_union_inside_intersection():
+    # (a ∪ b) ∩ tag:c — NOT a ∩ b ∩ tag:c, which is empty
+    assert _select({"intersection": [{"union": ["a", "b"]}, "tag:c"]}) == {"a"}
 
 
 def test_selector_terms_nested_intersection_inside_union():
-    from dbt_fal_spark.cli import _selector_terms
-
-    terms = _selector_terms(
-        {"union": [{"intersection": ["a", "b"]}, "c"]}
-    )
-    assert terms == ["a,b", "c"]  # (a∩b)∪c
+    # (tag:a ∩ tag:b) ∪ c
+    assert _select({"union": [{"intersection": ["tag:a", "tag:b"]}, "c"]}) == {"ab", "c"}
 
 
 def test_selector_terms_intersection_of_intersections_flattens():
-    from dbt_fal_spark.cli import _selector_terms
-
-    terms = _selector_terms(
-        {"intersection": [{"intersection": ["a", "b"]}, "c"]}
-    )
-    assert terms == ["a,b,c"]  # ',' composes associatively
+    # intersection composes associatively
+    nested = {"intersection": [{"intersection": ["tag:a", "tag:b"]}, "ab"]}
+    assert _select(nested) == {"ab"}
+    assert _select({"intersection": [{"intersection": ["tag:a", "tag:b"]}, "a"]}) == set()

@@ -3,7 +3,8 @@ Python models (reference: FalScript.exec, fal_script.py:258-299), run
 in-process or in a named environment.
 
 - every kind of user Python runs as ``__main__``; hooks may not write
-- ``fal run`` runs a model's scripts and hooks in ``flow run`` order
+- ``fal run`` runs a model's scripts and hooks in ``flow run`` order;
+  a script file is no selector term
 - a Python model's ``context`` is the one its hooks get, tests included
 - a Python model's ``write_to_model`` is bound to it; aliases are honoured
 - global scripts obey the ``--scripts`` filter; ``fal-scripts-path``
@@ -312,6 +313,23 @@ def test_fal_run_both_sides_keeps_flow_run_order(spark, tmp_path, monkeypatch):
         "hook.m.POST.post.py",
     ]
     spark.sql("DROP DATABASE IF EXISTS sideproj CASCADE")
+
+
+def test_script_file_selector_points_to_the_scripts_flag(spark, tmp_path, capsys):
+    """Scripts run with their model and are not graph nodes: selecting a
+    script file raises instead of running nothing, and the CLI turns the
+    error into a usage message."""
+    from dbt_fal_spark.cli import main
+
+    root = _four_kinds_project(tmp_path / "sideproj")
+    fal = FalSpark(root, spark=spark)
+    with pytest.raises(ValueError, match="--scripts"):
+        fal.run(select="after.py")
+    with pytest.raises(ValueError, match="--scripts"):
+        fal.run_scripts(select="after.py", use_last_run=False)
+    capsys.readouterr()
+    assert main(["run", "--project-dir", str(root), "--all", "--select", "after.py"]) == 2
+    assert "--scripts" in capsys.readouterr().err
 
 
 # --- a Python model's context carries its tests ------------------------------

@@ -3,6 +3,7 @@ work, never rows)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from dbt_fal_spark.functions.skew import salted_join
@@ -34,3 +35,24 @@ def test_salted_left_join_preserves_unmatched(spark):
     d = spark.createDataFrame([(1, "one"), (2, "two")], "k long, name string")
     out = {tuple(r) for r in salted_join(a, d, on="k", how="left", salts=3).collect()}
     assert (99, "z", None) in out and len(out) == 3
+
+
+def test_salted_join_rejects_outer_shapes(spark):
+    """A right/full outer salted join would emit unmatched small-side
+    rows once PER SALT (the small side is replicated) — phantom rows.
+    Big-side-preserving types stay result-invariant."""
+    from dbt_fal_spark.functions.skew import salted_join
+
+    big = spark.range(100).selectExpr("id % 10 AS k", "id AS v")
+    small = spark.range(5).selectExpr("id AS k", "id * 10 AS w")
+    for bad in ("right", "full", "full_outer", "rightouter"):
+        with pytest.raises(ValueError, match="not big-side-preserving"):
+            salted_join(big, small, on="k", how=bad)
+    # left outer on the BIG side stays exact: row count = plain join's
+    plain = big.join(small, on="k", how="left").count()
+    assert salted_join(big, small, on="k", how="left").count() == plain
+    # semi/anti preserved too
+    assert (
+        salted_join(big, small, on="k", how="left_semi").count()
+        == big.join(small, on="k", how="left_semi").count()
+    )

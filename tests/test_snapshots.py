@@ -105,6 +105,14 @@ def test_timestamp_snapshot_builds_scd2_history(spark, snap_project, tmp_path):
     spark.sql("DROP DATABASE IF EXISTS snapproj CASCADE")
 
 
+def test_snapshot_rejects_a_selectors_yml_dict(spark, snap_project):
+    """Snapshots are selected by name: a selectors.yml dict (what a
+    `--selector` may resolve to) is an error, not an empty selection."""
+    fal = FalSpark(snap_project, spark=spark)
+    with pytest.raises(ValueError, match="selected by name"):
+        fal.snapshot(select={"union": ["orders_snap"]})
+
+
 def test_check_strategy_snapshot(spark, snap_project, tmp_path):
     spark.sql("DROP DATABASE IF EXISTS snapproj CASCADE")
     # rewrite the snapshot config to check strategy
@@ -140,3 +148,14 @@ def test_check_strategy_snapshot(spark, snap_project, tmp_path):
         ]
     )
     spark.sql("DROP DATABASE IF EXISTS snapproj CASCADE")
+
+
+def test_snapshot_list_unique_key_errors_clearly(spark):
+    from dbt_fal_spark.materialize import snapshot_scd2
+
+    staged = spark.range(3).selectExpr("id AS k", "id AS v", "timestamp'2024-01-01' AS ts")
+    with pytest.raises(ValueError, match="single column name"):
+        snapshot_scd2(
+            spark, staged, "default.snap_badkey", ["k", "v"],
+            strategy="timestamp", updated_at="ts",
+        )
