@@ -51,6 +51,7 @@ from dbt_fal_spark.materialize import (
     incremental_merge,
     replace_relation_atomic,
     snapshot_scd2,
+    table_exists,
     vacuum_table,
     write_table,
 )
@@ -330,7 +331,7 @@ class FalSpark:
             return view
         physical = model.target_name if model is not None else model_name
         ident = f"{self.schema}.{physical}"
-        if self.defer and not self._selected_this_run(model_name) and not self.spark.catalog.tableExists(ident):
+        if self.defer and not self._selected_this_run(model_name) and not table_exists(self.spark, ident):
             deferred = self._deferred_identifier(physical)
             if deferred is not None:
                 return deferred
@@ -382,7 +383,7 @@ class FalSpark:
         identifier, layout = self._relation(name)
         # both verbs are the one table commit (materialize._commit); the
         # choice only names the trace span: a rebuild or a first build
-        if self.spark.catalog.tableExists(identifier):
+        if table_exists(self.spark, identifier):
             return replace_relation_atomic(self.spark, df, identifier, **layout)()
         return write_table(df, identifier, **layout)()
 
@@ -840,12 +841,17 @@ class FalSpark:
         SCD2-merge it into snapshot.<name> history tables
         (materialize.snapshot_scd2). ``as_of`` stamps check-strategy
         transitions (pass the run timestamp; timestamp-strategy snapshots
-        take their boundaries from the source's own updated_at)."""
+        take their boundaries from the source's own updated_at). Snapshots
+        are selected by name: a selectors.yml dict, a ``method:`` word or
+        a graph operator (``+``, ``@``, ``,``) is a ``SelectorError``."""
         wanted = None
         if select:
             if isinstance(select, dict):
                 raise SelectorError(f"snapshots are selected by name, not by {select!r}")
             wanted = set(select.split() if isinstance(select, str) else select)
+            bad = sorted(w for w in wanted if any(c in w for c in ":+@,"))
+            if bad:
+                raise SelectorError(f"snapshots are selected by name, not by {bad}")
         statuses: dict[str, str] = {}
         for snap in self.manifest.snapshots.values():
             if wanted is not None and snap.name not in wanted:
@@ -963,7 +969,7 @@ class FalSpark:
             identifier = f"{self.schema}.{model.target_name}"
             if model.materialization in ("view", "ephemeral"):
                 continue
-            if not self.spark.catalog.tableExists(identifier):
+            if not table_exists(self.spark, identifier):
                 continue
             df = self.spark.table(identifier)
             nodes[model.unique_id] = {
@@ -1429,7 +1435,7 @@ class _ModelTask:
         incremental = (
             model.is_incremental
             and not fal._full_refresh
-            and spark.catalog.tableExists(identifier)
+            and table_exists(spark, identifier)
         )
         df = spark.sql(fal._render(model.raw_sql, this_name=identifier, is_incremental=incremental))
         if model.materialization in ("view", "ephemeral"):

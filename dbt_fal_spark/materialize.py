@@ -32,6 +32,15 @@ vacuumed. On Delta this whole protocol is a transactional REPLACE.
 Trade-off: ``DROP TABLE`` on a model table leaves its version dirs on
 disk, as it always did for tables re-attached after a restart.
 
+A commit reads table metadata from the session catalog's entry
+(``_catalog_entry``: location, column signature, bucket spec,
+partitioning), one py4j chain with no SQL statement, at most three
+times: once before the write (existence, the base, whether SET LOCATION
+may re-point the entry), once under the commit lock (the version
+replaced, and the maintenance token check), and once in the trailing
+vacuum (a guard against a commit that landed since). SET LOCATION
+refreshes the table itself, so no separate refresh follows it.
+
 File sizing: a write with no declared layout is coalesced to
 ``ceil(estimate / split)`` files, where the estimate is the larger of the
 plan's leaf scan total and its optimized size, and ``split`` is the size
@@ -53,6 +62,7 @@ write reports its rows without a second job re-reading them.
 from __future__ import annotations
 
 import collections
+import json
 import os
 import re
 import shutil
@@ -61,11 +71,12 @@ import threading
 import time
 import uuid
 from pathlib import Path
-from typing import Callable
-from urllib.parse import urlparse
+from typing import Callable, NamedTuple
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .sources.readers import conf_bytes, scan_bytes
 
@@ -122,10 +133,12 @@ def _sized(df: DataFrame) -> DataFrame:
     return df.coalesce(min(max(1, -(-est // max(1, split))), (1 << 31) - 1))
 
 
-def _fs_path(uri: str) -> str:
-    """A local path for a ``file:`` or scheme-less URI; others unchanged."""
-    u = urlparse(uri)
-    return u.path if u.scheme in ("", "file") else uri
+def _fs_path(uri) -> str:
+    """The decoded path of a catalog ``java.net.URI``: a local path for a
+    ``file:`` or scheme-less URI, the whole URI for any other scheme."""
+    text = uri.toString()
+    u = urlparse(text)
+    return unquote(u.path if u.scheme in ("", "file") else text)
 
 
 def _new_table_base(spark: SparkSession, identifier: str) -> str:
@@ -133,8 +146,9 @@ def _new_table_base(spark: SparkSession, identifier: str) -> str:
     ``<database location>/<table>``. The database's own location, not
     the session warehouse, since a FalSpark target pins one per schema."""
     *db, table = identifier.lower().split(".")
-    db_uri = spark.catalog.getDatabase(db[-1] if db else spark.catalog.currentDatabase()).locationUri
-    return os.path.join(_fs_path(db_uri), table)
+    catalog = spark._jsparkSession.sessionState().catalog()
+    db_meta = catalog.getDatabaseMetadata(db[-1] if db else catalog.getCurrentDatabase())
+    return os.path.join(_fs_path(db_meta.locationUri()), table)
 
 
 def layout_cols(spec) -> list[str]:
@@ -261,14 +275,61 @@ class ConcurrentRebuildError(RuntimeError):
     rebuild (optimistic concurrency, Delta's commit-conflict analogue)."""
 
 
-def table_swap_token(spark: SparkSession, identifier: str):
-    """Opaque version token for optimistic read-then-replace:
-    (location, local-dir mtime). Every commit mints a fresh ``__v`` dir,
-    so the location names the committed version; the mtime catches
-    in-place writes that bypass the commit (incremental appends and
-    insert_overwrite write into the live dir). None for an absent
-    table; the mtime is None for a non-local location."""
-    loc = _table_location(spark, identifier)
+class _TableEntry(NamedTuple):
+    """What the session catalog records of a table."""
+
+    location: str | None  # filesystem path; None for a view
+    columns: tuple[tuple[str, str], ...]  # (name, simpleString type), in order
+    buckets: tuple[int, tuple[str, ...]] | None  # (num_buckets, bucket_cols)
+    partitioned: bool
+
+
+def _signature(schema: StructType) -> tuple[tuple[str, str], ...]:
+    """(name, simpleString type) per column. Nullability differs freely
+    between plans (nested nullability too, which simpleString strips):
+    only a name or type change makes a table's schema stale."""
+    return tuple((f.name, f.dataType.simpleString()) for f in schema.fields)
+
+
+def _catalog_entry(spark: SparkSession, identifier: str) -> _TableEntry | None:
+    """The session catalog's entry for ``identifier``, None when it holds
+    no such table: the one reader of table metadata in this module. One
+    py4j chain against the session catalog, with no SQL statement and no
+    plan analysis. A session without one (Spark Connect) fails here."""
+    state = spark._jsparkSession.sessionState()
+    catalog = state.catalog()
+    name = state.sqlParser().parseTableIdentifier(identifier)
+    if not catalog.tableExists(name):
+        return None
+    meta = catalog.getTableMetadata(name)
+    uri = meta.storage().locationUri()
+    spec = meta.bucketSpec()
+    if spec.isDefined():
+        spec = spec.get()
+        buckets = (spec.numBuckets(), tuple(spec.bucketColumnNames().mkString("\0").split("\0")))
+    else:
+        buckets = None
+    return _TableEntry(
+        location=_fs_path(uri.get()) if uri.isDefined() else None,
+        columns=_signature(StructType.fromJson(json.loads(meta.schema().json()))),
+        buckets=buckets,
+        partitioned=meta.partitionColumnNames().nonEmpty(),
+    )
+
+
+def _table_location(spark: SparkSession, identifier: str) -> str | None:
+    """Filesystem path of a table's current location, None if absent."""
+    entry = _catalog_entry(spark, identifier)
+    return entry.location if entry else None
+
+
+def table_exists(spark: SparkSession, identifier: str) -> bool:
+    """Does the session catalog hold table ``identifier``?"""
+    return _catalog_entry(spark, identifier) is not None
+
+
+def _swap_token(loc: str | None):
+    """The swap token of a table at ``loc`` (see ``table_swap_token``)."""
     if loc is None:
         return None
     try:
@@ -278,48 +339,19 @@ def table_swap_token(spark: SparkSession, identifier: str):
     return (loc, mtime)
 
 
+def table_swap_token(spark: SparkSession, identifier: str):
+    """Opaque version token for optimistic read-then-replace:
+    (location, local-dir mtime). Every commit mints a fresh ``__v`` dir,
+    so the location names the committed version; the mtime catches
+    in-place writes that bypass the commit (incremental appends and
+    insert_overwrite write into the live dir). None for an absent
+    table; the mtime is None for a non-local location."""
+    return _swap_token(_table_location(spark, identifier))
+
+
 def _re_sub_version(loc: str) -> str:
     """Strip the ``__v<uuid8>`` suffix off a version-dir path."""
     return _VERSION_RE.sub("", loc.rstrip("/"))
-
-
-def _describe(spark: SparkSession, identifier: str) -> dict[str, str]:
-    """``DESCRIBE TABLE EXTENDED`` as {col_name: data_type}. The detailed
-    table rows come after the column rows, so they win a name clash."""
-    return {r["col_name"]: r["data_type"] for r in spark.sql(
-        f"DESCRIBE TABLE EXTENDED {_q(identifier)}").collect()}
-
-
-# the ``_describe`` key present exactly when the table is hive-partitioned
-_PARTITIONED = "# Partition Information"
-
-
-def _table_location(
-    spark: SparkSession, identifier: str, desc: dict[str, str] | None = None
-) -> str | None:
-    """Filesystem path of a table's current location (None if absent),
-    from ``desc`` (a ``_describe`` of the table) when given."""
-    if desc is None:
-        if not spark.catalog.tableExists(identifier):
-            return None
-        desc = _describe(spark, identifier)
-    loc = desc.get("Location")
-    return None if loc is None else _fs_path(loc)
-
-
-def _table_bucket_spec(
-    spark: SparkSession, identifier: str, desc: dict[str, str] | None = None
-) -> tuple[int, tuple[str, ...]] | None:
-    """(num_buckets, bucket_cols) from the catalog, None if unbucketed;
-    from ``desc`` (a ``_describe`` of the table) when given."""
-    desc = _describe(spark, identifier) if desc is None else desc
-    n = desc.get("Num Buckets")
-    if not n:
-        return None
-    cols = tuple(
-        c.strip(" `") for c in desc.get("Bucket Columns", "").strip("[]").split(",")
-    )
-    return int(n), cols
 
 
 # Optional time-based retention for version dirs (Delta VACUUM's
@@ -448,14 +480,14 @@ def attach_live_table(spark: SparkSession, identifier: str, db_dir: str | Path) 
     layout: a bare CREATE TABLE ... LOCATION registers the partition
     columns but no partitions, so the table would read 0 rows. Returns
     whether the catalog holds the table now."""
-    if spark.catalog.tableExists(identifier):
+    if table_exists(spark, identifier):
         return True
     loc = live_version_dir(db_dir, identifier.lower().split(".")[-1])
     if loc is None:
         return False
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {_q(identifier.split('.')[0])}")
     spark.sql(f"CREATE TABLE IF NOT EXISTS {_q(identifier)} USING parquet LOCATION '{loc}'")
-    if _PARTITIONED in _describe(spark, identifier):
+    if _catalog_entry(spark, identifier).partitioned:
         spark.sql(f"ALTER TABLE {_q(identifier)} RECOVER PARTITIONS")
     return True
 
@@ -567,6 +599,10 @@ def replace_relation_atomic(
       bucket spec across the rename. Between the DROP and the RENAME
       the name resolves to no table; a reader that resolved it before
       keeps scanning its files.
+    - SET LOCATION refreshes the table itself (Spark's command calls
+      ``Catalog.refreshTable``): a new reference reads the new files, a
+      DataFrame resolved before keeps the files it listed, and a cached
+      table is uncached.
     - The live pointer file is rewritten to name the new version, and
       version dirs older than the one just replaced are vacuumed. In-
       flight readers keep scanning the previous version's files, left
@@ -576,6 +612,11 @@ def replace_relation_atomic(
 
     This is the plain-parquet rendition of Delta/Iceberg snapshot
     isolation; on a transactional lakehouse it is REPLACE TABLE.
+
+    Catalog reads per commit: one entry read before the write, one under
+    the lock, one in the vacuum (see ``_catalog_entry``). Catalog
+    statements: the temp table's create, then SET LOCATION and the temp
+    table's drop, or DROP and RENAME.
 
     ``bucket_by``/``sort_by``/``partition_by`` carry the declared layout
     through the swap — a rebuild that silently flattened a partitioned
@@ -614,27 +655,23 @@ def _commit(
     # input twice (sampling, then the shuffle), which would double a
     # count taken below it
     df, rows = count_rows(_shape(df, partition_by, bucket_by, sort_by))
-    exists = spark.catalog.tableExists(identifier)
-    desc = _describe(spark, identifier) if exists else {}
+    entry = _catalog_entry(spark, identifier)
     # the base (the location minus its version suffix) is the same for
     # every version, so a commit racing this write cannot move it
-    pre_loc = _table_location(spark, identifier, desc)
+    pre_loc = entry.location if entry else None
     base = _re_sub_version(pre_loc) if pre_loc else _new_table_base(spark, identifier)
     new_loc = f"{base}__v{uuid.uuid4().hex[:8]}"
     tmp = f"{identifier}__f__{uuid.uuid4().hex[:8]}"
     # SET LOCATION keeps the catalog entry, so it must already describe
-    # the new files. Nullability differs freely between plans (nested
-    # nullability too, which simpleString() strips): only name/type
-    # changes make the schema stale. Per-partition locations cannot be
-    # re-pointed, and a table re-attached after a restart has no bucket
-    # spec.
-    _sig = lambda s: [(f.name, f.dataType.simpleString()) for f in s.fields]  # noqa: E731
+    # the new files: same column signature, same bucket spec. Per-
+    # partition locations cannot be re-pointed, and a table re-attached
+    # after a restart has no bucket spec.
     reuse = (
-        exists
+        entry is not None
         and not partition_by
-        and _PARTITIONED not in desc
-        and _sig(spark.table(identifier).schema) == _sig(df.schema)
-        and _table_bucket_spec(spark, identifier, desc) == _bucket_spec(bucket_by)
+        and not entry.partitioned
+        and entry.columns == _signature(df.schema)
+        and entry.buckets == _bucket_spec(bucket_by)
     )
     old_loc = None
     flipped = False  # the catalog references new_loc
@@ -646,24 +683,24 @@ def _commit(
             # table it replaces) removes only metadata, never files
             _parquet_writer(df, partition_by, bucket_by).option("path", new_loc).saveAsTable(tmp)
             with _FLIP_LOCKS[identifier.lower()]:
-                if expected_token is not None:
-                    cur = table_swap_token(spark, identifier)
-                    if cur != expected_token:
-                        raise ConcurrentRebuildError(
-                            f"{identifier}: live version moved "
-                            f"({expected_token!r} -> {cur!r}) since the "
-                            "maintenance read — aborting the swap; re-run the verb "
-                            "against the current version"
-                        )
                 # the version this commit replaces, read under the lock: a
                 # rebuild of the same table may have committed during the
-                # write, and the rollback and the vacuum's keep set need
-                # the version live right before ours
+                # write, and the token check, the rollback and the
+                # vacuum's keep set need the version live right before ours
                 old_loc = _table_location(spark, identifier)
+                if expected_token is not None and (cur := _swap_token(old_loc)) != expected_token:
+                    raise ConcurrentRebuildError(
+                        f"{identifier}: live version moved "
+                        f"({expected_token!r} -> {cur!r}) since the "
+                        "maintenance read — aborting the swap; re-run the verb "
+                        "against the current version"
+                    )
                 if reuse:
+                    # SET LOCATION refreshes the table itself: the command
+                    # calls Catalog.refreshTable, which drops the cached
+                    # relation and file listing
                     spark.sql(f"ALTER TABLE {_q(identifier)} SET LOCATION '{new_loc}'")
                     flipped = True
-                    spark.sql(f"REFRESH TABLE {_q(identifier)}")
                 else:
                     if old_loc is not None:
                         spark.sql(f"DROP TABLE {_q(identifier)}")
@@ -676,14 +713,14 @@ def _commit(
             except Exception:
                 pass  # cleanup must not mask the original error
             # Only delete new_loc while the catalog does NOT reference it:
-            # after a committed SET LOCATION, a failure (e.g. in REFRESH)
-            # must roll the location back to old_loc first — rmtree'ing the
-            # directory the catalog points at would brick every later read.
+            # after a committed SET LOCATION, a failure (e.g. an interrupt
+            # before the pointer write) must roll the location back to
+            # old_loc first — rmtree'ing the directory the catalog points
+            # at would brick every later read.
             safe_to_delete = not flipped
             if flipped and reuse and old_loc:
                 try:
                     spark.sql(f"ALTER TABLE {_q(identifier)} SET LOCATION '{old_loc}'")
-                    spark.sql(f"REFRESH TABLE {_q(identifier)}")
                     safe_to_delete = True
                 except Exception:
                     pass  # rollback failed: catalog still references new_loc — keep it
@@ -778,7 +815,11 @@ def vacuum_table(spark: SparkSession, identifier: str) -> int:
 
 
 def _evolve_schema(
-    spark: SparkSession, new_rows: DataFrame, identifier: str, on_schema_change: str
+    spark: SparkSession,
+    new_rows: DataFrame,
+    identifier: str,
+    old_cols: list[str],
+    on_schema_change: str,
 ) -> DataFrame:
     """dbt's on_schema_change contract for incremental reruns whose model
     now produces extra columns:
@@ -788,10 +829,10 @@ def _evolve_schema(
     - append_new_columns    ALTER TABLE ADD COLUMNS, then proceed —
                             historical rows read the new columns as NULL
 
+    ``old_cols`` are the table's columns, from its catalog entry.
     Returns ``new_rows`` aligned to the (possibly evolved) table schema.
     Columns the table has but the model no longer produces always fail —
     dropping data columns is never implicit."""
-    old_cols = spark.table(identifier).columns
     new_cols = [c for c in new_rows.columns if c not in old_cols]
     missing = [c for c in old_cols if c not in new_rows.columns]
     if missing:
@@ -812,11 +853,13 @@ def _evolve_schema(
                 if f.name in new_cols
             )
             spark.sql(f"ALTER TABLE {_q(identifier)} ADD COLUMNS ({col_defs})")
+            # re-read: the added columns go before any partition columns
+            old_cols = [c for c, _ in _catalog_entry(spark, identifier).columns]
         elif on_schema_change != "ignore":
             raise ValueError(
                 f"{identifier}: unknown on_schema_change {on_schema_change!r}"
             )
-    return new_rows.select(*spark.table(identifier).columns)
+    return new_rows.select(*old_cols)
 
 
 def incremental_merge(
@@ -858,12 +901,16 @@ def incremental_merge(
     batch branch of the merge union for merge and delete+insert; a merge
     that range-clusters for ``sort_by`` counts the batch before the swap).
     """
-    if not spark.catalog.tableExists(identifier):
+    entry = _catalog_entry(spark, identifier)
+    if entry is None:
         return write_table(
             new_rows, identifier, partition_by=partition_by, bucket_by=bucket_by, sort_by=sort_by
         )()
     strategy = strategy or ("merge" if unique_key else "append")
-    new_rows = _evolve_schema(spark, new_rows, identifier, on_schema_change)
+    # aligned to the table's columns from here on (insertInto is positional)
+    new_rows = _evolve_schema(
+        spark, new_rows, identifier, [c for c, _ in entry.columns], on_schema_change
+    )
     if strategy == "append":
         batch, rows = count_rows(new_rows)
         if not (partition_by or bucket_by or sort_by):
@@ -873,8 +920,7 @@ def incremental_merge(
     if strategy == "insert_overwrite":
         if not partition_by:
             raise ValueError(f"{identifier}: insert_overwrite requires partition_by")
-        cols = spark.table(identifier).columns  # insertInto is positional
-        batch, rows = count_rows(new_rows.select(*cols))
+        batch, rows = count_rows(new_rows)
         with _OVERWRITE_MODE_LOCK:
             prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -894,16 +940,15 @@ def incremental_merge(
     # and swap atomically. The config name a dbt user writes must work.
     old = spark.table(identifier)
     keys = layout_cols(unique_key)  # dbt unique_key: str OR list
-    batch = new_rows.select(*old.columns)
     if sort_by and not bucket_by:
         # the swap range-clusters the union, and a range exchange runs its
         # input twice (sampling, then the shuffle): an observation on the
         # batch branch would count it twice. Count the batch (the model
         # task caches it) before the swap replaces files its plan may read.
-        n = batch.count()
-        rows = lambda: n  # noqa: E731
+        n = new_rows.count()
+        batch, rows = new_rows, lambda: n
     else:
-        batch, rows = count_rows(batch)
+        batch, rows = count_rows(new_rows)
     merged = old.join(new_rows.select(*keys).distinct(), on=keys, how="left_anti").unionByName(
         batch
     )
@@ -1018,7 +1063,7 @@ def snapshot_scd2(
             )
         )
 
-    if not spark.catalog.tableExists(identifier):
+    if not table_exists(spark, identifier):
         write_table(_with_meta(staged, valid_from), identifier)
         return
 

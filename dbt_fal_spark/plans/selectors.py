@@ -22,6 +22,8 @@ src/fal/dbt/cli/selectors.py:13-65 plan build, :156-226 SelectorPlan,
 - ``@model``          node + descendants + ancestors-of-descendants
 - ``tag:x``           nodes carrying tag x
 - ``dir/file.sql``    models whose file path ends with the term
+- ``fqn:x``, ``path:dir/file.sql``  the same as the bare word, as in
+  selectors.yml; any other ``method:`` prefix is a ``SelectorError``
 - ``state:modified`` / ``state:new``  models whose checksum changed / that
   did not exist in the saved state (reference: selectors.py:228-242 routes
   these to dbt's state machinery; here the state is the checksum snapshot
@@ -50,6 +52,11 @@ Selector = str | list | dict | None
 
 class SelectorError(ValueError):
     """A selector definition the graph cannot evaluate (a usage error)."""
+
+
+# the selector methods, as a `method:value` word prefix or a selectors.yml
+# `method`: fqn and path match like a bare word (a name, or a path with a `/`)
+_METHODS = {"fqn": {}, "path": {}, "tag": {"is_tag": True}, "state": {"is_state": True}}
 
 
 def model_checksum(model) -> str:
@@ -81,26 +88,28 @@ class SelectorPlan:
 
     @classmethod
     def parse(cls, raw: str) -> "SelectorPlan":
-        at = raw.startswith("@")
-        if at:
-            return cls(body=raw[1:], at_operator=True, descendants=True)
-        m = re.match(OP_PLUS_RE, raw)
-        if not m:
-            return cls(body=raw)
-        body = m.group("body")
-        ops = dict(
-            ancestors=bool(m.group("pre_plus")),
-            ancestor_levels=int(m.group("pre_n")) if m.group("pre_n") else None,
-            descendants=bool(m.group("post_plus")),
-            descendant_levels=int(m.group("post_n")) if m.group("post_n") else None,
-        )
+        if raw.startswith("@"):
+            body, ops = raw[1:], dict(at_operator=True, descendants=True)
+        elif m := re.match(OP_PLUS_RE, raw):
+            body = m.group("body")
+            ops = dict(
+                ancestors=bool(m.group("pre_plus")),
+                ancestor_levels=int(m.group("pre_n")) if m.group("pre_n") else None,
+                descendants=bool(m.group("post_plus")),
+                descendant_levels=int(m.group("post_n")) if m.group("post_n") else None,
+            )
+        else:
+            body, ops = raw, {}
         # graph operators compose with prefixed matchers (dbt semantics:
         # `state:modified+`, `+tag:nightly`)
-        if body.startswith("tag:"):
-            return cls(body=body[4:], is_tag=True, **ops)
-        if body.startswith("state:"):
-            return cls(body=body[6:], is_state=True, **ops)
-        return cls(body=body, **ops)
+        method, colon, value = body.partition(":")
+        if not colon:
+            return cls(body=body, **ops)
+        if method not in _METHODS:
+            raise SelectorError(
+                f"unsupported selector method {method!r} in {raw!r} (have: {', '.join(_METHODS)})"
+            )
+        return cls(body=value, **_METHODS[method], **ops)
 
 
 def _name_match(name: str, pattern: str) -> bool:
@@ -165,9 +174,6 @@ def _eval_word(graph: NodeGraph, word: str, state: dict[str, str] | None) -> set
     expanded component sets."""
     parts = [_expand(graph, SelectorPlan.parse(p), state) for p in word.split(",") if p]
     return set.intersection(*parts) if parts else set()
-
-
-_METHODS = {"fqn": {}, "path": {}, "tag": {"is_tag": True}, "state": {"is_state": True}}
 
 
 def _criterion(d: dict) -> SelectorPlan:

@@ -37,10 +37,9 @@ def test_parser_source_freshness():
 
 @pytest.fixture(scope="module")
 def cli_env(spark):
-    os.environ["TESTDATA_DIR"] = os.environ.get(
-        "SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001"
-    )
-    yield
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("TESTDATA_DIR", os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001"))
+        yield
 
 
 def test_cli_flow_run_then_post_run_and_test(cli_env, capsys):

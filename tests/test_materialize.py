@@ -22,6 +22,12 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, "day string, k long, v string")
 
 
+def _describe(spark, ident):
+    """``DESCRIBE TABLE EXTENDED`` as {col_name: data_type}."""
+    return {r["col_name"]: r["data_type"] for r in spark.sql(
+        f"DESCRIBE TABLE EXTENDED {ident}").collect()}
+
+
 def test_insert_overwrite_replaces_only_touched_partitions(spark):
     t = f"{SCHEMA}.io_target"
     first = _df(spark, [("d1", 1, "a"), ("d1", 2, "b"), ("d2", 3, "c")])
@@ -339,7 +345,6 @@ def test_every_commit_lands_external_at_the_version_dir_the_pointer_names(spark)
     import re
 
     from dbt_fal_spark.materialize import (
-        _describe,
         _read_live_pointer,
         _re_sub_version,
         _table_location,
@@ -551,3 +556,109 @@ def test_swap_token_detects_partitioned_rebuild(spark, tmp_path):
     tok2 = table_swap_token(spark, ident)
     assert tok1 != tok2, "rebuild not visible in the swap token"
     assert tok1[0] != tok2[0], "the rebuild reused its version dir"
+
+
+# --- the catalog entry: one read per commit step ---------------------------
+
+
+def test_catalog_entry_agrees_with_describe(spark):
+    """``_catalog_entry`` reports the location, bucket spec, partitioning
+    and columns that ``DESCRIBE TABLE EXTENDED`` and the analyzed table
+    report: for a plain, a partitioned, a bucketed and a re-attached
+    table, and None for an absent one."""
+    import os
+    from urllib.parse import urlparse
+
+    from dbt_fal_spark.materialize import _catalog_entry, _signature, attach_live_table
+
+    rows = spark.range(12).selectExpr(
+        "id AS k", "cast(id % 3 as string) AS p", "cast(id as decimal(10,2)) AS amt", "array(id) AS a"
+    )
+    write_table(rows, f"{SCHEMA}.e_plain")
+    write_table(rows, f"{SCHEMA}.e_part", partition_by="p")
+    write_table(rows, f"{SCHEMA}.e_bkt", bucket_by={"cols": "k, p", "n": 4})
+    # a table the catalog forgot (external: DROP keeps its version dir)
+    write_table(rows, f"{SCHEMA}.e_attached", partition_by="p")
+    spark.sql(f"DROP TABLE {SCHEMA}.e_attached")
+    db_dir = urlparse(spark.catalog.getDatabase(SCHEMA).locationUri).path
+    assert attach_live_table(spark, f"{SCHEMA}.e_attached", db_dir)
+
+    for name, buckets, partitioned in [
+        ("e_plain", None, False),
+        ("e_part", None, True),
+        ("e_bkt", (4, ("k", "p")), False),
+        ("e_attached", None, True),
+    ]:
+        t = f"{SCHEMA}.{name}"
+        desc = _describe(spark, t)
+        entry = _catalog_entry(spark, t)
+        assert entry.location == urlparse(desc["Location"]).path, name
+        assert os.path.isdir(entry.location), name
+        assert entry.buckets == buckets, name
+        if buckets:
+            assert int(desc["Num Buckets"]) == buckets[0], name
+            assert desc["Bucket Columns"] == "[" + ", ".join(f"`{c}`" for c in buckets[1]) + "]"
+        else:
+            assert "Num Buckets" not in desc, name
+        assert entry.partitioned == ("# Partition Information" in desc) == partitioned, name
+        assert entry.columns == _signature(spark.table(t).schema), name
+    assert _catalog_entry(spark, f"{SCHEMA}.e_absent") is None
+    assert _catalog_entry(spark, "no_such_db.e_absent") is None
+
+
+def test_set_location_refreshes_the_table(spark):
+    """A re-point commit (SET LOCATION, no separate refresh) leaves the
+    session as a refresh would: a new reference reads the new rows, a
+    DataFrame resolved before the commit keeps reading the grace
+    version, and a cached table is uncached."""
+    from dbt_fal_spark.materialize import replace_relation_atomic
+
+    t = f"{SCHEMA}.refreshed"
+    rows = lambda n: spark.range(n).selectExpr("id AS k")  # noqa: E731
+    write_table(rows(10), t)
+    replace_relation_atomic(spark, rows(11), t)
+    early = spark.table(t)
+    spark.catalog.cacheTable(t)
+    assert spark.catalog.isCached(t) and spark.table(t).count() == 11
+    replace_relation_atomic(spark, rows(12), t)
+    assert spark.table(t).count() == 12
+    assert spark.sql(f"SELECT count(*) FROM {t}").collect()[0][0] == 12
+    assert early.count() == 11
+    assert not spark.catalog.isCached(t)
+
+
+def test_rebuild_reads_the_catalog_without_describe_or_refresh(spark, tmp_path, monkeypatch):
+    """A rebuild of a table model and a merge of an incremental model
+    issue no DESCRIBE and no REFRESH statement, and each re-point commit
+    issues exactly one SET LOCATION."""
+    from pyspark.sql import SparkSession
+
+    from dbt_fal_spark.api import FalSpark
+
+    proj = _project(tmp_path, "catreads", {
+        "tbl": "SELECT id AS k, id * 2 AS v FROM range(20)",
+        "inc": "{{ config(materialized='incremental', unique_key='k') }}\n"
+               "SELECT id AS k, id * 3 AS v FROM range(20)",
+    })
+    spark.sql("DROP DATABASE IF EXISTS catreads CASCADE")
+    fal = FalSpark(proj, spark=spark)
+    try:
+        assert set(fal.run().values()) == {"success"}
+        statements = []
+        real_sql = SparkSession.sql
+
+        def recorder(self, query, *args, **kwargs):
+            statements.append(" ".join(query.split()).upper())
+            return real_sql(self, query, *args, **kwargs)
+
+        monkeypatch.setattr(SparkSession, "sql", recorder)
+        assert set(fal.run().values()) == {"success"}
+        monkeypatch.undo()
+        assert not [q for q in statements if "DESCRIBE" in q or "REFRESH" in q], statements
+        set_locations = [q for q in statements if "SET LOCATION" in q]
+        assert len(set_locations) == 2, set_locations
+        assert {q.split()[2] for q in set_locations} == {"`CATREADS`.`TBL`", "`CATREADS`.`INC`"}
+        assert spark.table(fal._identifier("tbl")).count() == 20
+        assert spark.table(fal._identifier("inc")).count() == 20
+    finally:
+        spark.sql("DROP DATABASE IF EXISTS catreads CASCADE")

@@ -16,7 +16,7 @@ from pathlib import Path
 import pytest
 
 from dbt_fal_spark.api import FalSpark, _ModelTask
-from dbt_fal_spark.materialize import _table_location
+from dbt_fal_spark.materialize import _catalog_entry, _table_location
 from tests.conftest import SF_DIR
 
 FIXTURES = Path(__file__).parent / "fixtures"
@@ -228,7 +228,6 @@ def test_list_form_layout_survives_run_and_compact(spark, tmp_path):
     with the declared layout intact (pre-fix: bracketed garbage column
     names -> AnalysisException)."""
     from dbt_fal_spark.api import FalSpark
-    from dbt_fal_spark.materialize import _table_bucket_spec
 
     spark.sql("DROP DATABASE IF EXISTS listlayout CASCADE")
     proj = tmp_path / "listlayout"
@@ -245,9 +244,9 @@ def test_list_form_layout_survives_run_and_compact(spark, tmp_path):
     fal = FalSpark(proj, spark=spark)
     statuses = fal.run()
     assert all(s == "success" for s in statuses.values()), statuses
-    assert _table_bucket_spec(spark, fal._identifier("bkt")) == (4, ("k", "v"))
+    assert _catalog_entry(spark, fal._identifier("bkt")).buckets == (4, ("k", "v"))
     assert fal.compact("bkt") == 4
-    assert _table_bucket_spec(spark, fal._identifier("bkt")) == (4, ("k", "v"))
+    assert _catalog_entry(spark, fal._identifier("bkt")).buckets == (4, ("k", "v"))
     fal.compact("parted", target_partitions=2)
     assert spark.table(fal._identifier("parted")).count() == 30
     assert "p" in [
@@ -284,7 +283,6 @@ def test_write_to_model_overwrite_keeps_declared_layout(spark, tmp_path):
     """A script's write_to_model overwrite must not flatten the model's
     declared bucket layout."""
     from dbt_fal_spark.api import FalSpark
-    from dbt_fal_spark.materialize import _table_bucket_spec
 
     spark.sql("DROP DATABASE IF EXISTS wtmlayout CASCADE")
     proj = tmp_path / "wtmlayout"
@@ -297,10 +295,10 @@ def test_write_to_model_overwrite_keeps_declared_layout(spark, tmp_path):
     fal = FalSpark(proj, spark=spark)
     fal.run()
     ident = fal._identifier("bk")
-    assert _table_bucket_spec(spark, ident) == (4, ("k",))
+    assert _catalog_entry(spark, ident).buckets == (4, ("k",))
     fal.write_to_model(spark.range(30).selectExpr("id AS k", "id*2 AS v"), "bk")
     assert spark.table(ident).count() == 30
-    assert _table_bucket_spec(spark, ident) == (4, ("k",)), "overwrite flattened the bucket layout"
+    assert _catalog_entry(spark, ident).buckets == (4, ("k",)), "overwrite flattened the bucket layout"
     spark.sql("DROP DATABASE IF EXISTS wtmlayout CASCADE")
 
 
@@ -315,7 +313,6 @@ def test_incremental_model_keeps_declared_bucket_layout(spark, tmp_path):
     import re
 
     from dbt_fal_spark.api import FalSpark
-    from dbt_fal_spark.materialize import _table_bucket_spec, _table_location
 
     spark.sql("DROP DATABASE IF EXISTS incbkt CASCADE")
     proj = tmp_path / "incbkt"
@@ -336,12 +333,12 @@ def test_incremental_model_keeps_declared_bucket_layout(spark, tmp_path):
     assert all(s == "success" for s in statuses.values()), statuses
     # first run creates the bucket layout
     for m in ("merged", "appended"):
-        assert _table_bucket_spec(spark, fal._identifier(m)) == (4, ("k",)), m
+        assert _catalog_entry(spark, fal._identifier(m)).buckets == (4, ("k",)), m
     # second run: merge swap and append must both keep it
     statuses = fal.run()
     assert all(s == "success" for s in statuses.values()), statuses
     for m in ("merged", "appended"):
-        assert _table_bucket_spec(spark, fal._identifier(m)) == (4, ("k",)), (
+        assert _catalog_entry(spark, fal._identifier(m)).buckets == (4, ("k",)), (
             f"{m}: incremental rerun flattened the bucket layout"
         )
     # the appended files are REALLY bucketed (bucket-id suffix), not just
@@ -396,7 +393,6 @@ def test_model_alias_config(tmp_path, spark, monkeypatch):
 
 
 def test_full_refresh_keeps_incremental_bucket_layout(spark, tmp_path, fresh_db):
-    from dbt_fal_spark.materialize import _table_bucket_spec
 
     proj = _proj(tmp_path, fresh_db("frbkt"), {
         "inc.sql": "{{ config(materialized='incremental', unique_key='k',"
@@ -407,7 +403,7 @@ def test_full_refresh_keeps_incremental_bucket_layout(spark, tmp_path, fresh_db)
     assert fal.run()["model.frbkt.inc"] == "success"
     assert fal.run(full_refresh=True)["model.frbkt.inc"] == "success"
     ident = fal._identifier("inc")
-    assert _table_bucket_spec(spark, ident) == (4, ("k",))
+    assert _catalog_entry(spark, ident).buckets == (4, ("k",))
     assert spark.table(ident).count() == 50
 
 

@@ -1,7 +1,8 @@
 """Module boundaries. ``materialize`` owns the on-disk table format
 (version dirs, live pointer, vacuum keep sets, swap tokens) and the table
 DDL that commits and attaches them: ``api`` calls its public verbs and
-must not reach into the format's internals. And
+must not reach into the format's internals, and one function of
+``materialize`` reads table metadata from the catalog. And
 ``session`` alone names the AQE conf and the profile marker: every
 operator builds one plan, and the profile only sets session confs. User
 Python runs through one in-process ``exec`` (``api``) and one child
@@ -196,3 +197,39 @@ def test_only_selectors_evaluates_selector_set_algebra():
         ):
             holders.append(str(path.relative_to(PACKAGE)))
     assert holders == [], f"modules holding selectors.yml set keys: {holders}"
+
+
+MATERIALIZE = PACKAGE / "materialize.py"
+TABLE_METADATA_CALLS = {"tableExists", "getTableMetadata"}
+
+
+def test_materialize_reads_table_metadata_in_one_function():
+    """``materialize.py`` holds no DESCRIBE or REFRESH TABLE statement (SET
+    LOCATION refreshes the table itself), reads no table's schema off an
+    analyzed ``spark.table``, and one function asks the catalog for a
+    table: ``_catalog_entry``."""
+    tree = ast.parse(MATERIALIZE.read_text())
+    statements = [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and ("DESCRIBE" in node.value or "REFRESH TABLE" in node.value)
+    ]
+    assert statements == [], f"DESCRIBE/REFRESH TABLE strings at lines {statements}"
+    readers = sorted(
+        scope
+        for scope, calls in _calls_by_function(tree).items()
+        if any(isinstance(c.func, ast.Attribute) and c.func.attr in TABLE_METADATA_CALLS for c in calls)
+    )
+    assert readers == ["_catalog_entry"], readers
+    schema_reads = [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Attribute)
+        and node.attr in ("schema", "columns")
+        and isinstance(node.value, ast.Call)
+        and isinstance(node.value.func, ast.Attribute)
+        and node.value.func.attr == "table"
+    ]
+    assert schema_reads == [], f"spark.table(...) schema reads at lines {schema_reads}"

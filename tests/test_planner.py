@@ -210,6 +210,28 @@ def test_selectors_yml_unsupported_forms_are_errors():
             select_nodes(graph, bad)
 
 
+def test_select_method_prefixes_on_jaffle():
+    """`fqn:` and `path:` words select what the bare word and the
+    selectors.yml method select; an unknown `method:` prefix is a
+    SelectorError instead of a literal name that selects nothing."""
+    from dbt_fal_spark.plans.selectors import SelectorError
+    from dbt_fal_spark.project.loader import load_project
+
+    graph = NodeGraph.from_manifest(load_project(Path(__file__).parent / "fixtures" / "jaffle_spark"))
+    customers = select_nodes(graph, "customers")
+    assert _names(customers) == {"customers"}
+    assert select_nodes(graph, "fqn:customers") == customers
+    assert select_nodes(graph, "path:models/customers.sql") == customers
+    assert select_nodes(graph, {"method": "path", "value": "models/customers.sql"}) == customers
+    assert select_nodes(graph, "+fqn:customers") == select_nodes(graph, "+customers")
+    assert select_nodes(graph, "@tag:daily") == select_nodes(graph, "@orders_daily")
+    for word in ("source:x", "config.materialized:table", "+exposure:x", "customers,resource_type:model"):
+        with pytest.raises(SelectorError, match="unsupported selector method"):
+            select_nodes(graph, word)
+    with pytest.raises(SelectorError):
+        select_nodes(graph, None, exclude="source:x")
+
+
 def test_selector_names_with_digits():
     """Digits are a depth only next to a `+`: `m15` names model m15, not
     model m at depth 15."""

@@ -21,13 +21,14 @@ FIXTURES = Path(__file__).parent / "fixtures"
 
 @pytest.fixture(scope="module")
 def jaffle(spark):
-    os.environ["TESTDATA_DIR"] = SF_DIR
     marker = tempfile.NamedTemporaryFile(mode="r", suffix=".txt", delete=False)
-    os.environ["AUDIT_MARKER_FILE"] = marker.name
-    spark.sql("DROP DATABASE IF EXISTS jaffle_spark CASCADE")
-    fal = FalSpark(FIXTURES / "jaffle_spark", spark=spark)
-    statuses = fal.run(threads=4)
-    yield fal, statuses, marker.name
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("TESTDATA_DIR", SF_DIR)
+        mp.setenv("AUDIT_MARKER_FILE", marker.name)
+        spark.sql("DROP DATABASE IF EXISTS jaffle_spark CASCADE")
+        fal = FalSpark(FIXTURES / "jaffle_spark", spark=spark)
+        statuses = fal.run(threads=4)
+        yield fal, statuses, marker.name
     os.unlink(marker.name)
 
 
@@ -142,8 +143,8 @@ def test_source_freshness_statuses(jaffle):
     assert res[0]["status"] == "error"
 
 
-def test_selector_subset_run(spark):
-    os.environ["TESTDATA_DIR"] = SF_DIR
+def test_selector_subset_run(spark, monkeypatch):
+    monkeypatch.setenv("TESTDATA_DIR", SF_DIR)
     fal = FalSpark(FIXTURES / "jaffle_spark", spark=spark)
     statuses = fal.run(select="+orders_daily")
     names = {uid.split(".")[-1] for uid in statuses}
@@ -197,8 +198,8 @@ def test_write_to_model_rejects_unknown_mode(jaffle):
     assert not fal.spark.catalog.tableExists(f"{fal.schema}.mode_typo_target")
 
 
-def test_failure_propagation(spark):
-    os.environ["TESTDATA_DIR"] = SF_DIR
+def test_failure_propagation(spark, monkeypatch):
+    monkeypatch.setenv("TESTDATA_DIR", SF_DIR)
     spark.sql("DROP DATABASE IF EXISTS broken_proj CASCADE")
     fal = FalSpark(FIXTURES / "broken_proj", spark=spark)
     statuses = fal.run()
@@ -239,7 +240,6 @@ def test_teleport_roundtrip(jaffle, tmp_path):
 def test_init_fal_injects_globals(jaffle, spark):
     from dbt_fal_spark.magics import init_fal
     ns: dict = {}
-    os.environ.setdefault("TESTDATA_DIR", os.environ.get("TESTDATA_DIR", "/root/testdata/sf0.001"))
     handle = init_fal(str(FIXTURES / "jaffle_spark"), spark=spark, namespace=ns)
     assert callable(ns["ref"]) and callable(ns["execute_sql"]) and ns["session"] is spark
     assert ns["ref"]("customers").count() == handle.ref("customers").count()
@@ -317,7 +317,7 @@ def test_docs_generate_writes_catalog(jaffle):
     assert entry["stats"]["row_count"] == fal.ref("customers").count()
 
 
-def test_bucket_by_model_config_gives_zero_shuffle_join(spark, tmp_path):
+def test_bucket_by_model_config_gives_zero_shuffle_join(spark, tmp_path, monkeypatch):
     """Models declaring bucket_by on the same key materialize bucketed
     tables; joining them plans with ZERO shuffle exchanges (the 100 TB
     co-located-join contract, now reachable from project config)."""
@@ -341,7 +341,7 @@ def test_bucket_by_model_config_gives_zero_shuffle_join(spark, tmp_path):
         "{{ config(bucket_by={'cols': 'l_orderkey', 'n': 4}) }}\n"
         "SELECT l_orderkey, l_quantity FROM {{ source('td', 'lineitem') }}"
     )
-    os.environ.setdefault("TESTDATA_DIR", SF_DIR)
+    monkeypatch.setenv("TESTDATA_DIR", os.environ.get("TESTDATA_DIR", SF_DIR))
     spark.sql("DROP DATABASE IF EXISTS bkproj CASCADE")
     fal = FalSpark(proj, spark=spark)
     statuses = fal.run()

@@ -47,31 +47,14 @@ def _version_dirs(live):
 # --- ADVICE medium: failure AFTER the SET LOCATION commit ------------------
 
 
-class _FailOnce:
-    """SparkSession proxy raising on the first statement matching
-    ``needle`` — simulates a crash/interrupt at an exact point in the
-    flip protocol."""
+def test_flip_failure_after_set_location_rolls_back(spark, tmp_path, monkeypatch):
+    """A failure after the SET LOCATION commit (here, in the live
+    pointer write that follows it) must NOT leave the catalog pointing
+    at a deleted directory: the flip rolls the location back to the old
+    one and only then removes the new dir, so the table keeps reading
+    the previous version."""
+    import dbt_fal_spark.materialize as mat
 
-    def __init__(self, spark, needle):
-        self._spark = spark
-        self._needle = needle
-        self.tripped = False
-
-    def sql(self, q, *a, **kw):
-        if not self.tripped and q.strip().startswith(self._needle):
-            self.tripped = True
-            raise RuntimeError(f"injected failure at: {self._needle}")
-        return self._spark.sql(q, *a, **kw)
-
-    def __getattr__(self, item):
-        return getattr(self._spark, item)
-
-
-def test_flip_failure_after_set_location_rolls_back(spark, tmp_path):
-    """A failure between SET LOCATION and REFRESH must NOT leave the
-    catalog pointing at a deleted directory: the flip rolls the pointer
-    back to the old location and only then removes the new dir, so the
-    table keeps reading the previous version."""
     spark.sql("DROP DATABASE IF EXISTS rbproj CASCADE")  # hermetic warehouse
     proj = _proj(tmp_path, "rbproj", {"t": "SELECT id AS k FROM range(70)"})
     fal = FalSpark(proj, spark=spark)
@@ -80,11 +63,20 @@ def test_flip_failure_after_set_location_rolls_back(spark, tmp_path):
     old_loc = _table_location(spark, ident)
     before = set(_version_dirs(old_loc))
 
-    failing = _FailOnce(spark, "REFRESH TABLE")
+    tripped = []
+
+    def fail_once(base, loc):
+        # the pointer write runs right after SET LOCATION; the location
+        # must already name the new version when it fails
+        tripped.append(_table_location(spark, ident))
+        raise RuntimeError("injected failure at: live pointer write")
+
+    monkeypatch.setattr(mat, "_write_live_pointer", fail_once)
     df2 = spark.range(70).selectExpr("id AS k")
     with pytest.raises(RuntimeError, match="injected failure"):
-        replace_relation_atomic(failing, df2, ident)
-    assert failing.tripped
+        replace_relation_atomic(spark, df2, ident)
+    monkeypatch.undo()
+    assert len(tripped) == 1 and tripped[0] != old_loc, tripped
     # catalog must reference a LIVE directory: every read still works
     assert spark.table(ident).count() == 70
     loc = _table_location(spark, ident)

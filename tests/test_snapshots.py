@@ -113,6 +113,20 @@ def test_snapshot_rejects_a_selectors_yml_dict(spark, snap_project):
         fal.snapshot(select={"union": ["orders_snap"]})
 
 
+def test_snapshot_rejects_method_and_graph_operator_words(spark, snap_project):
+    """A `--select` word with a method prefix or a graph operator is an
+    error for snapshots, not a name that runs nothing; a plain name
+    still selects."""
+    from dbt_fal_spark.plans.selectors import SelectorError
+
+    fal = FalSpark(snap_project, spark=spark)
+    for select in ("tag:nightly", "+orders_snap", "orders_snap+", "@orders_snap",
+                   "orders_snap,x", ["orders_snap", "state:new"]):
+        with pytest.raises(SelectorError, match="selected by name"):
+            fal.snapshot(select=select)
+    assert fal.snapshot(select="no_such_snap") == {}
+
+
 def test_check_strategy_snapshot(spark, snap_project, tmp_path):
     spark.sql("DROP DATABASE IF EXISTS snapproj CASCADE")
     # rewrite the snapshot config to check strategy
