@@ -27,6 +27,13 @@ the model's alias table in its declared layout (``DbtModel.layout``);
 only an incremental run on an existing table merges instead. That layout
 is the model's one config, resolved at load: schema.yml ``config:`` with
 the model file's own ``config()`` on top.
+
+A run has one record. ``run`` and ``snapshot`` hand one task group per
+node to ``plans/schedule.parallel_executor``; a task fails by raising,
+each node ends ``success``, ``error`` or ``skipped`` (dbt's words), and a
+failed node's traceback is kept in ``FalSpark.errors`` and written as
+its ``message`` in ``run_results.json``. ``FalSpark.__init__`` is the one
+reader of that artifact; ``run`` replaces what it read.
 """
 
 from __future__ import annotations
@@ -55,14 +62,13 @@ from dbt_fal_spark.materialize import (
     vacuum_table,
     write_table,
 )
-from dbt_fal_spark.plans.executor import parallel_executor
 from dbt_fal_spark.plans.node_graph import NodeGraph
-from dbt_fal_spark.plans.schedule import SUCCESS, Scheduler, TaskGroup
+from dbt_fal_spark.plans.schedule import Scheduler, TaskGroup, parallel_executor
 from dbt_fal_spark.plans.selectors import Selector, SelectorError, model_checksums, select_nodes
 from dbt_fal_spark.project.jinja import render_model_sql
 from dbt_fal_spark.environments import CloudEnvironment, load_environments, user_code
 from dbt_fal_spark.project.loader import load_profile, load_project
-from dbt_fal_spark.project.manifest import DbtModel, DbtTest
+from dbt_fal_spark.project.manifest import DbtModel, DbtSnapshot, DbtTest
 from dbt_fal_spark.session import get_spark
 
 # `--debug` CLI flag opens this logger up (reference: args.py:205-276);
@@ -243,20 +249,28 @@ class FalSpark:
         # (reference: model.adapter_response → Context.current_model)
         self._adapter_responses: dict[str, CurrentAdapterResponse] = {}
         self.target_dir = self.project_dir / "target"
-        # last-run statuses (reference: project.py:406-411 maps
-        # run_results onto each node's .status at load): a prior run's
-        # target/run_results.json pre-populates model.status so
-        # list_models()/scripts see the previous outcome before anything
-        # executes this session; absent/corrupt artifact → all pending.
+        # the last run's {unique_id: status}, read from a prior run's
+        # target/run_results.json here (the one reader) and replaced by
+        # run(); None before any run, {} for an unreadable artifact. It
+        # pre-populates model.status (reference: project.py:406-411 maps
+        # run_results onto each node's .status at load) so list_models()
+        # and scripts see the previous outcome before anything executes.
+        self._last_run: dict[str, str] | None = None
         rr = self.target_dir / "run_results.json"
         if rr.is_file():
             try:
-                for r in json.loads(rr.read_text()).get("results", []):
-                    node = self.manifest.models.get(r.get("unique_id"))
-                    if node is not None and r.get("status"):
-                        node.status = r["status"]
-            except Exception:
-                pass
+                results = json.loads(rr.read_text()).get("results", [])
+                self._last_run = {r.get("unique_id"): r["status"] for r in results if r.get("status")}
+            except Exception as exc:
+                # no node counts as run: `fal run` then selects nothing
+                log.warning("ignoring unreadable %s: %s", rr, exc)
+                self._last_run = {}
+        for uid, status in (self._last_run or {}).items():
+            if uid in self.manifest.models:
+                self.manifest.models[uid].status = status
+        # {unique_id: traceback} of the nodes the last run() or snapshot()
+        # saw fail
+        self.errors: dict[str, str] = {}
         # sources.json freshness artifact attaches at LOAD (reference:
         # project.py:415-421 hands each DbtSource its artifact row), so
         # list_sources() consumers see the prior run's freshness without
@@ -381,11 +395,8 @@ class FalSpark:
         """The one write of a model's table: ``df`` replaces it, in the
         model's declared layout. Returns the rows written."""
         identifier, layout = self._relation(name)
-        # both verbs are the one table commit (materialize._commit); the
-        # choice only names the trace span: a rebuild or a first build
-        if table_exists(self.spark, identifier):
-            return replace_relation_atomic(self.spark, df, identifier, **layout)()
-        return write_table(df, identifier, **layout)()
+        # the one table commit creates a missing table too
+        return replace_relation_atomic(self.spark, df, identifier, **layout)()
 
     def _render(self, sql: str, **kw) -> str:
         """Render Jinja SQL against this project: refs, sources, vars and
@@ -814,27 +825,24 @@ class FalSpark:
             for dep in self.graph.graph.predecessors(node):
                 if dep in groups:
                     group.dependencies.append(groups[dep])
-        scheduler = Scheduler(list(groups.values()))
-        context: dict = {"errors": []}
         t0 = time.time()
         try:
-            parallel_executor(scheduler, context, threads=threads, fail_fast=fail_fast)
+            statuses = self._execute(list(groups.values()), threads, fail_fast)
         finally:
             self._run_selected = None
-        statuses = {}
-        for node, group in groups.items():
-            model = self.graph.node_attr(node, "model")
-            raw = {"success": "success", "failure": "error", "skipped": "skipped"}.get(
-                group.status, group.status
-            )
-            model.status = raw
-            # record the RAW run outcome, not the derived property — a
-            # skipped model with previously-run tests would otherwise
-            # report 'tested' into run_results.json, masking the skip
-            statuses[node] = raw
-        self._write_run_results(statuses, time.time() - t0, context)
+        for node, status in statuses.items():
+            self.graph.node_attr(node, "model").status = status
+        self._last_run = statuses
+        self._write_run_results(statuses, time.time() - t0)
         self._write_state()
         return statuses
+
+    def _execute(self, groups: list[TaskGroup], threads: int, fail_fast: bool = False) -> dict[str, str]:
+        """Run ``groups`` on ``threads`` workers; returns {group_id:
+        status} and leaves each failed group's traceback in ``errors``."""
+        parallel_executor(Scheduler(groups), {}, threads=threads, fail_fast=fail_fast)
+        self.errors = {g.group_id: g.error for g in groups if g.error}
+        return {g.group_id: g.status for g in groups}
 
     def snapshot(self, select: Selector = None, as_of: str | None = None) -> dict[str, str]:
         """dbt snapshot: run every (or the selected) snapshot's select and
@@ -843,7 +851,10 @@ class FalSpark:
         transitions (pass the run timestamp; timestamp-strategy snapshots
         take their boundaries from the source's own updated_at). Snapshots
         are selected by name: a selectors.yml dict, a ``method:`` word or
-        a graph operator (``+``, ``@``, ``,``) is a ``SelectorError``."""
+        a graph operator (``+``, ``@``, ``,``) is a ``SelectorError``.
+        Each snapshot is one group on ``threads`` workers, so one failing
+        snapshot leaves the others' results and its traceback in
+        ``errors``."""
         wanted = None
         if select:
             if isinstance(select, dict):
@@ -852,27 +863,12 @@ class FalSpark:
             bad = sorted(w for w in wanted if any(c in w for c in ":+@,"))
             if bad:
                 raise SelectorError(f"snapshots are selected by name, not by {bad}")
-        statuses: dict[str, str] = {}
-        for snap in self.manifest.snapshots.values():
-            if wanted is not None and snap.name not in wanted:
-                continue
-            try:
-                staged = self.spark.sql(self._render(snap.raw_sql))
-                snapshot_scd2(
-                    self.spark,
-                    staged,
-                    f"{self.schema}.{snap.name}",
-                    snap.unique_key,
-                    strategy=snap.strategy,
-                    updated_at=snap.updated_at,
-                    check_cols=snap.check_cols or None,
-                    as_of=as_of,
-                )
-                statuses[snap.unique_id] = "success"
-            except Exception as exc:  # noqa: BLE001 — per-snapshot isolation
-                statuses[snap.unique_id] = "error"
-                self._last_snapshot_error = f"{snap.name}: {exc}"
-        return statuses
+        groups = [
+            TaskGroup(group_id=snap.unique_id, task=_SnapshotTask(self, snap, as_of))
+            for snap in self.manifest.snapshots.values()
+            if wanted is None or snap.name in wanted
+        ]
+        return self._execute(groups, self.threads)
 
     def teleport_export(self, name: str, url: str) -> str:
         """Export a relation to interchange parquet at ``url`` (reference
@@ -930,8 +926,10 @@ class FalSpark:
             json.dumps({"schema": self.schema, "warehouse_dir": wh}, indent=1)
         )
 
-    def _write_run_results(self, statuses: dict[str, str], elapsed: float, context: dict) -> None:
-        """dbt-format-ish run_results.json (reference: flow_runner.py:86-133)."""
+    def _write_run_results(self, statuses: dict[str, str], elapsed: float) -> None:
+        """dbt-format-ish run_results.json (reference: flow_runner.py:86-133):
+        per node its status, adapter response and ``message``, the
+        traceback of its failure or null."""
         self.target_dir.mkdir(exist_ok=True)
         payload = {
             "elapsed_time": elapsed,
@@ -940,10 +938,10 @@ class FalSpark:
                     "unique_id": uid,
                     "status": status,
                     "adapter_response": self._adapter_response_json(uid, status),
+                    "message": self.errors.get(uid),
                 }
                 for uid, status in sorted(statuses.items())
             ],
-            "errors": context.get("errors", []),
         }
         with open(self.target_dir / "run_results.json", "w") as f:
             json.dump(payload, f, indent=2, default=str)
@@ -1025,7 +1023,6 @@ class FalSpark:
             else (not select and not only_scripts)
         )
         ran: list[str] = []
-        context: dict = {"errors": []}
         sides = (True, False) if before is None else (before,)
 
         def run_global_scripts(side: bool) -> None:
@@ -1037,20 +1034,13 @@ class FalSpark:
             key = "before" if side else "after"
             for script in self.manifest.global_scripts[key]:
                 if not only_scripts or script in only_scripts:
-                    _ScriptTask(self, None, script).execute(context)
+                    _ScriptTask(self, None, script).execute({})
                     ran.append(f"script.GLOBAL.{key.upper()}.{script}")
 
         run_global_scripts(True)
         selected = select_nodes(self.graph, select, exclude, state=self._load_state())
-        if use_last_run:
-            rr = self.target_dir / "run_results.json"
-            if rr.exists():
-                last = {
-                    r["unique_id"]
-                    for r in json.loads(rr.read_text()).get("results", [])
-                    if r.get("status") == "success"
-                }
-                selected &= last
+        if use_last_run and self._last_run is not None:
+            selected &= {uid for uid, status in self._last_run.items() if status == "success"}
         for node in self.graph.sort_nodes():
             if node not in selected:
                 continue
@@ -1059,7 +1049,7 @@ class FalSpark:
                 for task in self._side_tasks(model, side):
                     if only_scripts and task.script not in only_scripts:
                         continue
-                    task.execute(context)
+                    task.execute({})
                     if task.is_hook:
                         label = f"hook.{model.name}.{'PRE' if side else 'POST'}"
                     else:
@@ -1419,7 +1409,7 @@ class _ModelTask:
         self.fal = fal
         self.node = node
 
-    def execute(self, context: dict) -> int:
+    def execute(self, context: dict) -> None:
         fal = self.fal
         model: DbtModel = fal.graph.node_attr(self.node, "model")
         spark = fal.spark
@@ -1427,7 +1417,7 @@ class _ModelTask:
         if model.materialization == "seed":
             df = spark.read.csv(str(model.path), header=True, inferSchema=True)
             fal._record(model, "CREATE TABLE", fal._materialize(model.name, df))
-            return SUCCESS
+            return
         if model.python_model is not None:
             return self._run_python_model(model)
         identifier = f"{fal.schema}.{model.target_name}"
@@ -1442,10 +1432,10 @@ class _ModelTask:
             fal._view_models.add(model.name)
             df.createOrReplaceTempView(fal._identifier(model.name))
             fal._record(model, "CREATE VIEW", None)
-            return SUCCESS
+            return
         if not incremental:
             fal._record(model, "CREATE TABLE", fal._materialize(model.name, df))
-            return SUCCESS
+            return
         # reference semantics: rows affected by THIS batch, not the
         # post-merge table total (fal_script.py:87-91). Persist: the merge
         # reads the batch twice (its keys and its rows), and a
@@ -1464,9 +1454,8 @@ class _ModelTask:
         finally:
             df.unpersist()
         fal._record(model, "INSERT", n)
-        return SUCCESS
 
-    def _run_python_model(self, model: DbtModel) -> int:
+    def _run_python_model(self, model: DbtModel) -> None:
         """Python model execution, both contracts the reference family
         supports:
 
@@ -1517,7 +1506,6 @@ class _ModelTask:
                     "the two contracts is required"
                 )
         fal._record(model, "CREATE TABLE", n)
-        return SUCCESS
 
     def _run_python_model_isolated(self, model: DbtModel, identifier: str) -> int:
         """Python model with ``meta.fal.environment``: run it in the named
@@ -1559,6 +1547,29 @@ class _ModelTask:
                 },
             )
             return fal._materialize(model.name, fal.spark.read.parquet(out))
+
+
+class _SnapshotTask:
+    """SCD2-merge one snapshot's select into its history table
+    ``<schema>.<snapshot name>`` (materialize.snapshot_scd2)."""
+
+    def __init__(self, fal: FalSpark, snap: DbtSnapshot, as_of: str | None) -> None:
+        self.fal = fal
+        self.snap = snap
+        self.as_of = as_of
+
+    def execute(self, context: dict) -> None:
+        fal, snap = self.fal, self.snap
+        snapshot_scd2(
+            fal.spark,
+            fal.spark.sql(fal._render(snap.raw_sql)),
+            f"{fal.schema}.{snap.name}",
+            snap.unique_key,
+            strategy=snap.strategy,
+            updated_at=snap.updated_at,
+            check_cols=snap.check_cols or None,
+            as_of=self.as_of,
+        )
 
 
 class _DbtObj:
@@ -1622,7 +1633,7 @@ class _ScriptTask:
         self.environment = environment
         self.is_hook = is_hook
 
-    def execute(self, context: dict) -> int:
+    def execute(self, context: dict) -> None:
         fal = self.fal
         model = self.model
         # scripts resolve against `fal-scripts-path` FIRST when set
@@ -1648,4 +1659,3 @@ class _ScriptTask:
             _exec_user_code(
                 path, fal._globals(model, arguments=self.arguments, hook=self.is_hook)
             )
-        return SUCCESS

@@ -16,7 +16,6 @@ Shared level flags (reference args.py): ``--project-dir``, ``--select``,
 from __future__ import annotations
 
 import argparse
-import json
 import sys
 
 
@@ -265,6 +264,25 @@ def main(argv: list[str] | None = None) -> int:
         return 2
 
 
+def _exception_line(tb: str) -> str:
+    """The ``Type: message`` line of a traceback: the first unindented
+    line after its last frame (a Spark error's message goes on with
+    its plan)."""
+    lines = tb.strip().splitlines()
+    last_frame = max((i for i, line in enumerate(lines) if line.startswith('  File "')), default=-1)
+    return next((line for line in lines[last_frame + 1:] if not line.startswith(" ")), lines[-1])
+
+
+def _report(fal, statuses: dict[str, str]) -> int:
+    """Print one status line per node, then each failed node's id beside
+    its exception line (``fal.errors``); 1 unless every node succeeded."""
+    for node, status in sorted(statuses.items()):
+        print(f"{status:8s} {node}")
+    for node, tb in sorted(fal.errors.items()):
+        print(f"error detail ({node}): {_exception_line(tb)}", file=sys.stderr)
+    return 0 if all(s == "success" for s in statuses.values()) else 1
+
+
 def _command(fal, args) -> int:
     """Run the verb ``args`` names against the loaded project."""
     if args.command == "debug":
@@ -287,19 +305,7 @@ def _command(fal, args) -> int:
 
     if args.command == "flow":
         statuses = fal.run(select=args.select, exclude=args.exclude, threads=args.threads, full_refresh=getattr(args, "full_refresh", False), fail_fast=getattr(args, "fail_fast", False))
-        for node, status in sorted(statuses.items()):
-            print(f"{status:8s} {node}")
-        ok = all(s == "success" for s in statuses.values())
-        if not ok:
-            # surface WHY on stdout — the detail a user would otherwise
-            # have to dig out of target/run_results.json
-            try:
-                results = json.loads((fal.target_dir / "run_results.json").read_text())
-                for err in results.get("errors", []):
-                    print(f"\nerror detail: {err.strip().splitlines()[-1]}", file=sys.stderr)
-            except Exception:
-                pass
-        return 0 if ok else 1
+        return _report(fal, statuses)
 
     if args.command == "run":
         ran = fal.run_scripts(
@@ -325,13 +331,7 @@ def _command(fal, args) -> int:
         return 0 if bad == 0 else 1
 
     if args.command == "snapshot":
-        statuses = fal.snapshot(select=args.select, as_of=args.as_of)
-        for node, status in sorted(statuses.items()):
-            print(f"{status:8s} {node}")
-        if not all(s == "success" for s in statuses.values()):
-            print(f"error detail: {getattr(fal, '_last_snapshot_error', '?')}", file=sys.stderr)
-            return 1
-        return 0
+        return _report(fal, fal.snapshot(select=args.select, as_of=args.as_of))
 
     if args.command == "source":
         # dbt semantics: the freshness COMMAND always recomputes (it is

@@ -22,8 +22,8 @@ from pyspark.sql import SparkSession
 _COMMON = {
     # FIFO scheduling: measured ~60 ms/job cheaper than FAIR in local mode
     # (FAIR's pool accounting is pure overhead for one-query-at-a-time
-    # workloads). The orchestration path (plans/executor.py, which DOES run
-    # independent DAG branches concurrently) opts back in by passing
+    # workloads). The orchestration path (the executor in plans/schedule.py,
+    # which DOES run independent DAG branches concurrently) opts back in by passing
     # ``**{"spark.scheduler.mode": "FAIR"}`` to ``get_spark`` — scheduler
     # mode is a context-level conf, so it must be chosen at session build.
     "spark.scheduler.mode": "FIFO",

@@ -4,7 +4,9 @@ calculated" assertions, here in-process)."""
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 
 import pytest
 
@@ -61,6 +63,21 @@ def test_cli_flow_run_then_post_run_and_test(cli_env, capsys):
     out = capsys.readouterr().out
     assert "tested" in out and "error" not in out
     assert main(["source", "freshness", "--project-dir", FIXTURE]) == 0
+
+
+def test_cli_flow_run_names_the_failing_node_beside_its_error(cli_env, capsys):
+    """A failing `flow run` prints each node's status, then the failed
+    node's id beside its exception line (not the plan text a Spark
+    error's message goes on with), and exits 1."""
+    broken = os.path.join(os.path.dirname(__file__), "fixtures", "broken_proj")
+    assert main(["flow", "run", "--project-dir", broken]) == 1
+    captured = capsys.readouterr()
+    assert "error    model.broken_proj.bad_model" in captured.out
+    assert "skipped  model.broken_proj.downstream_of_bad" in captured.out
+    details = [line for line in captured.err.splitlines() if line.startswith("error detail")]
+    assert len(details) == 1, details
+    assert details[0].startswith("error detail (model.broken_proj.bad_model): ")
+    assert "nonexistent_column" in details[0]
 
 
 def test_parser_maintenance_flags():
@@ -313,3 +330,102 @@ def test_cli_test_exclude_drops_the_excluded_models_tests(cli_env, capsys):
     ran = capsys.readouterr().out.splitlines()
     assert any("clv_not_negative" in line for line in ran), ran
     assert not any("stg_orders" in line for line in ran), ran
+
+
+# --- source freshness artifacts and the debug verb ---
+
+
+def test_sources_artifact_statusless_rows_skipped(tmp_path, spark, monkeypatch):
+    """An artifact row without `status` is unusable (the `freshness`
+    property promises `.status`; reference scripts do
+    `node.freshness.status`) — load-time attach now filters it, matching
+    source_freshness()'s own reuse gate (ADVICE r12)."""
+
+    from dbt_fal_spark.api import FalSpark
+    from tests.conftest import SF_DIR
+
+    monkeypatch.setenv("TESTDATA_DIR", SF_DIR)
+    proj = tmp_path / "proj"
+    shutil.copytree(FIXTURE, proj)
+    uid = "source.jaffle_spark.testdata.events"
+    canned = {
+        "metadata": {},
+        "results": [
+            {
+                # no `status` key: e.g. a runtime-errored freshness row in
+                # a real dbt artifact
+                "unique_id": uid,
+                "max_loaded_at": "2026-08-14 12:00:00",
+            }
+        ],
+    }
+    (proj / "target").mkdir(exist_ok=True)
+    (proj / "target" / "sources.json").write_text(json.dumps(canned))
+    spark.sql("DROP DATABASE IF EXISTS jaffle_spark CASCADE")
+    fal = FalSpark(proj, spark=spark)
+    src = next(s for s in fal.manifest.sources.values() if s.unique_id == uid)
+    # the status-less row must NOT attach: freshness is None (never
+    # evaluated), not a namespace missing .status
+    assert src.freshness_result is None
+    assert src.freshness is None
+    # and the freshness command falls through to live compute
+    res = fal.source_freshness()
+    assert all("from_artifact" not in r for r in res)
+    spark.sql("DROP DATABASE IF EXISTS jaffle_spark CASCADE")
+
+
+def test_debug_verb_reports_project_load_failure(tmp_path, capsys):
+    """`debug` exists to diagnose a broken setup: a project that fails
+    to LOAD (bad YAML) must print a FAIL report and exit 1, not
+    traceback (r13 review finding)."""
+    from dbt_fal_spark.cli import main
+
+    proj = tmp_path / "broken"
+    (proj / "models").mkdir(parents=True)
+    (proj / "dbt_project.yml").write_text("name: [unclosed\n")  # invalid YAML
+    rc = main(["debug", "--project-dir", str(proj)])
+    out = capsys.readouterr().out
+    assert rc == 1
+    assert "project load: FAIL" in out
+
+
+def test_source_freshness_all_null_loaded_at_is_runtime_error(tmp_path, spark, monkeypatch):
+    """An empty / all-NULL loaded_at source reports dbt's 'runtime
+    error' status instead of crashing the whole freshness run (r13
+    review finding)."""
+
+    from dbt_fal_spark.api import FalSpark
+    from tests.conftest import SF_DIR
+
+    monkeypatch.setenv("TESTDATA_DIR", SF_DIR)
+    proj = tmp_path / "proj"
+    shutil.copytree(FIXTURE, proj)
+    (proj / "target" / "sources.json").unlink(missing_ok=True)
+    spark.sql("DROP DATABASE IF EXISTS jaffle_spark CASCADE")
+    fal = FalSpark(proj, spark=spark)
+    src = next(s for s in fal.manifest.sources.values() if s.loaded_at_field)
+    # point the source at an empty relation with the same loaded_at col
+    empty = spark.range(0).selectExpr(
+        f"CAST(NULL AS TIMESTAMP) AS {src.loaded_at_field}"
+    )
+    empty.createOrReplaceTempView("__empty_freshness_probe")
+    orig_source = fal.source
+    fal.source = lambda s, t: (
+        spark.table("__empty_freshness_probe")
+        if (s, t) == (src.source_name, src.table_name)
+        else orig_source(s, t)
+    )
+    res = {r["source"]: r for r in fal.source_freshness(recompute=True)}
+    r = res[src.full_name]
+    assert r["status"] == "runtime error"
+    assert r["age_sec"] is None and r["max_loaded_at"] is None
+    # the row still round-trips through the artifact writer
+    fal._write_sources_artifact()
+    import json as _json
+
+    doc = _json.loads((proj / "target" / "sources.json").read_text())
+    row = next(
+        x for x in doc["results"] if x["unique_id"] == src.unique_id
+    )
+    assert row["status"] == "runtime error"
+    spark.sql("DROP DATABASE IF EXISTS jaffle_spark CASCADE")

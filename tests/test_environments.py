@@ -124,8 +124,9 @@ def test_missing_environment_fails_clearly(spark, tmp_path):
     assert statuses["model.isoproj2.one"] == "error"
     import json
 
-    errors = json.loads((proj / "target" / "run_results.json").read_text())["errors"]
-    assert any("ghost" in e for e in errors)
+    results = json.loads((proj / "target" / "run_results.json").read_text())["results"]
+    message = {r["unique_id"]: r["message"] for r in results}["model.isoproj2.one"]
+    assert "ghost" in message
     spark.sql("DROP DATABASE IF EXISTS isoproj2 CASCADE")
 
 

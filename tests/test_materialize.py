@@ -662,3 +662,32 @@ def test_rebuild_reads_the_catalog_without_describe_or_refresh(spark, tmp_path, 
         assert spark.table(fal._identifier("inc")).count() == 20
     finally:
         spark.sql("DROP DATABASE IF EXISTS catreads CASCADE")
+
+
+def test_model_rebuild_reads_the_catalog_entry_twice(spark, tmp_path, monkeypatch):
+    """A rebuild of a table model reads its catalog entry once before the
+    write and once under the commit lock, and no more: the model write
+    does not look the table up again to choose a verb. With two version
+    dirs on disk, both kept, the vacuum has nothing to read for."""
+    from dbt_fal_spark import materialize
+    from dbt_fal_spark.api import FalSpark
+
+    proj = _project(tmp_path, "entryreads", {"tbl": "SELECT id AS k FROM range(5)"})
+    spark.sql("DROP DATABASE IF EXISTS entryreads CASCADE")
+    fal = FalSpark(proj, spark=spark)
+    try:
+        assert fal.run() == {"model.entryreads.tbl": "success"}
+        reads = []
+        real_entry = materialize._catalog_entry
+
+        def counting(spark_, identifier):
+            reads.append(identifier)
+            return real_entry(spark_, identifier)
+
+        monkeypatch.setattr(materialize, "_catalog_entry", counting)
+        assert fal.run() == {"model.entryreads.tbl": "success"}
+        monkeypatch.undo()
+        assert reads == ["entryreads.tbl", "entryreads.tbl"], reads
+        assert spark.table(fal._identifier("tbl")).count() == 5
+    finally:
+        spark.sql("DROP DATABASE IF EXISTS entryreads CASCADE")

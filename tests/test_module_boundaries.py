@@ -8,7 +8,11 @@ operator builds one plan, and the profile only sets session confs. User
 Python runs through one in-process ``exec`` (``api``) and one child
 runner (``environments``). A model's table has one write site in
 ``api``, ``FalSpark._materialize``. The DAG holds models and seeds only,
-and ``plans/selectors`` alone evaluates selectors.yml set algebra."""
+and ``plans/selectors`` alone evaluates selectors.yml set algebra. The
+scheduler and its executor are one module, ``plans/schedule``, where a
+task fails by raising (no status constants), and ``run_results.json``
+has one reader, ``FalSpark.__init__``, and one writer,
+``FalSpark._write_run_results``."""
 
 from __future__ import annotations
 
@@ -163,7 +167,7 @@ def test_model_tables_have_one_write_site():
             ):
                 layout_getattrs.append(call.lineno)
     assert sites == {
-        "FalSpark._materialize": ["replace_relation_atomic", "write_table"],
+        "FalSpark._materialize": ["replace_relation_atomic"],
         "FalSpark._run_test": ["write_table"],
     }, sites
     assert layout_getattrs == [], f"layout read through getattr at lines {layout_getattrs}"
@@ -233,3 +237,57 @@ def test_materialize_reads_table_metadata_in_one_function():
         and node.value.func.attr == "table"
     ]
     assert schema_reads == [], f"spark.table(...) schema reads at lines {schema_reads}"
+
+
+def test_scheduler_and_executor_are_one_module_without_status_constants():
+    """``plans/executor.py`` is gone (its loop lives in ``plans/schedule``)
+    and no package module binds ``SUCCESS`` or ``FAILURE``: a task fails
+    by raising, and a status is dbt's word for it."""
+    assert not (PACKAGE / "plans" / "executor.py").exists()
+    holders = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            names = []
+            if isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                names = [t.id for t in targets if isinstance(t, ast.Name)]
+            elif isinstance(node, ast.ImportFrom):
+                names = [a.asname or a.name for a in node.names]
+            holders += [f"{path.relative_to(PACKAGE)}:{n}" for n in names if n in ("SUCCESS", "FAILURE")]
+    assert holders == [], holders
+
+
+def _string_sites(tree: ast.AST, needle: str) -> set[str]:
+    """Qualified names of the functions holding a string literal (not a
+    docstring) that contains ``needle``."""
+    docs = _docstrings(tree)
+    sites = set()
+
+    def visit(node: ast.AST, scope: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, f"{scope}.{child.name}".lstrip("."))
+                continue
+            if (
+                isinstance(child, ast.Constant)
+                and isinstance(child.value, str)
+                and needle in child.value
+                and child not in docs
+            ):
+                sites.add(scope)
+            visit(child, scope)
+
+    visit(tree, "")
+    return sites
+
+
+def test_run_results_has_one_reader_and_one_writer():
+    """Only ``FalSpark.__init__`` names ``run_results.json`` to read it and
+    only ``FalSpark._write_run_results`` names it to write it; ``run``
+    keeps what it wrote in memory for ``run_scripts`` and the CLI."""
+    sites = {
+        f"{path.relative_to(PACKAGE)}:{scope}"
+        for path in sorted(PACKAGE.rglob("*.py"))
+        for scope in _string_sites(ast.parse(path.read_text()), "run_results.json")
+    }
+    assert sites == {"api.py:FalSpark.__init__", "api.py:FalSpark._write_run_results"}, sites

@@ -6,19 +6,21 @@ selector operators.
 
 from __future__ import annotations
 
+import shutil
 from pathlib import Path
 
 import pytest
 
 from dbt_fal_spark.plans.node_graph import NodeGraph
-from dbt_fal_spark.plans.schedule import FAILURE, SUCCESS, Scheduler, TaskGroup
+from dbt_fal_spark.plans.schedule import Scheduler, TaskGroup
 from dbt_fal_spark.plans.selectors import SelectorPlan, model_checksums, select_nodes
+from dbt_fal_spark.project.loader import load_project
 from dbt_fal_spark.project.manifest import DbtModel, Manifest
 
 
 class _NoopTask:
     def execute(self, context):
-        return SUCCESS
+        pass
 
 
 def _group(gid, deps=()):
@@ -49,7 +51,7 @@ def test_scheduler_runs_in_dependency_order():
     while not sched.is_done:
         for g in sched.iter_available_groups():
             order.append(g.group_id)
-            sched.finish(g, SUCCESS)
+            sched.finish(g, "success")
     assert order == ["a", "b", "c"]
 
 
@@ -70,16 +72,59 @@ def test_scheduler_failure_skips_transitive_dependents():
     sched = Scheduler([a, b, c, d])
     for g in sched.iter_available_groups():
         if g.group_id == "a":
-            sched.finish(g, FAILURE)
+            sched.finish(g, "error")
         else:
-            sched.finish(g, SUCCESS)
+            sched.finish(g, "success")
     while not sched.is_done:
         for g in sched.iter_available_groups():
-            sched.finish(g, SUCCESS)
-    assert a.status == "failure"
+            sched.finish(g, "success")
+    assert a.status == "error"
     assert b.status == "skipped"
     assert c.status == "skipped"
     assert d.status == "success"
+
+
+class _Step:
+    """A task that records its run in ``log`` and raises when ``fails``."""
+
+    def __init__(self, name, log, fails=False):
+        self.name, self.log, self.fails = name, log, fails
+
+    def execute(self, context):
+        self.log.append(self.name)
+        if self.fails:
+            raise RuntimeError(f"{self.name} failed")
+
+
+def test_pre_hook_failure_skips_main_runs_post_hooks_and_keeps_first_error():
+    """The reference's pre → main → post state machine: a failed pre-hook
+    stops the other pre-hooks and the main task, every post-hook still
+    runs, and the group's error is the traceback of its first failure."""
+    from dbt_fal_spark.plans.schedule import parallel_executor
+
+    log = []
+    g = TaskGroup(
+        group_id="g",
+        task=_Step("main", log),
+        pre_hooks=[_Step("pre1", log, fails=True), _Step("pre2", log)],
+        post_hooks=[_Step("post1", log, fails=True), _Step("post2", log)],
+    )
+    child = _group("child", [g])
+    parallel_executor(Scheduler([g, child]), {}, threads=1)
+    assert log == ["pre1", "post1", "post2"]
+    assert (g.status, child.status) == ("error", "skipped")
+    assert "pre1 failed" in g.error and "post1 failed" not in g.error
+    assert child.error is None
+
+
+def test_executor_raises_on_a_group_that_can_never_run():
+    """A group waiting on a group the scheduler does not hold never
+    becomes ready: the executor fails loudly instead of spinning."""
+    from dbt_fal_spark.plans.schedule import parallel_executor
+
+    g = _group("g", [_group("not_scheduled")])
+    with pytest.raises(RuntimeError, match="deadlock"):
+        parallel_executor(Scheduler([g]), {}, threads=1)
 
 
 # --- selectors (reference: tests/graph/test_selectors.py semantics) ---
@@ -295,35 +340,35 @@ def test_fail_fast_skips_later_waves():
     group unlocked after the failure is skipped even though it does not
     depend on the failed group (plain mode runs it). Groups already
     submitted in the same wave still finish (dbt semantics)."""
-    from dbt_fal_spark.plans.executor import parallel_executor
-    from dbt_fal_spark.plans.schedule import FAILURE, SUCCESS, Scheduler, TaskGroup
+    from dbt_fal_spark.plans.schedule import parallel_executor
 
     import time as _time
 
     class T:
-        def __init__(self, result, delay=0.0):
-            self.result = result
+        def __init__(self, fails, delay=0.0):
+            self.fails = fails
             self.delay = delay
         def execute(self, context):
             _time.sleep(self.delay)
-            return self.result
+            if self.fails:
+                raise RuntimeError("task failed")
 
     def build():
-        bad = TaskGroup(group_id="bad", task=T(FAILURE))
+        bad = TaskGroup(group_id="bad", task=T(True))
         # ok outlives bad, so bad's failure is OBSERVED before ok unlocks
         # its dependent — makes the wave ordering deterministic
-        ok = TaskGroup(group_id="ok", task=T(SUCCESS, delay=1.0))
-        later = TaskGroup(group_id="later", task=T(SUCCESS))
+        ok = TaskGroup(group_id="ok", task=T(False, delay=1.0))
+        later = TaskGroup(group_id="later", task=T(False))
         later.dependencies.append(ok)
         return bad, ok, later
 
     bad, ok, later = build()
     parallel_executor(Scheduler([bad, ok, later]), {}, threads=2, fail_fast=True)
-    assert (bad.status, ok.status, later.status) == ("failure", "success", "skipped")
+    assert (bad.status, ok.status, later.status) == ("error", "success", "skipped")
 
     bad, ok, later = build()
     parallel_executor(Scheduler([bad, ok, later]), {}, threads=2, fail_fast=False)
-    assert (bad.status, ok.status, later.status) == ("failure", "success", "success")
+    assert (bad.status, ok.status, later.status) == ("error", "success", "success")
 
 
 def test_selector_glob_and_path_matching(spark, tmp_path):
@@ -410,3 +455,80 @@ def test_circular_ref_reports_cycle_clearly(spark, tmp_path):
     fal = FalSpark(proj, spark=spark)
     with _pytest.raises(ValueError, match="Found a cycle.*-->"):
         fal.run()
+
+
+# --- project loader error paths and per-node tests ---
+
+FIXTURE = Path(__file__).parent / "fixtures" / "jaffle_spark"
+
+
+def _copy_project(tmp_path: Path) -> Path:
+    proj = tmp_path / "proj"
+    shutil.copytree(FIXTURE, proj)
+    return proj
+
+
+def test_malformed_schema_yaml_names_the_file(tmp_path):
+    """A schema.yml whose top level is a list (lost its `models:` header)
+    previously died with an AttributeError traceback deep in the loader;
+    now it's a ValueError naming the file and the expectation."""
+    proj = _copy_project(tmp_path)
+    bad = proj / "models" / "broken.yml"
+    bad.write_text("- name: stg_orders\n- name: customers\n")
+    with pytest.raises(ValueError, match=r"broken\.yml.*YAML mapping"):
+        load_project(proj)
+
+
+def test_duplicate_model_names_error(tmp_path):
+    """Two model files sharing a stem previously let the later-scanned
+    one silently replace the earlier (ambiguous ref targets); dbt-style
+    behavior is a loud duplicate error naming both files."""
+    proj = _copy_project(tmp_path)
+    sub = proj / "models" / "sub"
+    sub.mkdir()
+    (sub / "customers.sql").write_text("select 1 as x")
+    with pytest.raises(ValueError, match="duplicate model name 'customers'"):
+        load_project(proj)
+    (sub / "customers.sql").unlink()
+    # python model colliding with a SQL model is the same error
+    (sub / "customers.py").write_text("def model(dbt, session):\n    return None\n")
+    with pytest.raises(ValueError, match="duplicate model name 'customers'"):
+        load_project(proj)
+
+
+def test_dunder_py_files_are_not_models(tmp_path):
+    """__init__.py in a models dir is package plumbing, not a model —
+    previously registered as a model named '__init__' that failed at
+    run time."""
+    proj = _copy_project(tmp_path)
+    (proj / "models" / "__init__.py").write_text("")
+    manifest = load_project(proj)
+    assert not any(m.name == "__init__" for m in manifest.models.values())
+
+
+def test_tests_attached_to_model_and_source_objects(tmp_path):
+    """list_models()/list_sources() consumers enumerate per-node tests
+    (reference: dbt_test.feature 'Source tests are present in context');
+    previously DbtModel had no .tests and DbtSource.tests stayed empty."""
+    proj = _copy_project(tmp_path)
+    schema_yml = proj / "models" / "schema.yml"
+    schema_yml.write_text(
+        schema_yml.read_text().replace(
+            "      - name: orders\n        meta:\n          path: $TESTDATA_DIR/orders.parquet",
+            "      - name: orders\n        meta:\n          path: $TESTDATA_DIR/orders.parquet\n"
+            "        columns:\n"
+            "          - name: o_orderkey\n"
+            "            tests: [unique, not_null]\n",
+        )
+    )
+    manifest = load_project(proj)
+    stg = next(m for m in manifest.models.values() if m.name == "stg_orders")
+    assert {t.test_type for t in stg.tests} == {
+        "unique", "not_null", "accepted_values", "relationships"
+    }
+    orders_src = next(
+        s for s in manifest.sources.values() if s.table_name == "orders"
+    )
+    assert {t.test_type for t in orders_src.tests} == {"unique", "not_null"}
+    # the same objects are registered in the global test map
+    assert all(t.unique_id in manifest.tests for t in stg.tests + orders_src.tests)

@@ -209,6 +209,29 @@ def test_failure_propagation(spark, monkeypatch):
     assert by_name["downstream_of_bad"] == "skipped"
 
 
+def test_run_results_message_names_the_failing_node(spark, monkeypatch):
+    """run_results.json ties a failure to its node: the failed node's
+    entry carries its traceback as ``message``, every other entry has
+    ``message: null``, and there is no run-level error list. The same
+    traceback stays on ``FalSpark.errors``."""
+    import json
+
+    monkeypatch.setenv("TESTDATA_DIR", SF_DIR)
+    spark.sql("DROP DATABASE IF EXISTS broken_proj CASCADE")
+    fal = FalSpark(FIXTURES / "broken_proj", spark=spark)
+    fal.run()
+    payload = json.loads((fal.target_dir / "run_results.json").read_text())
+    assert "errors" not in payload
+    messages = {r["unique_id"]: r["message"] for r in payload["results"]}
+    bad = messages.pop("model.broken_proj.bad_model")
+    assert bad.startswith("Traceback") and "nonexistent_column" in bad
+    assert messages == {
+        "model.broken_proj.ok_orders": None,
+        "model.broken_proj.downstream_of_bad": None,
+    }
+    assert fal.errors == {"model.broken_proj.bad_model": bad}
+
+
 def test_pre_hook_receives_with_arguments(jaffle):
     import json
     payload = json.loads((FIXTURES / "jaffle_spark" / "target" / "pre_note.json").read_text())
@@ -675,3 +698,67 @@ def test_seed_and_model_sharing_a_name_fail_to_load(tmp_path):
     (tmp_path / "models" / "c.sql").write_text("select 1 as k\n")
     with pytest.raises(ValueError, match="duplicate model name 'c'"):
         load_project(tmp_path)
+
+
+# --- the reference's attribute spellings; singular-test configs ---
+
+FIXTURE = FIXTURES / "jaffle_spark"
+
+
+def test_property_spellings_match_reference_example(tmp_path, spark, monkeypatch):
+    """The reference programmatic example iterates faldbt.models /
+    .sources / .tests as ATTRIBUTES (002_jaffle_shop/fal_dbt.py);
+    FalSpark exposes the same spellings alongside the list_* methods."""
+
+    from dbt_fal_spark.api import FalSpark
+    from tests.conftest import SF_DIR
+
+    monkeypatch.setenv("TESTDATA_DIR", SF_DIR)
+    fal = FalSpark(FIXTURE, spark=spark)
+    assert [m.name for m in fal.models] == [m.name for m in fal.list_models()]
+    assert len(fal.sources) == len(fal.list_sources())
+    assert len(fal.tests) == len(fal.list_tests())
+    # the reference example's loop shape works verbatim
+    for model in fal.models:
+        _ = (model.name, [(t.name, t.status) for t in model.tests])
+    for source in fal.sources:
+        _ = (source.source_name, source.table_name,
+             [(t.name, t.status) for t in source.tests])
+
+
+def _one_model_project(tmp_path: Path, model_sql: str) -> Path:
+    proj = tmp_path / "tproj13"
+    (proj / "models").mkdir(parents=True)
+    (proj / "dbt_project.yml").write_text(
+        "name: tproj13\nprofile: tproj13\nmodel-paths: [models]\n"
+    )
+    (proj / "models" / "probe.sql").write_text(model_sql)
+    (proj / "models" / "schema.yml").write_text("models:\n  - name: probe\n")
+    return proj
+
+
+def test_singular_test_where_filters_violations(tmp_path, spark):
+    """`{{ config(where=...) }}` on a singular test filters the violation
+    rows — same relation algebra as the generic-test branch. Previously
+    the loader parsed `where` but dropped it for singular tests while
+    honoring severity/limit from the same config (ADVICE r12)."""
+    from dbt_fal_spark.api import FalSpark
+
+    proj = _one_model_project(
+        tmp_path, "select * from values ('A', 1), ('A', 2), ('B', 3) t(status, id)\n"
+    )
+    (proj / "tests").mkdir()
+    (proj / "tests" / "status_a_rows.sql").write_text(
+        "{{ config(where=\"id >= 2\") }}\n"
+        "select * from {{ ref('probe') }} where status = 'A'\n"
+    )
+    spark.sql("DROP DATABASE IF EXISTS tproj13 CASCADE")
+    fal = FalSpark(proj, spark=spark)
+    fal.run()
+    t = fal.manifest.tests["test.tproj13.status_a_rows"]
+    assert t.where == "id >= 2"  # loader keeps it for singular tests now
+    by_name = {r["test"]: r for r in fal.test()}
+    sg = by_name["status_a_rows"]
+    # 2 rows have status='A'; the where config keeps only id >= 2 → 1
+    assert sg["violations"] == 1 and sg["status"] == "error"
+    spark.sql("DROP DATABASE IF EXISTS tproj13 CASCADE")

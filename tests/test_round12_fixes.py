@@ -227,18 +227,17 @@ def test_profiles_dir_error_names_env_var_origin(tmp_path, monkeypatch):
 # ---------------------------------------------------------------------------
 
 
-def test_source_freshness_ingests_dbt_artifact(tmp_path, spark):
+def test_source_freshness_ingests_dbt_artifact(tmp_path, spark, monkeypatch):
     """A target/sources.json from a prior dbt run is ingested: its rows
     are attached to DbtSource.freshness_result and returned as-is
     (reference parse.py:161-173 + project.py:415-421). recompute=True —
     and sources absent from the artifact — fall back to live compute."""
     import json
-    import os
 
     from dbt_fal_spark.api import FalSpark
     from tests.conftest import SF_DIR
 
-    os.environ["TESTDATA_DIR"] = SF_DIR
+    monkeypatch.setenv("TESTDATA_DIR", SF_DIR)
     proj = _copy_project(tmp_path)
     uid = "source.jaffle_spark.testdata.events"
     canned = {
@@ -276,17 +275,16 @@ def test_source_freshness_ingests_dbt_artifact(tmp_path, spark):
     spark.sql("DROP DATABASE IF EXISTS jaffle_spark CASCADE")
 
 
-def test_write_sources_artifact_round_trips(tmp_path, spark):
+def test_write_sources_artifact_round_trips(tmp_path, spark, monkeypatch):
     """_write_sources_artifact (the CLI `source freshness` sink) writes
     dbt's artifact shape, and a fresh FalSpark on the same project
     ingests what was written."""
     import json
-    import os
 
     from dbt_fal_spark.api import FalSpark
     from tests.conftest import SF_DIR
 
-    os.environ["TESTDATA_DIR"] = SF_DIR
+    monkeypatch.setenv("TESTDATA_DIR", SF_DIR)
     proj = _copy_project(tmp_path)
     spark.sql("DROP DATABASE IF EXISTS jaffle_spark CASCADE")
     fal = FalSpark(proj, spark=spark)
@@ -350,17 +348,16 @@ def test_cli_cloud_verb_exits_with_documented_error(tmp_path, capsys):
     assert "out of scope" in err and "Spark cluster" in err
 
 
-def test_run_results_statuses_attach_at_load(tmp_path, spark):
+def test_run_results_statuses_attach_at_load(tmp_path, spark, monkeypatch):
     """A prior run's target/run_results.json pre-populates model.status
     at load (reference project.py:406-411) — a fresh FalSpark on an
     already-run project reports the previous outcomes instead of
     'pending'."""
-    import os
 
     from dbt_fal_spark.api import FalSpark
     from tests.conftest import SF_DIR
 
-    os.environ["TESTDATA_DIR"] = SF_DIR
+    monkeypatch.setenv("TESTDATA_DIR", SF_DIR)
     proj = _copy_project(tmp_path)
     spark.sql("DROP DATABASE IF EXISTS jaffle_spark CASCADE")
     fal = FalSpark(proj, spark=spark)
@@ -452,18 +449,17 @@ def test_threshold_expression_parser():
         _test_threshold(1, "import os")
 
 
-def test_cloud_credentials_wrap_all_environments(tmp_path, spark):
+def test_cloud_credentials_wrap_all_environments(tmp_path, spark, monkeypatch):
     """Reference semantics (utils/environments.py:157-166): key_id +
     key_secret on the profile route EVERY environment to the serverless
     host. Here that wraps them in the D10 stub — execution fails loudly
     with the out-of-scope error instead of silently running locally."""
-    import os
 
     from dbt_fal_spark.api import FalSpark
     from dbt_fal_spark.environments import CloudEnvironment
     from tests.conftest import SF_DIR
 
-    os.environ["TESTDATA_DIR"] = SF_DIR
+    monkeypatch.setenv("TESTDATA_DIR", SF_DIR)
     proj = _copy_project(tmp_path)
     (proj / "fal_project.yml").write_text(
         "environments:\n"
@@ -489,17 +485,16 @@ def test_cloud_credentials_wrap_all_environments(tmp_path, spark):
     spark.sql("DROP DATABASE IF EXISTS jaffle_spark CASCADE")
 
 
-def test_cli_source_freshness_always_recomputes(tmp_path, spark, capsys):
+def test_cli_source_freshness_always_recomputes(tmp_path, spark, capsys, monkeypatch):
     """The freshness COMMAND recomputes even when an artifact exists —
     it is the thing that PRODUCES sources.json; ingesting its own output
     would freeze freshness after the first run (r12 review finding)."""
     import json
-    import os
 
     from dbt_fal_spark.cli import main
     from tests.conftest import SF_DIR
 
-    os.environ["TESTDATA_DIR"] = SF_DIR
+    monkeypatch.setenv("TESTDATA_DIR", SF_DIR)
     proj = _copy_project(tmp_path)
     # canned artifact claims 'pass' — live data (2024 events) says error
     canned = {
@@ -557,15 +552,14 @@ def test_node_status_derives_tested_after_test_run(tmp_path, spark):
     spark.sql("DROP DATABASE IF EXISTS tproj CASCADE")
 
 
-def test_cli_debug_verb(tmp_path, spark, capsys):
+def test_cli_debug_verb(tmp_path, spark, capsys, monkeypatch):
     """`debug` verb (reference commands.feature 'Run dbt debug'):
     project + profile + connectivity summary, exit 0 when healthy."""
-    import os
 
     from dbt_fal_spark.cli import main
     from tests.conftest import SF_DIR
 
-    os.environ["TESTDATA_DIR"] = SF_DIR
+    monkeypatch.setenv("TESTDATA_DIR", SF_DIR)
     proj = _copy_project(tmp_path)
     rc = main(["debug", "--project-dir", str(proj)])
     out = capsys.readouterr().out
@@ -574,17 +568,16 @@ def test_cli_debug_verb(tmp_path, spark, capsys):
     assert "models:" in out and "schema:" in out
 
 
-def test_source_freshness_reference_contract(tmp_path, spark):
+def test_source_freshness_reference_contract(tmp_path, spark, monkeypatch):
     """The reference script contract (cli_tests 010_source_freshness
     fal_scripts/freshness.py): `node.freshness` is the freshness RESULT
     — `if node.freshness:` gates, `.status` attribute-reads — not the
     schema.yml thresholds (those are freshness_spec here)."""
-    import os
 
     from dbt_fal_spark.api import FalSpark
     from tests.conftest import SF_DIR
 
-    os.environ["TESTDATA_DIR"] = SF_DIR
+    monkeypatch.setenv("TESTDATA_DIR", SF_DIR)
     proj = _copy_project(tmp_path)
     # simulate a project whose freshness has never been evaluated (the
     # shared fixture's target/ may carry a sources.json from CLI runs)
@@ -602,17 +595,16 @@ def test_source_freshness_reference_contract(tmp_path, spark):
     spark.sql("DROP DATABASE IF EXISTS jaffle_spark CASCADE")
 
 
-def test_write_to_source_datetime_and_arrays_roundtrip(tmp_path, spark):
+def test_write_to_source_datetime_and_arrays_roundtrip(tmp_path, spark, monkeypatch):
     """Reference write_to_source scenarios ('Write a datetime to the
     datawarehouse', 'Write a string and int array'): temporal and array
     columns survive the write→read round-trip bit-exactly."""
     import datetime
-    import os
 
     from dbt_fal_spark.api import FalSpark
     from tests.conftest import SF_DIR
 
-    os.environ["TESTDATA_DIR"] = SF_DIR
+    monkeypatch.setenv("TESTDATA_DIR", SF_DIR)
     proj = _copy_project(tmp_path)
     schema_yml = proj / "models" / "schema.yml"
     # register the sink table under the existing source namespace

@@ -36,18 +36,17 @@ def _copy_project(tmp_path: Path) -> Path:
 # --- scripts and Python models run as __main__; hooks cannot write ----------
 
 
-def test_scripts_and_python_models_run_as_main(tmp_path, spark):
+def test_scripts_and_python_models_run_as_main(tmp_path, spark, monkeypatch):
     """Reference contract (cli_tests/features/main_module.feature):
     scripts and fal models execute with __name__ == '__main__', so
     `if __name__ == "__main__":` blocks run. Previously __name__ was
     absent from the exec namespace and the guard raised NameError."""
     import json as _json
-    import os
 
     from dbt_fal_spark.api import FalSpark
     from tests.conftest import SF_DIR
 
-    os.environ["TESTDATA_DIR"] = SF_DIR
+    monkeypatch.setenv("TESTDATA_DIR", SF_DIR)
     proj = _copy_project(tmp_path)
     out = tmp_path / "main_probe.json"
     (proj / "scripts" / "main_probe.py").write_text(
@@ -76,17 +75,16 @@ def test_scripts_and_python_models_run_as_main(tmp_path, spark):
     spark.sql("DROP DATABASE IF EXISTS jaffle_spark CASCADE")
 
 
-def test_hooks_cannot_write_to_model_or_source(tmp_path, spark):
+def test_hooks_cannot_write_to_model_or_source(tmp_path, spark, monkeypatch):
     """Reference contract (run.feature 'Post hooks with write_to_model
     will fail', fal_script.py:284-296): hooks observe model runs; calling
     write_to_model/write_to_source from a hook raises, and the node
     reports error. Before/after SCRIPTS keep write access."""
-    import os
 
     from dbt_fal_spark.api import FalSpark
     from tests.conftest import SF_DIR
 
-    os.environ["TESTDATA_DIR"] = SF_DIR
+    monkeypatch.setenv("TESTDATA_DIR", SF_DIR)
     proj = _copy_project(tmp_path)
     (proj / "scripts" / "writing_hook.py").write_text(
         "write_to_model(ref('customers'), mode='overwrite')\n"
@@ -106,8 +104,9 @@ def test_hooks_cannot_write_to_model_or_source(tmp_path, spark):
     assert statuses["model.jaffle_spark.customers"] == "error"
     import json as _json
 
-    errors = _json.loads((fal.target_dir / "run_results.json").read_text()).get("errors", [])
-    assert any("not allowed in hooks" in e for e in errors), errors
+    results = _json.loads((fal.target_dir / "run_results.json").read_text())["results"]
+    message = {r["unique_id"]: r["message"] for r in results}["model.jaffle_spark.customers"]
+    assert "not allowed in hooks" in message, message
     spark.sql("DROP DATABASE IF EXISTS jaffle_spark CASCADE")
 
 
@@ -189,17 +188,16 @@ def test_scripts_path_precedence(spark, globals_project, tmp_path, monkeypatch):
 # --- Python models: aliases and the bound write_to_model --------------------
 
 
-def test_python_model_alias_config(tmp_path, spark):
+def test_python_model_alias_config(tmp_path, spark, monkeypatch):
     """A dbt-style Python model with config.alias materializes under the
     ALIAS (like SQL models); downstream ref() by model name resolves to
     the aliased relation. Previously the python path wrote schema.name
     while refs read schema.alias (ADVICE r11 medium)."""
-    import os
 
     from dbt_fal_spark.api import FalSpark
     from tests.conftest import SF_DIR
 
-    os.environ["TESTDATA_DIR"] = SF_DIR
+    monkeypatch.setenv("TESTDATA_DIR", SF_DIR)
     proj = _copy_project(tmp_path)
     (proj / "models" / "py_aliased.py").write_text(
         "def model(dbt, session):\n"
@@ -238,17 +236,16 @@ def test_python_model_alias_config(tmp_path, spark):
     spark.sql("DROP DATABASE IF EXISTS jaffle_spark CASCADE")
 
 
-def test_write_to_model_positional_target_raises(tmp_path, spark):
+def test_write_to_model_positional_target_raises(tmp_path, spark, monkeypatch):
     """Inside a fal-style python model, write_to_model is bound to THAT
     model: an explicit positional target must fail loudly (the reference
     hard-wires target_1 via functools.partial → TypeError), not be
     silently ignored (ADVICE r11)."""
-    import os
 
     from dbt_fal_spark.api import FalSpark
     from tests.conftest import SF_DIR
 
-    os.environ["TESTDATA_DIR"] = SF_DIR
+    monkeypatch.setenv("TESTDATA_DIR", SF_DIR)
     proj = _copy_project(tmp_path)
     (proj / "models" / "py_bad_target.py").write_text(
         "df = ref('stg_orders').limit(3)\n"
@@ -313,6 +310,37 @@ def test_fal_run_both_sides_keeps_flow_run_order(spark, tmp_path, monkeypatch):
         "hook.m.POST.post.py",
     ]
     spark.sql("DROP DATABASE IF EXISTS sideproj CASCADE")
+
+
+def test_run_scripts_follows_the_last_run_in_memory(spark, tmp_path, monkeypatch, caplog):
+    """`fal run` after `flow run` in the same FalSpark runs the scripts of
+    the models that run left successful, from the run record it keeps,
+    whatever happens to run_results.json on disk afterwards. A new
+    FalSpark over an unreadable artifact warns and counts no node as
+    run."""
+    root = tmp_path / "lastrun"
+    (root / "models").mkdir(parents=True)
+    (root / "dbt_project.yml").write_text("name: lastrun\nmodel-paths: [models]\n")
+    (root / "models" / "good.sql").write_text("select 1 as k\n")
+    (root / "models" / "bad.sql").write_text("select * from no_such_table_anywhere\n")
+    (root / "models" / "schema.yml").write_text(
+        "models:\n"
+        + "".join(f"  - name: {m}\n    meta: {{fal: {{scripts: {{after: [after.py]}}}}}}\n" for m in ("good", "bad"))
+    )
+    (root / "after.py").write_text("pass\n")
+    spark.sql("DROP DATABASE IF EXISTS lastrun CASCADE")
+    fal = FalSpark(root, spark=spark)
+    assert fal.run() == {"model.lastrun.good": "success", "model.lastrun.bad": "error"}
+    (root / "target" / "run_results.json").unlink()
+    assert fal.run_scripts() == ["script.good.AFTER.after.py"]
+    assert fal.run(select="bad") == {"model.lastrun.bad": "error"}
+    assert fal.run_scripts() == []
+    (root / "target" / "run_results.json").write_text("{not json")
+    with caplog.at_level("WARNING", logger="dbt_fal_spark"):
+        fresh = FalSpark(root, spark=spark)
+    assert any("run_results.json" in r.getMessage() for r in caplog.records)
+    assert fresh.run_scripts() == []
+    spark.sql("DROP DATABASE IF EXISTS lastrun CASCADE")
 
 
 def test_script_file_selector_points_to_the_scripts_flag(spark, tmp_path, capsys):

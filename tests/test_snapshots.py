@@ -127,6 +127,34 @@ def test_snapshot_rejects_method_and_graph_operator_words(spark, snap_project):
     assert fal.snapshot(select="no_such_snap") == {}
 
 
+def test_cli_reports_every_failing_snapshot_by_id(spark, snap_project, capsys):
+    """Two snapshots over a source with no data both fail; the CLI prints
+    an error detail line for each, named by its snapshot's id, and
+    ``FalSpark.snapshot`` keeps both tracebacks in ``errors``."""
+    from dbt_fal_spark.cli import main
+
+    (snap_project / "snapshots" / "orders_snap_2.sql").write_text(
+        "SELECT id, status, updated_ts FROM {{ source('raw', 'orders_raw') }}"
+    )
+    with open(snap_project / "snapshots" / "schema.yml", "a") as f:
+        f.write(
+            "  - name: orders_snap_2\n"
+            "    config: {unique_key: id, strategy: timestamp, updated_at: updated_ts}\n"
+        )
+    spark.sql("DROP DATABASE IF EXISTS snapproj CASCADE")
+    fal = FalSpark(snap_project, spark=spark)
+    uids = ["snapshot.snapproj.orders_snap", "snapshot.snapproj.orders_snap_2"]
+    assert fal.snapshot() == {uid: "error" for uid in uids}
+    assert sorted(fal.errors) == uids
+    capsys.readouterr()
+    assert main(["snapshot", "--project-dir", str(snap_project)]) == 1
+    captured = capsys.readouterr()
+    assert [line.split()[0] for line in captured.out.splitlines()] == ["error", "error"]
+    details = [line for line in captured.err.splitlines() if line.startswith("error detail")]
+    assert [d.split(":")[0] for d in details] == [f"error detail ({uid})" for uid in uids], details
+    spark.sql("DROP DATABASE IF EXISTS snapproj CASCADE")
+
+
 def test_check_strategy_snapshot(spark, snap_project, tmp_path):
     spark.sql("DROP DATABASE IF EXISTS snapproj CASCADE")
     # rewrite the snapshot config to check strategy
